@@ -7,13 +7,16 @@ tag predicates, grid-cell tiling, bbox queries, point-in-polygon joins,
 kNN via ring expansion, GeoJSON emission — plus the web-scale
 training-data operators (dedup, similarity search, text analysis) the
 north rule requires, all over Parquet/Iceberg-style columnar tables
-with vectorized pandas/Arrow UDFs only (no per-row Python).
+with no per-row Python.
 
 Architecture is Spark-first: DataFrame/SQL plans optimized by Catalyst
-(predicate pushdown, broadcast joins, AQE skew handling), with pandas
-UDFs strictly for the two things Spark cannot express natively
-(regex geoparse batch extraction and exact ray-cast PIP against a
-broadcast polygon set).
+(predicate pushdown, broadcast joins, AQE skew handling). The flagship
+path is native end to end — regex geoparse and the exact ray-cast PIP
+against a broadcast polygon set are both native Spark expressions. Vectorized
+pandas/Arrow UDFs remain only where Spark cannot express the work
+(PBF and XML decode, recursive line simplification, media features,
+stateful streaming sessions) and as parity references for the native
+kernels.
 """
 
 __version__ = "0.1.0"

@@ -3,10 +3,13 @@ covers, and coordinate transforms.
 
 PIP reproduces the reference's even-odd ray casting bit-for-bit
 (/root/reference/src/coords.jl:69-78): closing edge first, strict
-``>`` / ``<`` comparisons, open ring. It runs as an Arrow-batched
-pandas UDF over NumPy (no per-row Python), with the polygon set packed
-into flat NumPy arrays captured in the UDF closure — Spark ships the
-closure once per executor, which is the broadcast.
+``>`` / ``<`` comparisons, open ring. The production test is native
+Spark SQL: edge vertices become exact DOUBLE literals in ONE SQL
+string (an unrolled per-edge CASE for small polygon sets, an
+``aggregate`` fold over a broadcast edge array for large ones), so
+building it costs one parse on the JVM instead of a Py4J call per
+expression node. ``pip_mask`` (NumPy) and ``pip_test_or_full_udf``
+(its Arrow UDF wrapper) are the parity references.
 
 The scale story (SURVEY.md §4 custom work #1): computing exact PIP for
 every (point, polygon) pair is O(N·P·V) and unusable at 10^12 docs.
@@ -14,7 +17,8 @@ every (point, polygon) pair is O(N·P·V) and unusable at 10^12 docs.
 (entirely inside) or BOUNDARY (edge passes through); the spatial join
 then broadcast-joins points to cover cells on (cx, cy) — a native
 hash join Catalyst handles — accepts FULL matches outright, and runs
-the exact UDF only on BOUNDARY candidates, typically <5% of matches.
+the exact even-odd test only on BOUNDARY candidates, typically <5% of
+matches.
 """
 
 from __future__ import annotations
@@ -57,50 +61,6 @@ def pip_mask(lon: np.ndarray, lat: np.ndarray, ring: Ring) -> np.ndarray:
     return (hit.sum(axis=1) % 2).astype(bool)
 
 
-def pip_contains_udf(polygons: dict[int, Ring]):
-    """pandas UDF: (lon, lat) -> array<long> of polygon ids containing
-    the point. The polygon dict rides in the closure (broadcast once
-    per executor); explode the result to get join rows."""
-    items = [(pid, ring) for pid, ring in sorted(polygons.items())]
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def _pip(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        lo = lon.to_numpy(dtype=np.float64)
-        la = lat.to_numpy(dtype=np.float64)
-        n = len(lo)
-        hits: list[list[int]] = [[] for _ in range(n)]
-        for pid, ring in items:
-            m = pip_mask(lo, la, ring)
-            for i in np.nonzero(m)[0]:
-                hits[i].append(pid)
-        return pd.Series(hits)
-
-    return _pip
-
-
-def pip_test_udf(polygons: dict[int, Ring]):
-    """pandas UDF: (lon, lat, polygon_id) -> bool. Used on BOUNDARY-cell
-    candidates after the cover join, grouped per polygon inside the
-    batch for vectorization."""
-    polys = dict(polygons)
-
-    @F.pandas_udf(T.BooleanType())
-    def _pip(lon: pd.Series, lat: pd.Series, pid: pd.Series) -> pd.Series:
-        lo = lon.to_numpy(dtype=np.float64)
-        la = lat.to_numpy(dtype=np.float64)
-        ids = pid.to_numpy()
-        out = np.zeros(len(lo), dtype=bool)
-        for p in np.unique(ids):
-            ring = polys.get(int(p))
-            if ring is None:
-                continue
-            sel = ids == p
-            out[sel] = pip_mask(lo[sel], la[sel], ring)
-        return pd.Series(out)
-
-    return _pip
-
-
 def pip_test_or_full_udf(polygons: dict[int, Ring]):
     """pandas UDF: (lon, lat, polygon_id, is_full) -> bool.
 
@@ -137,81 +97,120 @@ def pip_test_or_full_udf(polygons: dict[int, Ring]):
     return _pip
 
 
-def pip_ring_expr(ring: Ring, lon, lat):
-    """NATIVE even-odd test for one ring: the crossing count UNROLLED
-    into a flat sum of per-edge scalar expressions — same strict
-    comparisons and edge order as src/coords.jl:69-78.
+class NonFiniteVertexError(ValueError):
+    """A polygon vertex is NaN or infinite. The even-odd loop of
+    src/coords.jl:69-78 has no meaning for such a ring, and the exact
+    test inlines vertices as SQL DOUBLE literals, which have no
+    NaN/Infinity spelling — so it is refused up front by name."""
 
-    Unrolled (not an ``F.aggregate`` fold) on purpose: Spark's
+
+def check_finite_ring(pid: int, ring: Ring) -> None:
+    """Raise :class:`NonFiniteVertexError` if any vertex of polygon
+    ``pid`` has a NaN or infinite coordinate."""
+    for v in ring:
+        if not (math.isfinite(v[0]) and math.isfinite(v[1])):
+            raise NonFiniteVertexError(
+                f"polygon {pid} has a non-finite vertex {tuple(v)!r}"
+            )
+
+
+def sql_double(v: float) -> str:
+    """``v`` as an exact Spark SQL DOUBLE literal, e.g. ``(-0.5D)``.
+
+    Python's repr is the shortest decimal that round-trips and Spark
+    parses DOUBLE literals with Java's correctly-rounded
+    ``Double.parseDouble``, so the literal is bit-identical to ``v`` —
+    ``-0.0``, subnormals and exponent forms included (pinned in
+    tests/test_properties.py). Parenthesised so a negative value
+    composes under any operator.
+    """
+    v = float(v)
+    if not math.isfinite(v):
+        raise NonFiniteVertexError(f"{v!r} has no SQL DOUBLE literal")
+    return f"({v!r}D)"
+
+
+def _sql_ident(name: str) -> str:
+    """``name`` as a backtick-quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _crossing_sql(ax: str, ay: str, bx: str, by: str, lon: str, lat: str) -> str:
+    """SQL for one edge's term of the even-odd count (src/coords.jl:73-75):
+    1 if edge (a, b) straddles the point's latitude with its crossing
+    strictly left of the point, else 0. ``(lat - ay) / (by - ay) *
+    (bx - ax)`` keeps the reference's IEEE op order. The division is
+    ``try_divide``: by == ay only on horizontal edges, where the
+    straddle test is always false, but under ANSI mode a bare / would
+    raise DIVIDE_BY_ZERO if an optimizer reordering ever evaluated it
+    first — try_divide yields NULL there and ``false AND NULL`` is
+    false, safe in ANY evaluation order (identical quotient on every
+    crossing edge)."""
+    return (
+        f"CASE WHEN (({ay} > {lat}) != ({by} > {lat})) AND "
+        f"({ax} + try_divide({lat} - {ay}, {by} - {ay}) * ({bx} - {ax}) < {lon}) "
+        "THEN 1 ELSE 0 END"
+    )
+
+
+def _ring_sql(ring: Ring, lon: str, lat: str) -> str:
+    """NATIVE even-odd test for one ring: the crossing count UNROLLED
+    into a flat sum of per-edge scalar terms with the edge vertices as
+    exact literals — same strict comparisons and edge order (closing
+    edge first) as src/coords.jl:69-78.
+
+    Unrolled (not an ``aggregate`` fold) on purpose: Spark's
     higher-order functions have NO whole-stage codegen and evaluate
     interpreted per row — measured ~7x slower on the sf0.1 PIP join.
     Rings are small (the polygon dim is broadcast-scale), so the flat
-    expression stays well inside codegen limits. Edge constants are
-    literals; ``(lat - ay) / (by - ay) * (bx - ax)`` keeps the exact
-    IEEE op order of the reference (constant subexpressions fold to
-    the same doubles), so bit-parity with pip_mask/the oracle port
-    holds — pinned by tests. The division is ``try_divide``: by == ay
-    only on horizontal edges, where ``crosses`` is always false, but
-    under ANSI mode a bare / would raise DIVIDE_BY_ZERO if an
-    optimizer reordering ever evaluated it first — try_divide yields
-    NULL there and ``false & NULL = false``, safe in ANY evaluation
-    order (identical quotient on every crossing edge).
+    expression stays well inside codegen limits. Constant
+    subexpressions such as ``by - ay`` fold to the same doubles the
+    reference computes, so bit-parity with pip_mask/the oracle port
+    holds — pinned by tests.
     """
-    axs, ays, bxs, bys = _ring_arrays(ring)
-    total = F.lit(0)
-    for ax, ay, bx, by in zip(
-        axs.tolist(), ays.tolist(), bxs.tolist(), bys.tolist()
-    ):
-        crosses = (F.lit(ay) > lat) != (F.lit(by) > lat)
-        x = F.lit(ax) + F.try_divide(
-            lat - F.lit(ay), F.lit(by) - F.lit(ay)
-        ) * (F.lit(bx) - F.lit(ax))
-        total = total + F.when(crosses & (x < lon), 1).otherwise(0)
-    return total % 2 == 1
+    terms = ["0"]
+    for edge in zip(*(c.tolist() for c in _ring_arrays(ring))):
+        terms.append(_crossing_sql(*map(sql_double, edge), lon, lat))
+    return f"({' + '.join(terms)}) % 2 = 1"
 
 
-def pip_edges_fold_expr(lon, lat, edges):
-    """Even-odd test as an ``F.aggregate`` fold over an edge ARRAY
-    column (struct ax, ay, bx, by per edge) — the LARGE-polygon-set
-    path. Higher-order functions evaluate interpreted (no codegen),
-    but the work per row is O(edges of ITS polygon) with no branch
-    dispatch, and the plan size is constant in the number of polygons
-    — where the unrolled CASE of pip_test_or_full_expr walks an
-    N-polygon branch chain and inflates the plan/codegen unit until
-    it falls out of JIT entirely (measured: the 96-square grid
-    workload spent ~1.7s/15k rows in the CASE where this fold is
-    ~10x cheaper). Same strict comparisons, same IEEE op order, same
-    try_divide guard as pip_ring_expr — bit-parity preserved.
+def pip_edges_fold_expr(lon: str, lat: str, edges: str):
+    """Even-odd test as an ``aggregate`` fold over the edge ARRAY
+    column ``edges`` (struct ax, ay, bx, by per edge) — the
+    LARGE-polygon-set path. Higher-order functions evaluate
+    interpreted (no codegen), but the work per row is O(edges of ITS
+    polygon) with no branch dispatch, and the plan size is constant in
+    the number of polygons — where the unrolled CASE of
+    pip_test_or_full_expr walks an N-polygon branch chain and inflates
+    the plan/codegen unit until it falls out of JIT entirely. Same
+    per-edge term as the unrolled CASE (_crossing_sql) — bit-parity
+    preserved. Column arguments are names.
     """
-    def step(acc, e):
-        crosses = (e["ay"] > lat) != (e["by"] > lat)
-        x = e["ax"] + F.try_divide(lat - e["ay"], e["by"] - e["ay"]) * (
-            e["bx"] - e["ax"]
-        )
-        return acc + F.when(crosses & (x < lon), 1).otherwise(0)
-
-    return F.aggregate(edges, F.lit(0), step) % 2 == 1
+    lon, lat, edges = map(_sql_ident, (lon, lat, edges))
+    step = _crossing_sql("_e.ax", "_e.ay", "_e.bx", "_e.by", lon, lat)
+    return F.expr(f"aggregate({edges}, 0, (_acc, _e) -> _acc + {step}) % 2 = 1")
 
 
-def pip_test_or_full_expr(polygons: dict[int, Ring], lon, lat, pid, is_full):
+def pip_test_or_full_expr(
+    polygons: dict[int, Ring], lon: str, lat: str, pid: str, is_full: str
+):
     """NATIVE single-pass cover-join test: FULL cells short-circuit to
     true, boundary cells run the per-polygon unrolled even-odd
-    expression (dispatched by a CASE over the small polygon set;
-    see pip_ring_expr for why it is unrolled, not a fold). Replaces
-    pip_test_or_full_udf in the default plan — the whole spatial join
-    is then Python-free; the UDF stays as the parity reference and the
-    path for polygon sets too large to inline as literals.
+    expression (dispatched by a CASE over the small polygon set; see
+    _ring_sql for why it is unrolled, not a fold). Column arguments are
+    names. The whole test is ONE SQL string, so building it costs one
+    JVM parse regardless of the edge count — building it node by node
+    through the Column API costs one Py4J call per node. The UDF
+    (pip_test_or_full_udf) stays as the parity reference.
     """
+    lon, lat, pid, is_full = map(_sql_ident, (lon, lat, pid, is_full))
     if not polygons:  # no CASE to build; only FULL cells can match
-        return is_full
-    branch = None
-    for p, ring in sorted(polygons.items()):
-        inside = pip_ring_expr(ring, lon, lat)
-        cond = pid == F.lit(p)
-        branch = (
-            F.when(cond, inside) if branch is None else branch.when(cond, inside)
-        )
-    return is_full | F.coalesce(branch, F.lit(False))
+        return F.expr(is_full)
+    branches = " ".join(
+        f"WHEN {pid} = {int(p)} THEN ({_ring_sql(ring, lon, lat)})"
+        for p, ring in sorted(polygons.items())
+    )
+    return F.expr(f"{is_full} OR coalesce(CASE {branches} END, false)")
 
 
 # ------------------------------------------------------------ cell cover

@@ -11,7 +11,7 @@ to answer):
 - J4 polygon extract: the candidate set comes from a BROADCAST hash
   join on (cx, cy) against the polygon cell cover (a few-thousand-row
   dimension), so the 10^12-point fact table never shuffles; the exact
-  PIP pandas UDF touches only boundary-cell candidates.
+  native even-odd test touches only boundary-cell candidates.
 - J6 bbox: a pure cell-range filter — on a cell-clustered table this
   is partition pruning + row-group skipping, zero shuffle
   (src/OSM.jl:246-257 semantics; the reference's unfiltered-ways TODO
@@ -20,17 +20,51 @@ to answer):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from osm_jl_spark.functions.cells import bbox_cell_range, with_cell
 from osm_jl_spark.functions.geo import (
     Ring,
     cell_cover,
+    check_finite_ring,
     pip_edges_fold_expr,
     pip_test_or_full_expr,
     pip_test_or_full_udf,
 )
+
+_BBOX = [(c, pa.float64()) for c in ("bminx", "bmaxx", "bminy", "bmaxy")]
+_COVER = pa.schema(
+    [("polygon_id", pa.int64()), ("ccx", pa.int64()), ("ccy", pa.int64()),
+     ("is_full", pa.bool_()), *_BBOX]
+)
+_RANGE = pa.schema(
+    [("polygon_id", pa.int64()), ("cxlo", pa.int64()), ("cxhi", pa.int64()),
+     ("cylo", pa.int64()), ("cyhi", pa.int64()), ("is_full", pa.bool_()),
+     *_BBOX]
+)
+_EDGES = pa.schema([
+    ("polygon_id", pa.int64()),
+    ("edges", pa.list_(pa.struct(
+        [(c, pa.float64()) for c in ("ax", "ay", "bx", "by")]
+    ))),
+])
+
+
+def _local_table(
+    spark: SparkSession, rows: list[tuple], schema: pa.Schema
+) -> DataFrame:
+    """A driver-built dimension as a LOCAL relation: rows go over as
+    one Arrow stream and plan as ``LocalTableScan``, where a list of
+    tuples would be pickled row by row into an RDD scan. Spark's
+    ``spark.sql.execution.arrow.localRelationThreshold`` still turns
+    an oversized table into an RDD scan on its own."""
+    cols = zip(*rows)
+    return spark.createDataFrame(pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, schema)],
+        schema=schema,
+    ))
 
 
 def explode_way_refs(ways: DataFrame) -> DataFrame:
@@ -179,6 +213,7 @@ def nodes_in_polygons(
     cover_rows = []
     big_rows = []
     for pid, ring in sorted(polygons.items()):
+        check_finite_ring(pid, ring)
         xs = [p[0] for p in ring]
         ys = [p[1] for p in ring]
         bbox = (min(xs), max(xs), min(ys), max(ys))
@@ -204,11 +239,7 @@ def nodes_in_polygons(
     pts = with_cell(points, precision, lon=lon, lat=lat)
     parts = []
     if cover_rows:
-        cover = spark.createDataFrame(
-            cover_rows,
-            "polygon_id BIGINT, ccx BIGINT, ccy BIGINT, is_full BOOLEAN, "
-            "bminx DOUBLE, bmaxx DOUBLE, bminy DOUBLE, bmaxy DOUBLE",
-        )
+        cover = _local_table(spark, cover_rows, _COVER)
         parts.append(
             pts.join(
                 F.broadcast(cover),
@@ -217,12 +248,7 @@ def nodes_in_polygons(
             ).drop("ccx", "ccy")
         )
     if big_rows:
-        bigd = spark.createDataFrame(
-            big_rows,
-            "polygon_id BIGINT, cxlo BIGINT, cxhi BIGINT, "
-            "cylo BIGINT, cyhi BIGINT, is_full BOOLEAN, "
-            "bminx DOUBLE, bmaxx DOUBLE, bminy DOUBLE, bmaxy DOUBLE",
-        )
+        bigd = _local_table(spark, big_rows, _RANGE)
         parts.append(
             pts.join(
                 F.broadcast(bigd),
@@ -265,8 +291,7 @@ def nodes_in_polygons(
         exact = "edges"
     if exact == "native":
         keep = pip_test_or_full_expr(
-            polygons, F.col(lon), F.col(lat),
-            F.col("polygon_id"), F.col("is_full"),
+            polygons, lon, lat, "polygon_id", "is_full"
         )
     elif exact == "edges":
         edge_rows = []
@@ -282,15 +307,9 @@ def nodes_in_polygons(
                     for i in range(n)
                 ],
             ))
-        edims = spark.createDataFrame(
-            edge_rows,
-            "polygon_id BIGINT, edges ARRAY<STRUCT<"
-            "ax: DOUBLE, ay: DOUBLE, bx: DOUBLE, by: DOUBLE>>",
-        )
+        edims = _local_table(spark, edge_rows, _EDGES)
         cand = cand.join(F.broadcast(edims), "polygon_id")
-        keep = F.col("is_full") | pip_edges_fold_expr(
-            F.col(lon), F.col(lat), F.col("edges")
-        )
+        keep = F.col("is_full") | pip_edges_fold_expr(lon, lat, "edges")
         return cand.filter(keep).drop(
             "ccx", "ccy", "is_full", "cx", "cy",
             "bminx", "bmaxx", "bminy", "bmaxy", "edges",
@@ -316,8 +335,9 @@ def ways_in_polygon(
     """J4 (src/OSM.jl:225-239): ways with ANY node inside the polygon.
 
     The reference's O(W·N) nested membership scan becomes: PIP-filter
-    nodes (cell-cover prefilter + exact UDF) -> explode way refs ->
-    left-semi join on the inside-node ids. Returns the way rows.
+    nodes (cell-cover prefilter + native exact even-odd) -> explode
+    way refs -> left-semi join on the inside-node ids. Returns the way
+    rows.
     """
     inside = nodes_in_polygons(
         nodes.select("id", "lon", "lat"), {polygon_id: ring}, precision

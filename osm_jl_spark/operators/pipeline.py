@@ -1,14 +1,15 @@
 """The flagship end-to-end pipeline (SURVEY.md §7.1 M1):
 
 documents(url, warc_ts, html, text, lang)
-  -> extract_text(html)        [pandas UDF, byte-identical invariant]
-  -> geoparse(text)            [pandas UDF -> array<struct> -> explode]
+  -> extract_text(html)        [native regexp chain, byte-identical invariant]
+  -> geoparse(text)            [native regexp_extract_all -> array<struct> -> explode]
   -> points(url, pt_idx, lon, lat)   [the engine's "nodes"]
   -> cell encode               [native trunc cast]
-  -> PIP spatial join          [broadcast cell cover + exact UDF]
-  -> tile aggregation          [salted groupBy]
+  -> PIP spatial join          [broadcast cell cover + native exact even-odd]
+  -> tile aggregation          [groupBy (polygon_id, cx, cy)]
 
-Each stage is also exposed separately for the query registry.
+Each stage is also exposed separately for the query registry; the
+pandas-UDF kernels survive only as ``*_udf`` parity references.
 """
 
 from __future__ import annotations

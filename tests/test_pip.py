@@ -87,7 +87,7 @@ def test_spark_spatial_join_matches_oracle(spark):
 
 
 def test_native_pip_expr_matches_udf_path(spark):
-    """exact='native' (literal-edge aggregate fold in codegen) and
+    """exact='native' (unrolled per-edge CASE in codegen) and
     exact='udf' (Arrow/NumPy kernel) must emit identical join rows —
     both are bit-level ports of src/coords.jl:69-78."""
     from osm_jl_spark.datagen import load_pages_points

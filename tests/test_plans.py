@@ -130,7 +130,8 @@ def test_sessionize_single_exchange(spark):
 
 def test_pip_no_fact_shuffle(spark):
     """nodes_in_polygons: the point side must reach the exact-PIP filter
-    with ZERO exchanges — prefilter is a broadcast join."""
+    with ZERO exchanges — prefilter is a broadcast join — and the
+    broadcast dimensions (cover, edge arrays) are local relations."""
     from osm_jl_spark import datagen as G
     from osm_jl_spark.operators.joins import nodes_in_polygons
 
@@ -141,6 +142,35 @@ def test_pip_no_fact_shuffle(spark):
     # '(N) Exchange' does not match BroadcastExchange detail headers
     assert count_nodes(plan, "Exchange") == 0, plan
     assert "BroadcastHashJoin" in plan
+    # the driver-built cover ships as an Arrow local relation, not a
+    # pickled RDD: its broadcast leaf is a LocalTableScan
+    assert count_nodes(plan, "LocalTableScan") == 1, plan
+    assert "Scan ExistingRDD" not in plan, plan
+
+    # 99 polygons take the edges-array fold: the edge dimension is a
+    # local relation too
+    polys = dict(G.POLYGONS)
+    polys.update({100 + p: r for p, r in G.polygon_grid().items()})
+    plan = explain(nodes_in_polygons(pts, polys, 2))
+    assert count_nodes(plan, "Exchange") == 0, plan
+    assert count_nodes(plan, "BroadcastExchange") == 2, plan
+    assert count_nodes(plan, "LocalTableScan") == 2, plan
+    assert "Scan ExistingRDD" not in plan, plan
+
+    # past spark.sql.execution.arrow.localRelationThreshold Spark turns
+    # the Arrow tables into RDD scans on its own; the rows must not move
+    rows = lambda: sorted(  # noqa: E731
+        tuple(r) for r in nodes_in_polygons(pts, polys, 2).collect()
+    )
+    want = rows()
+    key = "spark.sql.execution.arrow.localRelationThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1")
+    try:
+        assert "Scan ExistingRDD" in explain(nodes_in_polygons(pts, polys, 2))
+        assert rows() == want and want
+    finally:
+        spark.conf.set(key, old)
 
 
 def test_pack_sequences_global_window_bounded_to_buckets(spark):

@@ -1,17 +1,20 @@
 """Property-based tests (hypothesis): the NumPy kernels must agree with
 the pure-Python reference ports on arbitrary inputs — not just the
-fixture polygons. No Spark session needed; these pin the numeric core
-that every distributed operator builds on."""
+fixture polygons. These pin the numeric core that every distributed
+operator builds on; only the SQL-literal contract of the native PIP
+test needs a Spark session."""
 
 from __future__ import annotations
 
 import math
+import struct
 
 import numpy as np
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from osm_jl_spark.functions.geo import pip_mask
+from osm_jl_spark.functions.geo import NonFiniteVertexError, pip_mask, sql_double
 from osm_jl_spark.oracle import coord2index, point_in_polygon
 
 coord = st.floats(
@@ -75,6 +78,60 @@ def test_cell_encode_consistent_under_vectorization(pts, precision):
     batch = np.trunc(arr).astype(np.int64)
     scalar = [coord2index(p[0], precision) for p in pts]
     assert list(batch) == scalar
+
+
+# ------------------------------------------------- SQL double literals
+
+literal_double = st.one_of(
+    coord,
+    lat_coord,
+    st.floats(allow_nan=False, allow_infinity=False),
+    # subnormals and their normal neighbours
+    st.floats(min_value=-2.3e-308, max_value=2.3e-308),
+    st.sampled_from([
+        -0.0, 0.0, 5e-324, -5e-324, 1e-05, -1e-05, 1e16,
+        180.0, -180.0, 90.0, -90.0, 179.99999, -89.99999,
+        math.nextafter(180.0, 0.0), math.nextafter(-90.0, 0.0),
+    ]),
+)
+
+
+@given(values=st.lists(literal_double, min_size=1, max_size=16))
+@settings(max_examples=60, deadline=None)
+def test_sql_double_literal_roundtrips_bit_exactly(spark, values):
+    """The native PIP test inlines ring vertices as SQL DOUBLE literals;
+    each must parse back to the very same double — sign of zero,
+    subnormals and exponent spellings such as ``1e-05`` included — or
+    the native test is no longer the reference's test."""
+    df = spark.sql("SELECT " + ", ".join(
+        f"{sql_double(v)} AS c{i}" for i, v in enumerate(values)
+    ))
+    assert {f.dataType.simpleString() for f in df.schema} == {"double"}
+    bits = lambda xs: [struct.pack("<d", x) for x in xs]  # noqa: E731
+    assert bits(df.first()) == bits(values)
+
+
+@given(
+    pos=st.integers(min_value=0, max_value=3),
+    bad=st.sampled_from([math.nan, math.inf, -math.inf]),
+    on_lat=st.booleans(),
+    exact=st.sampled_from(["native", "edges", "udf"]),
+)
+@settings(max_examples=24, deadline=None)
+def test_non_finite_vertex_raises_named_error(spark, pos, bad, on_lat, exact):
+    """A NaN or infinite vertex has no SQL literal and no even-odd
+    meaning: nodes_in_polygons refuses it by name, before any SQL is
+    parsed, whichever exact-test mode is asked for."""
+    from osm_jl_spark.datagen import FROGNER
+    from osm_jl_spark.operators.joins import nodes_in_polygons
+
+    ring = [(10.0, 59.0), (10.1, 59.0), (10.1, 59.1), (10.0, 59.1)]
+    x, y = ring[pos]
+    ring[pos] = (x, bad) if on_lat else (bad, y)
+    pts = spark.range(1).selectExpr("10.05D AS lon", "59.05D AS lat")
+    with pytest.raises(NonFiniteVertexError, match="polygon 7"):
+        nodes_in_polygons(pts, {1: FROGNER, 7: ring}, 2, exact=exact)
+    assert issubclass(NonFiniteVertexError, ValueError)
 
 
 # ------------------------------------------------- PBF wire format
