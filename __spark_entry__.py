@@ -203,12 +203,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
     def pip_grid_polygons_q(spark, sf_dir):
-        # 96-polygon PIP: the same broadcast cell-cover + unrolled
-        # even-odd join with a polygon DIMENSION 32x the fixture set —
-        # pins that cover size scales with the polygon table, not the
-        # fact side (the cover stays a broadcast; the points never
-        # shuffle). Oracle: full cross-join crossing count per
-        # (point, polygon) over the exact same 384 edges.
+        # 96-polygon PIP: the same broadcast cell-cover + codegen slot
+        # test (edge slots broadcast per polygon, sized by the widest
+        # ring, not the polygon count) with a polygon DIMENSION 32x the
+        # fixture set — pins that cover size scales with the polygon
+        # table, not the fact side (the cover stays a broadcast; the
+        # points never shuffle). Oracle: full cross-join crossing
+        # count per (point, polygon) over the exact same 384 edges.
         pts = _points(spark, sf_dir)
         return J.nodes_in_polygons(pts, G.polygon_grid(), PRECISION).select(
             "url", "pt_idx", "polygon_id"

@@ -4,12 +4,14 @@ covers, and coordinate transforms.
 PIP reproduces the reference's even-odd ray casting bit-for-bit
 (/root/reference/src/coords.jl:69-78): closing edge first, strict
 ``>`` / ``<`` comparisons, open ring. The production test is native
-Spark SQL: edge vertices become exact DOUBLE literals in ONE SQL
-string (an unrolled per-edge CASE for small polygon sets, an
-``aggregate`` fold over a broadcast edge array for large ones), so
-building it costs one parse on the JVM instead of a Py4J call per
-expression node. ``pip_mask`` (NumPy) and ``pip_test_or_full_udf``
-(its Arrow UDF wrapper) are the parity references.
+Spark SQL in ONE string, so building it costs one parse on the JVM
+instead of a Py4J call per expression node: a flat sum of per-edge
+terms over broadcast edge SLOT columns (``pip_slots_expr``; its size
+follows the widest ring, not the polygon count, and it stays inside
+whole-stage codegen), or an ``aggregate`` fold over a broadcast edge
+array for rings too wide to unroll (``pip_edges_fold_expr``,
+interpreted). ``pip_mask`` (NumPy) and ``pip_test_or_full_udf`` (its
+Arrow UDF wrapper) are the parity references.
 
 The scale story (SURVEY.md §4 custom work #1): computing exact PIP for
 every (point, polygon) pair is O(N·P·V) and unusable at 10^12 docs.
@@ -30,9 +32,18 @@ import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from osm_jl_spark.oracle import point_in_polygon
+from osm_jl_spark.oracle import coord2index, point_in_polygon
 
 Ring = list[tuple[float, float]]
+
+
+def ring_edges(ring: Ring) -> list[tuple[float, float, float, float]]:
+    """(ax, ay, bx, by) per edge with the closing edge first, matching
+    ``zip([P[end]; P[1:end-1]], P)`` (src/coords.jl:70)."""
+    return [
+        (float(a[0]), float(a[1]), float(b[0]), float(b[1]))
+        for a, b in zip([ring[-1], *ring[:-1]], ring)
+    ]
 
 
 def _ring_arrays(ring: Ring) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
@@ -99,9 +110,9 @@ def pip_test_or_full_udf(polygons: dict[int, Ring]):
 
 class NonFiniteVertexError(ValueError):
     """A polygon vertex is NaN or infinite. The even-odd loop of
-    src/coords.jl:69-78 has no meaning for such a ring, and the exact
-    test inlines vertices as SQL DOUBLE literals, which have no
-    NaN/Infinity spelling — so it is refused up front by name."""
+    src/coords.jl:69-78 has no meaning for such a ring, yet the exact
+    test would quietly return some answer for it — so it is refused
+    up front by name."""
 
 
 def check_finite_ring(pid: int, ring: Ring) -> None:
@@ -112,22 +123,6 @@ def check_finite_ring(pid: int, ring: Ring) -> None:
             raise NonFiniteVertexError(
                 f"polygon {pid} has a non-finite vertex {tuple(v)!r}"
             )
-
-
-def sql_double(v: float) -> str:
-    """``v`` as an exact Spark SQL DOUBLE literal, e.g. ``(-0.5D)``.
-
-    Python's repr is the shortest decimal that round-trips and Spark
-    parses DOUBLE literals with Java's correctly-rounded
-    ``Double.parseDouble``, so the literal is bit-identical to ``v`` —
-    ``-0.0``, subnormals and exponent forms included (pinned in
-    tests/test_properties.py). Parenthesised so a negative value
-    composes under any operator.
-    """
-    v = float(v)
-    if not math.isfinite(v):
-        raise NonFiniteVertexError(f"{v!r} has no SQL DOUBLE literal")
-    return f"({v!r}D)"
 
 
 def _sql_ident(name: str) -> str:
@@ -153,64 +148,56 @@ def _crossing_sql(ax: str, ay: str, bx: str, by: str, lon: str, lat: str) -> str
     )
 
 
-def _ring_sql(ring: Ring, lon: str, lat: str) -> str:
-    """NATIVE even-odd test for one ring: the crossing count UNROLLED
-    into a flat sum of per-edge scalar terms with the edge vertices as
-    exact literals — same strict comparisons and edge order (closing
-    edge first) as src/coords.jl:69-78.
+def edge_slot_columns(k: int) -> list[str]:
+    """Column names of ``k`` edge slots: ``_e{i}_ax/_ay/_bx/_by``."""
+    return [f"_e{i}_{c}" for i in range(k) for c in ("ax", "ay", "bx", "by")]
 
-    Unrolled (not an ``aggregate`` fold) on purpose: Spark's
-    higher-order functions have NO whole-stage codegen and evaluate
-    interpreted per row — measured ~7x slower on the sf0.1 PIP join.
-    Rings are small (the polygon dim is broadcast-scale), so the flat
-    expression stays well inside codegen limits. Constant
-    subexpressions such as ``by - ay`` fold to the same doubles the
-    reference computes, so bit-parity with pip_mask/the oracle port
-    holds — pinned by tests.
+
+def edge_slots(ring: Ring, k: int) -> list[float]:
+    """The ring's edges as the values of ``k`` edge slots (the columns
+    of :func:`edge_slot_columns`), padded with the zero-length edge."""
+    edges = ring_edges(ring)
+    return [v for e in edges + [(0.0,) * 4] * (k - len(edges)) for v in e]
+
+
+def pip_slots_expr(lon: str, lat: str, k: int):
+    """NATIVE even-odd test over ``k`` edge SLOTS: the flat DOUBLE
+    columns of :func:`edge_slot_columns`, filled by :func:`edge_slots`
+    with the closing edge in slot 0 — the edge order of
+    src/coords.jl:69-78. The crossing count is
+    unrolled into a flat sum of per-edge scalar terms, so it compiles
+    inside whole-stage codegen — Spark's higher-order functions (the
+    fold below) evaluate interpreted per row. Its size depends on
+    ``k``, the widest ring, not on how many polygons there are; the
+    generated method grows ~0.6-0.9 KB of bytecode per slot, and
+    HotSpot does not JIT-compile a method over 8,000 bytes, so callers
+    cap ``k`` (joins.nodes_in_polygons' ``unroll_limit``).
+    Shorter rings pad with the zero-length edge (0, 0, 0, 0): its
+    straddle test ``(0 > lat) != (0 > lat)`` is always false, so it
+    adds 0 like a horizontal edge. Same per-edge term as the fold
+    (_crossing_sql) — bit-parity preserved. Column arguments are names.
     """
-    terms = ["0"]
-    for edge in zip(*(c.tolist() for c in _ring_arrays(ring))):
-        terms.append(_crossing_sql(*map(sql_double, edge), lon, lat))
-    return f"({' + '.join(terms)}) % 2 = 1"
+    lon, lat = map(_sql_ident, (lon, lat))
+    cols = list(map(_sql_ident, edge_slot_columns(k)))
+    terms = ["0"] + [
+        _crossing_sql(*cols[4 * i:4 * i + 4], lon, lat) for i in range(k)
+    ]
+    return F.expr(f"({' + '.join(terms)}) % 2 = 1")
 
 
 def pip_edges_fold_expr(lon: str, lat: str, edges: str):
     """Even-odd test as an ``aggregate`` fold over the edge ARRAY
-    column ``edges`` (struct ax, ay, bx, by per edge) — the
-    LARGE-polygon-set path. Higher-order functions evaluate
+    column ``edges`` (struct ax, ay, bx, by per edge) — the path for
+    rings too wide for the slot test. Higher-order functions evaluate
     interpreted (no codegen), but the work per row is O(edges of ITS
-    polygon) with no branch dispatch, and the plan size is constant in
-    the number of polygons — where the unrolled CASE of
-    pip_test_or_full_expr walks an N-polygon branch chain and inflates
-    the plan/codegen unit until it falls out of JIT entirely. Same
-    per-edge term as the unrolled CASE (_crossing_sql) — bit-parity
-    preserved. Column arguments are names.
+    polygon) and the expression size is constant in the ring width,
+    where the slot test's generated method grows with it. Same per-edge
+    term as the slot test (_crossing_sql) — bit-parity preserved.
+    Column arguments are names.
     """
     lon, lat, edges = map(_sql_ident, (lon, lat, edges))
     step = _crossing_sql("_e.ax", "_e.ay", "_e.bx", "_e.by", lon, lat)
     return F.expr(f"aggregate({edges}, 0, (_acc, _e) -> _acc + {step}) % 2 = 1")
-
-
-def pip_test_or_full_expr(
-    polygons: dict[int, Ring], lon: str, lat: str, pid: str, is_full: str
-):
-    """NATIVE single-pass cover-join test: FULL cells short-circuit to
-    true, boundary cells run the per-polygon unrolled even-odd
-    expression (dispatched by a CASE over the small polygon set; see
-    _ring_sql for why it is unrolled, not a fold). Column arguments are
-    names. The whole test is ONE SQL string, so building it costs one
-    JVM parse regardless of the edge count — building it node by node
-    through the Column API costs one Py4J call per node. The UDF
-    (pip_test_or_full_udf) stays as the parity reference.
-    """
-    lon, lat, pid, is_full = map(_sql_ident, (lon, lat, pid, is_full))
-    if not polygons:  # no CASE to build; only FULL cells can match
-        return F.expr(is_full)
-    branches = " ".join(
-        f"WHEN {pid} = {int(p)} THEN ({_ring_sql(ring, lon, lat)})"
-        for p, ring in sorted(polygons.items())
-    )
-    return F.expr(f"{is_full} OR coalesce(CASE {branches} END, false)")
 
 
 # ------------------------------------------------------------ cell cover
@@ -240,15 +227,17 @@ def cell_bbox_range(
 ) -> tuple[int, int, int, int]:
     """(xlo, xhi, ylo, yhi) trunc-cell bounds of the ring's bbox — the
     O(1)-size range marker used instead of an enumerated cover when a
-    polygon is over budget."""
-    step = 10**-precision
+    polygon is over budget. Cells come from ``coord2index``, the
+    encode's own trunc(x * 10**p): a division by 10**-p disagrees with
+    it (-81.91 / 0.01 truncates to -8190, -81.91 * 100 to -8191), and
+    the clamp to this range would then drop the edge's cell."""
     xs = [v[0] for v in ring]
     ys = [v[1] for v in ring]
     return (
-        math.trunc(min(xs) / step),
-        math.trunc(max(xs) / step),
-        math.trunc(min(ys) / step),
-        math.trunc(max(ys) / step),
+        coord2index(min(xs), precision),
+        coord2index(max(xs), precision),
+        coord2index(min(ys), precision),
+        coord2index(max(ys), precision),
     )
 
 
@@ -286,10 +275,10 @@ def cell_cover(
     n = len(ring)
     for i in range(n):
         a, b = ring[i - 1], ring[i]
-        exlo = math.trunc(min(a[0], b[0]) / step)
-        exhi = math.trunc(max(a[0], b[0]) / step)
-        eylo = math.trunc(min(a[1], b[1]) / step)
-        eyhi = math.trunc(max(a[1], b[1]) / step)
+        exlo = coord2index(min(a[0], b[0]), precision)
+        exhi = coord2index(max(a[0], b[0]), precision)
+        eylo = coord2index(min(a[1], b[1]), precision)
+        eyhi = coord2index(max(a[1], b[1]), precision)
         # negative coords: trunc of the continuous span can start one
         # cell late; widen by one on the low side for safety
         for cx in range(exlo - 1, exhi + 1):

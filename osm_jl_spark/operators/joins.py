@@ -29,9 +29,12 @@ from osm_jl_spark.functions.geo import (
     Ring,
     cell_cover,
     check_finite_ring,
+    edge_slot_columns,
+    edge_slots,
     pip_edges_fold_expr,
-    pip_test_or_full_expr,
+    pip_slots_expr,
     pip_test_or_full_udf,
+    ring_edges,
 )
 
 _BBOX = [(c, pa.float64()) for c in ("bminx", "bmaxx", "bminy", "bmaxy")]
@@ -169,7 +172,7 @@ def nodes_in_polygons(
     lon: str = "lon",
     lat: str = "lat",
     exact: str = "native",
-    unroll_limit: int = 32,
+    unroll_limit: int = 8,
 ) -> DataFrame:
     """J3 (src/OSM.jl:210-218) as a scalable spatial join.
 
@@ -184,13 +187,18 @@ def nodes_in_polygons(
     table at all.
 
     ``exact`` picks the boundary-candidate test:
-    - "native" (default): <= unroll_limit polygons use the UNROLLED
-      per-edge codegen CASE (fastest for small sets); larger sets
-      switch to "edges" automatically — the CASE's plan size and
-      branch chain grow with the polygon count until codegen gives up.
+    - "native" (default): when the widest ring has <= unroll_limit
+      edges, broadcast a (polygon_id, edge slots) dim — shorter rings
+      padded with the zero-length edge — and run the slot test
+      (geo.pip_slots_expr), a flat per-edge sum inside whole-stage
+      codegen whatever the polygon count. Wider rings switch to
+      "edges": the slot test's generated method grows with the ring
+      width, and past HotSpot's 8,000-byte limit the JIT leaves it
+      interpreted (4 CPUs, 300k points: 4.2 s a pass at 12 edges
+      against 0.4 s for the fold; 8 edges keeps it near 6 KB).
     - "edges": broadcast a (polygon_id, edges array) dim and fold it
       with F.aggregate — interpreted, but O(own edges) per row and
-      constant plan size; the many-polygon scale path.
+      constant expression size; the wide-ring path.
     - "udf": the Arrow/NumPy parity kernel.
     """
     from osm_jl_spark.functions.geo import COVER_BUDGET, cell_bbox_range
@@ -286,42 +294,34 @@ def nodes_in_polygons(
     )
     # Single pass: FULL-cell rows short-circuit to true, boundary rows
     # run the exact even-odd test via the mode picked in the docstring
-    # (unrolled codegen CASE / edges-array fold / Arrow parity kernel).
-    if exact == "native" and len(polygons) > unroll_limit:
-        exact = "edges"
-    if exact == "native":
-        keep = pip_test_or_full_expr(
-            polygons, lon, lat, "polygon_id", "is_full"
-        )
-    elif exact == "edges":
-        edge_rows = []
-        for pid, ring in sorted(polygons.items()):
-            n = len(ring)
-            edge_rows.append((
-                pid,
-                [
-                    (
-                        float(ring[i - 1][0]), float(ring[i - 1][1]),
-                        float(ring[i][0]), float(ring[i][1]),
-                    )
-                    for i in range(n)
-                ],
-            ))
-        edims = _local_table(spark, edge_rows, _EDGES)
-        cand = cand.join(F.broadcast(edims), "polygon_id")
-        keep = F.col("is_full") | pip_edges_fold_expr(lon, lat, "edges")
-        return cand.filter(keep).drop(
-            "ccx", "ccy", "is_full", "cx", "cy",
-            "bminx", "bmaxx", "bminy", "bmaxy", "edges",
-        )
-    else:
-        test = pip_test_or_full_udf(polygons)
-        keep = test(
+    # (codegen slot test / edges-array fold / Arrow parity kernel).
+    if exact == "udf":
+        keep = pip_test_or_full_udf(polygons)(
             F.col(lon), F.col(lat), F.col("polygon_id"), F.col("is_full")
         )
+        dim_cols = []
+    else:
+        rings = sorted(polygons.items())
+        k = max(len(ring) for _, ring in rings)
+        if exact == "native" and k <= unroll_limit:
+            dim = _local_table(
+                spark, [(pid, *edge_slots(ring, k)) for pid, ring in rings],
+                pa.schema([("polygon_id", pa.int64()), *(
+                    (c, pa.float64()) for c in edge_slot_columns(k)
+                )]),
+            )
+            test = pip_slots_expr(lon, lat, k)
+        else:
+            dim = _local_table(
+                spark, [(pid, ring_edges(ring)) for pid, ring in rings], _EDGES
+            )
+            test = pip_edges_fold_expr(lon, lat, "edges")
+        cand = cand.join(F.broadcast(dim), "polygon_id")
+        keep = F.col("is_full") | test
+        dim_cols = dim.columns[1:]
     return cand.filter(keep).drop(
         "ccx", "ccy", "is_full", "cx", "cy",
-        "bminx", "bmaxx", "bminy", "bmaxy",
+        "bminx", "bmaxx", "bminy", "bmaxy", *dim_cols,
     )
 
 

@@ -5,7 +5,15 @@ import numpy as np
 
 from osm_jl_spark.datagen import FROGNER, OSLO_PENT, POLYGONS, VITORIA_TRI
 from osm_jl_spark.functions.geo import cell_cover, pip_mask
-from osm_jl_spark.oracle import point_in_polygon
+from osm_jl_spark.oracle import cell_of, point_in_polygon
+
+
+def _vertices_and_midpoints(ring):
+    mids = [
+        ((a[0] + b[0]) / 2, (a[1] + b[1]) / 2)
+        for a, b in zip([ring[-1], *ring[:-1]], ring)
+    ]
+    return [*ring, *mids]
 
 
 def _grid(ring, n=25):
@@ -33,10 +41,7 @@ def test_pip_boundary_vertices():
     # strict-inequality semantics on the fixture's exact vertices and
     # edge midpoints must agree between NumPy and the oracle port
     ring = FROGNER
-    pts = list(ring)
-    for i in range(len(ring)):
-        a, b = ring[i - 1], ring[i]
-        pts.append(((a[0] + b[0]) / 2, (a[1] + b[1]) / 2))
+    pts = _vertices_and_midpoints(ring)
     lon = np.array([p[0] for p in pts])
     lat = np.array([p[1] for p in pts])
     got = pip_mask(lon, lat, ring)
@@ -59,13 +64,36 @@ def test_cell_cover_classification():
                             pid, precision, cx, cy, x, y,
                         )
             # completeness: every inside point's cell is in full|boundary
+            # — grid points, and the vertices and edge midpoints where
+            # the cover's cell arithmetic meets the encode's
             lon, lat = _grid(ring, 21)
-            from osm_jl_spark.oracle import cell_of
-
             cover = full | boundary
-            for x, y in zip(lon, lat):
+            for x, y in [*zip(lon, lat), *_vertices_and_midpoints(ring)]:
                 if point_in_polygon(x, y, ring):
-                    assert cell_of(x, y, precision) in cover
+                    assert cell_of(x, y, precision) in cover, (
+                        pid, precision, x, y,
+                    )
+
+
+def test_cover_holds_the_cell_of_a_negative_bottom_edge(spark):
+    """Cover cells use the encode's trunc(x * 10**p). At precision 2,
+    trunc(-81.91 / 0.01) is -8190 but the encode puts -81.91 in cell
+    -8191, so a bbox range computed by division clamps away the cell
+    that holds the bottom edge, and the join silently drops a point
+    the oracle puts inside."""
+    from osm_jl_spark.operators.joins import nodes_in_polygons
+
+    ring = [(10.0, -81.91), (10.05, -81.91), (10.05, -81.86), (10.0, -81.86)]
+    assert point_in_polygon(10.025, -81.91, ring)
+    full, boundary = cell_cover(ring, 2)
+    assert cell_of(10.025, -81.91, 2) == (1002, -8191)
+    assert (1002, -8191) in full | boundary
+    pts = spark.createDataFrame(
+        [(1, 10.025, -81.91)], "id LONG, lon DOUBLE, lat DOUBLE"
+    )
+    for exact in ("native", "edges", "udf"):
+        got = nodes_in_polygons(pts, {5: ring}, 2, exact=exact).collect()
+        assert [(r["id"], r["polygon_id"]) for r in got] == [(1, 5)], exact
 
 
 def test_spark_spatial_join_matches_oracle(spark):
@@ -87,7 +115,8 @@ def test_spark_spatial_join_matches_oracle(spark):
 
 
 def test_native_pip_expr_matches_udf_path(spark):
-    """exact='native' (unrolled per-edge CASE in codegen) and
+    """exact='native' (the slot test: a flat per-edge sum over
+    broadcast edge-slot columns, inside whole-stage codegen) and
     exact='udf' (Arrow/NumPy kernel) must emit identical join rows —
     both are bit-level ports of src/coords.jl:69-78."""
     from osm_jl_spark.datagen import load_pages_points
@@ -127,21 +156,21 @@ def test_shoelace_area2_square_and_degenerate(spark):
 
 
 def test_edges_fold_matches_unrolled_and_udf(spark):
-    """All three exact-test modes (unrolled codegen CASE, edges-array
-    fold, Arrow kernel) must emit identical join rows on the same
-    polygon set — the fold is the many-polygon scale path and must be
-    a bit-level equivalent, not an approximation."""
+    """All three exact-test modes (codegen slot test, edges-array fold,
+    Arrow kernel) must emit identical join rows on the same 96-polygon
+    set — the fold is the wide-ring path and must be a bit-level
+    equivalent of the slot test, not an approximation."""
     from osm_jl_spark.datagen import load_pages_points, polygon_grid
     from osm_jl_spark.operators.joins import nodes_in_polygons
 
     pts = load_pages_points(spark, 400)
     polys = polygon_grid()
     key = lambda r: (r["url"], r["pt_idx"], r["polygon_id"])  # noqa: E731
-    # force each mode explicitly (unroll_limit high enough to keep
-    # 'native' unrolled even at 96 polygons)
-    unrolled = {
+    # force each mode explicitly ('native' takes the slot test at any
+    # polygon count: every ring here has 4 edges, within unroll_limit)
+    slots = {
         key(r) for r in nodes_in_polygons(
-            pts, polys, 2, exact="native", unroll_limit=1000
+            pts, polys, 2, exact="native", unroll_limit=4
         ).collect()
     }
     fold = {
@@ -152,7 +181,7 @@ def test_edges_fold_matches_unrolled_and_udf(spark):
         key(r)
         for r in nodes_in_polygons(pts, polys, 2, exact="udf").collect()
     }
-    assert unrolled == fold == udf and len(fold) > 0
+    assert slots == fold == udf and len(fold) > 0
 
 
 def test_continent_scale_polygon_range_join_path(spark):

@@ -131,7 +131,10 @@ def test_sessionize_single_exchange(spark):
 def test_pip_no_fact_shuffle(spark):
     """nodes_in_polygons: the point side must reach the exact-PIP filter
     with ZERO exchanges — prefilter is a broadcast join — and the
-    broadcast dimensions (cover, edge arrays) are local relations."""
+    broadcast dimensions (cover, edge slots or edge arrays) are local
+    relations. The exact test is the codegen slot test whatever the
+    polygon count; only a ring wider than unroll_limit takes the
+    interpreted edges-array fold."""
     from osm_jl_spark import datagen as G
     from osm_jl_spark.operators.joins import nodes_in_polygons
 
@@ -142,13 +145,16 @@ def test_pip_no_fact_shuffle(spark):
     # '(N) Exchange' does not match BroadcastExchange detail headers
     assert count_nodes(plan, "Exchange") == 0, plan
     assert "BroadcastHashJoin" in plan
-    # the driver-built cover ships as an Arrow local relation, not a
-    # pickled RDD: its broadcast leaf is a LocalTableScan
-    assert count_nodes(plan, "LocalTableScan") == 1, plan
+    # the driver-built cover and edge-slot dims ship as Arrow local
+    # relations, not pickled RDDs: both broadcast leaves are
+    # LocalTableScans
+    assert count_nodes(plan, "BroadcastExchange") == 2, plan
+    assert count_nodes(plan, "LocalTableScan") == 2, plan
     assert "Scan ExistingRDD" not in plan, plan
+    # the slot test is a flat per-edge sum, not an interpreted fold
+    assert "_e0_ax" in plan and "aggregate(" not in plan, plan
 
-    # 99 polygons take the edges-array fold: the edge dimension is a
-    # local relation too
+    # 99 polygons keep the slot test: its size follows the widest ring
     polys = dict(G.POLYGONS)
     polys.update({100 + p: r for p, r in G.polygon_grid().items()})
     plan = explain(nodes_in_polygons(pts, polys, 2))
@@ -156,6 +162,16 @@ def test_pip_no_fact_shuffle(spark):
     assert count_nodes(plan, "BroadcastExchange") == 2, plan
     assert count_nodes(plan, "LocalTableScan") == 2, plan
     assert "Scan ExistingRDD" not in plan, plan
+    assert "_e0_ax" in plan and "aggregate(" not in plan, plan
+
+    # the 5-edge ring is wider than unroll_limit=4: the edges-array
+    # fold, its edge dimension a local relation too
+    plan = explain(nodes_in_polygons(pts, G.POLYGONS, 2, unroll_limit=4))
+    assert count_nodes(plan, "Exchange") == 0, plan
+    assert count_nodes(plan, "BroadcastExchange") == 2, plan
+    assert count_nodes(plan, "LocalTableScan") == 2, plan
+    assert "Scan ExistingRDD" not in plan, plan
+    assert "aggregate(" in plan and "_e0_ax" not in plan, plan
 
     # past spark.sql.execution.arrow.localRelationThreshold Spark turns
     # the Arrow tables into RDD scans on its own; the rows must not move

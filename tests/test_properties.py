@@ -1,20 +1,21 @@
 """Property-based tests (hypothesis): the NumPy kernels must agree with
 the pure-Python reference ports on arbitrary inputs — not just the
 fixture polygons. These pin the numeric core that every distributed
-operator builds on; only the SQL-literal contract of the native PIP
-test needs a Spark session."""
+operator builds on; only the tests of the spatial join itself need a
+Spark session."""
 
 from __future__ import annotations
 
+import inspect
 import math
-import struct
 
 import numpy as np
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from osm_jl_spark.functions.geo import NonFiniteVertexError, pip_mask, sql_double
+from osm_jl_spark.functions.geo import NonFiniteVertexError, pip_mask
+from osm_jl_spark.operators.joins import nodes_in_polygons
 from osm_jl_spark.oracle import coord2index, point_in_polygon
 
 coord = st.floats(
@@ -80,35 +81,58 @@ def test_cell_encode_consistent_under_vectorization(pts, precision):
     assert list(batch) == scalar
 
 
-# ------------------------------------------------- SQL double literals
+# ------------------------------------------------- spatial join parity
 
-literal_double = st.one_of(
-    coord,
-    lat_coord,
-    st.floats(allow_nan=False, allow_infinity=False),
-    # subnormals and their normal neighbours
-    st.floats(min_value=-2.3e-308, max_value=2.3e-308),
-    st.sampled_from([
-        -0.0, 0.0, 5e-324, -5e-324, 1e-05, -1e-05, 1e16,
-        180.0, -180.0, 90.0, -90.0, 179.99999, -89.99999,
-        math.nextafter(180.0, 0.0), math.nextafter(-90.0, 0.0),
-    ]),
-)
+UNROLL_LIMIT = inspect.signature(nodes_in_polygons).parameters[
+    "unroll_limit"
+].default
 
 
-@given(values=st.lists(literal_double, min_size=1, max_size=16))
-@settings(max_examples=60, deadline=None)
-def test_sql_double_literal_roundtrips_bit_exactly(spark, values):
-    """The native PIP test inlines ring vertices as SQL DOUBLE literals;
-    each must parse back to the very same double — sign of zero,
-    subnormals and exponent spellings such as ``1e-05`` included — or
-    the native test is no longer the reference's test."""
-    df = spark.sql("SELECT " + ", ".join(
-        f"{sql_double(v)} AS c{i}" for i, v in enumerate(values)
-    ))
-    assert {f.dataType.simpleString() for f in df.schema} == {"double"}
-    bits = lambda xs: [struct.pack("<d", x) for x in xs]  # noqa: E731
-    assert bits(df.first()) == bits(values)
+@st.composite
+def polygon_set_and_points(draw):
+    """1-3 rings of 3 to UNROLL_LIMIT + 3 edges near one anchor (either
+    hemisphere), some edges horizontal, plus the points where the
+    exact test and the cell arithmetic are most fragile: vertices,
+    edge midpoints, quarter points of horizontal edges, random points."""
+    ax = draw(st.integers(-17000, 17000)) / 100
+    ay = draw(st.integers(-8500, 8500)) / 100
+    off = st.integers(0, 300).map(lambda i: i / 1000)
+    polys, pts = {}, []
+    for pid in range(1, draw(st.integers(1, 3)) + 1):
+        ring = []
+        for _ in range(draw(st.integers(3, UNROLL_LIMIT + 3))):
+            y = ring[-1][1] if ring and draw(st.booleans()) else ay + draw(off)
+            ring.append((ax + draw(off), y))
+        polys[pid] = ring
+        for a, b in zip([ring[-1], *ring[:-1]], ring):
+            pts += [a, ((a[0] + b[0]) / 2, (a[1] + b[1]) / 2)]
+            if a[1] == b[1]:
+                pts.append(((3 * a[0] + b[0]) / 4, a[1]))
+    pts += [(ax + draw(off), ay + draw(off)) for _ in range(8)]
+    return polys, pts
+
+
+@given(data=polygon_set_and_points())
+@settings(max_examples=25, deadline=None)
+def test_native_and_fold_match_reference_on_any_ring_width(spark, data):
+    """The slot test (rings padded to the widest one), the fold (taken
+    by 'native' too once a ring is wider than unroll_limit) and the
+    scalar port of src/coords.jl:69-78 must agree on every (point,
+    polygon) pair, on the boundary cases included."""
+    polys, pts = data
+    df = spark.createDataFrame(
+        [(i, x, y) for i, (x, y) in enumerate(pts)],
+        "id LONG, lon DOUBLE, lat DOUBLE",
+    )
+    want = {
+        (i, pid)
+        for i, (x, y) in enumerate(pts)
+        for pid, ring in polys.items()
+        if point_in_polygon(x, y, ring)
+    }
+    for exact in ("native", "edges"):
+        got = nodes_in_polygons(df, polys, 2, exact=exact).collect()
+        assert {(r["id"], r["polygon_id"]) for r in got} == want, exact
 
 
 @given(

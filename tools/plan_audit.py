@@ -40,7 +40,8 @@ AUDITED = [
     ("geoparse_points", "pages scan prunes to (url, text); geoparse is a "
      "native regexp_extract_all - zero Python; explode stays in codegen"),
     ("pip_polygons", "cell encode native; cover join is BroadcastHashJoin; "
-     "native unrolled even-odd PIP after the broadcast prefilter; zero fact shuffle"),
+     "native even-odd slot test over a broadcast edge-slot dim after the "
+     "broadcast prefilter; zero fact shuffle"),
     ("bbox_vitoria_nodes", "pure native range filter on the cell columns "
      "- no UDF, no join, no shuffle"),
     ("tile_rollup", "multi-resolution rollup: ONE groupBy shuffle over "
@@ -100,10 +101,10 @@ AUDITED = [
     ("domain_stats", "per-domain rollup: ONE shuffle on host with "
      "map-side partial aggregation; the host regex runs inside the "
      "scan-side codegen stage"),
-    ("pip_grid_polygons", "96-polygon PIP: cover AND edge-array dims "
+    ("pip_grid_polygons", "96-polygon PIP: cover AND edge-slot dims "
      "both broadcast; bbox pre-test prunes candidates before the "
-     "even-odd fold; fact side never shuffles regardless of polygon "
-     "count"),
+     "codegen even-odd slot test, whose size follows the widest ring; "
+     "fact side never shuffles regardless of polygon count"),
     ("line_dedup", "CCNet-style line-level dedup: document frequency "
      "is ONE map-side-combinable shuffle on the line hash "
      "(array_distinct BEFORE the explode - no count_distinct expand); "
