@@ -98,8 +98,8 @@ def _pages(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _points(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The ingest pipeline: pages -> extracted text -> geoparse, as the
-    fused single-Arrow-pass kernel (geoparse_html_udf)."""
+    """The ingest pipeline: pages -> extracted text -> geoparse, as one
+    native codegen stage (geoparse_points_from_html)."""
     from osm_jl_spark.operators.pipeline import geoparse_points_from_html
 
     return geoparse_points_from_html(_pages(spark, sf_dir))

@@ -15,8 +15,8 @@ path is native end to end — regex geoparse and the exact ray-cast PIP
 against a broadcast polygon set are both native Spark expressions. Vectorized
 pandas/Arrow UDFs remain only where Spark cannot express the work
 (PBF and XML decode, recursive line simplification, media features,
-stateful streaming sessions) and as parity references for the native
-kernels.
+stateful streaming sessions); the native kernels' references are the
+single-node functions in ``oracle.py``, run only by tests.
 """
 
 __version__ = "0.1.0"

@@ -241,8 +241,8 @@ def load_pages(spark: SparkSession, n_docs: int) -> DataFrame:
     """Materialize the input-hint table (url, warc_ts, html, text, lang).
 
     html wraps text in deterministic markup; the engine's ingestion path
-    re-extracts text from html via the pandas UDF, and pytest pins the
-    byte-identical invariant.
+    re-extracts text from html with the native regexp kernel, and pytest
+    pins the byte-identical invariant.
 
     ``warc_ts`` is TIMESTAMP_NTZ via the same interval-arithmetic
     construction as :func:`load_crawls` (ADVICE r3: this loader had

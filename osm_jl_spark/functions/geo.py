@@ -1,4 +1,4 @@
-"""Geometry kernels: exact point-in-polygon (vectorized), polygon cell
+"""Geometry kernels: exact point-in-polygon (native SQL), polygon cell
 covers, and coordinate transforms.
 
 PIP reproduces the reference's even-odd ray casting bit-for-bit
@@ -9,9 +9,9 @@ instead of a Py4J call per expression node: a flat sum of per-edge
 terms over broadcast edge SLOT columns (``pip_slots_expr``; its size
 follows the widest ring, not the polygon count, and it stays inside
 whole-stage codegen), or an ``aggregate`` fold over a broadcast edge
-array for rings too wide to unroll (``pip_edges_fold_expr``,
-interpreted). ``pip_mask`` (NumPy) and ``pip_test_or_full_udf`` (its
-Arrow UDF wrapper) are the parity references.
+array for rings wider than ``SLOT_LIMIT`` edges
+(``pip_edges_fold_expr``, interpreted). The scalar port
+``oracle.point_in_polygon`` is the reference both are tested against.
 
 The scale story (SURVEY.md §4 custom work #1): computing exact PIP for
 every (point, polygon) pair is O(N·P·V) and unusable at 10^12 docs.
@@ -27,10 +27,7 @@ from __future__ import annotations
 
 import math
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from osm_jl_spark.oracle import coord2index, point_in_polygon
 
@@ -44,68 +41,6 @@ def ring_edges(ring: Ring) -> list[tuple[float, float, float, float]]:
         (float(a[0]), float(a[1]), float(b[0]), float(b[1]))
         for a, b in zip([ring[-1], *ring[:-1]], ring)
     ]
-
-
-def _ring_arrays(ring: Ring) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """Edge arrays (ax, ay, bx, by) with the closing edge first,
-    matching ``zip([P[end]; P[1:end-1]], P)`` (src/coords.jl:70)."""
-    b = np.asarray(ring, dtype=np.float64)
-    a = np.roll(b, 1, axis=0)
-    return a[:, 0], a[:, 1], b[:, 0], b[:, 1]
-
-
-def pip_mask(lon: np.ndarray, lat: np.ndarray, ring: Ring) -> np.ndarray:
-    """Vectorized even-odd test: bool mask over points (src/coords.jl:69-78)."""
-    ax, ay, bx, by = _ring_arrays(ring)
-    lon = np.asarray(lon, dtype=np.float64)[:, None]  # (N,1)
-    lat = np.asarray(lat, dtype=np.float64)[:, None]
-    crosses = (ay[None, :] > lat) != (by[None, :] > lat)  # (N,V)
-    # divide/overflow/invalid all arise only on non-crossing edges
-    # (by == ay or subnormal spans), where `crosses` masks the result —
-    # Julia's short-circuit && never evaluates them (src/coords.jl:74)
-    with np.errstate(divide="ignore", invalid="ignore", over="ignore"):
-        x = ax[None, :] + (lat - ay[None, :]) / (by[None, :] - ay[None, :]) * (
-            bx[None, :] - ax[None, :]
-        )
-        hit = crosses & (x < lon)
-    # odd number of crossings -> inside (XOR accumulation)
-    return (hit.sum(axis=1) % 2).astype(bool)
-
-
-def pip_test_or_full_udf(polygons: dict[int, Ring]):
-    """pandas UDF: (lon, lat, polygon_id, is_full) -> bool.
-
-    Single-pass variant for the cover join: FULL-cell rows short-circuit
-    to True with zero geometry work (a vectorized mask skip); only
-    boundary rows run the even-odd test. Spark extracts Python UDFs out
-    of filters and evaluates them for EVERY input row, so pushing the
-    short-circuit inside the UDF is the only way to keep one pipeline
-    pass — a two-branch filter+union would re-execute the whole
-    upstream (geoparse etc.) once per branch.
-    """
-    polys = dict(polygons)
-
-    @F.pandas_udf(T.BooleanType())
-    def _pip(lon: pd.Series, lat: pd.Series, pid: pd.Series,
-             is_full: pd.Series) -> pd.Series:
-        full = is_full.to_numpy(dtype=bool)
-        out = full.copy()
-        bsel = ~full
-        if bsel.any():
-            lo = lon.to_numpy(dtype=np.float64)[bsel]
-            la = lat.to_numpy(dtype=np.float64)[bsel]
-            ids = pid.to_numpy()[bsel]
-            res = np.zeros(len(lo), dtype=bool)
-            for p in np.unique(ids):
-                ring = polys.get(int(p))
-                if ring is None:
-                    continue
-                sel = ids == p
-                res[sel] = pip_mask(lo[sel], la[sel], ring)
-            out[bsel] = res
-        return pd.Series(out)
-
-    return _pip
 
 
 class NonFiniteVertexError(ValueError):
@@ -160,6 +95,13 @@ def edge_slots(ring: Ring, k: int) -> list[float]:
     return [v for e in edges + [(0.0,) * 4] * (k - len(edges)) for v in e]
 
 
+# Widest ring (in edges) that takes the slot test; wider rings take the
+# fold. 4 CPUs, 300k points: a 12-edge slot test ran 4.2 s a pass
+# (its method past the JIT limit) against 0.4 s for the fold, and
+# 8 edges keeps the method near 6 KB.
+SLOT_LIMIT = 8
+
+
 def pip_slots_expr(lon: str, lat: str, k: int):
     """NATIVE even-odd test over ``k`` edge SLOTS: the flat DOUBLE
     columns of :func:`edge_slot_columns`, filled by :func:`edge_slots`
@@ -171,7 +113,7 @@ def pip_slots_expr(lon: str, lat: str, k: int):
     ``k``, the widest ring, not on how many polygons there are; the
     generated method grows ~0.6-0.9 KB of bytecode per slot, and
     HotSpot does not JIT-compile a method over 8,000 bytes, so callers
-    cap ``k`` (joins.nodes_in_polygons' ``unroll_limit``).
+    cap ``k`` at :data:`SLOT_LIMIT`.
     Shorter rings pad with the zero-length edge (0, 0, 0, 0): its
     straddle test ``(0 > lat) != (0 > lat)`` is always false, so it
     adds 0 like a horizontal edge. Same per-edge term as the fold
@@ -242,7 +184,7 @@ def cell_bbox_range(
 
 
 def cell_cover(
-    ring: Ring, precision: int, max_cells: int = COVER_BUDGET
+    ring: Ring, precision: int
 ) -> tuple[set[tuple[int, int]], set[tuple[int, int]]]:
     """Classify the polygon's bbox cells: (full_cells, boundary_cells).
 
@@ -252,8 +194,9 @@ def cell_cover(
     the center decides the whole cell).
 
     Raises :class:`CoverBudgetError` when the bbox exceeds
-    ``max_cells``: this function enumerates cells into driver-side
-    Python sets, and the pre-round-4 fallback ("everything is
+    :data:`COVER_BUDGET` (read at call time): this function
+    enumerates cells into driver-side Python sets, and the pre-round-4
+    fallback ("everything is
     boundary" over the bbox) enumerated the very set the budget
     existed to prevent — ~GB of driver heap for a world polygon.
     Callers with big polygons must use :func:`cell_bbox_range` and a
@@ -263,10 +206,10 @@ def cell_cover(
     step = 10**-precision
     xlo, xhi, ylo, yhi = cell_bbox_range(ring, precision)
     nx, ny = xhi - xlo + 1, yhi - ylo + 1
-    if nx * ny > max_cells:
+    if nx * ny > COVER_BUDGET:
         raise CoverBudgetError(
             f"polygon bbox covers {nx}x{ny} = {nx * ny} cells at "
-            f"precision {precision}, over the {max_cells}-cell budget; "
+            f"precision {precision}, over the {COVER_BUDGET}-cell budget; "
             "use cell_bbox_range + a range join / distributed "
             "enumeration"
         )

@@ -1,85 +1,18 @@
 """Text kernels: HTML text extraction, geoparsing, tokenization,
 language-ID, quality scoring, fingerprints.
 
-Only the two regex-heavy kernels (extract_text, geoparse) are pandas
-UDFs — everything else is native ``pyspark.sql.functions`` column math
-so it stays inside whole-stage codegen. The pandas UDFs are Arrow
-batched (Series in / Series out), never per-row Python
-(BASELINE.json input_hint).
+Every kernel is native ``pyspark.sql.functions`` column math, so it
+stays inside whole-stage codegen; no Python runs per row or per batch.
 
-extract_text mirrors oracle.extract_text byte-for-byte — the per-url
-byte-identical invariant is pinned by tests/test_text.py.
+extract_text_col and geoparse_col mirror oracle.extract_text and
+oracle.geoparse — the per-url byte-identical invariant is pinned by
+tests/test_text.py.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-from osm_jl_spark.oracle import GEO_RE, extract_text
-
-# --------------------------------------------------------- pandas UDFs
-
-
-@F.pandas_udf(T.StringType())
-def extract_text_udf(html: pd.Series) -> pd.Series:
-    """HTML binary -> extracted text; byte-identical to oracle.extract_text."""
-    return html.map(lambda b: extract_text(bytes(b)) if b is not None else None)
-
-
-_POINT_SCHEMA = T.ArrayType(
-    T.StructType(
-        [
-            T.StructField("pt_idx", T.IntegerType()),
-            T.StructField("lon", T.DoubleType()),
-            T.StructField("lat", T.DoubleType()),
-        ]
-    )
-)
-
-
-@F.pandas_udf(_POINT_SCHEMA)
-def geoparse_html_udf(html: pd.Series) -> pd.Series:
-    """Fused ingest kernel: html binary -> extracted text -> geoparsed
-    points in ONE Arrow round trip. Equivalent to
-    ``geoparse_udf(extract_text_udf(html))`` but the intermediate text
-    never crosses the JVM<->Python boundary (two ArrowEvalPython stages
-    collapse into one) — at 10^12 docs that intermediate is the widest
-    column in the pipeline."""
-
-    def parse(b):
-        if b is None:
-            return []
-        t = extract_text(bytes(b))
-        return [
-            (i, float(lon), float(lat))
-            for i, (lat, lon) in enumerate(GEO_RE.findall(t))
-        ]
-
-    return html.map(parse)
-
-
-@F.pandas_udf(_POINT_SCHEMA)
-def geoparse_udf(text: pd.Series) -> pd.Series:
-    """Extract ordered (lon, lat) coordinate mentions from text.
-
-    Pattern: ``lat <D.DDDDD> lon <D.DDDDD>``. Returns an array of
-    structs (pt_idx, lon, lat) preserving order of appearance — the
-    geoparsed points play the role of OSM Nodes (SURVEY.md §1.3).
-    """
-
-    def parse(t):
-        if t is None:
-            return []
-        return [
-            (i, float(lon), float(lat))
-            for i, (lat, lon) in enumerate(GEO_RE.findall(t))
-        ]
-
-    return text.map(parse)
-
 
 # ------------------------------------- native ingest (no Python at all)
 
@@ -97,7 +30,7 @@ def extract_text_col(html: Column | str) -> Column:
     valid UTF-8 the results coincide byte-for-byte because both tag and
     whitespace patterns are pure-ASCII (Java \\s and Python bytes-mode
     \\s are the same ASCII class). Pinned against the stored ``text``
-    column and the pandas-UDF path by tests/test_text.py.
+    column and the oracle by tests/test_text.py.
     """
     c = F.col(html) if isinstance(html, str) else html
     s = F.decode(c, "UTF-8")
@@ -108,7 +41,7 @@ def extract_text_col(html: Column | str) -> Column:
 
 def geoparse_col(text: Column | str) -> Column:
     """NATIVE geoparse: array<struct<pt_idx,lon,lat>> — the same result
-    as geoparse_udf with zero Python.
+    as oracle.geoparse with zero Python.
 
     One regexp pass (full-match extract_all), then an in-array split:
     match shape is ``lat <g1> lon <g2>`` so token 1 is lat, token 3 is

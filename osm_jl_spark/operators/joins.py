@@ -33,7 +33,6 @@ from osm_jl_spark.functions.geo import (
     edge_slots,
     pip_edges_fold_expr,
     pip_slots_expr,
-    pip_test_or_full_udf,
     ring_edges,
 )
 
@@ -171,8 +170,6 @@ def nodes_in_polygons(
     precision: int = 2,
     lon: str = "lon",
     lat: str = "lat",
-    exact: str = "native",
-    unroll_limit: int = 8,
 ) -> DataFrame:
     """J3 (src/OSM.jl:210-218) as a scalable spatial join.
 
@@ -186,22 +183,21 @@ def nodes_in_polygons(
     points this is a map-side-only pipeline: no shuffle of the fact
     table at all.
 
-    ``exact`` picks the boundary-candidate test:
-    - "native" (default): when the widest ring has <= unroll_limit
-      edges, broadcast a (polygon_id, edge slots) dim — shorter rings
-      padded with the zero-length edge — and run the slot test
-      (geo.pip_slots_expr), a flat per-edge sum inside whole-stage
-      codegen whatever the polygon count. Wider rings switch to
-      "edges": the slot test's generated method grows with the ring
-      width, and past HotSpot's 8,000-byte limit the JIT leaves it
-      interpreted (4 CPUs, 300k points: 4.2 s a pass at 12 edges
-      against 0.4 s for the fold; 8 edges keeps it near 6 KB).
-    - "edges": broadcast a (polygon_id, edges array) dim and fold it
-      with F.aggregate — interpreted, but O(own edges) per row and
-      constant expression size; the wide-ring path.
-    - "udf": the Arrow/NumPy parity kernel.
+    The boundary-candidate test follows the widest ring: up to
+    geo.SLOT_LIMIT edges, broadcast a (polygon_id, edge slots) dim —
+    shorter rings padded with the zero-length edge — and run the slot
+    test (geo.pip_slots_expr), a flat per-edge sum inside whole-stage
+    codegen whatever the polygon count. Wider rings broadcast a
+    (polygon_id, edges array) dim and fold it with F.aggregate
+    (geo.pip_edges_fold_expr) — interpreted, but O(own edges) per row
+    and constant expression size, where the slot test's generated
+    method outgrows the JIT.
     """
-    from osm_jl_spark.functions.geo import COVER_BUDGET, cell_bbox_range
+    from osm_jl_spark.functions.geo import (
+        COVER_BUDGET,
+        SLOT_LIMIT,
+        cell_bbox_range,
+    )
 
     spark = points.sparkSession
     # Budgets (geo.COVER_BUDGET is the single shared constant — round 3
@@ -216,7 +212,6 @@ def nodes_in_polygons(
     #   path too — deterministic (sorted pid order), and exactness is
     #   untouched: range-joined candidates run the same bbox pre-test
     #   + exact even-odd, they just skip the full-cell short-circuit.
-    max_cells = COVER_BUDGET
     agg_budget = 4 * COVER_BUDGET
     cover_rows = []
     big_rows = []
@@ -227,7 +222,7 @@ def nodes_in_polygons(
         bbox = (min(xs), max(xs), min(ys), max(ys))
         xlo, xhi, ylo, yhi = cell_bbox_range(ring, precision)
         n_bbox = (xhi - xlo + 1) * (yhi - ylo + 1)
-        if n_bbox > max_cells or len(cover_rows) + n_bbox > agg_budget:
+        if n_bbox > COVER_BUDGET or len(cover_rows) + n_bbox > agg_budget:
             # CONTINENT-SCALE polygon (or aggregate budget exhausted):
             # enumerating the cover would broadcast millions of cell
             # rows (a world polygon at precision 2 is ~648M). One
@@ -293,35 +288,26 @@ def nodes_in_polygons(
         )
     )
     # Single pass: FULL-cell rows short-circuit to true, boundary rows
-    # run the exact even-odd test via the mode picked in the docstring
-    # (codegen slot test / edges-array fold / Arrow parity kernel).
-    if exact == "udf":
-        keep = pip_test_or_full_udf(polygons)(
-            F.col(lon), F.col(lat), F.col("polygon_id"), F.col("is_full")
+    # run the exact even-odd test (codegen slot test / edges-array fold).
+    rings = sorted(polygons.items())
+    k = max(len(ring) for _, ring in rings)
+    if k <= SLOT_LIMIT:
+        dim = _local_table(
+            spark, [(pid, *edge_slots(ring, k)) for pid, ring in rings],
+            pa.schema([("polygon_id", pa.int64()), *(
+                (c, pa.float64()) for c in edge_slot_columns(k)
+            )]),
         )
-        dim_cols = []
+        test = pip_slots_expr(lon, lat, k)
     else:
-        rings = sorted(polygons.items())
-        k = max(len(ring) for _, ring in rings)
-        if exact == "native" and k <= unroll_limit:
-            dim = _local_table(
-                spark, [(pid, *edge_slots(ring, k)) for pid, ring in rings],
-                pa.schema([("polygon_id", pa.int64()), *(
-                    (c, pa.float64()) for c in edge_slot_columns(k)
-                )]),
-            )
-            test = pip_slots_expr(lon, lat, k)
-        else:
-            dim = _local_table(
-                spark, [(pid, ring_edges(ring)) for pid, ring in rings], _EDGES
-            )
-            test = pip_edges_fold_expr(lon, lat, "edges")
-        cand = cand.join(F.broadcast(dim), "polygon_id")
-        keep = F.col("is_full") | test
-        dim_cols = dim.columns[1:]
-    return cand.filter(keep).drop(
+        dim = _local_table(
+            spark, [(pid, ring_edges(ring)) for pid, ring in rings], _EDGES
+        )
+        test = pip_edges_fold_expr(lon, lat, "edges")
+    cand = cand.join(F.broadcast(dim), "polygon_id")
+    return cand.filter(F.col("is_full") | test).drop(
         "ccx", "ccy", "is_full", "cx", "cy",
-        "bminx", "bmaxx", "bminy", "bmaxy", *dim_cols,
+        "bminx", "bmaxx", "bminy", "bmaxy", *dim.columns[1:],
     )
 
 

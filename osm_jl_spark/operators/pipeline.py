@@ -9,7 +9,8 @@ documents(url, warc_ts, html, text, lang)
   -> tile aggregation          [groupBy (polygon_id, cx, cy)]
 
 Each stage is also exposed separately for the query registry; the
-pandas-UDF kernels survive only as ``*_udf`` parity references.
+single-node functions in oracle.py are the references the tests pin
+them to.
 """
 
 from __future__ import annotations
@@ -17,13 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from osm_jl_spark.functions.text import (
-    extract_text_col,
-    extract_text_udf,
-    geoparse_col,
-    geoparse_html_udf,
-    geoparse_udf,
-)
+from osm_jl_spark.functions.text import extract_text_col, geoparse_col
 
 
 def pages_with_text(pages: DataFrame) -> DataFrame:
@@ -47,16 +42,8 @@ def geoparse_points(pages: DataFrame, text_col: str = "text") -> DataFrame:
 
     NATIVE kernel (functions/text.geoparse_col): the regex runs in
     whole-stage codegen and the text column never crosses into Python.
-    The pandas-UDF variant survives as geoparse_points_udf; equality is
-    pinned by tests/test_text.py."""
+    Equality with oracle.geoparse is pinned by tests/test_text.py."""
     return _explode_points(pages, geoparse_col(F.col(text_col)))
-
-
-def geoparse_points_udf(pages: DataFrame, text_col: str = "text") -> DataFrame:
-    """Arrow/pandas-UDF geoparse (the original kernel) — kept as the
-    parity reference and as the template for patterns a JVM regex
-    cannot express."""
-    return _explode_points(pages, geoparse_udf(F.col(text_col)))
 
 
 def geoparse_points_from_html(pages: DataFrame) -> DataFrame:
@@ -64,12 +51,6 @@ def geoparse_points_from_html(pages: DataFrame) -> DataFrame:
     regexp chain + extract_all in one codegen stage). Byte-identical
     text semantics pinned by tests/test_text.py."""
     return _explode_points(pages, geoparse_col(extract_text_col("html")))
-
-
-def geoparse_points_from_html_udf(pages: DataFrame) -> DataFrame:
-    """The fused single-Arrow-pass pandas kernel (geoparse_html_udf) —
-    parity reference for the native html path."""
-    return _explode_points(pages, geoparse_html_udf(F.col("html")))
 
 
 def flagship(pages: DataFrame, polygons: dict, precision: int = 2) -> DataFrame:

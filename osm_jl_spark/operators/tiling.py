@@ -82,7 +82,7 @@ def tile_rollup(
     requested precision (native inline array — no UDF), then one salted
     two-stage aggregation covers every level. A per-level loop would
     re-execute the whole upstream (at the flagship this includes the
-    geoparse pandas UDF) once per level; exploding trades that for
+    geoparse regex) once per level; exploding trades that for
     len(precisions)x more rows into the map-side partial aggregation,
     which shrinks them to per-(cell,salt) partials before the shuffle —
     strictly cheaper at scale.

@@ -14,8 +14,8 @@ load-bearing (SURVEY.md §7.3):
   (first vertex not repeated; /root/reference/README.md:63-64).
 
 Plus the byte-identical text-extraction + geoparse pair used to verify
-the Spark pandas UDFs (BASELINE.json input_hint: "byte-identical
-extracted text per url").
+the native Spark text kernels (BASELINE.json input_hint:
+"byte-identical extracted text per url").
 """
 
 from __future__ import annotations
@@ -72,8 +72,9 @@ GEO_RE = re.compile(r"lat (-?[0-9]+\.[0-9]{5}) lon (-?[0-9]+\.[0-9]{5})")
 def extract_text(html: bytes) -> str:
     """Deterministic tag-strip text extraction from an HTML payload.
 
-    The Spark-side pandas UDF (functions/text.py:extract_text_udf) must
-    produce byte-identical output for every url — pytest asserts it.
+    The Spark-side native kernel (functions/text.py:extract_text_col)
+    must produce byte-identical output for every url — pytest asserts
+    it.
     """
     no_tags = _TAG_RE.sub(b" ", html)
     collapsed = _WS_RE.sub(b" ", no_tags).strip()

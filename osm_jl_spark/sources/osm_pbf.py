@@ -68,6 +68,12 @@ def _zigzag(n: int) -> int:
     return (n >> 1) ^ -(n & 1)
 
 
+def _int64(v: int) -> int:
+    """A decoded varint read back as protobuf ``int64``: values of
+    2^63 and up are negative numbers in two's complement."""
+    return v - (1 << 64) if v >= (1 << 63) else v
+
+
 def _fields(buf: bytes) -> Iterator[tuple[int, int, object]]:
     """Yield (field_number, wire_type, value) over one message.
     wire 0 -> int, wire 2 -> bytes, wire 5/1 -> raw fixed bytes."""
@@ -108,6 +114,15 @@ def _enc_uvarint(n: int) -> bytes:
         else:
             out.append(b)
             return bytes(out)
+
+
+def _enc_int64(n: int) -> bytes:
+    """protobuf ``int64`` (the type of way and relation ids): the
+    64-bit two's complement as a varint, so a negative id takes
+    10 bytes."""
+    if not -(1 << 63) <= n < (1 << 63):
+        raise ValueError(f"id {n} outside int64 range")
+    return _enc_uvarint(n & ((1 << 64) - 1))
 
 
 def _enc_zigzag(n: int) -> bytes:
@@ -239,7 +254,7 @@ def _decode_block(payload: bytes) -> list[dict]:
                 wid, keys, vals, refs = 0, [], [], []
                 for f2, _, v2 in _fields(v):
                     if f2 == 1:
-                        wid = int(v2)
+                        wid = _int64(v2)
                     elif f2 == 2:
                         keys = _packed(v2)
                     elif f2 == 3:
@@ -262,7 +277,7 @@ def _decode_block(payload: bytes) -> list[dict]:
                 roles, memids, types = [], [], []
                 for f2, _, v2 in _fields(v):
                     if f2 == 1:
-                        rid = int(v2)
+                        rid = _int64(v2)
                     elif f2 == 2:
                         keys = _packed(v2)
                     elif f2 == 3:
@@ -407,7 +422,7 @@ def _enc_block(elements: list[dict]) -> bytes:
                 prev = ref
             tags = e.get("tags", {})
             msg = (
-                _enc_field(1, 0, _enc_uvarint(e["id"]))
+                _enc_field(1, 0, _enc_int64(e["id"]))
                 + _enc_packed(2, [idx[k] for k in tags])
                 + _enc_packed(3, [idx[v] for v in tags.values()])
                 + _enc_packed(8, deltas, signed=True)
@@ -421,7 +436,7 @@ def _enc_block(elements: list[dict]) -> bytes:
                 prev = m["ref"]
             tags = e.get("tags", {})
             msg = (
-                _enc_field(1, 0, _enc_uvarint(e["id"]))
+                _enc_field(1, 0, _enc_int64(e["id"]))
                 + _enc_packed(2, [idx[k] for k in tags])
                 + _enc_packed(3, [idx[v] for v in tags.values()])
                 + _enc_packed(8, [idx[m.get("role", "")] for m in members])

@@ -142,3 +142,23 @@ def test_unsupported_required_feature_rejected(spark, tmp_path):
     ok.write_bytes(_enc_blob("OSMHeader", opt_header)
                    + _enc_blob("OSMData", data))
     assert parse_pbf(spark, str(ok)).count() == 1
+
+
+def test_negative_relation_id_roundtrips(spark, tmp_path):
+    """Relation and way ids are protobuf int64, not uint64: a negative
+    id (editors write them for objects not yet uploaded) encodes as its
+    10-byte two's complement and parses back negative, through the
+    same distributed path as the fixture file."""
+    rel = {"kind": "relation", "id": -42,
+           "members": [{"ref": -7, "type": "way", "role": "outer"}],
+           "tags": {"type": "multipolygon"}}
+    way = {"kind": "way", "id": -7, "node_refs": [3, -1], "tags": {}}
+    path = write_pbf(str(tmp_path / "neg.osm.pbf"), [way, rel])
+    _, got_w, got_r = split_elements(parse_pbf(spark, path))
+    (r,) = got_r.collect()
+    assert r.id == -42
+    assert [(m.ref, m.type, m.role) for m in r.members] == [
+        (-7, "way", "outer")
+    ]
+    (w,) = got_w.collect()
+    assert (w.id, list(w.node_refs)) == (-7, [3, -1])

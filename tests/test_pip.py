@@ -1,11 +1,38 @@
-"""Point-in-polygon parity: vectorized NumPy kernel and the Spark
-spatial join vs the pure-Python port of src/coords.jl:69-78."""
+"""Point-in-polygon parity: the Spark spatial join, on both exact-test
+routes, vs the pure-Python port of src/coords.jl:69-78."""
+
+from unittest import mock
 
 import numpy as np
+import pytest
 
-from osm_jl_spark.datagen import FROGNER, OSLO_PENT, POLYGONS, VITORIA_TRI
-from osm_jl_spark.functions.geo import cell_cover, pip_mask
+from osm_jl_spark.datagen import FROGNER, POLYGONS
+from osm_jl_spark.functions import geo
+from osm_jl_spark.functions.geo import cell_cover
 from osm_jl_spark.oracle import cell_of, point_in_polygon
+
+
+def slot_and_fold(points, polygons):
+    """nodes_in_polygons rows on the default route (the slot test while
+    the widest ring fits ``geo.SLOT_LIMIT``) and on the fold route,
+    forced by a zero ``geo.SLOT_LIMIT``."""
+    from osm_jl_spark.operators.joins import nodes_in_polygons
+
+    slots = nodes_in_polygons(points, polygons, 2).collect()
+    with mock.patch.object(geo, "SLOT_LIMIT", 0):
+        fold = nodes_in_polygons(points, polygons, 2).collect()
+    return {"slots": slots, "fold": fold}
+
+
+def _oracle_pairs(points, polygons, key):
+    """``key(row) + (polygon_id,)`` for every (point, polygon) pair the
+    scalar port puts inside."""
+    return {
+        (*key(r), pid)
+        for r in points.collect()
+        for pid, ring in polygons.items()
+        if point_in_polygon(r["lon"], r["lat"], ring)
+    }
 
 
 def _vertices_and_midpoints(ring):
@@ -27,26 +54,17 @@ def _grid(ring, n=25):
     return pts[:, 0], pts[:, 1]
 
 
-def test_pip_mask_matches_oracle():
-    for ring in (FROGNER, VITORIA_TRI, OSLO_PENT):
-        lon, lat = _grid(ring)
-        got = pip_mask(lon, lat, ring)
-        want = np.array(
-            [point_in_polygon(x, y, ring) for x, y in zip(lon, lat)]
-        )
-        assert (got == want).all()
-
-
-def test_pip_boundary_vertices():
+def test_pip_boundary_vertices(spark):
     # strict-inequality semantics on the fixture's exact vertices and
-    # edge midpoints must agree between NumPy and the oracle port
-    ring = FROGNER
-    pts = _vertices_and_midpoints(ring)
-    lon = np.array([p[0] for p in pts])
-    lat = np.array([p[1] for p in pts])
-    got = pip_mask(lon, lat, ring)
-    want = np.array([point_in_polygon(x, y, ring) for x, y in pts])
-    assert (got == want).all()
+    # edge midpoints must agree between both join routes and the
+    # oracle port
+    pts = spark.createDataFrame(
+        list(enumerate(_vertices_and_midpoints(FROGNER))),
+        "id LONG, p STRUCT<lon: DOUBLE, lat: DOUBLE>",
+    ).select("id", "p.lon", "p.lat")
+    want = _oracle_pairs(pts, {1: FROGNER}, lambda r: (r["id"],))
+    for route, rows in slot_and_fold(pts, {1: FROGNER}).items():
+        assert {(r["id"], r["polygon_id"]) for r in rows} == want, route
 
 
 def test_cell_cover_classification():
@@ -75,14 +93,22 @@ def test_cell_cover_classification():
                     )
 
 
+def test_cell_cover_reads_the_budget_at_call_time(monkeypatch):
+    """cell_cover enforces geo.COVER_BUDGET as it stands when called —
+    the same value nodes_in_polygons and vector_to_raster route by."""
+    ring = [(10.0, 59.0), (10.05, 59.0), (10.05, 59.05), (10.0, 59.05)]
+    cell_cover(ring, 2)  # 6 x 6 bbox cells, within the default budget
+    monkeypatch.setattr(geo, "COVER_BUDGET", 10)
+    with pytest.raises(geo.CoverBudgetError, match="10-cell budget"):
+        cell_cover(ring, 2)
+
+
 def test_cover_holds_the_cell_of_a_negative_bottom_edge(spark):
     """Cover cells use the encode's trunc(x * 10**p). At precision 2,
     trunc(-81.91 / 0.01) is -8190 but the encode puts -81.91 in cell
     -8191, so a bbox range computed by division clamps away the cell
     that holds the bottom edge, and the join silently drops a point
     the oracle puts inside."""
-    from osm_jl_spark.operators.joins import nodes_in_polygons
-
     ring = [(10.0, -81.91), (10.05, -81.91), (10.05, -81.86), (10.0, -81.86)]
     assert point_in_polygon(10.025, -81.91, ring)
     full, boundary = cell_cover(ring, 2)
@@ -91,9 +117,9 @@ def test_cover_holds_the_cell_of_a_negative_bottom_edge(spark):
     pts = spark.createDataFrame(
         [(1, 10.025, -81.91)], "id LONG, lon DOUBLE, lat DOUBLE"
     )
-    for exact in ("native", "edges", "udf"):
-        got = nodes_in_polygons(pts, {5: ring}, 2, exact=exact).collect()
-        assert [(r["id"], r["polygon_id"]) for r in got] == [(1, 5)], exact
+    assert _oracle_pairs(pts, {5: ring}, lambda r: (r["id"],)) == {(1, 5)}
+    for route, got in slot_and_fold(pts, {5: ring}).items():
+        assert [(r["id"], r["polygon_id"]) for r in got] == [(1, 5)], route
 
 
 def test_spark_spatial_join_matches_oracle(spark):
@@ -115,21 +141,18 @@ def test_spark_spatial_join_matches_oracle(spark):
 
 
 def test_native_pip_expr_matches_udf_path(spark):
-    """exact='native' (the slot test: a flat per-edge sum over
-    broadcast edge-slot columns, inside whole-stage codegen) and
-    exact='udf' (Arrow/NumPy kernel) must emit identical join rows —
-    both are bit-level ports of src/coords.jl:69-78."""
+    """The slot test (a flat per-edge sum over broadcast edge-slot
+    columns, inside whole-stage codegen) and the edges-array fold must
+    both emit exactly the (point, polygon) pairs of the scalar port of
+    src/coords.jl:69-78."""
     from osm_jl_spark.datagen import load_pages_points
-    from osm_jl_spark.operators.joins import nodes_in_polygons
 
     pts = load_pages_points(spark, 400)
-    key = lambda r: (r["url"], r["pt_idx"], r["polygon_id"])  # noqa: E731
-    nat = {key(r) for r in nodes_in_polygons(pts, POLYGONS, 2).collect()}
-    udf = {
-        key(r)
-        for r in nodes_in_polygons(pts, POLYGONS, 2, exact="udf").collect()
-    }
-    assert nat == udf and len(nat) > 0
+    key = lambda r: (r["url"], r["pt_idx"])  # noqa: E731
+    want = _oracle_pairs(pts, POLYGONS, key)
+    for route, rows in slot_and_fold(pts, POLYGONS).items():
+        got = {(*key(r), r["polygon_id"]) for r in rows}
+        assert got == want and len(got) > 0, route
 
 
 def test_shoelace_area2_square_and_degenerate(spark):
@@ -156,32 +179,24 @@ def test_shoelace_area2_square_and_degenerate(spark):
 
 
 def test_edges_fold_matches_unrolled_and_udf(spark):
-    """All three exact-test modes (codegen slot test, edges-array fold,
-    Arrow kernel) must emit identical join rows on the same 96-polygon
-    set — the fold is the wide-ring path and must be a bit-level
-    equivalent of the slot test, not an approximation."""
+    """Both exact-test routes (codegen slot test, edges-array fold)
+    must emit the oracle's join rows on the same 96-polygon set — the
+    fold is the wide-ring path and must be a bit-level equivalent of
+    the slot test, not an approximation."""
     from osm_jl_spark.datagen import load_pages_points, polygon_grid
-    from osm_jl_spark.operators.joins import nodes_in_polygons
 
     pts = load_pages_points(spark, 400)
     polys = polygon_grid()
-    key = lambda r: (r["url"], r["pt_idx"], r["polygon_id"])  # noqa: E731
-    # force each mode explicitly ('native' takes the slot test at any
-    # polygon count: every ring here has 4 edges, within unroll_limit)
-    slots = {
-        key(r) for r in nodes_in_polygons(
-            pts, polys, 2, exact="native", unroll_limit=4
-        ).collect()
+    # every ring here has 4 edges, within SLOT_LIMIT: the default
+    # route is the slot test at any polygon count
+    assert max(map(len, polys.values())) <= geo.SLOT_LIMIT
+    key = lambda r: (r["url"], r["pt_idx"])  # noqa: E731
+    want = _oracle_pairs(pts, polys, key)
+    routes = {
+        route: {(*key(r), r["polygon_id"]) for r in rows}
+        for route, rows in slot_and_fold(pts, polys).items()
     }
-    fold = {
-        key(r)
-        for r in nodes_in_polygons(pts, polys, 2, exact="edges").collect()
-    }
-    udf = {
-        key(r)
-        for r in nodes_in_polygons(pts, polys, 2, exact="udf").collect()
-    }
-    assert slots == fold == udf and len(fold) > 0
+    assert routes["slots"] == routes["fold"] == want and len(want) > 0
 
 
 def test_continent_scale_polygon_range_join_path(spark):

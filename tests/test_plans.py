@@ -11,6 +11,7 @@ benchmark does.
 
 from __future__ import annotations
 
+import math
 import re
 
 import pytest
@@ -73,9 +74,9 @@ def test_flagship_cover_join_broadcasts(spark, pages_parquet):
 
 def test_flagship_zero_python_operators(spark, pages_parquet):
     """The entire flagship plan is Python-free: geoparse is a JVM
-    regexp kernel and the exact PIP test is a literal-edge aggregate
-    fold — everything runs in whole-stage codegen. (The Arrow/pandas
-    kernels survive as parity references, unused in this plan.)"""
+    regexp kernel and the exact PIP test is the unrolled per-edge sum
+    over broadcast edge-slot columns — everything runs in whole-stage
+    codegen. The references live in oracle.py and run only in tests."""
     from osm_jl_spark import datagen as G
     from osm_jl_spark.operators.pipeline import flagship
 
@@ -133,9 +134,10 @@ def test_pip_no_fact_shuffle(spark):
     with ZERO exchanges — prefilter is a broadcast join — and the
     broadcast dimensions (cover, edge slots or edge arrays) are local
     relations. The exact test is the codegen slot test whatever the
-    polygon count; only a ring wider than unroll_limit takes the
+    polygon count; only a ring wider than geo.SLOT_LIMIT takes the
     interpreted edges-array fold."""
     from osm_jl_spark import datagen as G
+    from osm_jl_spark.functions import geo
     from osm_jl_spark.operators.joins import nodes_in_polygons
 
     pts = G.load_nodes(spark, 2000).select(
@@ -164,9 +166,16 @@ def test_pip_no_fact_shuffle(spark):
     assert "Scan ExistingRDD" not in plan, plan
     assert "_e0_ax" in plan and "aggregate(" not in plan, plan
 
-    # the 5-edge ring is wider than unroll_limit=4: the edges-array
+    # a 12-vertex ring is wider than geo.SLOT_LIMIT: the edges-array
     # fold, its edge dimension a local relation too
-    plan = explain(nodes_in_polygons(pts, G.POLYGONS, 2, unroll_limit=4))
+    wide = dict(G.POLYGONS)
+    wide[200] = [
+        (10.7 + 0.05 * math.cos(math.tau * i / 12),
+         59.9 + 0.03 * math.sin(math.tau * i / 12))
+        for i in range(12)
+    ]
+    assert len(wide[200]) > geo.SLOT_LIMIT
+    plan = explain(nodes_in_polygons(pts, wide, 2))
     assert count_nodes(plan, "Exchange") == 0, plan
     assert count_nodes(plan, "BroadcastExchange") == 2, plan
     assert count_nodes(plan, "LocalTableScan") == 2, plan

@@ -1,22 +1,24 @@
-"""Property-based tests (hypothesis): the NumPy kernels must agree with
-the pure-Python reference ports on arbitrary inputs — not just the
-fixture polygons. These pin the numeric core that every distributed
-operator builds on; only the tests of the spatial join itself need a
-Spark session."""
+"""Property-based tests (hypothesis): the kernels must agree with the
+pure-Python reference ports on arbitrary inputs — not just the fixture
+polygons. These pin the numeric core that every distributed operator
+builds on; only the tests of the spatial join itself need a Spark
+session."""
 
 from __future__ import annotations
 
-import inspect
 import math
+from unittest import mock
 
 import numpy as np
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from osm_jl_spark.functions.geo import NonFiniteVertexError, pip_mask
+from osm_jl_spark.functions import geo
+from osm_jl_spark.functions.geo import NonFiniteVertexError
 from osm_jl_spark.operators.joins import nodes_in_polygons
 from osm_jl_spark.oracle import coord2index, point_in_polygon
+from tests.test_pip import slot_and_fold
 
 coord = st.floats(
     min_value=-180.0,
@@ -38,32 +40,6 @@ def test_coord2index_is_trunc_toward_zero(p, precision):
     assert abs(got) <= abs(scaled)
 
 
-@st.composite
-def ring_and_points(draw):
-    n_vertices = draw(st.integers(min_value=3, max_value=8))
-    ring = [
-        (draw(coord), draw(lat_coord)) for _ in range(n_vertices)
-    ]
-    n_points = draw(st.integers(min_value=1, max_value=16))
-    pts = [(draw(coord), draw(lat_coord)) for _ in range(n_points)]
-    return ring, pts
-
-
-@given(ring_and_points())
-@settings(max_examples=200, deadline=None)
-def test_pip_mask_matches_scalar_reference_port(data):
-    """The vectorized NumPy even-odd mask must equal the scalar port of
-    src/coords.jl:69-78 for every point against ANY ring — including
-    degenerate (self-intersecting, zero-area) rings, where both must
-    agree because the reference defines truth by this exact loop."""
-    ring, pts = data
-    lons = np.array([p[0] for p in pts])
-    lats = np.array([p[1] for p in pts])
-    got = pip_mask(lons, lats, ring)
-    want = [point_in_polygon(lon, lat, ring) for lon, lat in pts]
-    assert list(got) == want
-
-
 @given(
     st.lists(
         st.tuples(coord, lat_coord), min_size=1, max_size=32
@@ -83,14 +59,10 @@ def test_cell_encode_consistent_under_vectorization(pts, precision):
 
 # ------------------------------------------------- spatial join parity
 
-UNROLL_LIMIT = inspect.signature(nodes_in_polygons).parameters[
-    "unroll_limit"
-].default
-
 
 @st.composite
 def polygon_set_and_points(draw):
-    """1-3 rings of 3 to UNROLL_LIMIT + 3 edges near one anchor (either
+    """1-3 rings of 3 to SLOT_LIMIT + 3 edges near one anchor (either
     hemisphere), some edges horizontal, plus the points where the
     exact test and the cell arithmetic are most fragile: vertices,
     edge midpoints, quarter points of horizontal edges, random points."""
@@ -100,7 +72,7 @@ def polygon_set_and_points(draw):
     polys, pts = {}, []
     for pid in range(1, draw(st.integers(1, 3)) + 1):
         ring = []
-        for _ in range(draw(st.integers(3, UNROLL_LIMIT + 3))):
+        for _ in range(draw(st.integers(3, geo.SLOT_LIMIT + 3))):
             y = ring[-1][1] if ring and draw(st.booleans()) else ay + draw(off)
             ring.append((ax + draw(off), y))
         polys[pid] = ring
@@ -116,9 +88,11 @@ def polygon_set_and_points(draw):
 @settings(max_examples=25, deadline=None)
 def test_native_and_fold_match_reference_on_any_ring_width(spark, data):
     """The slot test (rings padded to the widest one), the fold (taken
-    by 'native' too once a ring is wider than unroll_limit) and the
+    by default too once a ring is wider than SLOT_LIMIT) and the
     scalar port of src/coords.jl:69-78 must agree on every (point,
-    polygon) pair, on the boundary cases included."""
+    polygon) pair, on the boundary cases included — degenerate and
+    self-intersecting rings too, since the reference defines truth by
+    this exact loop."""
     polys, pts = data
     df = spark.createDataFrame(
         [(i, x, y) for i, (x, y) in enumerate(pts)],
@@ -130,22 +104,21 @@ def test_native_and_fold_match_reference_on_any_ring_width(spark, data):
         for pid, ring in polys.items()
         if point_in_polygon(x, y, ring)
     }
-    for exact in ("native", "edges"):
-        got = nodes_in_polygons(df, polys, 2, exact=exact).collect()
-        assert {(r["id"], r["polygon_id"]) for r in got} == want, exact
+    for route, got in slot_and_fold(df, polys).items():
+        assert {(r["id"], r["polygon_id"]) for r in got} == want, route
 
 
 @given(
     pos=st.integers(min_value=0, max_value=3),
     bad=st.sampled_from([math.nan, math.inf, -math.inf]),
     on_lat=st.booleans(),
-    exact=st.sampled_from(["native", "edges", "udf"]),
+    fold=st.booleans(),
 )
 @settings(max_examples=24, deadline=None)
-def test_non_finite_vertex_raises_named_error(spark, pos, bad, on_lat, exact):
+def test_non_finite_vertex_raises_named_error(spark, pos, bad, on_lat, fold):
     """A NaN or infinite vertex has no SQL literal and no even-odd
     meaning: nodes_in_polygons refuses it by name, before any SQL is
-    parsed, whichever exact-test mode is asked for."""
+    parsed, whichever exact-test route the rings would take."""
     from osm_jl_spark.datagen import FROGNER
     from osm_jl_spark.operators.joins import nodes_in_polygons
 
@@ -153,8 +126,10 @@ def test_non_finite_vertex_raises_named_error(spark, pos, bad, on_lat, exact):
     x, y = ring[pos]
     ring[pos] = (x, bad) if on_lat else (bad, y)
     pts = spark.range(1).selectExpr("10.05D AS lon", "59.05D AS lat")
-    with pytest.raises(NonFiniteVertexError, match="polygon 7"):
-        nodes_in_polygons(pts, {1: FROGNER, 7: ring}, 2, exact=exact)
+    limit = 0 if fold else geo.SLOT_LIMIT
+    with mock.patch.object(geo, "SLOT_LIMIT", limit), \
+            pytest.raises(NonFiniteVertexError, match="polygon 7"):
+        nodes_in_polygons(pts, {1: FROGNER, 7: ring}, 2)
     assert issubclass(NonFiniteVertexError, ValueError)
 
 
@@ -198,7 +173,8 @@ def test_pbf_zigzag_packed_roundtrip(values):
     # which the wire format itself cannot represent — the encoder
     # raises on those, pinned in tests/test_pbf.py)
     st.lists(st.integers(min_value=1, max_value=(1 << 62)), max_size=10),
-    st.integers(min_value=1, max_value=(1 << 63) - 1),
+    # the way id is int64 on the wire: every value, negatives included
+    sint64,
 )
 def test_pbf_way_block_roundtrip(tags, refs, way_id):
     """A single-way PrimitiveBlock survives encode -> decode exactly:

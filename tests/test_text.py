@@ -74,24 +74,30 @@ def test_lang_id_and_quality_cols(spark):
 
 def test_native_kernels_match_udf_kernels(spark):
     """The JVM-native geoparse/extract kernels must emit exactly the
-    rows of the Arrow/pandas reference kernels (which in turn are
-    pinned byte-identical to the single-node oracle)."""
+    points of the single-node oracle, page by page: oracle.geoparse
+    over the stored text, and over oracle.extract_text of the html."""
+    from osm_jl_spark import oracle
     from osm_jl_spark.datagen import load_pages
     from osm_jl_spark.operators.pipeline import (
         geoparse_points,
         geoparse_points_from_html,
-        geoparse_points_from_html_udf,
-        geoparse_points_udf,
     )
 
     pages = load_pages(spark, 500)
+    rows = pages.select("url", "text", "html").collect()
+
+    def want(text_of):
+        return sorted(
+            (r["url"], i, lon, lat)
+            for r in rows
+            for i, (lon, lat) in enumerate(oracle.geoparse(text_of(r)))
+        )
+
     a = sorted(tuple(r) for r in geoparse_points(pages).collect())
-    b = sorted(tuple(r) for r in geoparse_points_udf(pages).collect())
+    b = want(lambda r: r["text"])
     assert a == b and len(a) > 100
     c = sorted(tuple(r) for r in geoparse_points_from_html(pages).collect())
-    d = sorted(
-        tuple(r) for r in geoparse_points_from_html_udf(pages).collect()
-    )
+    d = want(lambda r: oracle.extract_text(bytes(r["html"])))
     assert c == d == a
 
 

@@ -15,8 +15,9 @@ on a 1000-executor cluster:
   (polygon cover, customer, cover cells) must broadcast — a shuffle of
   the 10^12-row fact side is the difference between minutes and days.
 - **Whole-stage codegen** (`WholeStageCodegen`): native expressions
-  stay fused in generated JVM code; only the declared pandas UDFs
-  (geoparse, exact PIP) appear as `ArrowEvalPython`/`MapInPandas`.
+  stay fused in generated JVM code; geoparse and exact PIP are native,
+  so only operators with no native form (e.g. Douglas-Peucker
+  simplification) appear as `ArrowEvalPython`/`MapInPandas`.
 - **Exchange count**: shuffles are the scale bottleneck; each audited
   query documents how many it needs and why.
 
