@@ -87,13 +87,7 @@ def _pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = _counts(sf_dir)["docs"]
     cache = os.environ.get("SPARK_GRAFT_PAGES_CACHE")
     if cache:
-        path = os.path.join(
-            cache, f"pages_v{G.PAGES_CACHE_VERSION}_{n}.parquet"
-        )
-        if not os.path.exists(path):
-            os.makedirs(cache, exist_ok=True)
-            G.load_pages(spark, n).write.mode("overwrite").parquet(path)
-        return spark.read.parquet(path)
+        return spark.read.parquet(G.stored_pages(spark, n, cache))
     return G.load_pages(spark, n)
 
 

@@ -1,10 +1,11 @@
 """Benchmark harness.
 
 Times the headline queries at $SPARK_GRAFT_SF_DIR (default sf0.1) on
-local[$SPARK_GRAFT_CPUS], then evidences the north rule's scaling
-criterion by running the flagship pipeline at two parallelism levels
-(N=2 vs 4N=8 cores) on identical stored input and reporting throughput
-at both plus scaling efficiency = thr_hi / (4 * thr_lo).
+local[$SPARK_GRAFT_CPUS] (default: every CPU this process may use),
+then evidences the north rule's scaling criterion by running the
+flagship pipeline at two parallelism levels on identical stored input
+and reporting throughput at both plus scaling efficiency =
+thr_hi / (hi/lo * thr_lo).
 
 Methodology notes (why the scaling numbers are trustworthy):
 
@@ -12,28 +13,32 @@ Methodology notes (why the scaling numbers are trustworthy):
   a production run reads Iceberg — benchmarking the engine, not the
   synthetic SQL generator (whose group-by shuffle is the dominant cost
   at small scale and does not exist in deployment).
-- Levels are 2 and 8 cores ("N and 4N cores" per the scaling
-  criterion; this sandbox is one machine, so parallelism stands in for
-  executors). Each level is CPU-PINNED with taskset: local[N] alone
-  only caps task slots, while GC/shuffle threads and the pandas-UDF
-  Python workers run beyond them — an unpinned local[2] burns ~3-4
-  cores, overstating low-level throughput. A cluster executor is
-  cgroup-bounded; pinning reproduces that boundary.
+- Levels come from the process's CPU affinity set
+  (perfbench/host.py ``levels``): hi is every CPU in it, lo the first
+  quarter — 1 and 4 CPUs on a 4-CPU host, 8 and 32 on a 32-CPU one
+  ("N and 4N cores" per the scaling criterion; one machine, so
+  parallelism stands in for executors). Each level's process starts
+  with its CPU list as affinity mask, which the JVM and the Python
+  workers inherit: local[N] alone only caps task slots, while GC and
+  shuffle threads and Python workers run beyond them. A cluster
+  executor is cgroup-bounded; the mask reproduces that boundary. Below
+  4 CPUs the low level would be empty, so the scaling block is left
+  out of the report.
 - Each level runs 1 warmup (spawns Python workers, JITs codegen) then
-  2 timed runs; the (lo,hi) pair is run in 3 interleaved sessions and
-  the MIN per level is reported — the standard noise-robust estimator
-  on a shared host.
+  timed runs; the (lo,hi) pair is run in up to 3 interleaved sessions
+  and the MIN per level is reported — the standard noise-robust
+  estimator on a shared host.
 - A MACHINE-CAPACITY CONTROL runs adjacent to every session pair:
   plain CPU-bound worker processes, pinned the same way, measure what
   lo->hi speedup the box actually offers right now (noisy neighbors on
   the hypervisor can take it well under hi/lo). The report carries
-  both `efficiency` (vs the ideal 4x) and `efficiency_vs_ceiling`
+  both `efficiency` (vs the ideal hi/lo) and `efficiency_vs_ceiling`
   (vs the measured ceiling — the honest number on a shared host).
 
 Prints ONE JSON line:
   {"metric": "flagship_e2e_sec", "value": <sec>, "unit": "sec",
    "queries": {...}, "sf": <sf>, "docs_per_sec": ..., "tiles_per_sec":
-   ..., "scaling": {"cores_lo": 2, "cores_hi": 8, ...}}
+   ..., "scaling": {"cores_lo": 1, "cores_hi": 4, ...}}
 
 Internal mode: ``python bench.py --scaling-run <cores> <parquet>``
 times the flagship only and prints "SCALING <cores> <best-sec> <docs>".
@@ -43,31 +48,33 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import subprocess
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from perfbench import host  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 SCRATCH = os.environ.get("SPARK_GRAFT_SCRATCH", "/tmp/osm_jl_spark_bench")
+DRIVER_MEMORY = host.driver_memory(host.mem_gb())
 # 64M docs: fixed per-job costs (scheduling, AQE planning, broadcast
 # build, stage tails) are ~1.5-2s regardless of scale — at the 8M
 # workload they eat ~20% of the hi-level run and at 32M still ~10%,
 # masquerading as poor scaling (round-1 recorded 0.696 at 32M; the
 # hi-level THROUGHPUT rose from 1.83M to 2.28M docs/s going 32M->64M,
 # which is the overhead amortizing, not the engine changing). 64M
-# keeps the hi level ~30s so the measurement reflects the pipeline,
-# matching the design point where jobs run minutes-to-hours.
+# keeps the hi level ~30s on 32 CPUs so the measurement reflects the
+# pipeline, matching the design point where jobs run minutes-to-hours.
 SCALING_DOCS = int(os.environ.get("SPARK_GRAFT_SCALING_DOCS", "64000000"))
-# version key of the persisted scaling recording (see main()): bump on
-# any change to the flagship pipeline, the scaling methodology, or the
-# stored-input generator — the recording must never outlive the code
-# it measured. v5: round-5 recording (code identical to the r4 bench's
-# flagship path).
-SCALING_RECORD_VERSION = 5
+# version key of the persisted scaling recording (see scaling_block()):
+# bump on any change to the flagship pipeline, the scaling methodology,
+# or the stored-input generator — the recording must never outlive the
+# code it measured. v6: levels from the affinity set, pinned with
+# sched_setaffinity; the level pair is part of the file name.
+SCALING_RECORD_VERSION = 6
 
 BENCH_QUERIES = [
     "geoparse_points",
@@ -128,16 +135,11 @@ def _cpu_work(n: int) -> int:
     return x
 
 
-def _pin_to(cpus: frozenset) -> None:
-    try:
-        os.sched_setaffinity(0, cpus)
-    except (AttributeError, OSError):
-        pass
-
-
-def cpu_ceiling_speedup(lo: int, hi: int, iters: int = 60_000_000) -> float:
-    """Measure the MACHINE's throughput scaling from lo to hi worker
-    processes (each doing identical fixed work), at this moment.
+def cpu_ceiling_speedup(lo: list[int], hi: list[int],
+                        iters: int = 60_000_000) -> float:
+    """Measure the MACHINE's throughput scaling from the lo to the hi
+    CPU list, one worker process per CPU pinned to the list (each doing
+    identical fixed work), at this moment.
 
     On a quiet host this returns ~hi/lo. On a host with noisy
     neighbors the hi-level runs get fewer than hi real cores and the
@@ -149,16 +151,14 @@ def cpu_ceiling_speedup(lo: int, hi: int, iters: int = 60_000_000) -> float:
     import multiprocessing as mp
 
     times: dict[int, float] = {}
-    for p in (lo, hi, lo, hi):
-        # pinned to cpus 0..p-1, mirroring the taskset boundary the
-        # Spark scaling runs get
+    for cpus in (lo, hi, lo, hi):
+        p = len(cpus)
         t0 = time.time()
-        with mp.Pool(p, initializer=_pin_to,
-                     initargs=(frozenset(range(p)),)) as pool:
+        with mp.Pool(p, initializer=os.sched_setaffinity,
+                     initargs=(0, cpus)) as pool:
             pool.map(_cpu_work, [iters] * p)
-        dt = time.time() - t0
-        times[p] = min(times.get(p, float("inf")), dt)
-    return (hi / times[hi]) / (lo / times[lo])
+        times[p] = min(times.get(p, float("inf")), time.time() - t0)
+    return (len(hi) / times[len(hi)]) / (len(lo) / times[len(lo)])
 
 
 def _force(df) -> int:
@@ -179,14 +179,14 @@ def scaling_run(cores: int, path: str, n_runs: int = 1) -> None:
 
     # 32 MB input splits: at the design point (10^12 docs) splits
     # outnumber cores by orders of magnitude, so every level runs many
-    # waves and stragglers amortize. The sandbox's 8M-doc file would
-    # bin into ~8 x 128MB splits — a SINGLE wave at the hi level, where
-    # one slow task extends the whole run and fakes poor scaling.
-    # Finer splits restore the deployment's parallelism structure
-    # (identical config at both levels).
+    # waves and stragglers amortize. Default 128 MB splits leave a
+    # small stored file with about one split per core — a SINGLE wave
+    # at the hi level, where one slow task extends the whole run and
+    # fakes poor scaling. Finer splits restore the deployment's
+    # parallelism structure (identical config at both levels).
     spark = get_spark(app=f"bench-scale-{cores}", cores=cores,
                       shuffle_partitions=max(8, cores),
-                      driver_memory="16g",
+                      driver_memory=DRIVER_MEMORY,
                       extra={"spark.sql.files.maxPartitionBytes":
                              str(32 * 1024 * 1024)})
     n_docs = spark.read.parquet(path).count()
@@ -203,19 +203,211 @@ def scaling_run(cores: int, path: str, n_runs: int = 1) -> None:
     spark.stop()
 
 
+def scaling_levels() -> tuple[list[int], list[int]] | None:
+    """(lo, hi) CPU lists from this process's affinity set, or None when
+    the set is too small for a non-empty quarter-size level."""
+    try:
+        hi, lo = host.levels(os.sched_getaffinity(0))
+    except host.HostTooSmall as exc:
+        print(f"[scaling] skipped: {exc}", file=sys.stderr, flush=True)
+        return None
+    return lo, hi
+
+
+def _level_run(rnd: int, cpus: list[int], path: str,
+               n_runs: int) -> tuple[float, int] | None:
+    """One ``--scaling-run`` child confined to ``cpus``: (best sec, docs)."""
+    out = subprocess.run(
+        [sys.executable, os.path.abspath(__file__),
+         "--scaling-run", str(len(cpus)), path, str(n_runs)],
+        capture_output=True, text=True, timeout=1800,
+        preexec_fn=lambda: os.sched_setaffinity(0, cpus),
+    )
+    for line in out.stdout.splitlines():
+        if line.startswith("SCALING"):
+            # echo per-round values to stderr: when a round catches
+            # hypervisor weather, the evidence of WHICH session was hit
+            # must survive into the log
+            print(f"[round {rnd}] {line}", file=sys.stderr, flush=True)
+            _, _, dt, nd = line.split()
+            return float(dt), int(nd)
+    return None
+
+
+def measure_scaling(path: str, lo: list[int],
+                    hi: list[int]) -> dict | None:
+    """Same job, identical stored input, two parallelism levels.
+    Levels are INTERLEAVED (lo, hi, lo, hi, ...) and the min per level
+    is kept, so a slow period on the shared host hits both levels
+    rather than biasing one. None if a level never reported."""
+    nominal = len(hi) / len(lo)
+    best: dict[str, tuple[float, int]] = {}
+    ceilings: list[float] = []
+    t_start = time.time()
+    # wall-clock bound on the whole phase: on a bad-weather day the lo
+    # level runs 2-3x slow (observed 163s -> 370s for the same job),
+    # and three full rounds would blow the driver's window. One
+    # completed (lo, hi) pair is a valid measurement; rounds after the
+    # first are noise rejection, affordable only if time remains.
+    budget_s = float(os.environ.get("SPARK_GRAFT_SCALING_BUDGET_S", "1500"))
+    rounds_done = 0
+    for rnd in range(3):
+        if rnd > 0 and time.time() - t_start > budget_s:
+            print(f"[round {rnd}] skipped: scaling phase past "
+                  f"{budget_s:.0f}s budget", file=sys.stderr, flush=True)
+            break
+        # machine-capacity control adjacent to each Spark pair: what
+        # lo->hi speedup do plain CPU-bound processes get RIGHT NOW?
+        ceilings.append(cpu_ceiling_speedup(lo, hi))
+        print(f"[round {rnd}] CEILING {ceilings[-1]:.2f}",
+              file=sys.stderr, flush=True)
+        # Asymmetric sample counts: the HI level is the noise-sensitive
+        # one (hypervisor steal hits a fully-pinned run hardest, and one
+        # bad window can poison every session of a round-robin) AND the
+        # cheap one (about 1/4 of the lo wall time), so it gets 3 timed
+        # runs per session while lo gets 1.
+        for level, cpus, n_runs in (("lo", lo, 1), ("hi", hi, 3)):
+            got = _level_run(rnd, cpus, path, n_runs)
+            if got and (level not in best or got[0] < best[level][0]):
+                best[level] = got
+        rounds_done = rnd + 1
+        if rnd < 1 or len(best) < 2:
+            continue
+        # Early exit once the measurement is already conclusive: extra
+        # rounds exist ONLY for noise rejection, and min-per-level means
+        # further rounds can only move the estimate by catching a
+        # BETTER window. If two or more rounds already show >=0.82 of
+        # both the nominal ratio and the measured machine ceiling, more
+        # rounds cannot change the gate verdict — but on a bad-weather
+        # day they can double-to-triple the phase. The recorded
+        # artifact is never a single-window measurement.
+        speedup = best["lo"][0] / best["hi"][0]
+        # same clamp as the final aggregation: a probe sample above
+        # the core ratio is interference in the probe itself
+        ceiling = min(max(ceilings), nominal)
+        # PLAUSIBILITY guard: a speedup well above the nominal core
+        # ratio is not good scaling, it is a weather-poisoned lo sample
+        # (observed: lo 163s one hour, 383s the next -> a "speedup" of
+        # 8x on 4x the cores). Such a pair must NOT stop the
+        # interleave — further rounds give min-per-level a chance to
+        # replace the poisoned lo with a clean window.
+        if speedup > nominal * 1.15:
+            print(f"[round {rnd}] speedup {speedup:.2f} exceeds "
+                  f"plausibility bound (nominal {nominal:.2f}) — lo "
+                  f"sample suspect, continuing", file=sys.stderr,
+                  flush=True)
+        elif speedup / nominal >= 0.82 and speedup / ceiling >= 0.82:
+            print(f"[round {rnd}] early exit: speedup {speedup:.2f} "
+                  f"clears 0.82x of nominal and ceiling",
+                  file=sys.stderr, flush=True)
+            break
+    if len(best) < 2:
+        return None
+    (t_lo, nd), (t_hi, _) = best["lo"], best["hi"]
+    speedup = t_lo / t_hi
+    # best window across probes, CLAMPED at the nominal core ratio: the
+    # ceiling is "what fraction of hi/lo the machine can deliver right
+    # now", so a sample ABOVE hi/lo is physically impossible for
+    # identical per-worker work — it means the probe's own lo leg
+    # caught interference (observed: a concurrent job during one
+    # probe's lo leg produced 'ceiling 8.05' on a 4x core ratio, which
+    # then deflated efficiency_vs_ceiling to 0.41 despite clean Spark
+    # legs).
+    ceiling = min(max(ceilings), nominal)
+    block = {
+        "cores_lo": len(lo),
+        "cores_hi": len(hi),
+        "docs": nd,
+        "sec_lo": round(t_lo, 3),
+        "sec_hi": round(t_hi, 3),
+        "docs_per_sec_lo": round(nd / t_lo, 1),
+        "docs_per_sec_hi": round(nd / t_hi, 1),
+        "efficiency": round(speedup / nominal, 3),
+        "speedup": round(speedup, 2),
+        # machine-capacity control: lo->hi speedup of plain CPU-bound
+        # worker processes measured alongside the Spark runs (best of
+        # the interleaved probes). efficiency_vs_ceiling = how much of
+        # the ACTUALLY AVAILABLE scaling Spark captured — the honest
+        # number on a shared host.
+        "cpu_ceiling_speedup": round(ceiling, 2),
+        "efficiency_vs_ceiling": round(min(speedup / ceiling, 1.0), 3),
+        # how many full (lo, hi) interleave rounds produced this
+        # min-per-level estimate
+        "interleave_rounds": rounds_done,
+    }
+    if speedup > nominal * 1.15:
+        # see the plausibility guard above: this pair's lo sample never
+        # got a clean window; flag it so a >1 "efficiency" is read as
+        # weather, not engine magic
+        block["lo_sample_suspect"] = True
+    return block
+
+
+def scaling_block(path: str, lo: list[int], hi: list[int]) -> dict | None:
+    """The scaling block, RECORDED ONCE per (code, data, levels) version
+    and reused: the measurement is a property of the pipeline and the
+    stored input, not of the minute it runs, and re-measuring per bench
+    invocation only re-rolls hypervisor weather — which is how rounds
+    3 and 4 ended up with a driver artifact and a BASELINE.md headline
+    that were two different (both-passing) runs. The reused block
+    carries `recorded_at` and `reused_recording: true`; delete the
+    recording or set SPARK_GRAFT_FORCE_SCALING=1 to re-measure. The
+    level pair is in the file name, so a recording made at other levels
+    is never reused."""
+    rec_path = os.path.join(
+        SCRATCH, f"scaling_rec_v{SCALING_RECORD_VERSION}_{SCALING_DOCS}"
+                 f"_{len(lo)}x{len(hi)}.json")
+    if (os.path.exists(rec_path)
+            and not os.environ.get("SPARK_GRAFT_FORCE_SCALING")):
+        with open(rec_path) as fh:
+            recorded = json.load(fh)
+        recorded["reused_recording"] = True
+        print(f"[scaling] reusing recording {rec_path} "
+              f"(recorded_at {recorded.get('recorded_at')})",
+              file=sys.stderr, flush=True)
+        return recorded
+    block = measure_scaling(path, lo, hi)
+    if block is not None:
+        block["recorded_at"] = time.strftime(
+            "%Y-%m-%dT%H:%M:%SZ", time.gmtime())
+        with open(rec_path, "w") as fh:
+            json.dump(block, fh)
+    return block
+
+
+def report(flagship_sec: float, times: dict[str, float], sf: float,
+           n_docs: int, n_tiles: int, tiling_sec: float,
+           scaling: dict | None) -> dict:
+    """The one JSON line; no scaling block when none was measured."""
+    result = {
+        "metric": "flagship_e2e_sec",
+        "value": round(flagship_sec, 3),
+        "unit": "sec",
+        "queries": times,
+        "sf": sf,
+        "docs": n_docs,
+        "docs_per_sec": round(n_docs / flagship_sec, 1),
+        "tiles": n_tiles,
+        "tiles_per_sec": round(n_tiles / tiling_sec, 1),
+    }
+    if scaling is not None:
+        result["scaling"] = scaling
+    return result
+
+
 def main() -> None:
     import __spark_entry__ as entry
     from osm_jl_spark import datagen as G
     from osm_jl_spark.session import get_spark, sf_from_dir
 
     sf = sf_from_dir(SF_DIR)
+    levels = scaling_levels()
     spark = get_spark(app="bench", cores=CPUS, shuffle_partitions=CPUS,
-                      driver_memory="48g")
+                      driver_memory=DRIVER_MEMORY)
 
     # pages served from a stored table during the bench (production
     # reads Iceberg/parquet; without this, per-query times measure the
     # synthetic html generator instead of the engine)
-    os.makedirs(SCRATCH, exist_ok=True)
     os.environ["SPARK_GRAFT_PAGES_CACHE"] = SCRATCH
 
     # warmup
@@ -233,15 +425,10 @@ def main() -> None:
 
     # materialize the pages tables once (stored-table benchmarking:
     # production reads Iceberg/parquet, not the SQL generator)
-    os.makedirs(SCRATCH, exist_ok=True)
     n_docs = G.counts_for_sf(sf)["docs"]
-    sf_path = os.path.join(SCRATCH, f"pages_v{G.PAGES_CACHE_VERSION}_{n_docs}.parquet")
-    scale_path = os.path.join(SCRATCH, f"pages_v{G.PAGES_CACHE_VERSION}_{SCALING_DOCS}.parquet")
-    if not os.path.exists(sf_path):
-        G.load_pages(spark, n_docs).write.mode("overwrite").parquet(sf_path)
-    if not os.path.exists(scale_path):
-        G.load_pages(spark, SCALING_DOCS).write.mode("overwrite").parquet(
-            scale_path)
+    sf_path = G.stored_pages(spark, n_docs, SCRATCH)
+    if levels:
+        scale_path = G.stored_pages(spark, SCALING_DOCS, SCRATCH)
     spark.stop()
 
     # flagship end-to-end + tile throughput at the sf scale, in a
@@ -251,7 +438,7 @@ def main() -> None:
     # through that debris recorded a 7x phantom regression once —
     # 15.7s in-session vs 2.5s clean, same code, same data
     spark = get_spark(app="bench-flagship", cores=CPUS,
-                      shuffle_partitions=CPUS, driver_memory="48g")
+                      shuffle_partitions=CPUS, driver_memory=DRIVER_MEMORY)
     _flagship_from_parquet(spark, sf_path).count()  # warm
     flagship_sec = float("inf")
     for _ in range(3):
@@ -270,195 +457,9 @@ def main() -> None:
     tiling_sec = time.time() - t0
     spark.stop()
 
-    # scaling: same job, identical stored input, two parallelism levels.
-    # Levels are INTERLEAVED (lo, hi, lo, hi) and the min per level is
-    # kept, so a slow period on the shared host hits both levels rather
-    # than biasing one.
-    #
-    # The scaling block is RECORDED ONCE per (code, data) version and
-    # reused: the measurement is a property of the pipeline and the
-    # stored input, not of the minute it runs, and re-measuring per
-    # bench invocation only re-rolls hypervisor weather — which is how
-    # rounds 3 and 4 ended up with a driver artifact and a BASELINE.md
-    # headline that were two different (both-passing) runs. The reused
-    # block carries `recorded_at` and `reused_recording: true` so the
-    # artifact is explicit about it; delete the cache file or set
-    # SPARK_GRAFT_FORCE_SCALING=1 to re-measure. Bump
-    # SCALING_RECORD_VERSION whenever the flagship path or the scaling
-    # methodology changes — a stale recording must never outlive the
-    # code it measured.
-    rec_path = os.path.join(
-        SCRATCH,
-        f"scaling_rec_v{SCALING_RECORD_VERSION}_{SCALING_DOCS}.json")
-    recorded = None
-    if (os.path.exists(rec_path)
-            and not os.environ.get("SPARK_GRAFT_FORCE_SCALING")):
-        with open(rec_path) as fh:
-            recorded = json.load(fh)
-        recorded["reused_recording"] = True
-        print(f"[scaling] reusing recording {rec_path} "
-              f"(recorded_at {recorded.get('recorded_at')})",
-              file=sys.stderr, flush=True)
-    scaling = {}
-    lo_cores, hi_cores = 2, 8
-    ceilings: list[float] = []
-    scale_t0 = time.time()
-    # wall-clock bound on the whole phase: on a bad-weather day the lo
-    # level runs 2-3x slow (observed 163s -> 370s for the same job),
-    # and three full rounds would blow the driver's window. One
-    # completed (lo, hi) pair is a valid measurement; rounds after the
-    # first are noise rejection, affordable only if time remains.
-    budget_s = float(os.environ.get("SPARK_GRAFT_SCALING_BUDGET_S", "1500"))
-    rounds_done = 0
-    for rnd in range(0 if recorded is not None else 3):
-        if rnd > 0 and time.time() - scale_t0 > budget_s:
-            print(f"[round {rnd}] skipped: scaling phase past "
-                  f"{budget_s:.0f}s budget", file=sys.stderr, flush=True)
-            break
-        # machine-capacity control adjacent to each Spark pair: what
-        # lo->hi speedup do plain CPU-bound processes get RIGHT NOW?
-        ceilings.append(cpu_ceiling_speedup(lo_cores, hi_cores))
-        print(f"[round {rnd}] CEILING {ceilings[-1]:.2f}",
-              file=sys.stderr, flush=True)
-        for cores in (lo_cores, hi_cores):
-            # CPU-PIN the whole process tree to exactly `cores` CPUs.
-            # local[N] alone only limits TASK SLOTS: the JVM's GC and
-            # shuffle threads plus the pandas-UDF Python workers run
-            # beyond them, so an unpinned local[2] consumes ~3-4 cores
-            # — inflating low-level throughput and understating scaling
-            # efficiency. A real cluster executor is cgroup-bounded;
-            # taskset reproduces that boundary.
-            #
-            # Asymmetric sample counts: the HI level is the
-            # noise-sensitive one (hypervisor steal hits a fully-pinned
-            # 8-core run hardest, and one bad multi-minute window can
-            # poison every session of a round-robin) AND the cheap one
-            # (~30s/run vs ~2min at lo), so it gets 3 timed runs per
-            # session — 9 samples across the interleave — while lo
-            # (insensitive: 30 idle cores of headroom, measured spread
-            # <8%) gets 1.
-            n_runs = 1 if cores == lo_cores else 3
-            cmd = [sys.executable, os.path.abspath(__file__),
-                   "--scaling-run", str(cores), scale_path, str(n_runs)]
-            if shutil.which("taskset"):
-                cmd = ["taskset", "-c", f"0-{cores - 1}"] + cmd
-            out = subprocess.run(
-                cmd, capture_output=True, text=True, timeout=1800,
-            )
-            for line in out.stdout.splitlines():
-                if line.startswith("SCALING"):
-                    # echo per-round values to stderr: when a round
-                    # catches hypervisor weather, the evidence of WHICH
-                    # session was hit must survive into the log
-                    print(f"[round {rnd}] {line}", file=sys.stderr,
-                          flush=True)
-                    _, c, dt, nd = line.split()
-                    prev = scaling.get(int(c))
-                    if prev is None or float(dt) < prev[0]:
-                        scaling[int(c)] = (float(dt), int(nd))
-        rounds_done = rnd + 1
-        # Early exit once the measurement is already conclusive: extra
-        # rounds exist ONLY for noise rejection (a bad-weather window
-        # poisoning one level), and min-per-level means further rounds
-        # can only move the estimate by catching a BETTER window. If
-        # the rounds so far already show >=0.85 of both the nominal 4x
-        # and the measured machine ceiling, more rounds cannot change
-        # the gate verdict — but on a bad-weather day (lo runs 2-3x
-        # slow) they can double-to-triple a 20-minute phase. Bound the
-        # cost, keep the estimator. VERDICT r3 #5: a minimum of TWO
-        # completed interleave rounds before any early exit, so the
-        # recorded artifact is never a single-window measurement.
-        if rnd >= 1 and len(scaling) == 2:
-            _sp = (scaling[lo_cores][0] / scaling[hi_cores][0])
-            _nom = hi_cores / lo_cores
-            # same clamp as the final aggregation: a probe sample above
-            # the core ratio is interference in the probe itself
-            _ceil = min(max(ceilings), _nom) if ceilings else _nom
-            # PLAUSIBILITY guard on the early exit: a speedup well above
-            # both the nominal core ratio and the measured machine
-            # ceiling is not good scaling, it is a weather-poisoned lo
-            # sample (observed: lo 163s one hour, 383s the next -> a
-            # "speedup" of 8x on 4x the cores). Such a pair must NOT
-            # stop the interleave — further rounds give min-per-level a
-            # chance to replace the poisoned lo with a clean window.
-            _plausible = _sp <= max(_nom, _ceil) * 1.15
-            if (_plausible and _sp / _nom >= 0.82
-                    and _sp / _ceil >= 0.82):
-                print(f"[round {rnd}] early exit: speedup {_sp:.2f} "
-                      f"clears 0.82x of nominal and ceiling",
-                      file=sys.stderr, flush=True)
-                break
-            if not _plausible:
-                print(f"[round {rnd}] speedup {_sp:.2f} exceeds "
-                      f"plausibility bound (ceiling {_ceil:.2f}) — lo "
-                      f"sample suspect, continuing", file=sys.stderr,
-                      flush=True)
-    result = {
-        "metric": "flagship_e2e_sec",
-        "value": round(flagship_sec, 3),
-        "unit": "sec",
-        "queries": times,
-        "sf": sf,
-        "docs": n_docs,
-        "docs_per_sec": round(n_docs / flagship_sec, 1),
-        "tiles": n_tiles,
-        "tiles_per_sec": round(n_tiles / tiling_sec, 1),
-    }
-    if recorded is not None:
-        result["scaling"] = recorded
-    if len(scaling) == 2:
-        t_lo, nd = scaling[lo_cores]
-        t_hi, _ = scaling[hi_cores]
-        thr_lo = nd / t_lo
-        thr_hi = nd / t_hi
-        speedup = thr_hi / thr_lo
-        # best window across probes, CLAMPED at the nominal core
-        # ratio: the ceiling is "what fraction of hi/lo the machine
-        # can deliver right now", so a sample ABOVE hi/lo is
-        # physically impossible for identical per-worker work — it
-        # means the probe's own lo leg caught interference (observed:
-        # a concurrent job during one probe's 2-core leg produced
-        # 'ceiling 8.05' on a 4x core ratio, which then deflated
-        # efficiency_vs_ceiling to 0.41 despite clean Spark legs).
-        ceiling = (
-            min(max(ceilings), float(hi_cores / lo_cores))
-            if ceilings else float(hi_cores / lo_cores)
-        )
-        result["scaling"] = {
-            "cores_lo": lo_cores,
-            "cores_hi": hi_cores,
-            "docs": nd,
-            "sec_lo": round(t_lo, 3),
-            "sec_hi": round(t_hi, 3),
-            "docs_per_sec_lo": round(thr_lo, 1),
-            "docs_per_sec_hi": round(thr_hi, 1),
-            "efficiency": round(speedup / (hi_cores / lo_cores), 3),
-            "speedup": round(speedup, 2),
-            # machine-capacity control: lo->hi speedup of plain
-            # CPU-bound worker processes measured alongside the Spark
-            # runs (best of 3 interleaved probes). efficiency_vs_ceiling
-            # = how much of the ACTUALLY AVAILABLE scaling Spark
-            # captured — the honest number on a shared host.
-            "cpu_ceiling_speedup": round(ceiling, 2),
-            "efficiency_vs_ceiling": round(min(speedup / ceiling, 1.0), 3),
-            # how many full (lo, hi) interleave rounds produced this
-            # min-per-level estimate (>= 2 by construction since r4)
-            "interleave_rounds": rounds_done,
-        }
-        if speedup > max(hi_cores / lo_cores, ceiling) * 1.15:
-            # see the plausibility guard above: this pair's lo sample
-            # never got a clean window; flag it so a >1 "efficiency" is
-            # read as weather, not engine magic
-            result["scaling"]["lo_sample_suspect"] = True
-        # persist the recording: every later bench invocation at this
-        # SCALING_RECORD_VERSION reports THIS run, so the driver
-        # artifact and the BASELINE.md headline are literally the same
-        # numbers (VERDICT r3 #5 / r4 #3)
-        result["scaling"]["recorded_at"] = time.strftime(
-            "%Y-%m-%dT%H:%M:%SZ", time.gmtime())
-        with open(rec_path, "w") as fh:
-            json.dump(result["scaling"], fh)
-    print(json.dumps(result))
+    scaling = scaling_block(scale_path, *levels) if levels else None
+    print(json.dumps(report(flagship_sec, times, sf, n_docs, n_tiles,
+                            tiling_sec, scaling)))
 
 
 if __name__ == "__main__":

@@ -25,6 +25,8 @@ reference's sizehint ratios, /root/reference/src/OSM.jl:60-62).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 
 KNUTH = 2654435761
@@ -278,6 +280,19 @@ SELECT p.url,
 FROM pages p
 LEFT JOIN anchors a ON a.i = p.i"""
     )
+
+
+def stored_pages(spark: SparkSession, n_docs: int, directory: str) -> str:
+    """Path of :func:`load_pages`'s ``n_docs`` table stored as parquet in
+    ``directory``, written on first use. The name carries
+    ``PAGES_CACHE_VERSION``, so a table of an older shape is never read."""
+    path = os.path.join(
+        directory, f"pages_v{PAGES_CACHE_VERSION}_{n_docs}.parquet"
+    )
+    if not os.path.exists(path):
+        os.makedirs(directory, exist_ok=True)
+        load_pages(spark, n_docs).write.mode("overwrite").parquet(path)
+    return path
 
 
 def load_pages_points(spark: SparkSession, n_docs: int) -> DataFrame:

@@ -269,7 +269,8 @@ def ngram_jaccard_pairs(
     exact verification at moderate scale; at web scale the declared
     path is minhash_dedup_pairs, whose banded join is bucketed and
     per-bucket-capped (volume evidence: the "MinHash-LSH volume
-    ladder" section of BASELINE.md, produced by tools/minhash_ladder.py).
+    ladder" section of BASELINE.md; rerun with
+    ``python tools/ladder.py minhash``).
     """
     sh = _shingle_hashes(docs, id_col, text_col, shingle_n)
     sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))

@@ -213,6 +213,8 @@ def nodes_in_polygons(
     #   untouched: range-joined candidates run the same bbox pre-test
     #   + exact even-odd, they just skip the full-cell short-circuit.
     agg_budget = 4 * COVER_BUDGET
+    # a ring with no vertices contains no point
+    polygons = {pid: ring for pid, ring in polygons.items() if ring}
     cover_rows = []
     big_rows = []
     for pid, ring in sorted(polygons.items()):

@@ -217,6 +217,8 @@ def vector_to_raster(
     rows = []
     big = []
     for pid, ring in sorted(polygons.items()):
+        if not ring:  # no vertices, no cells
+            continue
         xlo, xhi, ylo, yhi = cell_bbox_range(ring, precision)
         if (xhi - xlo + 1) * (yhi - ylo + 1) > COVER_BUDGET:
             big.append((pid, xlo, xhi, ylo, yhi))

@@ -344,19 +344,19 @@ def parse_pbf(spark: SparkSession, path: str) -> DataFrame:
     blobs = [b for b in index if b["type"] == "OSMData"]
     if not blobs:
         raise ValueError(f"no OSMData blobs in {path}")
-    rdf = spark.createDataFrame(
-        [(i, b["offset"], b["size"]) for i, b in enumerate(blobs)],
-        "blob_id INT, offset BIGINT, size BIGINT",
-    ).repartition(len(blobs), "blob_id")
+    # one blob id per partition: hash placement would stack several
+    # blobs into one task and leave other slots idle
+    spans = [(b["offset"], b["size"]) for b in blobs]
+    rdf = spark.range(len(blobs), numPartitions=len(blobs))
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows: list[dict] = []
             with open(path, "rb") as fh:
-                for r in pdf.itertuples(index=False):
-                    fh.seek(int(r.offset))
-                    payload = _blob_payload(fh.read(int(r.size)))
-                    rows.extend(_decode_block(payload))
+                for i in pdf["id"]:
+                    offset, size = spans[i]
+                    fh.seek(offset)
+                    rows.extend(_decode_block(_blob_payload(fh.read(size))))
             yield pd.DataFrame(
                 rows,
                 columns=[

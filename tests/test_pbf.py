@@ -97,14 +97,34 @@ def test_roundtrip_relations_members(spark, triple, pbf_path):
 def test_one_decode_task_per_blob(spark, pbf_path):
     """The scale contract: decode parallelism equals the OSMData blob
     count (a planet file fans out to its tens of thousands of blobs),
-    with exactly the one repartition exchange that assigns them."""
-    from osm_jl_spark.sources.osm_pbf import parse_pbf, pbf_blob_index
-
+    and every blob lands in a partition of its own — hash placement
+    would stack a handful of blobs into one task and decode them
+    serially."""
     n_data = sum(
         1 for b in pbf_blob_index(pbf_path) if b["type"] == "OSMData"
     )
     els = parse_pbf(spark, pbf_path)
     assert els.rdd.getNumPartitions() == n_data
+    per_part = sorted(
+        r["count"] for r in
+        els.groupBy(F.spark_partition_id().alias("p")).count().collect()
+    )
+    # 680 elements in blocks of 150: four full blobs and one of 80
+    assert per_part == [80, 150, 150, 150, 150]
+
+
+def test_encoder_rejects_values_outside_the_wire_types(tmp_path):
+    """Way and relation ids are int64 and ref deltas sint64 on the wire;
+    write_pbf names a value neither can carry instead of writing a
+    corrupt varint."""
+    path = str(tmp_path / "bad.osm.pbf")
+    with pytest.raises(ValueError, match="outside int64"):
+        write_pbf(path, [{"kind": "way", "id": 1 << 63,
+                          "node_refs": [1], "tags": {}}])
+    # two refs 2^63 apart: the delta overflows sint64
+    with pytest.raises(ValueError, match="outside sint64"):
+        write_pbf(path, [{"kind": "way", "id": 1,
+                          "node_refs": [-(1 << 62), 1 << 62], "tags": {}}])
 
 
 def test_parse_rejects_non_pbf(spark, tmp_path):

@@ -253,3 +253,21 @@ def test_aggregate_cover_budget_spills_to_range_join(spark, monkeypatch):
     monkeypatch.setattr(geo, "COVER_BUDGET", 40)
     got = {key(r) for r in nodes_in_polygons(pts, grid, 2).collect()}
     assert got == want and len(want) > 0
+
+
+def test_empty_ring_contributes_no_rows(spark):
+    """A ring with no vertices contains no point (the scalar port is
+    False for every point), so it adds nothing beside a real polygon —
+    on the join and on the vector->raster cover alike."""
+    from osm_jl_spark.datagen import load_pages_points
+    from osm_jl_spark.operators.joins import nodes_in_polygons
+    from osm_jl_spark.operators.tiling import vector_to_raster
+
+    pts = load_pages_points(spark, 400)
+    rows = lambda polys: sorted(  # noqa: E731
+        nodes_in_polygons(pts, polys, 2).collect())
+    want = rows({2: FROGNER})
+    assert want
+    assert rows({1: [], 2: FROGNER}) == want
+    assert (sorted(vector_to_raster({1: [], 2: FROGNER}, spark).collect())
+            == sorted(vector_to_raster({2: FROGNER}, spark).collect()))

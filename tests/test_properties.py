@@ -171,7 +171,8 @@ def test_pbf_zigzag_packed_roundtrip(values):
     # refs are OSM node ids: positive int64, the format's real domain
     # (an arbitrary-sint64 ref LIST can produce deltas outside sint64,
     # which the wire format itself cannot represent — the encoder
-    # raises on those, pinned in tests/test_pbf.py)
+    # raises on those, pinned in
+    # tests/test_pbf.py::test_encoder_rejects_values_outside_the_wire_types)
     st.lists(st.integers(min_value=1, max_value=(1 << 62)), max_size=10),
     # the way id is int64 on the wire: every value, negatives included
     sint64,
