@@ -1814,7 +1814,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         from osm_jl_spark.sources.osm_pbf import parse_pbf, write_pbf
 
-        path = "/tmp/osm_jl_spark_fixture.osm.pbf"
+        # the file is reused across runs, so its name carries a version:
+        # bump it whenever write_pbf's encoding or the generator's Data
+        # triple changes (v2: way and relation ids as protobuf int64)
+        path = "/tmp/osm_jl_spark_fixture_v2.osm.pbf"
         if not os.path.exists(path):
             els = (
                 [{"kind": "node", "id": r.id, "lon": r.lon,

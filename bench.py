@@ -60,15 +60,26 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 SCRATCH = os.environ.get("SPARK_GRAFT_SCRATCH", "/tmp/osm_jl_spark_bench")
 DRIVER_MEMORY = host.driver_memory(host.mem_gb())
-# 64M docs: fixed per-job costs (scheduling, AQE planning, broadcast
-# build, stage tails) are ~1.5-2s regardless of scale — at the 8M
-# workload they eat ~20% of the hi-level run and at 32M still ~10%,
-# masquerading as poor scaling (round-1 recorded 0.696 at 32M; the
-# hi-level THROUGHPUT rose from 1.83M to 2.28M docs/s going 32M->64M,
-# which is the overhead amortizing, not the engine changing). 64M
-# keeps the hi level ~30s on 32 CPUs so the measurement reflects the
-# pipeline, matching the design point where jobs run minutes-to-hours.
-SCALING_DOCS = int(os.environ.get("SPARK_GRAFT_SCALING_DOCS", "64000000"))
+
+
+def scaling_docs() -> int:
+    """The scaling volume: ``SPARK_GRAFT_SCALING_DOCS``, else 2M docs
+    per CPU in the affinity set (64M on 32 CPUs). Fixed per-job costs
+    (scheduling, AQE planning, broadcast build, stage tails) are
+    ~1.5-2s regardless of scale — at 8M docs on 32 CPUs they ate ~20%
+    of the hi-level run, masquerading as poor scaling (round-1
+    recorded 0.696 at 32M; the hi-level THROUGHPUT rose from 1.83M to
+    2.28M docs/s going 32M->64M, which is the overhead amortizing, not
+    the engine changing). Per-CPU sizing keeps the hi level ~30s on
+    any host, and the lo level inside its budget on a small one (the
+    1-CPU level of a 4-CPU host ran 80k docs/s: 64M docs would take
+    ~1,600 s, 8M take ~100 s)."""
+    return int(os.environ.get("SPARK_GRAFT_SCALING_DOCS",
+                              2_000_000 * len(os.sched_getaffinity(0))))
+
+
+SCALING_DOCS = scaling_docs()
+
 # version key of the persisted scaling recording (see scaling_block()):
 # bump on any change to the flagship pipeline, the scaling methodology,
 # or the stored-input generator — the recording must never outlive the
@@ -433,10 +444,11 @@ def main() -> None:
 
     # flagship end-to-end + tile throughput at the sf scale, in a
     # FRESH session: the query loop above leaves the iterative
-    # operators' localCheckpoint blocks (knn_ring_10k alone pins
-    # dozens) in the block manager, and measuring the headline number
-    # through that debris recorded a 7x phantom regression once —
-    # 15.7s in-session vs 2.5s clean, same code, same data
+    # operators' localCheckpoint blocks (knn_join one per level, graph
+    # and link operators one per iteration) in the block manager, and
+    # measuring the headline number through that debris recorded a 7x
+    # phantom regression once — 15.7s in-session vs 2.5s clean, same
+    # code, same data
     spark = get_spark(app="bench-flagship", cores=CPUS,
                       shuffle_partitions=CPUS, driver_memory=DRIVER_MEMORY)
     _flagship_from_parquet(spark, sf_path).count()  # warm

@@ -34,6 +34,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType
 
 from osm_jl_spark.operators.web import url_host
 
@@ -226,14 +227,16 @@ def triangle_census(
     count.
     """
     a, b = F.col(a_col), F.col(b_col)
-    und = (
-        edges.select(
-            F.least(a, b).alias("x"), F.greatest(a, b).alias("y")
-        )
-        .where((F.col("x") != F.col("y"))
-               & (F.col("x") != "") & (F.col("y") != ""))
-        .distinct()
+    und = edges.select(
+        F.least(a, b).alias("x"), F.greatest(a, b).alias("y")
     )
+    keep = (F.col("x") != F.col("y")) & F.col("x").isNotNull()
+    # the empty host is "no vertex" only for string ids (x is the
+    # least end, so it is "" whenever either end is); comparing a
+    # numeric id with "" is a cast that ANSI mode rejects
+    if und.schema["x"].dataType == StringType():
+        keep = keep & (F.col("x") != "")
+    und = und.where(keep).distinct()
     deg = (
         und.select(F.explode(F.array("x", "y")).alias("h"))
         .groupBy("h").agg(F.count(F.lit(1)).alias("d"))

@@ -453,16 +453,18 @@ def streaming_fetch_schedule(
     )
 
     def fold(key, pdf_iter, state: GroupState):
-        best: dict[str, int] = {}
+        # batch semantics: min() is NULL only when every proposal is
+        # NULL, and ascending order puts NULLs first
+        best: dict[str, int | None] = {}
         for pdf in pdf_iter:
             for u, p in zip(pdf["url"], pdf["pri"]):
-                if pd.notna(p):
-                    p = int(p)
-                    if u not in best or p < best[u]:
-                        best[u] = p
+                p = int(p) if pd.notna(p) else None
+                if best.get(u) is None or (p is not None and p < best[u]):
+                    best[u] = p
         next_slot = state.get[0] if state.exists else 0
         emitted = []
-        for u, p in sorted(best.items(), key=lambda kv: (kv[1], kv[0])):
+        for u, p in sorted(best.items(),
+                           key=lambda kv: (kv[1] is not None, kv[1], kv[0])):
             emitted.append((
                 u, key[0], next_slot,
                 int(start_epoch) + next_slot * int(delay_sec),

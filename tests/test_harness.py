@@ -1,5 +1,6 @@
-"""The measurement harnesses fit the host: bench.py's scaling levels come
-from the CPU affinity set, and every tools/ladder.py rung runs."""
+"""The measurement harnesses fit the host: bench.py's scaling levels and
+volume come from the CPU affinity set, and every tools/ladder.py rung
+runs."""
 
 from __future__ import annotations
 
@@ -35,6 +36,16 @@ def test_bench_report_drops_scaling_when_the_host_is_too_small(monkeypatch):
     assert "scaling" not in out
     assert out["docs_per_sec"] == 10_000.0
     assert bench.report(*args, {"cores_lo": 1})["scaling"] == {"cores_lo": 1}
+
+
+@pytest.mark.parametrize("n_cpus", [4, 32])
+def test_bench_scaling_volume_is_2m_docs_per_cpu(monkeypatch, n_cpus):
+    monkeypatch.setattr(os, "sched_getaffinity",
+                        lambda pid: set(range(n_cpus)))
+    monkeypatch.delenv("SPARK_GRAFT_SCALING_DOCS", raising=False)
+    assert bench.scaling_docs() == 2_000_000 * n_cpus
+    monkeypatch.setenv("SPARK_GRAFT_SCALING_DOCS", "400000")
+    assert bench.scaling_docs() == 400_000
 
 
 @pytest.fixture(scope="module")

@@ -164,6 +164,29 @@ def test_triangle_census_matches_naive(spark):
     assert sum(naive.values()) > 0  # the graph actually has triangles
 
 
+def test_triangle_census_numeric_vertices_match_naive(spark):
+    """BIGINT vertex ids (the shape `_graph`'s edges have): no string
+    comparison may touch them, and NULL endpoints still drop."""
+    import itertools
+    import random
+
+    from osm_jl_spark.operators.links import triangle_census
+
+    rng = random.Random(11)
+    edges = [(rng.randrange(25), rng.randrange(25)) for _ in range(120)]
+    und = {(min(s, d), max(s, d)) for s, d in edges if s != d}
+    naive: dict[int, int] = {}
+    for tri in itertools.combinations(sorted({v for e in und for v in e}), 3):
+        if all(p in und for p in itertools.combinations(tri, 2)):
+            for v in tri:
+                naive[v] = naive.get(v, 0) + 1
+    got = {r.host: r.n_triangles for r in triangle_census(
+        spark.createDataFrame(edges + [(None, 3), (4, None)],
+                              "a BIGINT, b BIGINT")).collect()}
+    assert got == naive
+    assert sum(naive.values()) > 0
+
+
 def test_triangle_census_known_graphs(spark):
     import itertools
 

@@ -1,8 +1,8 @@
 """Property-based tests (hypothesis): the kernels must agree with the
 pure-Python reference ports on arbitrary inputs — not just the fixture
 polygons. These pin the numeric core that every distributed operator
-builds on; only the tests of the spatial join itself need a Spark
-session."""
+builds on; only the tests of the spatial join and the kNN join need a
+Spark session."""
 
 from __future__ import annotations
 
@@ -17,7 +17,8 @@ from hypothesis import strategies as st
 from osm_jl_spark.functions import geo
 from osm_jl_spark.functions.geo import NonFiniteVertexError
 from osm_jl_spark.operators.joins import nodes_in_polygons
-from osm_jl_spark.oracle import coord2index, point_in_polygon
+from osm_jl_spark.operators.knn import knn_join
+from osm_jl_spark.oracle import coord2index, knn_bruteforce, point_in_polygon
 from tests.test_pip import slot_and_fold
 
 coord = st.floats(
@@ -131,6 +132,54 @@ def test_non_finite_vertex_raises_named_error(spark, pos, bad, on_lat, fold):
             pytest.raises(NonFiniteVertexError, match="polygon 7"):
         nodes_in_polygons(pts, {1: FROGNER, 7: ring}, 2)
     assert issubclass(NonFiniteVertexError, ValueError)
+
+
+# ------------------------------------------------- kNN join
+
+
+@st.composite
+def knn_case(draw):
+    """A milli-degree grid cluster around an anchor near (0, 0) — its
+    cells straddle the double-width cell 0 and negative cells, and its
+    distances tie — plus world noise, duplicated points, and queries in
+    the cluster, on points and anywhere in the world; k may exceed the
+    point count, which may be 0."""
+    milli = st.integers(-3000, 3000).map(lambda i: i / 1000)
+    ax, ay = draw(milli), draw(milli)
+    near = st.tuples(st.integers(-40, 40), st.integers(-40, 40)).map(
+        lambda d: (ax + d[0] / 1000, ay + d[1] / 1000))
+    world = st.tuples(coord, lat_coord)
+    xy = draw(st.lists(near, max_size=25)) + draw(st.lists(world, max_size=5))
+    if xy:
+        xy += draw(st.lists(st.sampled_from(xy), max_size=4))
+    anywhere = st.one_of(near, world, st.sampled_from(xy)) if xy else world
+    queries = draw(st.lists(anywhere, min_size=1, max_size=8))
+    pts = [(i + 1, x, y) for i, (x, y) in enumerate(xy)]
+    k = draw(st.integers(1, 6))
+    return pts, queries, k, draw(st.sampled_from([1, 2, 3]))
+
+
+@given(data=knn_case())
+@settings(max_examples=6, deadline=None)
+def test_knn_join_matches_bruteforce(spark, data):
+    """Every query's ranked neighbours equal the brute-force top k by
+    (d2, id), whichever level finishes it, the world level included."""
+    pts, queries, k, precision = data
+    got: dict[int, dict[int, int]] = {}
+    out = knn_join(
+        spark.createDataFrame(pts, "id LONG, lon DOUBLE, lat DOUBLE"),
+        spark.createDataFrame(
+            [(q, x, y) for q, (x, y) in enumerate(queries)],
+            "query_id LONG, qlon DOUBLE, qlat DOUBLE"),
+        k=k, precision=precision,
+    )
+    for r in out.collect():
+        got.setdefault(r["query_id"], {})[r["rank"]] = r["id"]
+    out.unpersist()
+    for q, (x, y) in enumerate(queries):
+        ranked = got.get(q, {})
+        assert [ranked[i] for i in sorted(ranked)] == knn_bruteforce(
+            x, y, pts, k), (q, x, y)
 
 
 # ------------------------------------------------- PBF wire format

@@ -8,28 +8,18 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 
-def test_streaming_schedule_matches_batch(spark, tmp_path):
+def _stream_vs_batch(spark, tmp_path, frontier, first):
+    """Stream ``frontier`` as two micro-batches (rows matching the SQL
+    predicate ``first``, then the rest); return (streamed, batch)
+    schedules keyed by url."""
     from osm_jl_spark.operators.web import fetch_schedule
     from osm_jl_spark.streaming.incremental import streaming_fetch_schedule
 
-    # deterministic frontier: 120 urls over 7 hosts, priority mostly
-    # increasing per host so split-by-priority delivery is ordered
-    rows = [
-        (f"h{i % 7}.net/p/{i}", f"h{i % 7}.net", i // 7)
-        for i in range(120)
-    ]
-    frontier = spark.createDataFrame(rows, "url STRING, host STRING, priority BIGINT")
-
+    schema = "url STRING, host STRING, priority BIGINT"
     src = str(tmp_path / "src")
-    # batch 1: each host's LOW-priority half; batch 2: the rest —
-    # per-host (priority, url) order holds across the boundary
-    frontier.filter("priority < 9").coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
+    frontier.filter(first).coalesce(1).write.mode("append").parquet(src)
 
-    stream = spark.readStream.schema(
-        "url STRING, host STRING, priority BIGINT"
-    ).parquet(src)
+    stream = spark.readStream.schema(schema).parquet(src)
     q = (
         streaming_fetch_schedule(stream, delay_sec=10, start_epoch=500)
         .writeStream.format("memory")
@@ -39,7 +29,7 @@ def test_streaming_schedule_matches_batch(spark, tmp_path):
         .start()
     )
     q.processAllAvailable()
-    frontier.filter("priority >= 9").coalesce(1).write.mode(
+    frontier.filter(f"NOT ({first})").coalesce(1).write.mode(
         "append"
     ).parquet(src)
     q.processAllAvailable()
@@ -55,5 +45,42 @@ def test_streaming_schedule_matches_batch(spark, tmp_path):
             frontier, delay_sec=10, start_epoch=500
         ).collect()
     }
+    return got, want
+
+
+def test_streaming_schedule_matches_batch(spark, tmp_path):
+    # deterministic frontier: 120 urls over 7 hosts, priority mostly
+    # increasing per host so split-by-priority delivery is ordered
+    rows = [
+        (f"h{i % 7}.net/p/{i}", f"h{i % 7}.net", i // 7)
+        for i in range(120)
+    ]
+    frontier = spark.createDataFrame(rows, "url STRING, host STRING, priority BIGINT")
+    # batch 1: each host's LOW-priority half; batch 2: the rest —
+    # per-host (priority, url) order holds across the boundary
+    got, want = _stream_vs_batch(spark, tmp_path, frontier, "priority < 9")
     assert got == want
     assert len(got) == 120
+
+
+def test_streaming_schedule_null_priorities_match_batch(spark, tmp_path):
+    """NULL priorities schedule as batch ``fetch_schedule`` does: a
+    url's best priority is NULL only when every proposal of it is NULL
+    (``min``), and NULLs sort first. Duplicate proposals share the
+    first micro-batch, where the streaming dedup-min is scoped."""
+    rows = [
+        (f"h{i % 3}.net/p/{i}", f"h{i % 3}.net",
+         None if i % 4 == 0 else i // 3)
+        for i in range(60)
+    ]
+    rows += [
+        ("h1.net/p/1", "h1.net", None),   # NULL beside priority 0
+        ("h2.net/p/5", "h2.net", None),   # NULL beside priority 1
+        ("h0.net/p/0", "h0.net", None),   # NULL twice: stays NULL
+    ]
+    frontier = spark.createDataFrame(
+        rows, "url STRING, host STRING, priority BIGINT")
+    got, want = _stream_vs_batch(
+        spark, tmp_path, frontier, "priority IS NULL OR priority < 8")
+    assert got == want
+    assert len(got) == 60

@@ -80,21 +80,22 @@ def test_knn_matches_bruteforce(spark):
         assert got_order == want, (qid, got_order, want)
 
 
-def test_knn_hierarchical_levels_match_bruteforce(spark):
-    """Force the multi-resolution machinery through every path: a
-    fine precision (3) on mixed dense/sparse data makes the world-
-    noise queries fail the fine level, and brute_cutoff=0 forces them
-    down to the coarse level's geometric grow loop instead of the
-    small-straggler brute shortcut. Results must still be EXACT."""
-    nodes = load_nodes(spark, M)
-    pts = [(r["id"], r["lon"], r["lat"]) for r in nodes.collect()]
-    queries = nodes.filter(F.col("id") <= 24).select(
+def _offset_queries(nodes, n):
+    return nodes.filter(F.col("id") <= n).select(
         F.col("id").alias("query_id"),
         (F.col("lon") + 0.001).alias("qlon"),
         (F.col("lat") + 0.001).alias("qlat"),
     )
+
+
+def test_knn_hierarchical_levels_match_bruteforce(spark):
+    """A fine precision (3) on mixed dense/sparse data makes the world-
+    noise queries fail the finest levels, so they finish at coarser
+    ones. Results must still be EXACT."""
+    nodes = load_nodes(spark, M)
+    pts = [(r["id"], r["lon"], r["lat"]) for r in nodes.collect()]
     got = {}
-    res = knn_join(nodes, queries, k=5, precision=3, brute_cutoff=0)
+    res = knn_join(nodes, _offset_queries(nodes, 24), k=5, precision=3)
     for r in res.collect():
         got.setdefault(r["query_id"], {})[r["rank"]] = r["id"]
     assert len(got) == 24
@@ -104,24 +105,28 @@ def test_knn_hierarchical_levels_match_bruteforce(spark):
         assert got_order == want, (qid, got_order, want)
 
 
-def test_knn_small_straggler_cutoff_matches_bruteforce(spark):
-    """Same workload through the brute_cutoff shortcut (default 64 >
-    the straggler count here): the bounded brute join must agree with
-    the full hierarchical descent exactly."""
+def test_knn_level_hook_sees_every_level(spark, monkeypatch):
+    """Wrapped the way the traced benchmark wraps it, the module's
+    level step is called once per precision, finest first, and leaves
+    nothing pending after the last call."""
+    from osm_jl_spark.operators import knn
+
+    calls = []
+    orig = knn._expand_level
+
+    def level(*a, **kw):
+        pending = orig(*a, **kw)
+        calls.append((a[3], pending.count()))
+        return pending
+
+    monkeypatch.setattr(knn, "_expand_level", level)
     nodes = load_nodes(spark, M)
-    pts = [(r["id"], r["lon"], r["lat"]) for r in nodes.collect()]
-    queries = nodes.filter(F.col("id") <= 24).select(
-        F.col("id").alias("query_id"),
-        (F.col("lon") + 0.001).alias("qlon"),
-        (F.col("lat") + 0.001).alias("qlat"),
-    )
-    got = {}
-    for r in knn_join(nodes, queries, k=5, precision=3).collect():
-        got.setdefault(r["query_id"], {})[r["rank"]] = r["id"]
-    for qid, qlon, qlat in [p for p in pts if p[0] <= 24]:
-        want = knn_bruteforce(qlon + 0.001, qlat + 0.001, pts, 5)
-        got_order = [got[qid][i] for i in sorted(got[qid])]
-        assert got_order == want, (qid, got_order, want)
+    knn.knn_join(nodes, _offset_queries(nodes, 24), k=5, precision=3)
+    precs = [p for p, _ in calls]
+    pending = [n for _, n in calls]
+    assert precs == list(range(3, 3 - len(calls), -1))
+    assert len(calls) > 1 and pending[-1] == 0
+    assert all(n > 0 for n in pending[:-1])
 
 
 def test_cover_budget_world_polygon_never_enumerates_on_driver(spark):

@@ -51,8 +51,10 @@ AUDITED = [
      "2 exchanges total, both over already-aggregated tile rows"),
     ("waynodes_join", "posexplode + equi-join; AQE picks broadcast vs "
      "sort-merge from runtime stats"),
-    ("knn_ring", "ring-expansion candidate join against broadcast query "
-     "cells; top-k per query via window"),
+    ("knn_ring", "cached union of one local checkpoint per level; each "
+     "level's 3x3-cell disk join against broadcast query cells and its "
+     "one top-k window exchange ran inside its checkpoint, so neither "
+     "shows here"),
     ("tpch_q3", "customer dimension broadcast; orders-lineitem shuffle "
      "join planned by AQE; parquet scans carry PushedFilters"),
     ("events_sessionize", "both window functions share one (user_id) "
