@@ -198,7 +198,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def pip_grid_polygons_q(spark, sf_dir):
         # 96-polygon PIP: the same broadcast cell-cover + codegen slot
-        # test (edge slots broadcast per polygon, sized by the widest
+        # test (edge slots ride each cover row, sized by the widest
         # ring, not the polygon count) with a polygon DIMENSION 32x the
         # fixture set — pins that cover size scales with the polygon
         # table, not the fact side (the cover stays a broadcast; the
@@ -1977,7 +1977,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # argmin, plan-pinned); queries score by ADC — the exact L2^2
         # to the reconstruction, never touching raw corpus vectors.
         # Codebooks are sub-slices of the 17 deterministic sample
-        # vectors (vec_id % 31 — the semdedup-style replayable form;
+        # vectors (vec_id % 31 below 31 * 17, so the driver collects a
+        # fixed count at any corpus size — the semdedup-style
+        # replayable form;
         # xxhash-seeded k-means training exists in code with its
         # distortion invariant pinned in tests/test_pq.py, but a
         # DuckDB oracle cannot replay xxhash). The oracle replays
@@ -1988,7 +1990,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
         samples = [
             list(r.embedding)
-            for r in emb.filter(F.col("vec_id") % 31 == 0)
+            for r in emb.filter("vec_id % 31 = 0 AND vec_id < 31 * 17")
             .orderBy("vec_id").collect()
         ]
         books = S.pq_codebooks_from_samples(samples, 8)
@@ -3456,7 +3458,7 @@ FROM u GROUP BY host"""
 e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
 smp AS (
   SELECT row_number() OVER (ORDER BY vec_id) - 1 AS c, v AS cv
-  FROM e WHERE vec_id % 31 = 0
+  FROM e WHERE vec_id % 31 = 0 AND vec_id < 31 * 17
 ),
 js AS (SELECT range AS j FROM range(8)),
 sub AS (

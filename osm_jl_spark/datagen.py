@@ -529,17 +529,3 @@ SELECT rel.id, m.members, map('type', rel.t_type) AS tags
 FROM relations rel JOIN mem_arr m USING (id)"""
     )
 
-
-# -------------------------------------------------------------- polygons
-
-def load_polygons(spark: SparkSession) -> DataFrame:
-    """Polygon dimension (FIXTURES.md §5): open rings, broadcast-sized."""
-    rows = [
-        (pid, {1: "frogner", 2: "vitoria_tri", 3: "oslo_pent"}[pid],
-         [{"lon": v[0], "lat": v[1]} for v in ring])
-        for pid, ring in sorted(POLYGONS.items())
-    ]
-    return spark.createDataFrame(
-        rows,
-        "polygon_id BIGINT, name STRING, ring ARRAY<STRUCT<lon: DOUBLE, lat: DOUBLE>>",
-    )

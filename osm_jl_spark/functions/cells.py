@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from osm_jl_spark.functions.geo import sql_ident
+
 
 def cell_coord(c: Column | str, precision: int) -> Column:
     """trunc-toward-zero of coord * 10^precision (src/index.jl:17)."""
@@ -35,21 +37,17 @@ def cell_coord(c: Column | str, precision: int) -> Column:
 
 def with_cell(df, precision: int, lon: str = "lon", lat: str = "lat",
               cx: str = "cx", cy: str = "cy"):
-    """Add integer cell columns (cx, cy) at the given precision."""
-    return df.withColumn(cx, cell_coord(lon, precision)).withColumn(
-        cy, cell_coord(lat, precision)
+    """Add integer cell columns (cx, cy) at the given precision, as ONE
+    ``selectExpr`` — a single eager analysis on the driver, where two
+    ``withColumn`` calls cost two. The cell columns come last; an
+    existing column of the same name is replaced."""
+    scale = f"{float(10**precision)!r}D"  # a DOUBLE literal, as cell_coord
+    enc = {out: f"CAST({sql_ident(c)} * {scale} AS BIGINT)"
+           for out, c in ((cx, lon), (cy, lat))}
+    return df.selectExpr(
+        *(sql_ident(c) for c in df.columns if c not in enc),
+        *(f"{e} AS {sql_ident(c)}" for c, e in enc.items()),
     )
-
-
-def cell_key(cx: Column | str, cy: Column | str) -> Column:
-    """Pack (cx, cy) into one sortable BIGINT for clustering/bucketing.
-
-    cx in [-18e6, 18e6] at p<=5; shift into non-negative and pack so the
-    key orders by (cx, cy) — good for range pruning along lon.
-    """
-    cxc = F.col(cx) if isinstance(cx, str) else cx
-    cyc = F.col(cy) if isinstance(cy, str) else cy
-    return (cxc + F.lit(18_000_000)) * F.lit(40_000_000) + (cyc + F.lit(9_000_000))
 
 
 def bbox_cell_range(ul: tuple[float, float], lr: tuple[float, float],
@@ -99,29 +97,6 @@ def cell_lookup(df, lon: float, lat: float, precision: int,
     x = math.trunc(lon * 10**precision)
     y = math.trunc(lat * 10**precision)
     return df.filter((F.col(cx) == x) & (F.col(cy) == y))
-
-
-def ring_cells(cx: int, cy: int, r: int) -> list[tuple[int, int]]:
-    """Cells at Chebyshev distance exactly r from (cx, cy) — the
-    expansion ring for kNN (SURVEY.md §2.3 last row). r=0 -> [(cx,cy)].
-    """
-    if r == 0:
-        return [(cx, cy)]
-    out = []
-    for dx in range(-r, r + 1):
-        for dy in range(-r, r + 1):
-            if max(abs(dx), abs(dy)) == r:
-                out.append((cx + dx, cy + dy))
-    return out
-
-
-def disk_cells(cx: int, cy: int, r: int) -> list[tuple[int, int]]:
-    """All cells with Chebyshev distance <= r (the kNN candidate disk)."""
-    return [
-        (cx + dx, cy + dy)
-        for dx in range(-r, r + 1)
-        for dy in range(-r, r + 1)
-    ]
 
 
 # ---------------------------------------------------------------- quadkey

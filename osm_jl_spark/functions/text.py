@@ -40,26 +40,28 @@ def extract_text_col(html: Column | str) -> Column:
 
 
 def geoparse_col(text: Column | str) -> Column:
-    """NATIVE geoparse: array<struct<pt_idx,lon,lat>> — the same result
-    as oracle.geoparse with zero Python.
+    """NATIVE geoparse: array<struct<lon,lat>>, one element per match in
+    text order — the same points as oracle.geoparse with zero Python.
 
-    One regexp pass (full-match extract_all), then an in-array split:
-    match shape is ``lat <g1> lon <g2>`` so token 1 is lat, token 3 is
-    lon. String->double casts are correctly-rounded in both JVM and
-    CPython, so values are bit-identical to the oracle's float().
-    At 10^12 docs this keeps the widest column (text) out of the
-    JVM<->Python Arrow channel entirely.
+    Two group extracts (group 2 is lon, group 1 is lat), each cast to
+    array<double> and zipped element-wise: no higher-order function, so
+    nothing evaluates interpreted per match. The array position is the
+    oracle's pt_idx; callers posexplode it (pipeline._explode_points),
+    so the parsed doubles come out of the Generate and any filter the
+    optimizer infers above it reads struct fields instead of parsing
+    the text again. String->double casts are correctly-rounded in both
+    JVM and CPython, so values are bit-identical to the oracle's
+    float(). At 10^12 docs this keeps the widest column (text) out of
+    the JVM<->Python Arrow channel entirely.
     """
     c = F.col(text) if isinstance(text, str) else text
-    ms = F.regexp_extract_all(c, F.lit(GEO_PATTERN), F.lit(0))
-    return F.transform(
-        ms,
-        lambda m, i: F.struct(
-            i.cast("int").alias("pt_idx"),
-            F.split(m, " ").getItem(3).cast("double").alias("lon"),
-            F.split(m, " ").getItem(1).cast("double").alias("lat"),
-        ),
-    )
+
+    def group(i: int) -> Column:
+        return F.regexp_extract_all(c, F.lit(GEO_PATTERN), F.lit(i)).cast(
+            "array<double>"
+        )
+
+    return F.arrays_zip(group(2).alias("lon"), group(1).alias("lat"))
 
 
 # ------------------------------------------------- native text analysis

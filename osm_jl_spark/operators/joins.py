@@ -31,21 +31,17 @@ from osm_jl_spark.functions.geo import (
     check_finite_ring,
     edge_slot_columns,
     edge_slots,
-    pip_edges_fold_expr,
-    pip_slots_expr,
+    pip_edges_fold_sql,
+    pip_slots_sql,
     ring_edges,
+    sql_ident,
 )
 
 _BBOX = [(c, pa.float64()) for c in ("bminx", "bmaxx", "bminy", "bmaxy")]
-_COVER = pa.schema(
-    [("polygon_id", pa.int64()), ("ccx", pa.int64()), ("ccy", pa.int64()),
-     ("is_full", pa.bool_()), *_BBOX]
-)
-_RANGE = pa.schema(
-    [("polygon_id", pa.int64()), ("cxlo", pa.int64()), ("cxhi", pa.int64()),
-     ("cylo", pa.int64()), ("cyhi", pa.int64()), ("is_full", pa.bool_()),
-     *_BBOX]
-)
+_COVER_KEYS = [(c, pa.int64()) for c in ("polygon_id", "ccx", "ccy")]
+_RANGE_KEYS = [
+    (c, pa.int64()) for c in ("polygon_id", "cxlo", "cxhi", "cylo", "cyhi")
+]
 _EDGES = pa.schema([
     ("polygon_id", pa.int64()),
     ("edges", pa.list_(pa.struct(
@@ -174,24 +170,34 @@ def nodes_in_polygons(
     """J3 (src/OSM.jl:210-218) as a scalable spatial join.
 
     points: any DataFrame with lon/lat columns. Output: input columns +
-    ``polygon_id`` (one row per containing polygon; even-odd rule,
-    exact reference boundary semantics src/coords.jl:69-78).
+    the cell columns ``cx``, ``cy`` at ``precision`` + ``polygon_id``
+    (one row per containing polygon; even-odd rule, exact reference
+    boundary semantics src/coords.jl:69-78). Callers that tile the
+    matches (pipeline.flagship) group on the kept cells instead of
+    encoding them again.
 
-    Plan: encode cells natively -> broadcast-join the precomputed cover
-    (polygon_id, cx, cy, is_full, polygon bbox) -> bbox pre-test ->
-    exact even-odd only on surviving boundary candidates. At 10^12
-    points this is a map-side-only pipeline: no shuffle of the fact
-    table at all.
+    Plan: encode cells natively (one selectExpr) -> broadcast-join the
+    precomputed cover (polygon_id, cx, cy, is_full, polygon bbox, edge
+    slots) -> ONE filter: full cells pass, boundary candidates must pass
+    the bbox pre-test and then the exact even-odd test. At 10^12 points
+    this is a map-side-only pipeline: no shuffle of the fact table.
 
     The boundary-candidate test follows the widest ring: up to
-    geo.SLOT_LIMIT edges, broadcast a (polygon_id, edge slots) dim —
-    shorter rings padded with the zero-length edge — and run the slot
-    test (geo.pip_slots_expr), a flat per-edge sum inside whole-stage
-    codegen whatever the polygon count. Wider rings broadcast a
-    (polygon_id, edges array) dim and fold it with F.aggregate
-    (geo.pip_edges_fold_expr) — interpreted, but O(own edges) per row
-    and constant expression size, where the slot test's generated
-    method outgrows the JIT.
+    geo.SLOT_LIMIT edges, every cover row carries its polygon's edge
+    slots in one struct column — shorter rings padded with the
+    zero-length edge, full cells all zero-length edges, which add 0 —
+    so the cover is the ONE broadcast dimension and the slot test
+    (geo.pip_slots_sql), a flat per-edge sum inside whole-stage codegen
+    whatever the polygon count, reads its edges straight from the
+    joined row. Wider rings broadcast a second (polygon_id, edges
+    array) dim and fold it with ``aggregate`` (geo.pip_edges_fold_sql)
+    — interpreted, but O(own edges) per row and constant expression
+    size, where the slot test's generated method outgrows the JIT.
+    Copying a wide ring's edges onto each of its cells would grow the
+    broadcast with perimeter x edges, so that route keeps the
+    polygon-keyed dimension. The steps are SQL text: each DataFrame
+    transformation is one eager analysis on the driver, and the
+    flagship rebuilds this plan on every pass.
     """
     from osm_jl_spark.functions.geo import (
         COVER_BUDGET,
@@ -200,28 +206,38 @@ def nodes_in_polygons(
     )
 
     spark = points.sparkSession
+    # a ring with no vertices contains no point
+    rings = sorted((pid, ring) for pid, ring in polygons.items() if ring)
+    k = max((len(ring) for _, ring in rings), default=0)
+    slots = k <= SLOT_LIMIT
+    # the slot route's one broadcast column: a struct of the edge slots
+    slot_field = [("slots", pa.struct(
+        [(c, pa.float64()) for c in edge_slot_columns(k)]
+    ))] if slots else []
     # Budgets (geo.COVER_BUDGET is the single shared constant — round 3
     # duplicated the value here, and a drift would have sent continent
     # polygons into cell_cover's driver-side enumeration):
     # - per polygon: an over-budget bbox never enumerates; it becomes
     #   ONE broadcast range row.
     # - AGGREGATE (ADVICE r3): N medium polygons can each stay under
-    #   the per-polygon budget yet sum to an executor-OOM broadcast
-    #   (N x 250k rows x ~60 B). Once the running total crosses
-    #   4 x COVER_BUDGET (~60 MB), later polygons spill to the range
-    #   path too — deterministic (sorted pid order), and exactness is
-    #   untouched: range-joined candidates run the same bbox pre-test
-    #   + exact even-odd, they just skip the full-cell short-circuit.
-    agg_budget = 4 * COVER_BUDGET
-    # a ring with no vertices contains no point
-    polygons = {pid: ring for pid, ring in polygons.items() if ring}
+    #   the per-polygon budget yet sum to an executor-OOM broadcast.
+    #   The cap is 4 x COVER_BUDGET rows of 7 eight-byte fields (~60 MB);
+    #   slot-route rows also carry 4k slot doubles, so the cap in rows
+    #   shrinks by the same factor. Once the running total crosses it,
+    #   later polygons spill to the range path too — deterministic
+    #   (sorted pid order), and exactness is untouched: range-joined
+    #   candidates run the same bbox pre-test + exact even-odd, they
+    #   just skip the full-cell short-circuit.
+    agg_budget = 4 * COVER_BUDGET * 7 // (7 + (4 * k if slots else 0))
+    zero_slots = [(0.0,) * 4 * k] if slots else []
     cover_rows = []
-    big_rows = []
-    for pid, ring in sorted(polygons.items()):
+    range_rows = []
+    for pid, ring in rings:
         check_finite_ring(pid, ring)
         xs = [p[0] for p in ring]
         ys = [p[1] for p in ring]
         bbox = (min(xs), max(xs), min(ys), max(ys))
+        edges = [tuple(edge_slots(ring, k))] if slots else []
         xlo, xhi, ylo, yhi = cell_bbox_range(ring, precision)
         n_bbox = (xhi - xlo + 1) * (yhi - ylo + 1)
         if n_bbox > COVER_BUDGET or len(cover_rows) + n_bbox > agg_budget:
@@ -231,46 +247,37 @@ def nodes_in_polygons(
             # RANGE row per polygon instead; the join becomes a
             # broadcast cell-range predicate — same candidates, O(1)
             # broadcast size per big polygon.
-            big_rows.append((pid, xlo, xhi, ylo, yhi, False, *bbox))
+            range_rows.append((pid, xlo, xhi, ylo, yhi, False, *bbox, *edges))
             continue
         full, boundary = cell_cover(ring, precision)
         cover_rows += [
-            (pid, cx, cy, True, *bbox) for cx, cy in sorted(full)
+            (pid, cx, cy, True, *bbox, *zero_slots) for cx, cy in sorted(full)
         ]
         cover_rows += [
-            (pid, cx, cy, False, *bbox) for cx, cy in sorted(boundary)
+            (pid, cx, cy, False, *bbox, *edges) for cx, cy in sorted(boundary)
         ]
 
     pts = with_cell(points, precision, lon=lon, lat=lat)
-    parts = []
-    if cover_rows:
-        cover = _local_table(spark, cover_rows, _COVER)
-        parts.append(
-            pts.join(
-                F.broadcast(cover),
-                (pts.cx == cover.ccx) & (pts.cy == cover.ccy),
-                "inner",
-            ).drop("ccx", "ccy")
-        )
-    if big_rows:
-        bigd = _local_table(spark, big_rows, _RANGE)
-        parts.append(
-            pts.join(
-                F.broadcast(bigd),
-                (pts.cx >= bigd.cxlo) & (pts.cx <= bigd.cxhi)
-                & (pts.cy >= bigd.cylo) & (pts.cy <= bigd.cyhi),
-                "inner",
-            ).drop("cxlo", "cxhi", "cylo", "cyhi")
-        )
-    if not parts:  # empty polygon set: no rows, stable schema
-        return (
-            pts.drop("cx", "cy")
-            .withColumn("polygon_id", F.lit(None).cast("long"))
-            .limit(0)
-        )
-    cand = parts[0]
-    for p in parts[1:]:
-        cand = cand.unionByName(p)
+    out = [sql_ident(c) for c in points.columns if c not in ("cx", "cy")]
+    out += ["cx", "cy", "polygon_id"]
+    cand = None
+    for rows, keys, on in (
+        (cover_rows, _COVER_KEYS, "cx = ccx AND cy = ccy"),
+        (range_rows, _RANGE_KEYS,
+         "cx BETWEEN cxlo AND cxhi AND cy BETWEEN cylo AND cyhi"),
+    ):
+        if rows:
+            dim = _local_table(spark, rows, pa.schema(
+                [*keys, ("is_full", pa.bool_()), *_BBOX, *slot_field]
+            ))
+            part = pts.join(F.broadcast(dim), F.expr(on))
+            cand = part if cand is None else cand.unionByName(
+                part, allowMissingColumns=True
+            )
+    if cand is None:  # empty polygon set: no rows, stable schema
+        return pts.selectExpr(
+            *out[:-1], "CAST(NULL AS BIGINT) AS polygon_id"
+        ).limit(0)
     # Polygon-bbox pre-test (rides the broadcast cover — 4 doubles per
     # cover row): a boundary CELL is a superset of the polygon's
     # extent inside it, so when polygons are small relative to cells
@@ -280,36 +287,22 @@ def nodes_in_polygons(
     # strict superset test (BETWEEN is inclusive; even-odd's strict
     # inequalities exclude boundary points anyway), so semantics are
     # untouched; full cells skip it like they skip the exact test.
-    cand = cand.filter(
-        F.col("is_full")
-        | (
-            (F.col(lon) >= F.col("bminx"))
-            & (F.col(lon) <= F.col("bmaxx"))
-            & (F.col(lat) >= F.col("bminy"))
-            & (F.col(lat) <= F.col("bmaxy"))
+    qlon, qlat = sql_ident(lon), sql_ident(lat)
+    bbox_sql = (f"{qlon} BETWEEN bminx AND bmaxx AND "
+                f"{qlat} BETWEEN bminy AND bmaxy")
+    if slots:
+        test = pip_slots_sql(lon, lat, "slots", k)
+        return cand.filter(f"is_full OR ({bbox_sql} AND {test})").selectExpr(
+            *out
         )
+    edge_dim = _local_table(
+        spark, [(pid, ring_edges(ring)) for pid, ring in rings], _EDGES
     )
-    # Single pass: FULL-cell rows short-circuit to true, boundary rows
-    # run the exact even-odd test (codegen slot test / edges-array fold).
-    rings = sorted(polygons.items())
-    k = max(len(ring) for _, ring in rings)
-    if k <= SLOT_LIMIT:
-        dim = _local_table(
-            spark, [(pid, *edge_slots(ring, k)) for pid, ring in rings],
-            pa.schema([("polygon_id", pa.int64()), *(
-                (c, pa.float64()) for c in edge_slot_columns(k)
-            )]),
-        )
-        test = pip_slots_expr(lon, lat, k)
-    else:
-        dim = _local_table(
-            spark, [(pid, ring_edges(ring)) for pid, ring in rings], _EDGES
-        )
-        test = pip_edges_fold_expr(lon, lat, "edges")
-    cand = cand.join(F.broadcast(dim), "polygon_id")
-    return cand.filter(F.col("is_full") | test).drop(
-        "ccx", "ccy", "is_full", "cx", "cy",
-        "bminx", "bmaxx", "bminy", "bmaxy", *dim.columns[1:],
+    return (
+        cand.filter(f"is_full OR ({bbox_sql})")
+        .join(F.broadcast(edge_dim), "polygon_id")
+        .filter(f"is_full OR {pip_edges_fold_sql(lon, lat, 'edges')}")
+        .selectExpr(*out)
     )
 
 

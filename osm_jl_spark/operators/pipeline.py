@@ -2,20 +2,25 @@
 
 documents(url, warc_ts, html, text, lang)
   -> extract_text(html)        [native regexp chain, byte-identical invariant]
-  -> geoparse(text)            [native regexp_extract_all -> array<struct> -> explode]
+  -> geoparse(text)            [two group regexp_extract_all -> array<double>,
+                                arrays_zip, posexplode: each coordinate is
+                                parsed once, inside the Generate]
   -> points(url, pt_idx, lon, lat)   [the engine's "nodes"]
-  -> cell encode               [native trunc cast]
-  -> PIP spatial join          [broadcast cell cover + native exact even-odd]
-  -> tile aggregation          [groupBy (polygon_id, cx, cy)]
+  -> cell encode               [native trunc cast, once: the join keeps cx/cy]
+  -> PIP spatial join          [one broadcast cover (bbox + edge slots per
+                                cell) + native exact even-odd in one filter]
+  -> tile aggregation          [groupBy (polygon_id, cx, cy) on the kept cells]
 
-Each stage is also exposed separately for the query registry; the
-single-node functions in oracle.py are the references the tests pin
-them to.
+Each stage is built from few DataFrame transformations (classic PySpark
+analyses every one of them eagerly on the driver, and the benchmark
+rebuilds the plan on every pass). Each stage is also exposed separately
+for the query registry; the single-node functions in oracle.py are the
+references the tests pin them to.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from osm_jl_spark.functions.text import extract_text_col, geoparse_col
@@ -28,13 +33,13 @@ def pages_with_text(pages: DataFrame) -> DataFrame:
     return pages.withColumn("extracted_text", extract_text_col("html"))
 
 
-def _explode_points(pages: DataFrame, pts_col) -> DataFrame:
-    return pages.select("url", F.explode(pts_col).alias("p")).select(
-        "url",
-        F.col("p.pt_idx").alias("pt_idx"),
-        F.col("p.lon").alias("lon"),
-        F.col("p.lat").alias("lat"),
-    )
+def _explode_points(pages: DataFrame, text: Column) -> DataFrame:
+    """(url, pt_idx, lon, lat): posexplode of geoparse_col — the
+    position is pt_idx, and lon/lat are fields of the Generate's
+    output, never re-parsed above it."""
+    return pages.select(
+        "url", F.posexplode(geoparse_col(text)).alias("pt_idx", "p")
+    ).selectExpr("url", "pt_idx", "p.lon AS lon", "p.lat AS lat")
 
 
 def geoparse_points(pages: DataFrame, text_col: str = "text") -> DataFrame:
@@ -43,32 +48,33 @@ def geoparse_points(pages: DataFrame, text_col: str = "text") -> DataFrame:
     NATIVE kernel (functions/text.geoparse_col): the regex runs in
     whole-stage codegen and the text column never crosses into Python.
     Equality with oracle.geoparse is pinned by tests/test_text.py."""
-    return _explode_points(pages, geoparse_col(F.col(text_col)))
+    return _explode_points(pages, F.col(text_col))
 
 
 def geoparse_points_from_html(pages: DataFrame) -> DataFrame:
     """Ingest path: html -> text -> points, fully native (decode +
-    regexp chain + extract_all in one codegen stage). Byte-identical
-    text semantics pinned by tests/test_text.py."""
-    return _explode_points(pages, geoparse_col(extract_text_col("html")))
+    regexp chain + extract_all in one codegen stage). The extracted
+    text is projected first, so the tag-strip chain runs once per page
+    and both group extracts read its result. Byte-identical text
+    semantics pinned by tests/test_text.py."""
+    text = pages.select("url", extract_text_col("html").alias("text"))
+    return _explode_points(text, F.col("text"))
 
 
 def flagship(pages: DataFrame, polygons: dict, precision: int = 2) -> DataFrame:
     """Full pipeline -> per-(polygon, cell) doc-point counts.
 
     This is the query ``entry()`` runs: geoparse the crawl, spatially
-    join against the polygon dimension, tile the matches.
+    join against the polygon dimension, tile the matches on the cells
+    the join already encoded.
     """
     from osm_jl_spark.operators.joins import nodes_in_polygons
-    from osm_jl_spark.functions.cells import with_cell
 
-    pts = geoparse_points(pages)
-    joined = nodes_in_polygons(pts, polygons, precision)
-    tiled = with_cell(joined, precision)
+    joined = nodes_in_polygons(geoparse_points(pages), polygons, precision)
     # no global orderBy: a total sort of every tile is a pure-overhead
     # range-shuffle at scale and no consumer needs it — the driver's
     # correctness compare is order-insensitive, and any sink that wants
     # sorted output can sortWithinPartitions at write time
-    return tiled.groupBy("polygon_id", "cx", "cy").agg(
-        F.count(F.lit(1)).alias("n_points")
+    return joined.groupBy("polygon_id", "cx", "cy").agg(
+        F.expr("count(1) AS n_points")
     )

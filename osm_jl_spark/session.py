@@ -54,6 +54,11 @@ def get_spark(
         .config("spark.sql.ansi.enabled", "true")
         # broadcast up to 64 MB dimension tables (polygon sets, covers)
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # no Python call-site capture per Column operator: it costs
+        # several py4j round trips each while a plan is built (858 ->
+        # 384 for the flagship). Errors raised from SQL text still name
+        # their fragment (pinned in tests/test_plan_build.py).
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra or {}).items():
         b = b.config(k, v)

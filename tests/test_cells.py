@@ -7,12 +7,7 @@ import math
 from pyspark.sql import functions as F
 
 from osm_jl_spark.datagen import VITORIA_LR, VITORIA_UL
-from osm_jl_spark.functions.cells import (
-    bbox_cell_range,
-    disk_cells,
-    ring_cells,
-    with_cell,
-)
+from osm_jl_spark.functions.cells import bbox_cell_range, with_cell
 from osm_jl_spark.oracle import coord2index
 
 
@@ -61,15 +56,6 @@ def test_cell_lookup_single_cell(spark):
     assert sorted(map(tuple, got.collect())) == [
         (-40.3299, -20.2701), (-40.3254, -20.2743),
     ]
-
-
-def test_ring_and_disk():
-    assert ring_cells(5, 5, 0) == [(5, 5)]
-    r1 = ring_cells(0, 0, 1)
-    assert len(r1) == 8 and (0, 0) not in r1
-    d2 = disk_cells(0, 0, 2)
-    assert len(d2) == 25
-    assert set(ring_cells(0, 0, 2)) == set(d2) - set(disk_cells(0, 0, 1))
 
 
 def _py_tile(lon, lat, z):

@@ -92,6 +92,30 @@ def test_flagship_zero_python_operators(spark, pages_parquet):
     assert "*(" in executed, executed
 
 
+def test_flagship_parses_and_encodes_once(spark, pages_parquet):
+    """Per-point work runs compiled and runs once: geoparse has no
+    higher-order lambda (the parsed doubles come out of the Generate),
+    the cells are encoded by one Project that the tile aggregate reuses,
+    and the cover with its edge slots is the one broadcast. The join's
+    inferred isnotnull filters must read the Generate's struct fields —
+    a Filter holding split( or a string->double cast would parse every
+    coordinate a second time."""
+    from osm_jl_spark import datagen as G
+    from osm_jl_spark.operators.pipeline import flagship
+
+    plan = explain(flagship(spark.read.parquet(pages_parquet), G.POLYGONS, 2))
+    assert "lambdafunction" not in plan, plan
+    for c in ("cx", "cy"):
+        assert len(re.findall(rf"\* 100\.0\) as bigint\) AS {c}#", plan)) == 1, plan
+    assert count_nodes(plan, "BroadcastExchange") == 1, plan
+    conditions = re.findall(
+        r"\(\d+\) Filter[^\n]*\nInput[^\n]*\nCondition : ([^\n]*)", plan
+    )
+    assert conditions, plan
+    for cond in conditions:
+        assert "split(" not in cond and "as double)" not in cond, cond
+
+
 def test_bbox_is_pure_filter_no_shuffle(spark):
     """J6 bbox = native range filter on cell columns: no join, no
     exchange, no Python. On a cell-clustered production table this is
@@ -132,10 +156,11 @@ def test_sessionize_single_exchange(spark):
 def test_pip_no_fact_shuffle(spark):
     """nodes_in_polygons: the point side must reach the exact-PIP filter
     with ZERO exchanges — prefilter is a broadcast join — and the
-    broadcast dimensions (cover, edge slots or edge arrays) are local
-    relations. The exact test is the codegen slot test whatever the
-    polygon count; only a ring wider than geo.SLOT_LIMIT takes the
-    interpreted edges-array fold."""
+    broadcast dimensions are local relations. The exact test is the
+    codegen slot test whatever the polygon count, reading edge slots
+    that ride the cover rows: ONE broadcast. Only a ring wider than
+    geo.SLOT_LIMIT takes the interpreted edges-array fold and its
+    second, polygon-keyed edge dimension."""
     from osm_jl_spark import datagen as G
     from osm_jl_spark.functions import geo
     from osm_jl_spark.operators.joins import nodes_in_polygons
@@ -147,11 +172,11 @@ def test_pip_no_fact_shuffle(spark):
     # '(N) Exchange' does not match BroadcastExchange detail headers
     assert count_nodes(plan, "Exchange") == 0, plan
     assert "BroadcastHashJoin" in plan
-    # the driver-built cover and edge-slot dims ship as Arrow local
-    # relations, not pickled RDDs: both broadcast leaves are
-    # LocalTableScans
-    assert count_nodes(plan, "BroadcastExchange") == 2, plan
-    assert count_nodes(plan, "LocalTableScan") == 2, plan
+    # the driver-built cover, edge slots included, ships as ONE Arrow
+    # local relation, not a pickled RDD: the one broadcast leaf is a
+    # LocalTableScan
+    assert count_nodes(plan, "BroadcastExchange") == 1, plan
+    assert count_nodes(plan, "LocalTableScan") == 1, plan
     assert "Scan ExistingRDD" not in plan, plan
     # the slot test is a flat per-edge sum, not an interpreted fold
     assert "_e0_ax" in plan and "aggregate(" not in plan, plan
@@ -161,8 +186,8 @@ def test_pip_no_fact_shuffle(spark):
     polys.update({100 + p: r for p, r in G.polygon_grid().items()})
     plan = explain(nodes_in_polygons(pts, polys, 2))
     assert count_nodes(plan, "Exchange") == 0, plan
-    assert count_nodes(plan, "BroadcastExchange") == 2, plan
-    assert count_nodes(plan, "LocalTableScan") == 2, plan
+    assert count_nodes(plan, "BroadcastExchange") == 1, plan
+    assert count_nodes(plan, "LocalTableScan") == 1, plan
     assert "Scan ExistingRDD" not in plan, plan
     assert "_e0_ax" in plan and "aggregate(" not in plan, plan
 

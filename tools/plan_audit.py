@@ -38,11 +38,15 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
 # (query name, why it is audited / what to look for)
 AUDITED = [
-    ("geoparse_points", "pages scan prunes to (url, text); geoparse is a "
-     "native regexp_extract_all - zero Python; explode stays in codegen"),
-    ("pip_polygons", "cell encode native; cover join is BroadcastHashJoin; "
-     "native even-odd slot test over a broadcast edge-slot dim after the "
-     "broadcast prefilter; zero fact shuffle"),
+    ("geoparse_points", "ingest path: the html tag-strip chain is "
+     "projected once, then two group regexp_extract_all casts to "
+     "array<double>, arrays_zip and posexplode - no lambda, each "
+     "coordinate parsed once inside the Generate; zero Python, all in "
+     "one codegen stage"),
+    ("pip_polygons", "cell encode native; the cover, with each "
+     "polygon's edge slots on its rows, is the ONE broadcast; bbox "
+     "pre-test and native even-odd slot test run in the join "
+     "condition; zero fact shuffle"),
     ("bbox_vitoria_nodes", "pure native range filter on the cell columns "
      "- no UDF, no join, no shuffle"),
     ("tile_rollup", "multi-resolution rollup: ONE groupBy shuffle over "
@@ -104,10 +108,11 @@ AUDITED = [
     ("domain_stats", "per-domain rollup: ONE shuffle on host with "
      "map-side partial aggregation; the host regex runs inside the "
      "scan-side codegen stage"),
-    ("pip_grid_polygons", "96-polygon PIP: cover AND edge-slot dims "
-     "both broadcast; bbox pre-test prunes candidates before the "
-     "codegen even-odd slot test, whose size follows the widest ring; "
-     "fact side never shuffles regardless of polygon count"),
+    ("pip_grid_polygons", "96-polygon PIP: one broadcast cover whose "
+     "rows carry the bbox and edge slots; bbox pre-test prunes "
+     "candidates before the codegen even-odd slot test, whose size "
+     "follows the widest ring; fact side never shuffles regardless of "
+     "polygon count"),
     ("line_dedup", "CCNet-style line-level dedup: document frequency "
      "is ONE map-side-combinable shuffle on the line hash "
      "(array_distinct BEFORE the explode - no count_distinct expand); "
@@ -362,7 +367,10 @@ def main() -> None:
         audit_one(
             "flagship (stored pages table)", fl,
             "parquet scan prunes to (url, text) - html binary never read; "
-            "cover join broadcasts; tile agg is the only fact shuffle",
+            "no lambda, the isnotnull filters read the Generate's parsed "
+            "doubles; cells encoded once and reused by the tile agg; one "
+            "broadcast (cover + edge slots); tile agg is the only fact "
+            "shuffle",
         )
     )
     print("audited flagship", flush=True)
