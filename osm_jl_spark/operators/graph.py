@@ -78,7 +78,7 @@ def bfs_hops(
     ``edges`` is a directed edge list (src, dst) — pass the output of
     :func:`way_edges` for undirected semantics. ``sources`` must have a
     ``node`` column. Equivalent to the DuckDB recursive-CTE oracle
-    registered as ``bfs_hops`` in ``__spark_entry__.py``.
+    registered as ``bfs_hops`` in ``registry/osm.py``.
     """
     frontier = (
         sources.select(F.col("node").cast("long"))

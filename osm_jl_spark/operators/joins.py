@@ -57,12 +57,26 @@ def _local_table(
     one Arrow stream and plan as ``LocalTableScan``, where a list of
     tuples would be pickled row by row into an RDD scan. Spark's
     ``spark.sql.execution.arrow.localRelationThreshold`` still turns
-    an oversized table into an RDD scan on its own."""
+    an oversized table into an RDD scan on its own.
+
+    Every field, nested ones included, is declared NOT NULL (no value
+    ever is null), so the generated code of the join and the exact
+    test that read these columns has no null branches."""
+    schema = pa.schema([_not_null(f) for f in schema])
     cols = zip(*rows)
     return spark.createDataFrame(pa.Table.from_arrays(
         [pa.array(c, type=f.type) for c, f in zip(cols, schema)],
         schema=schema,
     ))
+
+
+def _not_null(field: pa.Field) -> pa.Field:
+    t = field.type
+    if pa.types.is_struct(t):
+        t = pa.struct([_not_null(f) for f in t])
+    elif pa.types.is_list(t):
+        t = pa.list_(_not_null(t.value_field))
+    return field.with_type(t).with_nullable(False)
 
 
 def explode_way_refs(ways: DataFrame) -> DataFrame:

@@ -21,7 +21,7 @@ sees data, only the loop bound). Two variants:
 - :func:`pagerank_scaled` — an EXACT integer-scaled replica for
   damping 1/2 on graphs whose out-degrees divide 2. Scaled ranks are
   integers, so the DuckDB oracle (unrolled iterations in
-  ``__spark_entry__.py:link_pagerank``) matches hash-exactly — no
+  ``registry/web.py:link_pagerank``) matches hash-exactly — no
   float repr hazard. tests/test_links.py pins the float variant to the
   scaled one on the synthetic graph.
 
@@ -249,11 +249,15 @@ def triangle_census(
     )
     kx = F.struct(F.col("dx").alias("d"), F.col("x").alias("h"))
     ky = F.struct(F.col("dy").alias("d"), F.col("y").alias("h"))
+    # read three times below (both wedge sides and the closing edges):
+    # materialised once, as bfs_hops and pagerank do per round, so its
+    # dedup, degree and orientation stages are not planned and run
+    # again for every read
     oriented = e.select(
         F.when(kx < ky, F.col("x")).otherwise(F.col("y")).alias("u"),
         F.when(kx < ky, F.col("y")).otherwise(F.col("x")).alias("v"),
         F.when(kx < ky, ky).otherwise(kx).alias("kv"),
-    )
+    ).localCheckpoint()
     wedges = (
         oriented.alias("e1")
         .join(oriented.alias("e2"), F.col("e1.u") == F.col("e2.u"))

@@ -48,10 +48,13 @@ def pack_sequences(
     the cluster, the result is identical for any B (pinned by tests).
     """
     width = HASH_SPACE // buckets
+    # rk is a Generate output (a one-element explode), so the join's
+    # inferred isnotnull(bucket) filter reads it instead of running
+    # md5 a second time per doc below the Project
     d = docs.select(
         F.col(id_col).alias("id"),
         token_count_col(text_col).cast("long").alias("n_tokens"),
-        _rank_hash(id_col).alias("rk"),
+        F.explode(F.array(_rank_hash(id_col))).alias("rk"),
     ).withColumn("bucket", (F.col("rk") / F.lit(width)).cast("long"))
 
     bsums = d.groupBy("bucket").agg(F.sum("n_tokens").alias("bsum"))

@@ -1,0 +1,150 @@
+"""What every query family shares: the registration record, the
+loaders for the generated inputs, and the DuckDB CTE strings that
+regenerate the same inputs inside each oracle.
+
+Geospatial inputs (the Common-Crawl-style pages table of BASELINE.json's
+input_hint, and OSM-style nodes/ways/relations) are generated
+deterministically with exact integer arithmetic that is bit-identical
+between Spark and DuckDB (osm_jl_spark/datagen.py), so each oracle
+regenerates the same input inline — no files exchanged. Text, dedup and
+similarity queries run on the driver-provided ``documents`` and
+``embeddings`` views.
+"""
+
+from __future__ import annotations
+
+import os
+from collections.abc import Callable
+from dataclasses import dataclass
+
+from pyspark.sql import DataFrame, SparkSession
+
+from osm_jl_spark import datagen as G
+from osm_jl_spark.session import sf_from_dir
+
+PRECISION = 2
+
+Builder = Callable[[SparkSession, str], DataFrame]
+
+
+@dataclass(frozen=True)
+class Query:
+    """One registered query: ``build(spark, sf_dir)`` returns the Spark
+    plan; ``oracle`` is the DuckDB SQL that must return the same rows
+    at sf0.01. ``approx`` replaces the oracle only where no exact one
+    can exist: it says why, and where the invariant is checked."""
+
+    build: Builder
+    oracle: str | None
+    approx: str | None
+
+
+REGISTRY: dict[str, Query] = {}
+
+
+def query(name: str, oracle: str | None = None, *,
+          approx: str | None = None) -> Callable[[Builder], Builder]:
+    """Register the decorated builder as ``name`` with its oracle."""
+    if (oracle is None) == (approx is None):
+        raise ValueError(f"{name}: give exactly one of oracle and approx")
+
+    def register(build: Builder) -> Builder:
+        if name in REGISTRY:
+            raise ValueError(f"query {name!r} registered twice")
+        REGISTRY[name] = Query(build, oracle, approx)
+        return build
+
+    return register
+
+
+def _counts(sf_dir: str) -> dict[str, int]:
+    return G.counts_for_sf(sf_from_dir(sf_dir))
+
+
+def _pq(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+
+
+def _epoch_sec(col: str):
+    """Timezone-independent floored epoch seconds (see
+    osm_jl_spark.functions.timeutil.epoch_sec)."""
+    from osm_jl_spark.functions.timeutil import epoch_sec
+
+    return epoch_sec(col)
+
+
+def _pages(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The Common-Crawl-style pages table (BASELINE.json input_hint).
+
+    Default: generated inline (deterministic datagen — what the DuckDB
+    oracle regenerates too). If SPARK_GRAFT_PAGES_CACHE names a
+    directory (bench.py sets it), the generated table is materialized
+    to parquet once and read back — benchmarking then measures the
+    engine reading a stored table, exactly as production reads Iceberg,
+    instead of re-running the synthetic SQL generator per query.
+    """
+    n = _counts(sf_dir)["docs"]
+    cache = os.environ.get("SPARK_GRAFT_PAGES_CACHE")
+    if cache:
+        return spark.read.parquet(G.stored_pages(spark, n, cache))
+    return G.load_pages(spark, n)
+
+
+def _points(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The ingest pipeline: pages -> extracted text -> geoparse, as one
+    native codegen stage (geoparse_points_from_html)."""
+    from osm_jl_spark.operators.pipeline import geoparse_points_from_html
+
+    return geoparse_points_from_html(_pages(spark, sf_dir))
+
+
+def _nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return G.load_nodes(spark, _counts(sf_dir)["nodes"])
+
+
+def _ways(spark: SparkSession, sf_dir: str) -> DataFrame:
+    c = _counts(sf_dir)
+    return G.load_ways(spark, c["ways"], c["nodes"])
+
+
+def _relations(spark: SparkSession, sf_dir: str) -> DataFrame:
+    c = _counts(sf_dir)
+    return G.load_relations(spark, c["relations"], c["ways"], c["nodes"])
+
+
+# oracle-side fixed scale: the driver always runs oracles at sf=0.01
+_OC = G.counts_for_sf(0.01)
+PAGES = G.pages_ctes("duckdb", _OC["docs"])
+NODES = G.nodes_ctes("duckdb", _OC["nodes"])
+WAYS = G.ways_ctes("duckdb", _OC["ways"], _OC["nodes"])
+RELS = G.relations_ctes(
+    "duckdb", _OC["relations"], _OC["ways"], _OC["nodes"]
+)
+CRAWLS = G.crawls_ctes("duckdb", _OC["docs"])
+# the normalisation functions/text.fingerprint_col hashes
+NORM = "lower(regexp_replace(trim(text), '\\s+', ' ', 'g'))"
+
+
+def _edges_values(polys: dict[int, list[tuple[float, float]]]) -> str:
+    """DuckDB CTE: polygon edges with the closing edge first
+    (src/coords.jl:70 ordering — irrelevant for the crossing count but
+    kept for symmetry)."""
+    rows = []
+    for pid, ring in sorted(polys.items()):
+        n = len(ring)
+        for i in range(n):
+            a, b = ring[i - 1], ring[i]
+            rows.append(f"({pid}, {a[0]!r}, {a[1]!r}, {b[0]!r}, {b[1]!r})")
+    return (
+        "poly_edges(polygon_id, ax, ay, bx, by) AS (SELECT * FROM (VALUES "
+        + ", ".join(rows)
+        + ") v(polygon_id, ax, ay, bx, by))"
+    )
+
+
+# even-odd crossing count, strict inequalities (src/coords.jl:69-78);
+# CASE guards the division exactly like Julia's short-circuit &&
+_PIP_HAVING = """SUM(CASE WHEN (e.ay > {lat}) <> (e.by > {lat})
+         THEN CASE WHEN e.ax + ({lat} - e.ay) / (e.by - e.ay) * (e.bx - e.ax) < {lon}
+                   THEN 1 ELSE 0 END
+         ELSE 0 END) % 2 = 1"""

@@ -16,10 +16,12 @@ Exit code 1 if any query is projected stale.
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 
-sys.path.insert(0, ".")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import duckdb  # noqa: E402
 
@@ -34,8 +36,8 @@ def stale_report(prefix_len: int) -> int:
 
     newest: dict[str, int] = {}
     latest_round = 0
-    for path in sorted(glob.glob("CORRECTNESS_r*.json")):
-        rnd = int(re.search(r"r(\d+)", path).group(1))
+    for path in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
+        rnd = int(re.search(r"_r(\d+)\.json$", path).group(1))
         latest_round = max(latest_round, rnd)
         for name in json.load(open(path)):
             newest[name] = max(newest.get(name, 0), rnd)

@@ -47,8 +47,9 @@ AUDITED = [
      "polygon's edge slots on its rows, is the ONE broadcast; bbox "
      "pre-test and native even-odd slot test run in the join "
      "condition; zero fact shuffle"),
-    ("bbox_vitoria_nodes", "pure native range filter on the cell columns "
-     "- no UDF, no join, no shuffle"),
+    ("bbox_vitoria_nodes", "node side: pure native range filter on the "
+     "cell columns - no UDF, no join, no shuffle; the way side is the "
+     "any-ref semi-join on the inside node ids"),
     ("tile_rollup", "multi-resolution rollup: ONE groupBy shuffle over "
      "exploded resolutions (partial aggregation map-side) plus the "
      "intentional second exchange that merges hot-cell SALT shards - "
@@ -64,10 +65,12 @@ AUDITED = [
     ("events_sessionize", "both window functions share one (user_id) "
      "partitioning - exactly ONE shuffle for lag + running-sum + agg"),
     ("minhash_pairs", "band-bucket self-join: shuffle on (band, sig) bucket key only; signatures are a pure NARROW map (array_min over transform, zero shuffle), recomputed per consumer by design"),
-    ("dedup_exact_keep", "hash-groupBy dedup: single shuffle on the "
-     "content hash, map-side partial aggregation"),
+    ("dedup_exact_keep", "hash-groupBy dedup: the keep pass (min id "
+     "per content hash, then a semi-join) and the duplicate-group "
+     "census (count per content hash), map-side partial aggregation"),
     ("orders_rollup", "grouping-sets rollup in one pass with map-side "
-     "partial aggregation per grouping set"),
+     "partial aggregation per grouping set; the per-segment rows join "
+     "the customer dimension as a broadcast"),
     ("snapshot_latest", "crawl-snapshot dedup: max_by(struct, ts) is "
      "ONE shuffle on url with partial_max_by map-side - vs a window "
      "row_number sort over every capture"),
