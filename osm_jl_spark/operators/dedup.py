@@ -497,7 +497,6 @@ def contamination_pairs(
     threshold: float = 0.8,
     shingle_n: int = 3,
     hash_fn: str = "xxhash64",
-    broadcast_eval: bool = True,
 ) -> DataFrame:
     """Train/eval decontamination: (train_id, eval_id, containment)
     where containment = |shingles(eval) ∩ shingles(train)| /
@@ -512,16 +511,15 @@ def contamination_pairs(
     (train x eval) shingle matches pair up, never train x train, so
     the hot-shingle blowup is bounded by the EVAL side's document
     frequency. Benchmark sets are dimension-sized (10^3-10^6 items vs
-    10^9+ training docs), so with ``broadcast_eval`` the join is a
-    broadcast hash join over the streaming train scan — zero shuffle
+    10^9+ training docs), so the eval side always broadcasts: the join
+    is a broadcast hash join over the streaming train scan — zero shuffle
     of the 100 TB side; the per-pair count is a map-side-combinable
     groupBy on (train_id, eval_id), which only carries matched pairs.
     """
     tr = _shingle_hashes(train, id_col, text_col, shingle_n, hash_fn)
     ev = _shingle_hashes(eval_docs, id_col, text_col, shingle_n, hash_fn)
     ev_sizes = ev.groupBy("id").agg(F.count(F.lit(1)).alias("ev_sz"))
-    if broadcast_eval:
-        ev, ev_sizes = F.broadcast(ev), F.broadcast(ev_sizes)
+    ev, ev_sizes = F.broadcast(ev), F.broadcast(ev_sizes)
     inter = (
         tr.alias("t")
         .join(ev.alias("e"), F.col("t.sh") == F.col("e.sh"))

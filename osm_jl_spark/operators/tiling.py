@@ -28,20 +28,16 @@ def tile_counts(
     lon: str = "lon",
     lat: str = "lat",
     salt_buckets: int = 16,
-    salt_key: str | None = None,
 ) -> DataFrame:
     """(cx, cy, n_points) at one precision — A1 (src/index.jl:26-50).
 
     Two-stage salted aggregation: stage 1 groups on (cx, cy, salt)
-    where salt = hash(salt_key) % buckets (or a deterministic row-hash
-    of the coordinates), stage 2 merges partials per cell. With AQE on,
+    where salt is a deterministic row-hash of the coordinates modulo
+    ``salt_buckets``, stage 2 merges partials per cell. With AQE on,
     the second (tiny) shuffle coalesces automatically.
     """
     pts = with_cell(points, precision, lon=lon, lat=lat)
-    if salt_key is not None:
-        salt = F.pmod(F.hash(F.col(salt_key)), F.lit(salt_buckets))
-    else:
-        salt = F.pmod(F.hash(F.col(lon), F.col(lat)), F.lit(salt_buckets))
+    salt = F.pmod(F.hash(F.col(lon), F.col(lat)), F.lit(salt_buckets))
     partial = (
         pts.withColumn("_salt", salt)
         .groupBy("cx", "cy", "_salt")

@@ -11,7 +11,7 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from osm_jl_spark.operators.dedup import bloom_bitmap, bloom_contamination
-from tests.test_plans import count_nodes, explain
+from osm_jl_spark.plans.digest import count_nodes, digest
 
 
 def _corpus(spark, words, n_docs, doc_len=12, offset=0, seed=42):
@@ -95,16 +95,16 @@ def test_train_side_never_shuffles_before_doc_agg(spark):
         "/root/testdata/sf0.001/documents.parquet"
     ).select("doc_id", "text")
     ev = docs.filter(F.col("doc_id") % 7 == 0).select("text")
-    plan = explain(bloom_contamination(docs, ev, m_bits=1 << 14, k=3))
-    assert count_nodes(plan, "BroadcastHashJoin") == 3, plan
-    assert "SortMergeJoin" not in plan, plan
+    d = digest(bloom_contamination(docs, ev, m_bits=1 << 14, k=3))
+    assert count_nodes(d.plan, "BroadcastHashJoin") == 3, d.plan
+    assert "SortMergeJoin" not in d.plan, d.plan
     # exchanges: ONE hashpartitioning on doc_id (final agg) plus the
     # bitmap build's own dim-side exchange on word — nothing else
     import re
 
-    hashparts = re.findall(r"Arguments: hashpartitioning\((\w+)", plan)
-    assert sorted(set(hashparts)) == ["doc_id", "word"], plan
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    hashparts = re.findall(r"Arguments: hashpartitioning\((\w+)", d.plan)
+    assert sorted(set(hashparts)) == ["doc_id", "word"], d.plan
+    assert d.python_ops == 0, d.plan
 
 
 def test_empty_eval_set_flags_nothing(spark):

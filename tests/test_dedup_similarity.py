@@ -192,14 +192,14 @@ def test_snapshot_latest_single_exchange(spark):
     """max_by(struct, ts) must plan as ONE hash-partition shuffle on
     the key with a map-side partial aggregate — the scale argument vs
     the window row_number formulation (which sorts every capture)."""
-    from tests.test_plans import count_nodes, explain
+    from osm_jl_spark.plans.digest import digest
 
     from osm_jl_spark import datagen as G
 
     crawls = G.load_crawls(spark, 200)
-    plan = explain(D.snapshot_latest(crawls))
-    assert count_nodes(plan, "Exchange") == 1, plan
-    assert "partial_max_by" in plan, plan
+    d = digest(D.snapshot_latest(crawls))
+    assert d.exchanges == 1, d.plan
+    assert "partial_max_by" in d.plan, d.plan
 
 
 def test_simhash_bucket_cap_bounds_hot_buckets(spark):

@@ -4,24 +4,10 @@ negative-coordinate cells, and the broadcast-dimension plan pin."""
 
 from __future__ import annotations
 
-import re
-
 import pytest
-from pyspark.sql import functions as F
 
 from osm_jl_spark.operators.joins import _micro, within_distance_join
-
-
-def explain(df, mode: str = "formatted") -> str:
-    jqe = df._jdf.queryExecution()
-    jmode = df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-        mode
-    )
-    return jqe.explainString(jmode)
-
-
-def count_nodes(plan: str, name: str) -> int:
-    return len(re.findall(rf"\(\d+\) {name}\b", plan))
+from osm_jl_spark.plans.digest import count_nodes, digest
 
 
 def _pts(spark, us):
@@ -111,11 +97,11 @@ def test_radius_join_plan_is_broadcast_fact_never_shuffles(spark):
     the polygon cell-cover join's shape (PLANS.md radius_join)."""
     points = _pts(spark, [(i * 1000, i * 500) for i in range(50)])
     centers = _pts(spark, [(0, 0), (10000, 5000)])
-    plan = explain(within_distance_join(points, centers, 500))
-    assert count_nodes(plan, "BroadcastHashJoin") == 1, plan
-    assert count_nodes(plan, "Exchange") == 0, plan  # broadcast != shuffle
-    assert "SortMergeJoin" not in plan
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    d = digest(within_distance_join(points, centers, 500))
+    assert count_nodes(d.plan, "BroadcastHashJoin") == 1, d.plan
+    assert d.exchanges == 0, d.plan  # broadcast != shuffle
+    assert "SortMergeJoin" not in d.plan
+    assert d.python_ops == 0, d.plan
 
 
 def test_rejects_nonpositive_radius(spark):

@@ -9,10 +9,9 @@ import random
 
 import pytest
 from pyspark.sql import Row
-from pyspark.sql import functions as F
 
 from osm_jl_spark.operators.joins import envelope_join
-from tests.test_plans import count_nodes, explain
+from osm_jl_spark.plans.digest import count_nodes, digest
 
 
 def _rects(spark, n, seed, span=10_000, max_ext=900, n_oversized=0):
@@ -89,11 +88,11 @@ def test_strict_plan_has_no_nested_loop_and_no_distinct(spark):
     dedup), no nested-loop branch anywhere in strict mode."""
     a = _rects(spark, 30, seed=8)
     b = _rects(spark, 30, seed=9)
-    plan = explain(envelope_join(a, b, cell_w=1000, oversize="strict"))
-    assert "BroadcastNestedLoopJoin" not in plan, plan
-    assert "CartesianProduct" not in plan, plan
-    assert count_nodes(plan, "HashAggregate") == 0, plan  # no distinct
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    d = digest(envelope_join(a, b, cell_w=1000, oversize="strict"))
+    assert "BroadcastNestedLoopJoin" not in d.plan, d.plan
+    assert "CartesianProduct" not in d.plan, d.plan
+    assert count_nodes(d.plan, "HashAggregate") == 0, d.plan  # no distinct
+    assert d.python_ops == 0, d.plan
 
 
 def test_empty_side_yields_no_pairs(spark):

@@ -4,19 +4,10 @@ pure-projection plan pin."""
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import functions as F
 
 from osm_jl_spark.functions.cells import geohash_col, with_geohash
-
-
-def explain(df, mode: str = "formatted") -> str:
-    jqe = df._jdf.queryExecution()
-    jmode = df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-        mode
-    )
-    return jqe.explainString(jmode)
+from osm_jl_spark.plans.digest import digest
 
 
 def test_known_vectors(spark):
@@ -69,6 +60,5 @@ def test_plan_is_pure_projection(spark):
     expressions fused into the scan projection."""
     df = spark.createDataFrame(
         [(1, 10.0, 59.0)], "id LONG, lon DOUBLE, lat DOUBLE")
-    plan = explain(with_geohash(df, 6))
-    assert len(re.findall(r"\(\d+\) Exchange\b", plan)) == 0, plan
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    d = digest(with_geohash(df, 6))
+    assert (d.exchanges, d.python_ops) == (0, 0), d.plan

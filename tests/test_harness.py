@@ -1,6 +1,7 @@
 """The measurement harnesses fit the host: bench.py's scaling levels and
-volume come from the CPU affinity set, and every tools/ladder.py rung
-runs."""
+volume come from the CPU affinity set, the correctness gate's session
+from get_spark's default and the host's RAM, and every tools/ladder.py
+rung runs."""
 
 from __future__ import annotations
 
@@ -48,13 +49,28 @@ def test_bench_scaling_volume_is_2m_docs_per_cpu(monkeypatch, n_cpus):
     assert bench.scaling_docs() == 400_000
 
 
-@pytest.fixture(scope="module")
-def ladder():
+def _tool(name):
     spec = importlib.util.spec_from_file_location(
-        "ladder", REPO / "tools" / "ladder.py")
+        name, REPO / "tools" / f"{name}.py")
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     return mod
+
+
+def test_correctness_gate_session_fits_the_host(monkeypatch):
+    """tools/check_correctness.py takes get_spark's CPU default and
+    perfbench's driver heap for the host's RAM."""
+    cc = _tool("check_correctness")
+    calls = []
+    monkeypatch.setattr(cc, "get_spark", lambda **kw: calls.append(kw))
+    monkeypatch.setattr(cc.host, "mem_gb", lambda: 15.0)
+    cc.session()
+    assert calls == [{"driver_memory": "1g"}]
+
+
+@pytest.fixture(scope="module")
+def ladder():
+    return _tool("ladder")
 
 
 # volume and result count per rung, as the per-operator ladder scripts

@@ -13,7 +13,7 @@ from osm_jl_spark.operators.links import (
     pagerank,
     pagerank_scaled,
 )
-from tests.test_plans import count_nodes, explain
+from osm_jl_spark.plans.digest import digest
 
 N = 60
 
@@ -61,10 +61,8 @@ def test_extract_links_is_narrow_zero_exchange(spark, tmp_path):
     generator's own group-by would pollute the plan)."""
     path = str(tmp_path / "pages.parquet")
     G.load_pages(spark, 20).write.parquet(path)
-    plan = explain(extract_links(spark.read.parquet(path)))
-    assert count_nodes(plan, "Exchange") == 0, plan
-    assert "BroadcastExchange" not in plan, plan
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    d = digest(extract_links(spark.read.parquet(path)))
+    assert (d.exchanges, d.broadcasts, d.python_ops) == (0, 0, 0), d.plan
 
 
 def test_host_in_links_counts(spark):

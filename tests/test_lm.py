@@ -5,9 +5,6 @@ pruning, banding, and the broadcast-only plan pin."""
 from __future__ import annotations
 
 import math
-import re
-
-from pyspark.sql import functions as F
 
 from osm_jl_spark.operators.lm import (
     perplexity_filter,
@@ -15,14 +12,7 @@ from osm_jl_spark.operators.lm import (
     train_trigram_lm,
     trigram_stream,
 )
-
-
-def explain(df, mode: str = "formatted") -> str:
-    jqe = df._jdf.queryExecution()
-    jmode = df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-        mode
-    )
-    return jqe.explainString(jmode)
+from osm_jl_spark.plans.digest import count_nodes, digest
 
 
 def _docs(spark, rows):
@@ -149,7 +139,7 @@ def test_lm_joins_are_all_broadcast(spark):
     anywhere in the full pipeline; the corpus-sized token stream
     shuffles only into the per-doc aggregation."""
     rows = [(i, "en", f"w{i} common text here now {i}") for i in range(20)]
-    plan = explain(perplexity_filter(_docs(spark, rows)))
-    assert "SortMergeJoin" not in plan, plan
-    assert len(re.findall(r"\(\d+\) BroadcastHashJoin", plan)) >= 4, plan
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    d = digest(perplexity_filter(_docs(spark, rows)))
+    assert "SortMergeJoin" not in d.plan, d.plan
+    assert count_nodes(d.plan, "BroadcastHashJoin") >= 4, d.plan
+    assert d.python_ops == 0, d.plan

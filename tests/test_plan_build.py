@@ -23,6 +23,8 @@ _RELEASE = protocol.MEMORY_COMMAND_NAME + protocol.MEMORY_DEL_SUBCOMMAND_NAME
 # Upper bounds at the counts measured when they were set.
 FLAGSHIP_MAX = 142
 NODES_IN_POLYGONS_MAX = 52
+WITH_CELL_MAX = 11
+TRIANGLE_CENSUS_MAX = 305
 
 
 @contextlib.contextmanager
@@ -81,6 +83,28 @@ def test_nodes_in_polygons_build_round_trips(spark, stored_pages):
     pts = geoparse_points(stored_pages)
     n = build_round_trips(lambda: nodes_in_polygons(pts, G.POLYGONS, 2))
     assert 0 < n <= NODES_IN_POLYGONS_MAX, n
+
+
+def test_with_cell_build_round_trips(spark, stored_pages):
+    from osm_jl_spark.functions.cells import with_cell
+    from osm_jl_spark.operators.pipeline import geoparse_points
+
+    pts = geoparse_points(stored_pages)
+    n = build_round_trips(lambda: with_cell(pts, 2))
+    assert 0 < n <= WITH_CELL_MAX, n
+
+
+def test_triangle_census_build_round_trips(spark):
+    """The build runs one job, the oriented edges' localCheckpoint;
+    its round trips are counted too."""
+    from osm_jl_spark.operators.links import triangle_census
+
+    edges = spark.createDataFrame(
+        [(f"v{i % 7}", f"v{(i * 3) % 7}") for i in range(20)],
+        "a STRING, b STRING",
+    )
+    n = build_round_trips(lambda: triangle_census(edges))
+    assert 0 < n <= TRIANGLE_CENSUS_MAX, n
 
 
 def test_call_site_capture_off_sql_errors_keep_fragment(spark):

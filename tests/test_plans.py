@@ -13,23 +13,12 @@ from __future__ import annotations
 
 import math
 import re
+import sys
+from pathlib import Path
 
 import pytest
 
-
-def explain(df, mode: str = "formatted") -> str:
-    jqe = df._jdf.queryExecution()
-    jmode = df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-        mode
-    )
-    return jqe.explainString(jmode)
-
-
-def count_nodes(plan: str, name: str) -> int:
-    """Count physical-plan NODES of a given operator. Formatted explain
-    prints every node twice (tree + detail section); the detail header
-    '(N) OperatorName' appears exactly once per node."""
-    return len(re.findall(rf"\(\d+\) {name}\b", plan))
+from osm_jl_spark.plans.digest import count_nodes, digest, explain
 
 
 def filter_conditions(plan: str) -> list[str]:
@@ -57,15 +46,14 @@ def test_flagship_scan_prunes_html(spark, pages_parquet):
     from osm_jl_spark import datagen as G
     from osm_jl_spark.operators.pipeline import flagship
 
-    plan = explain(flagship(spark.read.parquet(pages_parquet), G.POLYGONS, 2))
-    schemas = re.findall(r"ReadSchema: (struct<[^\n]*)", plan)
-    assert schemas, plan
-    for s in schemas:
+    d = digest(flagship(spark.read.parquet(pages_parquet), G.POLYGONS, 2))
+    assert d.read_schemas, d.plan
+    for s in d.read_schemas:
         assert "html" not in s, s
         assert "warc_ts" not in s, s
     # flagship aggregates counts only -> Catalyst prunes even `url`;
     # the scan reads just the text column
-    assert "text" in schemas[0]
+    assert "text" in d.read_schemas[0]
 
 
 def test_flagship_cover_join_broadcasts(spark, pages_parquet):
@@ -87,9 +75,8 @@ def test_flagship_zero_python_operators(spark, pages_parquet):
     from osm_jl_spark import datagen as G
     from osm_jl_spark.operators.pipeline import flagship
 
-    plan = explain(flagship(spark.read.parquet(pages_parquet), G.POLYGONS, 2))
-    assert count_nodes(plan, "ArrowEvalPython") == 0, plan
-    assert "BatchEvalPython" not in plan  # no row-at-a-time Python, ever
+    d = digest(flagship(spark.read.parquet(pages_parquet), G.POLYGONS, 2))
+    assert d.python_ops == 0, d.plan  # no row-at-a-time Python, ever
     # whole-stage codegen active: AQE only finalizes the plan on
     # execution, so run it and check the executed plan's '*(n)' marks
     fl = flagship(spark.read.parquet(pages_parquet), G.POLYGONS, 2)
@@ -110,13 +97,13 @@ def test_flagship_parses_and_encodes_once(spark, pages_parquet):
     from osm_jl_spark import datagen as G
     from osm_jl_spark.operators.pipeline import flagship
 
-    plan = explain(flagship(spark.read.parquet(pages_parquet), G.POLYGONS, 2))
-    assert "lambdafunction" not in plan, plan
+    d = digest(flagship(spark.read.parquet(pages_parquet), G.POLYGONS, 2))
+    assert "lambdafunction" not in d.plan, d.plan
     for c in ("cx", "cy"):
-        assert len(re.findall(rf"\* 100\.0\) as bigint\) AS {c}#", plan)) == 1, plan
-    assert count_nodes(plan, "BroadcastExchange") == 1, plan
-    conditions = filter_conditions(plan)
-    assert conditions, plan
+        assert len(re.findall(rf"\* 100\.0\) as bigint\) AS {c}#", d.plan)) == 1, d.plan
+    assert d.broadcasts == 1, d.plan
+    conditions = filter_conditions(d.plan)
+    assert conditions, d.plan
     for cond in conditions:
         assert "split(" not in cond and "as double)" not in cond, cond
 
@@ -135,20 +122,18 @@ def test_bbox_is_pure_filter_no_shuffle(spark):
         G.load_ways(spark, c["ways"], c["nodes"]),
         G.VITORIA_UL, G.VITORIA_LR, 2,
     )
-    plan = explain(inside.select("id", "lon", "lat"))
-    assert "Exchange" not in plan, plan
-    assert "ArrowEvalPython" not in plan
-    assert "BatchEvalPython" not in plan
+    d = digest(inside.select("id", "lon", "lat"))
+    assert "Exchange" not in d.plan, d.plan
+    assert d.python_ops == 0, d.plan
 
 
 def test_tpch_q3_broadcasts_dimension_and_pushes_filters(spark):
     import __spark_entry__ as entry
 
     df = entry.queries()["tpch_q3"](spark, "/root/testdata/sf0.01")
-    plan = explain(df)
-    assert "BroadcastHashJoin" in plan
-    pushed = re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
-    assert any("BUILDING" in p for p in pushed), pushed
+    d = digest(df)
+    assert "BroadcastHashJoin" in d.plan
+    assert any("BUILDING" in p for p in d.pushed_filters), d.pushed_filters
 
 
 def test_sessionize_single_exchange(spark):
@@ -158,11 +143,11 @@ def test_sessionize_single_exchange(spark):
     import __spark_entry__ as entry
 
     df = entry.queries()["events_sessionize"](spark, SF)
-    plan = explain(df)
+    d = digest(df)
     # one hashpartitioning(user_id) exchange feeds BOTH windows and the
     # final (user_id, session_id) aggregate — hash on user_id satisfies
     # the clustered distribution of the superset key
-    assert count_nodes(plan, "Exchange") == 1, plan
+    assert d.exchanges == 1, d.plan
 
 
 def test_pip_no_fact_shuffle(spark):
@@ -180,28 +165,26 @@ def test_pip_no_fact_shuffle(spark):
     pts = G.load_nodes(spark, 2000).select(
         "id", "lon", "lat"
     )
-    plan = explain(nodes_in_polygons(pts, G.POLYGONS, 2))
+    d = digest(nodes_in_polygons(pts, G.POLYGONS, 2))
     # '(N) Exchange' does not match BroadcastExchange detail headers
-    assert count_nodes(plan, "Exchange") == 0, plan
-    assert "BroadcastHashJoin" in plan
+    assert (d.exchanges, d.broadcasts) == (0, 1), d.plan
+    assert "BroadcastHashJoin" in d.plan
     # the driver-built cover, edge slots included, ships as ONE Arrow
     # local relation, not a pickled RDD: the one broadcast leaf is a
     # LocalTableScan
-    assert count_nodes(plan, "BroadcastExchange") == 1, plan
-    assert count_nodes(plan, "LocalTableScan") == 1, plan
-    assert "Scan ExistingRDD" not in plan, plan
+    assert count_nodes(d.plan, "LocalTableScan") == 1, d.plan
+    assert "Scan ExistingRDD" not in d.plan, d.plan
     # the slot test is a flat per-edge sum, not an interpreted fold
-    assert "_e0_ax" in plan and "aggregate(" not in plan, plan
+    assert "_e0_ax" in d.plan and "aggregate(" not in d.plan, d.plan
 
     # 99 polygons keep the slot test: its size follows the widest ring
     polys = dict(G.POLYGONS)
     polys.update({100 + p: r for p, r in G.polygon_grid().items()})
-    plan = explain(nodes_in_polygons(pts, polys, 2))
-    assert count_nodes(plan, "Exchange") == 0, plan
-    assert count_nodes(plan, "BroadcastExchange") == 1, plan
-    assert count_nodes(plan, "LocalTableScan") == 1, plan
-    assert "Scan ExistingRDD" not in plan, plan
-    assert "_e0_ax" in plan and "aggregate(" not in plan, plan
+    d = digest(nodes_in_polygons(pts, polys, 2))
+    assert (d.exchanges, d.broadcasts) == (0, 1), d.plan
+    assert count_nodes(d.plan, "LocalTableScan") == 1, d.plan
+    assert "Scan ExistingRDD" not in d.plan, d.plan
+    assert "_e0_ax" in d.plan and "aggregate(" not in d.plan, d.plan
 
     # a 12-vertex ring is wider than geo.SLOT_LIMIT: the edges-array
     # fold, its edge dimension a local relation too
@@ -212,12 +195,11 @@ def test_pip_no_fact_shuffle(spark):
         for i in range(12)
     ]
     assert len(wide[200]) > geo.SLOT_LIMIT
-    plan = explain(nodes_in_polygons(pts, wide, 2))
-    assert count_nodes(plan, "Exchange") == 0, plan
-    assert count_nodes(plan, "BroadcastExchange") == 2, plan
-    assert count_nodes(plan, "LocalTableScan") == 2, plan
-    assert "Scan ExistingRDD" not in plan, plan
-    assert "aggregate(" in plan and "_e0_ax" not in plan, plan
+    d = digest(nodes_in_polygons(pts, wide, 2))
+    assert (d.exchanges, d.broadcasts) == (0, 2), d.plan
+    assert count_nodes(d.plan, "LocalTableScan") == 2, d.plan
+    assert "Scan ExistingRDD" not in d.plan, d.plan
+    assert "aggregate(" in d.plan and "_e0_ax" not in d.plan, d.plan
 
     # past spark.sql.execution.arrow.localRelationThreshold Spark turns
     # the Arrow tables into RDD scans on its own; the rows must not move
@@ -312,10 +294,8 @@ def test_minhash_signatures_zero_shuffle(spark):
     docs = spark.read.parquet(SF + "/documents.parquet").selectExpr(
         "doc_id", "text"
     )
-    plan = explain(minhash_signatures(docs))
-    assert count_nodes(plan, "Exchange") == 0, plan
-    assert "BroadcastExchange" not in plan, plan
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    d = digest(minhash_signatures(docs))
+    assert (d.exchanges, d.broadcasts, d.python_ops) == (0, 0, 0), d.plan
 
 
 def test_simhash_signatures_zero_shuffle(spark):
@@ -327,10 +307,8 @@ def test_simhash_signatures_zero_shuffle(spark):
     docs = spark.read.parquet(SF + "/documents.parquet").selectExpr(
         "doc_id", "text"
     )
-    plan = explain(simhash_signatures(docs))
-    assert count_nodes(plan, "Exchange") == 0, plan
-    assert "BroadcastExchange" not in plan, plan
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    d = digest(simhash_signatures(docs))
+    assert (d.exchanges, d.broadcasts, d.python_ops) == (0, 0, 0), d.plan
 
 
 def test_line_dedup_two_uniform_shuffles_hot_dim_broadcasts(spark):
@@ -342,11 +320,10 @@ def test_line_dedup_two_uniform_shuffles_hot_dim_broadcasts(spark):
     import __spark_entry__ as entry
 
     df = entry.queries()["line_dedup"](spark, SF.replace("0.001", "0.01"))
-    plan = explain(df)
-    assert count_nodes(plan, "Exchange") == 2, plan
-    assert "BroadcastHashJoin" in plan, plan
-    assert "SortMergeJoin" not in plan, plan
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    d = digest(df)
+    assert (d.exchanges, d.python_ops) == (2, 0), d.plan
+    assert "BroadcastHashJoin" in d.plan, d.plan
+    assert "SortMergeJoin" not in d.plan, d.plan
 
 
 def test_window_dup_stats_two_uniform_shuffles(spark):
@@ -361,11 +338,10 @@ def test_window_dup_stats_two_uniform_shuffles(spark):
     docs = spark.read.parquet(SF + "/documents.parquet").selectExpr(
         "doc_id", "text"
     )
-    plan = explain(duplicated_window_stats(docs, w=8, min_df=2))
-    assert count_nodes(plan, "Exchange") == 2, plan
-    assert "BroadcastHashJoin" in plan, plan
-    assert "SortMergeJoin" not in plan, plan
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    d = digest(duplicated_window_stats(docs, w=8, min_df=2))
+    assert (d.exchanges, d.python_ops) == (2, 0), d.plan
+    assert "BroadcastHashJoin" in d.plan, d.plan
+    assert "SortMergeJoin" not in d.plan, d.plan
 
 
 def test_way_lengths_no_extra_exchange(spark):
@@ -378,10 +354,9 @@ def test_way_lengths_no_extra_exchange(spark):
 
     nodes = G.load_nodes(spark, 2000)
     ways = G.load_ways(spark, 400, 2000)
-    plan = explain(way_lengths(ways, nodes))
-    assert count_nodes(plan, "Exchange") == 1, plan
-    assert count_nodes(plan, "Window") == 0, plan
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    d = digest(way_lengths(ways, nodes))
+    assert (d.exchanges, d.python_ops) == (1, 0), d.plan
+    assert count_nodes(d.plan, "Window") == 0, d.plan
 
 
 def test_quadkey_tiles_one_shuffle_codegen_interleave(spark):
@@ -391,9 +366,8 @@ def test_quadkey_tiles_one_shuffle_codegen_interleave(spark):
     import __spark_entry__ as entry
 
     df = entry.queries()["quadkey_tiles"](spark, SF)
-    plan = explain(df)
-    assert count_nodes(plan, "Exchange") == 1, plan
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    d = digest(df)
+    assert (d.exchanges, d.python_ops) == (1, 0), d.plan
 
 
 def test_window_dedup_clean_three_uniform_shuffles(spark):
@@ -406,10 +380,10 @@ def test_window_dedup_clean_three_uniform_shuffles(spark):
     docs = spark.read.parquet(SF + "/documents.parquet").selectExpr(
         "doc_id", "text"
     )
-    plan = explain(remove_duplicated_windows(docs, w=8, min_df=2))
-    assert count_nodes(plan, "Exchange") <= 3, plan
-    assert "BroadcastHashJoin" in plan, plan
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    d = digest(remove_duplicated_windows(docs, w=8, min_df=2))
+    assert d.exchanges <= 3, d.plan
+    assert "BroadcastHashJoin" in d.plan, d.plan
+    assert d.python_ops == 0, d.plan
 
 
 def test_asof_join_single_exchange(spark):
@@ -430,11 +404,10 @@ def test_asof_join_single_exchange(spark):
         (F.col("id") * 3).alias("ts2"),
         F.col("id").alias("val"),
     )
-    plan = explain(asof_join(left, right, on="k", left_ts="ts",
+    d = digest(asof_join(left, right, on="k", left_ts="ts",
                              right_ts="ts2"))
-    assert count_nodes(plan, "Exchange") == 1, plan
-    assert "SortMergeJoin" not in plan and "CartesianProduct" not in plan
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+    assert (d.exchanges, d.python_ops) == (1, 0), d.plan
+    assert "SortMergeJoin" not in d.plan and "CartesianProduct" not in d.plan
 
 
 def test_gopher_quality_zero_shuffle(spark):
@@ -445,13 +418,10 @@ def test_gopher_quality_zero_shuffle(spark):
     docs = spark.read.parquet(SF + "/documents.parquet").selectExpr(
         "doc_id", "text"
     )
-    plan = explain(gopher_quality(docs))
-    assert count_nodes(plan, "Exchange") == 0, plan
-    assert "BroadcastExchange" not in plan, plan
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+    d = digest(gopher_quality(docs))
+    assert (d.exchanges, d.broadcasts, d.python_ops) == (0, 0, 0), d.plan
     # column pruning: only (doc_id, text) leave the scan
-    schemas = re.findall(r"ReadSchema: (struct<[^\n]*)", plan)
-    assert schemas and "lang" not in schemas[0], plan
+    assert d.read_schemas and "lang" not in d.read_schemas[0], d.plan
 
 
 def test_blocklist_filter_broadcasts_dimension(spark):
@@ -467,15 +437,15 @@ def test_blocklist_filter_broadcasts_dimension(spark):
     bl = spark.createDataFrame(
         [("src1", "badlist")], "host STRING, reason STRING"
     )
-    plan = explain(blocklist_filter(
+    d = digest(blocklist_filter(
         docs, bl, keyword_rules=[("kw", F.col("text").contains("x"))],
     ))
     # the ONE exchange is the dimension-side reason-dedup groupBy
     # (bounded by blocklist size); the fact side never shuffles
-    assert count_nodes(plan, "Exchange") <= 1, plan
-    assert "BroadcastHashJoin" in plan, plan
-    assert "SortMergeJoin" not in plan, plan
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+    assert d.exchanges <= 1, d.plan
+    assert "BroadcastHashJoin" in d.plan, d.plan
+    assert "SortMergeJoin" not in d.plan, d.plan
+    assert d.python_ops == 0, d.plan
 
 
 def test_domain_cap_two_uniform_exchanges(spark):
@@ -486,9 +456,8 @@ def test_domain_cap_two_uniform_exchanges(spark):
     docs = spark.read.parquet(SF + "/documents.parquet").selectExpr(
         "doc_id", "source AS host"
     )
-    plan = explain(domain_cap(docs, max_per_host=3))
-    assert count_nodes(plan, "Exchange") == 2, plan
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+    d = digest(domain_cap(docs, max_per_host=3))
+    assert (d.exchanges, d.python_ops) == (2, 0), d.plan
 
 
 def test_doc_repetition_two_exchanges(spark):
@@ -499,9 +468,8 @@ def test_doc_repetition_two_exchanges(spark):
     docs = spark.read.parquet(SF + "/documents.parquet").selectExpr(
         "doc_id", "text"
     )
-    plan = explain(doc_repetition(docs))
-    assert count_nodes(plan, "Exchange") == 2, plan
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+    d = digest(doc_repetition(docs))
+    assert (d.exchanges, d.python_ops) == (2, 0), d.plan
 
 
 def test_fetch_schedule_two_exchanges_one_window(spark):
@@ -516,11 +484,10 @@ def test_fetch_schedule_two_exchanges_one_window(spark):
         [Row(url=f"h{i % 3}.net/{i}", host=f"h{i % 3}.net", priority=i)
          for i in range(30)]
     )
-    plan = explain(fetch_schedule(fr))
-    assert count_nodes(plan, "Exchange") == 2, plan
-    assert count_nodes(plan, "Window") == 1, plan
-    assert "SortMergeJoin" not in plan, plan
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    d = digest(fetch_schedule(fr))
+    assert (d.exchanges, d.python_ops) == (2, 0), d.plan
+    assert count_nodes(d.plan, "Window") == 1, d.plan
+    assert "SortMergeJoin" not in d.plan, d.plan
 
 
 def test_triangle_census_no_cartesian_no_python(spark):
@@ -534,10 +501,10 @@ def test_triangle_census_no_cartesian_no_python(spark):
     ed = spark.createDataFrame(
         [Row(a=f"v{i % 7}", b=f"v{(i * 3) % 7}") for i in range(20)]
     )
-    plan = explain(triangle_census(ed))
-    assert "CartesianProduct" not in plan, plan
-    assert "BroadcastNestedLoopJoin" not in plan, plan
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    d = digest(triangle_census(ed))
+    assert "CartesianProduct" not in d.plan, d.plan
+    assert "BroadcastNestedLoopJoin" not in d.plan, d.plan
+    assert d.python_ops == 0, d.plan
 
 
 def test_host_triangles_reads_oriented_edges_once(spark):
@@ -548,8 +515,8 @@ def test_host_triangles_reads_oriented_edges_once(spark):
     each read)."""
     import __spark_entry__ as entry
 
-    plan = explain(entry.queries()["host_triangles"](spark, SF))
-    assert count_nodes(plan, "Exchange") == 5, plan
+    d = digest(entry.queries()["host_triangles"](spark, SF))
+    assert d.exchanges == 5, d.plan
 
 
 def test_route_lengths_single_waynodes_shuffle_chain(spark):
@@ -562,6 +529,31 @@ def test_route_lengths_single_waynodes_shuffle_chain(spark):
     nodes = G.load_nodes(spark, 200)
     ways = G.load_ways(spark, 60, 200)
     rels = G.load_relations(spark, 30, 60, 200)
-    plan = explain(route_lengths(rels, ways, nodes))
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
-    assert "CartesianProduct" not in plan, plan
+    d = digest(route_lengths(rels, ways, nodes))
+    assert d.python_ops == 0, d.plan
+    assert "CartesianProduct" not in d.plan, d.plan
+
+
+def test_plans_md_lists_exactly_the_audited_plans():
+    """PLANS.md has one row per audited plan, in audit order: a plan
+    added to tools/plan_audit.py without regenerating the file fails
+    here."""
+    repo = Path(__file__).resolve().parent.parent
+    sys.path.insert(0, str(repo / "tools"))
+    from plan_audit import AUDITED
+
+    rows = [line[2:].split(" | ")[0]
+            for line in (repo / "PLANS.md").read_text().splitlines()
+            if line.startswith("| ")]
+    assert rows[1:] == ["flagship (stored pages table)",
+                        "write_jsonl (GeoJSON sink)",
+                        *(name for name, _ in AUDITED)]
+
+
+def test_python_operators_are_perfbench_python_operators():
+    """The digest and perfbench's event-log parser name the same nodes
+    Python operators."""
+    from osm_jl_spark.plans import digest as D
+    from perfbench import tracing
+
+    assert D.PYTHON_OPS == tracing.PYTHON_OPS

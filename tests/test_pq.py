@@ -13,7 +13,7 @@ from osm_jl_spark.operators.similarity import (
     pq_encode,
     pq_train_codebooks,
 )
-from tests.test_plans import count_nodes, explain
+from osm_jl_spark.plans.digest import digest
 
 SF = "/root/testdata/sf0.001"
 M = 8
@@ -39,10 +39,8 @@ def test_encode_is_zero_shuffle(spark):
     """Codes are a pure narrow map against in-plan literal codebooks
     — the minhash-signature scale signature: zero exchanges, zero
     Python, or the 10^12-vector story is gone."""
-    plan = explain(pq_encode(_emb(spark), _sample_books(spark)))
-    assert count_nodes(plan, "Exchange") == 0, plan
-    assert "BroadcastExchange" not in plan, plan
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    d = digest(pq_encode(_emb(spark), _sample_books(spark)))
+    assert (d.exchanges, d.broadcasts, d.python_ops) == (0, 0, 0), d.plan
 
 
 def test_adc_is_exact_reconstruction_distance(spark):

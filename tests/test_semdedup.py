@@ -4,19 +4,8 @@ cluster-bounding trade, determinism, and the plan shape."""
 
 from __future__ import annotations
 
-import re
-
-from pyspark.sql import functions as F
-
 from osm_jl_spark.operators.similarity import semdedup
-
-
-def explain(df, mode: str = "formatted") -> str:
-    jqe = df._jdf.queryExecution()
-    jmode = df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-        mode
-    )
-    return jqe.explainString(jmode)
+from osm_jl_spark.plans.digest import digest
 
 
 def _emb(spark, rows):
@@ -88,6 +77,6 @@ def test_plan_assignment_broadcasts_no_python(spark):
     self-join runs on the cluster key; zero Python operators."""
     rows = [(i, [float(i), 1.0]) for i in range(50)]
     cents = _emb(spark, [(0, [0.0, 1.0]), (25, [25.0, 1.0])])
-    plan = explain(semdedup(_emb(spark, rows), centroids=cents))
-    assert "BroadcastNestedLoopJoin" in plan, plan
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    d = digest(semdedup(_emb(spark, rows), centroids=cents))
+    assert "BroadcastNestedLoopJoin" in d.plan, d.plan
+    assert d.python_ops == 0, d.plan

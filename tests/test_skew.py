@@ -4,12 +4,11 @@ up the tiling groupBy") and its plan must actually be two-stage."""
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import functions as F
 
 from osm_jl_spark.functions.cells import with_cell
 from osm_jl_spark.operators.tiling import tile_counts
+from osm_jl_spark.plans.digest import digest
 
 
 def _skewed_points(spark, n=20000):
@@ -42,11 +41,8 @@ def test_salted_tile_counts_exact_under_skew(spark):
 
 
 def test_salted_plan_is_two_stage(spark):
-    df = tile_counts(_skewed_points(spark), 2, salt_buckets=16)
-    jqe = df._jdf.queryExecution()
-    mode = df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode
-    plan = jqe.explainString(mode.fromString("formatted"))
+    d = digest(tile_counts(_skewed_points(spark), 2, salt_buckets=16))
     # stage 1 shuffles on (cx, cy, _salt), stage 2 merges per (cx, cy):
     # two exchanges, salt key visible in the first
-    assert len(re.findall(r"\(\d+\) Exchange\b", plan)) == 2, plan
-    assert "_salt" in plan
+    assert d.exchanges == 2, d.plan
+    assert "_salt" in d.plan

@@ -8,17 +8,15 @@ import math
 import random
 from collections import defaultdict
 
-import pyspark.sql.functions as F
 import pytest
 
 from osm_jl_spark.operators.stats import (
     group_quantiles_exact,
     group_quantiles_approx,
 )
-from tests.test_plans import count_nodes, explain
+from osm_jl_spark.plans.digest import count_nodes, digest, nodes
 
 PCTS = [25, 50, 90, 99]
-
 
 @pytest.fixture(scope="module")
 def skewed(spark):
@@ -85,18 +83,15 @@ def test_exact_plan_windows_histogram_not_corpus(spark, tmp_path):
         "g STRING, v LONG",
     ).write.parquet(path)
     df = spark.read.parquet(path)
-    plan = explain(group_quantiles_exact(df, "g", "v", PCTS))
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    d = digest(group_quantiles_exact(df, "g", "v", PCTS))
+    assert d.python_ops == 0, d.plan
     # the Window node's subtree must contain the partial+final hash
     # aggregate pair (histogram) between it and the scan: assert the
     # first Window in the tree appears AFTER a HashAggregate when
     # reading leaves-first detail numbering (scan is node 1)
-    win = plan.index("(") if False else None
-    import re
-
-    order = re.findall(r"\(\d+\) (\w+)", plan)
+    order = nodes(d.plan)
     first_window = order.index("Window")
     assert "HashAggregate" in order[:first_window], order
     # exactly one scan of the corpus: quantile selection reuses the
     # histogram, it does not rescan the parquet
-    assert count_nodes(plan, "Scan parquet") <= 2, plan
+    assert count_nodes(d.plan, "Scan parquet") <= 2, d.plan

@@ -5,29 +5,17 @@ src/OSM.jl:246-257 / src/index.jl:74-87)."""
 
 from __future__ import annotations
 
-import re
-
 import pytest
 from pyspark.sql import functions as F
 
 from osm_jl_spark import datagen as G
 from osm_jl_spark.functions.cells import bbox_filter, with_cell
+from osm_jl_spark.plans.digest import digest
 from osm_jl_spark.sources.store import (
     read_pages,
     read_points_bbox,
     write_points_clustered,
 )
-
-def explain(df, mode: str = "formatted") -> str:
-    jqe = df._jdf.queryExecution()
-    jmode = df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-        mode
-    )
-    return jqe.explainString(jmode)
-
-
-def count_nodes(plan: str, name: str) -> int:
-    return len(re.findall(rf"\(\d+\) {name}\b", plan))
 
 
 @pytest.fixture(scope="module")
@@ -70,15 +58,12 @@ def test_clustered_bbox_matches_unclustered(spark, clustered):
 def test_clustered_bbox_prunes_partitions(spark, clustered):
     """The bbox plan must show directory-level pruning on the stripe
     column AND pushed cell filters — and stay shuffle/Python-free."""
-    plan = explain(
+    d = digest(
         read_points_bbox(spark, clustered, G.VITORIA_UL, G.VITORIA_LR, 2)
     )
-    pf = re.findall(r"PartitionFilters: \[([^\]]*)\]", plan)
-    assert any("cx_stripe" in p for p in pf), plan
-    pushed = re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
-    assert any("cx" in p and "cy" in p for p in pushed), plan
-    assert count_nodes(plan, "Exchange") == 0
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    assert any("cx_stripe" in p for p in d.partition_filters), d.plan
+    assert any("cx" in p and "cy" in p for p in d.pushed_filters), d.plan
+    assert (d.exchanges, d.python_ops) == (0, 0), d.plan
 
 
 @pytest.fixture(scope="module")
@@ -125,13 +110,10 @@ def test_tile_read_prunes_and_pushes(spark, qk_store):
     exchanges, zero Python."""
     from osm_jl_spark.sources.store import read_points_tile
 
-    plan = explain(read_points_tile(spark, qk_store, "2110", 2))
-    pf = re.findall(r"PartitionFilters: \[([^\]]*)\]", plan)
-    assert any("qk_stripe" in p for p in pf), plan
-    pushed = re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
-    assert any("StartsWith(qk,2110)" in p for p in pushed), plan
-    assert count_nodes(plan, "Exchange") == 0
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    d = digest(read_points_tile(spark, qk_store, "2110", 2))
+    assert any("qk_stripe" in p for p in d.partition_filters), d.plan
+    assert any("StartsWith(qk,2110)" in p for p in d.pushed_filters), d.plan
+    assert (d.exchanges, d.python_ops) == (0, 0), d.plan
 
 
 def test_tile_serving_rollup_composes_with_pruned_read(spark, qk_store):
@@ -148,14 +130,11 @@ def test_tile_serving_rollup_composes_with_pruned_read(spark, qk_store):
     served = read_points_tile(spark, qk_store, "2110", 2)
     out = quadkey_rollup(served, [4, 6, 8, 12])
 
-    plan = explain(out)
-    pf = re.findall(r"PartitionFilters: \[([^\]]*)\]", plan)
-    assert any("qk_stripe" in p for p in pf), plan
-    pushed = re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
-    assert any("StartsWith(qk,2110)" in p for p in pushed), plan
-    assert count_nodes(plan, "Exchange") == 2, plan
-    assert "SortMergeJoin" not in plan
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    d = digest(out)
+    assert any("qk_stripe" in p for p in d.partition_filters), d.plan
+    assert any("StartsWith(qk,2110)" in p for p in d.pushed_filters), d.plan
+    assert (d.exchanges, d.python_ops) == (2, 0), d.plan
+    assert "SortMergeJoin" not in d.plan
 
     n = served.count()
     rows = out.collect()

@@ -227,19 +227,19 @@ def test_interval_join_bucket_size_invariant(spark):
 
 def test_interval_join_fact_side_never_shuffles(spark, tmp_path):
     from osm_jl_spark.operators.temporal import interval_join
-    from tests.test_plans import count_nodes, explain
+    from osm_jl_spark.plans.digest import digest
 
     path = str(tmp_path / "facts.parquet")
     _facts(spark).write.parquet(path)
     facts = spark.read.parquet(path)
-    plan = explain(
+    d = digest(
         interval_join(facts, _iv(spark), "ts_s", "start_s", "end_s")
     )
     # broadcast dimension: zero shuffle exchanges anywhere; the only
     # exchange is the BroadcastExchange of the exploded cover
-    assert count_nodes(plan, "Exchange") == 0, plan
-    assert "BroadcastExchange" in plan
-    assert "NestedLoop" not in plan, plan
+    assert d.exchanges == 0, d.plan
+    assert "BroadcastExchange" in d.plan
+    assert "NestedLoop" not in d.plan, d.plan
 
 
 def test_forward_null_left_ts_carries_nothing(spark):

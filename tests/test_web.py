@@ -68,7 +68,7 @@ def test_pii_counts_cases(spark):
 
 
 def test_domain_stats_single_shuffle(spark):
-    from tests.test_plans import count_nodes, explain
+    from osm_jl_spark.plans.digest import digest
 
     pages = spark.createDataFrame(
         [("https://a.org/1", "xx"), ("https://a.org/2", "yyy"),
@@ -78,8 +78,8 @@ def test_domain_stats_single_shuffle(spark):
     out = {r["host"]: (r["n_pages"], r["total_chars"])
            for r in domain_stats(pages).collect()}
     assert out == {"a.org": (2, 5), "b.org": (1, 1)}
-    plan = explain(domain_stats(pages))
-    assert count_nodes(plan, "Exchange") == 1, plan
+    d = digest(domain_stats(pages))
+    assert d.exchanges == 1, d.plan
 
 
 def test_blocklist_filter_precedence(spark):

@@ -27,6 +27,7 @@ import duckdb  # noqa: E402
 
 import __spark_entry__ as entrymod  # noqa: E402
 from osm_jl_spark.session import get_spark  # noqa: E402
+from perfbench import host  # noqa: E402
 
 
 def stale_report(prefix_len: int) -> int:
@@ -93,6 +94,12 @@ def rows_key(rows, cols):
     return out
 
 
+def session():
+    """Every CPU ``get_spark`` sees (``SPARK_GRAFT_CPUS`` or local[*]) and
+    the driver heap perfbench gives this host's RAM."""
+    return get_spark(driver_memory=host.driver_memory(host.mem_gb()))
+
+
 def main():
     if "--stale" in sys.argv:
         args = sys.argv[1:]
@@ -100,7 +107,7 @@ def main():
             else 50
         return stale_report(n)
     only = set(sys.argv[1:])
-    spark = get_spark(cores=16)
+    spark = session()
     con = duckdb.connect()
     for t in TABLES:
         con.sql(

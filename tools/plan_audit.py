@@ -1,38 +1,27 @@
-"""Physical-plan audit: generate PLANS.md with `.explain("formatted")`
-evidence for the headline queries.
+"""Physical-plan audit: PLANS.md, one digest row per audited plan.
 
-For each audited query we extract the scale-critical plan properties —
-the things that decide whether the same plan survives a 100x scale-up
-on a 1000-executor cluster:
+Each row holds what decides whether the same plan survives a 100x
+scale-up on a 1000-executor cluster: its shuffles, its broadcasts
+(every dimension join must broadcast; a shuffle of the 10^12-row fact
+side is minutes against days), its Python operators (only operators
+with no native form, such as Douglas-Peucker), the columns its scans
+read (the pages scan must never read ``html``) and the filters pushed
+into them. The fields come from osm_jl_spark/plans/digest.py, the
+module every plan test asserts through.
 
-- **Column pruning** (`ReadSchema`): the pages scan must NOT read the
-  `html` binary column when the query only needs `text` — at 100 TB the
-  html payload dominates the table bytes.
-- **Predicate pushdown** (`PushedFilters`): filters on parquet-backed
-  scans must reach the reader (row-group skipping; partition pruning on
-  a cell-clustered production table).
-- **Broadcast joins** (`BroadcastHashJoin`): every dimension join
-  (polygon cover, customer, cover cells) must broadcast — a shuffle of
-  the 10^12-row fact side is the difference between minutes and days.
-- **Whole-stage codegen** (`WholeStageCodegen`): native expressions
-  stay fused in generated JVM code; geoparse and exact PIP are native,
-  so only operators with no native form (e.g. Douglas-Peucker
-  simplification) appear as `ArrowEvalPython`/`MapInPandas`.
-- **Exchange count**: shuffles are the scale bottleneck; each audited
-  query documents how many it needs and why.
-
-Run: ``python tools/plan_audit.py`` (writes PLANS.md at the repo root).
-The same properties are pinned as regression tests in
-tests/test_plans.py — this tool is the human-readable evidence.
+Run: ``python tools/plan_audit.py`` rewrites PLANS.md at the repo root;
+``python tools/plan_audit.py NAME`` prints the full formatted explain of
+one audited plan, NAME being the first word of its row (``flagship``,
+``write_jsonl``, ``tpch_q3``, ...).
 """
 
 from __future__ import annotations
 
 import os
-import re
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
@@ -305,58 +294,10 @@ AUDITED = [
 ]
 
 
-def explain_str(df, mode: str = "formatted") -> str:
-    jqe = df._jdf.queryExecution()
-    jmode = df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-        mode
-    )
-    return jqe.explainString(jmode)
-
-
-def audit_one(name: str, df, why: str) -> str:
-    plan = explain_str(df)
-    # '(N) Op' detail headers appear once per node (formatted explain
-    # prints each node twice: tree + detail)
-    n_exchange = len(re.findall(r"\(\d+\) Exchange\b", plan))
-    n_bhj = len(re.findall(r"\(\d+\) BroadcastHashJoin", plan))
-    n_py = len(re.findall(
-        r"\(\d+\) (?:ArrowEvalPython|MapInPandas|FlatMapGroupsInPandas)", plan))
-    pushed = re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
-    pushed_nonempty = [p for p in pushed if p.strip()]
-    schemas = re.findall(r"ReadSchema: (struct<[^\n]*)", plan)
-
-    lines = [f"## {name}", "", f"*{why}*", ""]
-    lines.append(
-        f"- exchanges (shuffles): **{n_exchange}** | broadcast hash joins: "
-        f"**{n_bhj}** | Python/Arrow operators: **{n_py}** (codegen fusion "
-        "is only visible in the executed plan; pinned in tests/test_plans.py)"
-    )
-    if pushed_nonempty:
-        lines.append(f"- pushed filters: `{'; '.join(pushed_nonempty[:4])}`")
-    for s in schemas[:4]:
-        lines.append(f"- read schema: `{s[:160]}`")
-    lines += ["", "```", plan.strip()[:4000], "```", ""]
-    return "\n".join(lines)
-
-
-def main() -> None:
-    import __spark_entry__ as entry
-    from osm_jl_spark.session import get_spark
-
-    spark = get_spark(app="plan-audit", cores=4, shuffle_partitions=8)
-    qs = entry.queries()
-    parts = [
-        "# PLANS — physical-plan audit (scale evidence)",
-        "",
-        f"Generated by `python tools/plan_audit.py` against `{SF_DIR}`.",
-        "Each section lists the shuffle/broadcast/codegen/pushdown profile",
-        "of the optimized physical plan, then the formatted explain.",
-        "The invariants that matter are pinned in tests/test_plans.py.",
-        "",
-    ]
-    # flagship over a STORED pages table (the production shape): the
-    # scan must prune away the html binary column — at 100 TB the html
-    # payload is most of the table's bytes and must never be read.
+def _flagship(spark):
+    """The flagship over a STORED pages table (the production shape):
+    the scan must prune away the html binary column — at 100 TB the
+    html payload is most of the table's bytes and must never be read."""
     import tempfile
 
     from osm_jl_spark import datagen as G
@@ -365,53 +306,94 @@ def main() -> None:
     tmp = os.path.join(tempfile.gettempdir(), "plan_audit_pages.parquet")
     if not os.path.exists(tmp):
         G.load_pages(spark, 2000).write.mode("overwrite").parquet(tmp)
-    fl = flagship(spark.read.parquet(tmp), G.POLYGONS, 2)
-    parts.append(
-        audit_one(
-            "flagship (stored pages table)", fl,
-            "parquet scan prunes to (url, text) - html binary never read; "
-            "no lambda, the isnotnull filters read the Generate's parsed "
-            "doubles; cells encoded once and reused by the tile agg; one "
-            "broadcast (cover + edge slots); tile agg is the only fact "
-            "shuffle",
-        )
-    )
-    print("audited flagship", flush=True)
+    return flagship(spark.read.parquet(tmp), G.POLYGONS, 2)
 
-    # write_jsonl (K2 scale sink): the audited plan is the sink's
-    # INPUT — .text() appends only a WriteFiles node at execution, so
-    # everything scale-relevant (the J1 geometry join, to_json, the
-    # name-tag dim join) is visible here. feature_collection's
-    # driver-side collect is the documented single-document parity
-    # path; THIS is what a production export runs.
+
+def _write_jsonl(spark):
+    """write_jsonl (K2 scale sink): the audited plan is the sink's INPUT
+    — .text() appends only a WriteFiles node at execution, so everything
+    scale-relevant (the J1 geometry join, to_json, the name-tag dim
+    join) is visible here. feature_collection's driver-side collect is
+    the documented single-document parity path; THIS is what a
+    production export runs."""
+    from osm_jl_spark import datagen as G
     from osm_jl_spark.sources.geojson import way_features
 
-    feats = way_features(
+    return way_features(
         G.load_ways(spark, 500, 2000),
         G.load_nodes(spark, 2000),
         coord_decimals=5,
     ).select("feature")
-    parts.append(
-        audit_one(
-            "write_jsonl (GeoJSON sink)", feats,
-            "one Feature per line: way_geometries is the single "
-            "posexplode+join+sort_array shuffle pair (AQE picks "
-            "broadcast for the dim side at this scale); to_json is "
-            "native codegen - no Python, no extra exchange beyond J1's "
-            "reassembly; the .text() write adds only WriteFiles",
-        )
-    )
-    print("audited write_jsonl", flush=True)
 
-    for name, why in AUDITED:
-        df = qs[name](spark, SF_DIR)
-        parts.append(audit_one(name, df, why))
-        print(f"audited {name}", flush=True)
-    out = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                       "PLANS.md")
-    with open(out, "w") as fh:
-        fh.write("\n".join(parts))
-    print(f"wrote {out}")
+
+def audited() -> list[tuple]:
+    """(row name, why, build(spark) -> DataFrame), in table order."""
+    import __spark_entry__ as entry
+
+    qs = entry.queries()
+    return [
+        ("flagship (stored pages table)",
+         "parquet scan prunes to (url, text) - html binary never read; "
+         "no lambda, the isnotnull filters read the Generate's parsed "
+         "doubles; cells encoded once and reused by the tile agg; one "
+         "broadcast (cover + edge slots); tile agg is the only fact "
+         "shuffle", _flagship),
+        ("write_jsonl (GeoJSON sink)",
+         "one Feature per line: way_geometries is the single "
+         "posexplode+join+sort_array shuffle pair (AQE picks broadcast "
+         "for the dim side at this scale); to_json is native codegen - "
+         "no Python, no extra exchange beyond J1's reassembly; the "
+         ".text() write adds only WriteFiles", _write_jsonl),
+    ] + [(name, why, lambda spark, q=qs[name]: q(spark, SF_DIR))
+         for name, why in AUDITED]
+
+
+def _cell(items) -> str:
+    """Distinct non-empty entries, in plan order, as one code span."""
+    text = "; ".join(dict.fromkeys(i for i in items if i.strip()))
+    return f"`{text}`" if text else ""
+
+
+def row(name: str, why: str, d) -> str:
+    cells = [name, str(d.exchanges), str(d.broadcasts), str(d.python_ops),
+             _cell(d.read_schemas), _cell(d.pushed_filters), why]
+    return "| " + " | ".join(c.replace("|", "\\|") for c in cells) + " |"
+
+
+HEADER = f"""# PLANS — physical-plan audit (scale evidence)
+
+Generated by `python tools/plan_audit.py` against `{os.path.basename(SF_DIR)}`; \
+`python tools/plan_audit.py NAME` prints the full formatted explain of one \
+row's plan (NAME is the row's first word). Counts are nodes of the optimized \
+physical plan before AQE re-plans it, read by `osm_jl_spark/plans/digest.py`: \
+an `Exchange` is a shuffle, a `BroadcastExchange` a broadcast, a node named \
+`*Python*`, `*InPandas*` or `*InArrow*` a Python operator. The invariants \
+that matter are pinned in tests/test_plans.py.
+
+| plan | exchanges | broadcasts | python ops | read schema | pushed filters | why |
+|---|---|---|---|---|---|---|""".split("\n")
+
+
+def main() -> None:
+    from osm_jl_spark.plans.digest import digest, explain
+    from osm_jl_spark.session import get_spark
+
+    plans = audited()
+    by_name = {name.split()[0]: build for name, _, build in plans}
+    if len(sys.argv) > 1 and sys.argv[1] not in by_name:
+        sys.exit(f"no audited plan {sys.argv[1]!r}; names: "
+                 + ", ".join(by_name))
+    spark = get_spark(app="plan-audit", cores=4, shuffle_partitions=8)
+    if len(sys.argv) > 1:
+        print(explain(by_name[sys.argv[1]](spark)))
+    else:
+        lines = list(HEADER)
+        for name, why, build in plans:
+            lines.append(row(name, why, digest(build(spark))))
+            print(f"audited {name}", flush=True)
+        with open(os.path.join(REPO, "PLANS.md"), "w") as fh:
+            fh.write("\n".join(lines) + "\n")
+        print("wrote PLANS.md")
     spark.stop()
 
 
