@@ -69,7 +69,7 @@ def bbox_cell_range(ul: tuple[float, float], lr: tuple[float, float],
     return min(x1, x2), max(x1, x2), min(y1, y2), max(y1, y2)
 
 
-def bbox_filter(df, ul, lr, precision: int, cx: str = "cx", cy: str = "cy"):
+def bbox_filter(df, ul, lr, precision: int):
     """Cell-range predicate: BETWEEN on both cell axes.
 
     On a cell-clustered table this is pure partition pruning + min/max
@@ -77,12 +77,11 @@ def bbox_filter(df, ul, lr, precision: int, cx: str = "cx", cy: str = "cy"):
     """
     xlo, xhi, ylo, yhi = bbox_cell_range(ul, lr, precision)
     return df.filter(
-        F.col(cx).between(xlo, xhi) & F.col(cy).between(ylo, yhi)
+        F.col("cx").between(xlo, xhi) & F.col("cy").between(ylo, yhi)
     )
 
 
-def cell_lookup(df, lon: float, lat: float, precision: int,
-                cx: str = "cx", cy: str = "cy"):
+def cell_lookup(df, lon: float, lat: float, precision: int):
     """Rows in the single cell containing (lon, lat) — the reference's
     ``Index`` point-getindex (src/index.jl:55-58: ``getindex(i, lon,
     lat)`` returns the one cell's element vector).
@@ -96,7 +95,7 @@ def cell_lookup(df, lon: float, lat: float, precision: int,
 
     x = math.trunc(lon * 10**precision)
     y = math.trunc(lat * 10**precision)
-    return df.filter((F.col(cx) == x) & (F.col(cy) == y))
+    return df.filter((F.col("cx") == x) & (F.col("cy") == y))
 
 
 # ---------------------------------------------------------------- quadkey
@@ -157,11 +156,10 @@ def quadkey_col(tile_x: Column, tile_y: Column, zoom: int) -> Column:
     return F.concat(*digits)
 
 
-def with_quadkey(df, zoom: int, lon: str = "lon", lat: str = "lat",
-                 out: str = "qk"):
-    """Add a zoom-``zoom`` quadkey column computed from (lon, lat)."""
-    x, y = webmerc_tile(lon, lat, zoom)
-    return df.withColumn(out, quadkey_col(x, y, zoom))
+def with_quadkey(df, zoom: int):
+    """Add a zoom-``zoom`` quadkey column ``qk`` computed from (lon, lat)."""
+    x, y = webmerc_tile("lon", "lat", zoom)
+    return df.withColumn("qk", quadkey_col(x, y, zoom))
 
 
 # --------------------------------------------------------------- geohash
@@ -223,7 +221,6 @@ def geohash_col(lon, lat, length: int) -> Column:
     return F.concat(*chars)
 
 
-def with_geohash(df, length: int, lon: str = "lon", lat: str = "lat",
-                 out: str = "gh"):
-    """Add a ``length``-char geohash column computed from (lon, lat)."""
-    return df.withColumn(out, geohash_col(lon, lat, length))
+def with_geohash(df, length: int):
+    """Add a ``length``-char geohash column ``gh`` computed from (lon, lat)."""
+    return df.withColumn("gh", geohash_col("lon", "lat", length))

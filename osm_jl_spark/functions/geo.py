@@ -256,8 +256,8 @@ def cell_cover(
 # ----------------------------------------------------- coordinate math
 
 
-def with_ecef(df, lon: str = "lon", lat: str = "lat", h=None):
-    """Geodetic -> ECEF as native column math (WGS84).
+def with_ecef(df):
+    """Geodetic (lon, lat) at height 0 -> ECEF as native column math (WGS84).
 
     The reference's ECEF (src/coords.jl:26-46) squares an ``e`` that is
     already the first eccentricity squared (``e = 1 - Rp^2/Re^2``,
@@ -269,20 +269,18 @@ def with_ecef(df, lon: str = "lon", lat: str = "lat", h=None):
     re_ = 6378137.0
     rp = 6356752.3
     e2 = 1.0 - (rp * rp) / (re_ * re_)
-    phi = F.radians(F.col(lat))
-    lam = F.radians(F.col(lon))
-    hh = F.lit(0.0) if h is None else F.col(h)
+    phi = F.radians(F.col("lat"))
+    lam = F.radians(F.col("lon"))
     n = F.lit(re_) / F.sqrt(F.lit(1.0) - F.lit(e2) * F.sin(phi) * F.sin(phi))
     return (
-        df.withColumn("ecef_x", (n + hh) * F.cos(phi) * F.cos(lam))
-        .withColumn("ecef_y", (n + hh) * F.cos(phi) * F.sin(lam))
-        .withColumn("ecef_z", ((F.lit(1.0 - e2)) * n + hh) * F.sin(phi))
+        df.withColumn("ecef_x", n * F.cos(phi) * F.cos(lam))
+        .withColumn("ecef_y", n * F.cos(phi) * F.sin(lam))
+        .withColumn("ecef_z", (F.lit(1.0 - e2)) * n * F.sin(phi))
     )
 
 
-def with_enu(df, ref_lon: float, ref_lat: float,
-             lon: str = "lon", lat: str = "lat", h=None):
-    """Geodetic -> local East-North-Up meters at a reference point.
+def with_enu(df, ref_lon: float, ref_lat: float):
+    """Geodetic (lon, lat) -> local East-North-Up meters at a reference point.
 
     The reference's ENU is broken twice (SURVEY.md §2.8 C4): the
     rotation matrix repeats -sin(φ)cos(λ) where -sin(φ)sin(λ) belongs
@@ -293,7 +291,7 @@ def with_enu(df, ref_lon: float, ref_lat: float,
     """
     import math as _m
 
-    df = with_ecef(df, lon=lon, lat=lat, h=h)
+    df = with_ecef(df)
     # reference point ECEF (python floats — exact literals in-plan)
     re_ = 6378137.0
     rp = 6356752.3
@@ -322,13 +320,16 @@ def with_enu(df, ref_lon: float, ref_lat: float,
     )
 
 
-def shoelace_area2_col(coords, scale: int = 5):
-    """Twice the SIGNED shoelace area of a ring, in integer
-    10^-``scale``-degree² units (BIGINT): Σ xᵢ·yᵢ₊₁ − xᵢ₊₁·yᵢ plus the
-    last→first wrap term (zero automatically when the ring repeats its
-    first point, the OSM closed-way convention).
+AREA_SCALE = 5  # shoelace coordinates quantize to 10^-AREA_SCALE degrees
 
-    Integer on purpose: coordinates quantize exactly to 10^-scale, and
+
+def shoelace_area2_col(coords):
+    """Twice the SIGNED shoelace area of a ring, in integer
+    10^-``AREA_SCALE``-degree² units (BIGINT): Σ xᵢ·yᵢ₊₁ − xᵢ₊₁·yᵢ
+    plus the last→first wrap term (zero automatically when the ring
+    repeats its first point, the OSM closed-way convention).
+
+    Integer on purpose: coordinates quantize exactly to 10^-AREA_SCALE, and
     BIGINT sums are order-independent — the area is bit-equal across
     engines and partitionings, where a floating shoelace would depend
     on summation order. Worst case |x·y| ≈ 1.8e7·9e6 ≈ 1.6e14 per term
@@ -337,7 +338,7 @@ def shoelace_area2_col(coords, scale: int = 5):
     array<struct<lon,lat>> from way_geometries; all native column ops
     (transform/slice/zip_with/aggregate), no UDF.
     """
-    s = F.lit(float(10**scale))
+    s = F.lit(float(10**AREA_SCALE))
     a = F.transform(
         coords,
         lambda p: F.struct(

@@ -10,6 +10,9 @@ Scale notes: the exact/fingerprint paths are single-shuffle groupBys on
 a hash key (uniform — no skew). MinHash banding shuffles once on
 (band, band_hash); an adversarially hot bucket (e.g. boilerplate pages)
 is capped with a per-bucket limit before pairing.
+
+Every operator reads the corpus schema the registry feeds: documents
+as (doc_id, text), embeddings as (vec_id, embedding).
 """
 
 from __future__ import annotations
@@ -20,37 +23,44 @@ from pyspark.sql import functions as F
 from osm_jl_spark.functions.text import fingerprint_col, shingles_col
 
 MERSENNE31 = (1 << 31) - 1
+SHINGLE_N = 3  # word n-gram size of every shingle set but simhash's
+SIMHASH_SHINGLE_N = 2
+NUM_HASHES = 32  # MinHash signature length
+BANDS = 8  # LSH bands of NUM_HASHES // BANDS signature values each
+LSH_BUCKET_CAP = 200  # docs kept per LSH bucket: at most cap^2 pairs
+MINHASH_SEED = 42
+EMBED_PLANES = 16  # random hyperplanes per embedding LSH bucket key
+EMBED_SEED = 7
+LINE_MIN_LEN = 1  # shorter (trimmed) lines are never deduped: blank lines
+BLOOM_K = 3  # Bloom probes per shingle
 
 
-def exact_duplicates(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def exact_duplicates(docs: DataFrame) -> DataFrame:
     """Groups of byte-identical (normalized) documents: (fp, n_docs,
-    min_doc_id) for groups with n_docs >= 2. One shuffle on md5."""
+    keep_id = min doc_id) for groups with n_docs >= 2. One shuffle on
+    md5."""
     return (
-        docs.select(F.col(id_col), fingerprint_col(text_col).alias("fp"))
+        docs.select("doc_id", fingerprint_col("text").alias("fp"))
         .groupBy("fp")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
-            F.min(id_col).alias("keep_id"),
+            F.min("doc_id").alias("keep_id"),
         )
         .filter(F.col("n_docs") >= 2)
     )
 
 
-def exact_dedup(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def exact_dedup(docs: DataFrame) -> DataFrame:
     """Keep one representative (min id) per fingerprint group — the
     canonical exact-dedup pass. Window-free: min-id per group then
     semi-join, so the big table shuffles once."""
     keep = (
-        docs.select(F.col(id_col), fingerprint_col(text_col).alias("fp"))
+        docs.select("doc_id", fingerprint_col("text").alias("fp"))
         .groupBy("fp")
-        .agg(F.min(id_col).alias(id_col))
-        .select(id_col)
+        .agg(F.min("doc_id").alias("doc_id"))
+        .select("doc_id")
     )
-    return docs.join(keep, id_col, "left_semi")
+    return docs.join(keep, "doc_id", "left_semi")
 
 
 def _hash60(col):
@@ -60,13 +70,8 @@ def _hash60(col):
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
-def _shingle_hashes(docs: DataFrame, id_col: str, text_col: str, n: int,
-                    hash_fn: str = "xxhash64") -> DataFrame:
-    """(id, sh) exploded distinct shingle hashes, JVM-side.
-
-    hash_fn: 'xxhash64' (default — fastest, Spark-only) or 'md5_60'
-    (cross-engine: bit-identical in DuckDB, used by the oracle-checked
-    query registrations; ~2x slower per shingle, same plan shape).
+def _shingle_hashes(docs: DataFrame) -> DataFrame:
+    """(id, sh) exploded distinct xxhash64 shingle hashes, JVM-side.
 
     NO distinct here: ``shingles_col`` already array_distincts per
     document BEFORE the explode, so (id, sh) is unique map-side and a
@@ -76,29 +81,23 @@ def _shingle_hashes(docs: DataFrame, id_col: str, text_col: str, n: int,
     shingles; at 60/64 bits that is ~(grams²)/2⁶⁴ per doc — ignored,
     like every other use of these hashes.
     """
-    sh = (
-        F.xxhash64("shingle") if hash_fn == "xxhash64"
-        else _hash60(F.col("shingle"))
-    )
     return (
         docs.select(
-            F.col(id_col).alias("id"),
-            F.explode(shingles_col(text_col, n)).alias("shingle"),
+            F.col("doc_id").alias("id"),
+            F.explode(shingles_col("text", SHINGLE_N)).alias("shingle"),
         )
-        .select("id", sh.alias("sh"))
+        .select("id", F.xxhash64("shingle").alias("sh"))
     )
 
 
 def minhash_signatures(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 32,
-    shingle_n: int = 3,
-    seed: int = 42,
-    hash_fn: str = "xxhash64",
+    docs: DataFrame, hash_fn: str = "xxhash64"
 ) -> DataFrame:
-    """(id, sig ARRAY<BIGINT>[num_hashes]) MinHash signatures.
+    """(id, sig ARRAY<BIGINT>[NUM_HASHES]) MinHash signatures.
+
+    hash_fn: 'xxhash64' (default — fastest, Spark-only) or 'md5_60'
+    (cross-engine: bit-identical in DuckDB, used by the oracle-checked
+    query registrations; ~2x slower per shingle, same plan shape).
 
     Permutation family: h_i(x) = (a_i * x + b_i) mod M31 over a 31-bit
     reduction of the shingle hash — 31-bit so a*x + b stays within
@@ -108,22 +107,22 @@ def minhash_signatures(
     shingle hashes as an array column and every signature position is
     ``array_min(transform(hs, x -> (a*x+b) mod M31))``, all inside
     whole-stage codegen. The previous formulation (explode shingles,
-    build a num_hashes array per shingle ROW, groupBy(id) +
-    collect_list fold) shuffled num_hashes longs PER SHINGLE with no
+    build a NUM_HASHES array per shingle ROW, groupBy(id) +
+    collect_list fold) shuffled NUM_HASHES longs PER SHINGLE with no
     map-side reduction (collect_list combines nothing) — ~300 GB of
     shuffle at 8M docs, which is what actually filled the bench host's
     disk; at 10^12 docs it is a non-starter. Same values, same
     permutation family, no exchange at all.
 
-    Docs whose shingle set is empty (shorter than ``shingle_n``
+    Docs whose shingle set is empty (shorter than ``SHINGLE_N``
     tokens) are dropped, matching the exploded formulation where they
     produced no rows.
     """
     import random
 
-    rng = random.Random(seed)
+    rng = random.Random(MINHASH_SEED)
     ab = [(rng.randrange(1, MERSENNE31), rng.randrange(0, MERSENNE31))
-          for _ in range(num_hashes)]
+          for _ in range(NUM_HASHES)]
 
     def h(s):
         return (
@@ -133,10 +132,10 @@ def minhash_signatures(
     # positive 31-bit base hash per distinct shingle, per doc — one
     # array column, never exploded
     hs = F.transform(
-        shingles_col(text_col, shingle_n),
+        shingles_col("text", SHINGLE_N),
         lambda s: F.pmod(h(s), F.lit(MERSENNE31)),
     )
-    d = docs.select(F.col(id_col).alias("id"), hs.alias("hs")).filter(
+    d = docs.select(F.col("doc_id").alias("id"), hs.alias("hs")).filter(
         F.size("hs") > 0
     )
     def perm_min(a, b):
@@ -154,19 +153,16 @@ def minhash_signatures(
     return d.select("id", sig.alias("sig"))
 
 
-def minhash_lsh_candidates(
-    signatures: DataFrame,
-    bands: int = 8,
-    rows_per_band: int = 4,
-    bucket_cap: int = 200,
-) -> DataFrame:
+def minhash_lsh_candidates(signatures: DataFrame) -> DataFrame:
     """LSH banding: (id_a, id_b) candidate pairs sharing >= 1 band.
 
-    Each signature splits into ``bands`` bands of ``rows_per_band``
-    values; docs agreeing on a whole band land in one bucket. Pairs are
-    emitted per bucket via a min-id representative join, deduped. The
-    per-bucket cap bounds adversarial buckets (cap^2 pairs max).
+    Each signature splits into ``BANDS`` bands of ``NUM_HASHES //
+    BANDS`` values; docs agreeing on a whole band land in one bucket.
+    Pairs are emitted per bucket via a min-id representative join,
+    deduped. The per-bucket cap ``LSH_BUCKET_CAP`` bounds adversarial
+    buckets (cap^2 pairs max).
     """
+    rows_per_band = NUM_HASHES // BANDS
     b = signatures.select(
         "id",
         F.posexplode(
@@ -175,14 +171,14 @@ def minhash_lsh_candidates(
                     F.xxhash64(
                         F.slice(F.col("sig"), i * rows_per_band + 1, rows_per_band)
                     )
-                    for i in range(bands)
+                    for i in range(BANDS)
                 ]
             )
         ).alias("band", "bh"),
     )
     w = Window.partitionBy("band", "bh").orderBy("id")
     b = b.withColumn("_rn", F.row_number().over(w)).filter(
-        F.col("_rn") <= bucket_cap
+        F.col("_rn") <= LSH_BUCKET_CAP
     )
     pairs = (
         b.alias("x")
@@ -202,12 +198,7 @@ def minhash_lsh_candidates(
 
 def minhash_dedup_pairs(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     threshold: float = 0.7,
-    num_hashes: int = 32,
-    bands: int = 8,
-    shingle_n: int = 3,
     hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """Full MinHash-LSH near-dup pipeline: signatures -> banded
@@ -226,11 +217,8 @@ def minhash_dedup_pairs(
     and running banding + verification against that — the
     plans/manifest checkpoint pattern.
     """
-    sigs = minhash_signatures(
-        docs, id_col, text_col, num_hashes=num_hashes, shingle_n=shingle_n,
-        hash_fn=hash_fn,
-    )
-    cand = minhash_lsh_candidates(sigs, bands, num_hashes // bands)
+    sigs = minhash_signatures(docs, hash_fn=hash_fn)
+    cand = minhash_lsh_candidates(sigs)
     a = sigs.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
     bb = sigs.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))
     est = F.size(
@@ -238,7 +226,7 @@ def minhash_dedup_pairs(
             F.zip_with("sig_a", "sig_b", lambda x, y: x == y),
             lambda v: v,
         )
-    ) / F.lit(float(num_hashes))
+    ) / F.lit(float(NUM_HASHES))
     return (
         cand.join(a, "id_a").join(bb, "id_b")
         .withColumn("est_jaccard", est)
@@ -247,13 +235,7 @@ def minhash_dedup_pairs(
     )
 
 
-def ngram_jaccard_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.5,
-    shingle_n: int = 3,
-) -> DataFrame:
+def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
     """EXACT n-gram Jaccard near-dup: (id_a, id_b, jaccard).
 
     Inverted-index join: explode shingle hashes, self-join per shingle
@@ -272,7 +254,7 @@ def ngram_jaccard_pairs(
     ladder" section of BASELINE.md; rerun with
     ``python tools/ladder.py minhash``).
     """
-    sh = _shingle_hashes(docs, id_col, text_col, shingle_n)
+    sh = _shingle_hashes(docs)
     sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
     inter = (
         sh.alias("x")
@@ -295,13 +277,11 @@ def ngram_jaccard_pairs(
 
 
 def simhash_signatures(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_n: int = 2,
-    hash_fn: str = "xxhash64",
+    docs: DataFrame, hash_fn: str = "xxhash64"
 ) -> DataFrame:
-    """(id, simhash BIGINT): 64-bit SimHash — a pure NARROW map.
+    """(id, simhash BIGINT): 64-bit SimHash over ``SIMHASH_SHINGLE_N``-
+    gram shingles — a pure NARROW map. ``hash_fn`` as in
+    :func:`minhash_signatures`.
 
     Votes: for bit j, sum over shingles of (bit_j(h) ? 1 : -1); sign
     of the sum sets bit j. The doc keeps its shingle hashes as an
@@ -323,7 +303,7 @@ def simhash_signatures(
     def h(s):
         return F.xxhash64(s) if hash_fn == "xxhash64" else _hash60(s)
 
-    hs = F.transform(shingles_col(text_col, shingle_n), h)
+    hs = F.transform(shingles_col("text", SIMHASH_SHINGLE_N), h)
 
     def signs(x):
         # per-shingle ±1 vote vector over the 64 bit positions
@@ -342,7 +322,7 @@ def simhash_signatures(
         F.array_repeat(F.lit(0).cast("long"), 64),
         lambda acc, x: F.zip_with(acc, signs(x), lambda a, b: a + b),
     )
-    d = docs.select(F.col(id_col).alias("id"), hs.alias("hs")).filter(
+    d = docs.select(F.col("doc_id").alias("id"), hs.alias("hs")).filter(
         F.size("hs") > 0
     )
     bit_terms = [
@@ -362,10 +342,7 @@ def simhash_signatures(
 
 def simhash_near_dups(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     max_hamming: int = 3,
-    shingle_n: int = 2,
     hash_fn: str = "xxhash64",
     bucket_cap: int | None = None,
 ) -> DataFrame:
@@ -385,7 +362,7 @@ def simhash_near_dups(
     docs may be missed — the same bounded-recall trade
     minhash_lsh_candidates makes), or exact-dedup boilerplate first.
     """
-    sigs = simhash_signatures(docs, id_col, text_col, shingle_n, hash_fn)
+    sigs = simhash_signatures(docs, hash_fn)
     blocks = sigs.select(
         "id",
         "simhash",
@@ -428,41 +405,35 @@ def simhash_near_dups(
 
 
 def embedding_near_dups(
-    embeddings: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.95,
-    n_planes: int = 16,
-    seed: int = 7,
-    dim: int | None = None,
+    embeddings: DataFrame, threshold: float = 0.95
 ) -> DataFrame:
-    """Embedding-cosine near-dup via random-hyperplane LSH buckets +
-    exact cosine check (native F.aggregate/zip_with math; the plane
-    matrix is a literal array baked into the plan).
+    """Embedding-cosine near-dup via random-hyperplane LSH buckets
+    (``EMBED_PLANES`` bits) + exact cosine check (native
+    F.aggregate/zip_with math; the plane matrix is a literal array
+    baked into the plan).
 
-    Pass ``dim`` to keep plan construction fully lazy; when omitted, a
-    one-row probe reads the first vector's length (array columns carry
-    no length in the schema)."""
+    A one-row probe reads the first vector's length (array columns
+    carry no length in the schema)."""
     import random
 
-    if dim is None:
-        dim = embeddings.select(F.size(vec_col).alias("d")).first()["d"]
-    rng = random.Random(seed)
+    dim = embeddings.select(F.size("embedding").alias("d")).first()["d"]
+    rng = random.Random(EMBED_SEED)
     planes = [
-        [rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n_planes)
+        [rng.gauss(0.0, 1.0) for _ in range(dim)]
+        for _ in range(EMBED_PLANES)
     ]
     sig = None
     for j, pl in enumerate(planes):
         plane = F.array(*[F.lit(v) for v in pl])
         dot = F.aggregate(
-            F.zip_with(F.col(vec_col), plane, lambda a, b: a * b),
+            F.zip_with(F.col("embedding"), plane, lambda a, b: a * b),
             F.lit(0.0),
             lambda acc, x: acc + x,
         )
         bit = F.when(dot > 0, F.lit(1 << j)).otherwise(F.lit(0))
         sig = bit if sig is None else sig + bit
-    e = embeddings.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"),
-                          sig.alias("bucket"))
+    e = embeddings.select(F.col("vec_id").alias("id"),
+                          F.col("embedding").alias("v"), sig.alias("bucket"))
     norm = F.sqrt(
         F.aggregate(F.transform("v", lambda x: x * x), F.lit(0.0),
                     lambda a, x: a + x)
@@ -490,13 +461,7 @@ def embedding_near_dups(
 
 
 def contamination_pairs(
-    train: DataFrame,
-    eval_docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.8,
-    shingle_n: int = 3,
-    hash_fn: str = "xxhash64",
+    train: DataFrame, eval_docs: DataFrame, threshold: float = 0.8
 ) -> DataFrame:
     """Train/eval decontamination: (train_id, eval_id, containment)
     where containment = |shingles(eval) ∩ shingles(train)| /
@@ -516,8 +481,8 @@ def contamination_pairs(
     of the 100 TB side; the per-pair count is a map-side-combinable
     groupBy on (train_id, eval_id), which only carries matched pairs.
     """
-    tr = _shingle_hashes(train, id_col, text_col, shingle_n, hash_fn)
-    ev = _shingle_hashes(eval_docs, id_col, text_col, shingle_n, hash_fn)
+    tr = _shingle_hashes(train)
+    ev = _shingle_hashes(eval_docs)
     ev_sizes = ev.groupBy("id").agg(F.count(F.lit(1)).alias("ev_sz"))
     ev, ev_sizes = F.broadcast(ev), F.broadcast(ev_sizes)
     inter = (
@@ -584,13 +549,7 @@ def snapshot_latest(
     )
 
 
-def line_dedup(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_df: int = 2,
-    min_len: int = 1,
-) -> DataFrame:
+def line_dedup(docs: DataFrame, min_df: int = 2) -> DataFrame:
     """Line-level dedup (CCNet/C4-style boilerplate stripping): remove
     every line that occurs in at least ``min_df`` DISTINCT documents —
     navigation menus, cookie banners, copyright footers — while
@@ -599,14 +558,14 @@ def line_dedup(
     snapshotting and document-level dedup.
 
     Output: one row per input document (docs with ALL lines removed
-    keep a row with empty text) — (id_col, clean_text, n_lines,
+    keep a row with empty text) — (doc_id, clean_text, n_lines,
     n_kept).
 
     Semantics:
     - A line's document frequency counts documents, not occurrences: a
       line repeated 50x inside ONE doc has df=1 and is kept.
-    - Lines whose trimmed length is below ``min_len`` (blank lines by
-      default) never participate in dedup and are always kept — they
+    - Lines whose trimmed length is below ``LINE_MIN_LEN`` (blank
+      lines) never participate in dedup and are always kept — they
       are structure, not boilerplate, and a corpus-wide blank-line df
       would strip every paragraph break.
     - Line identity is the EXACT line string (no normalization); the
@@ -634,9 +593,9 @@ def line_dedup(
     """
     # NULL text behaves as empty (one blank line, kept): posexplode of
     # a NULL array would silently DROP the document row otherwise
-    lines = F.split(F.coalesce(F.col(text_col), F.lit("")), "\n")
+    lines = F.split(F.coalesce(F.col("text"), F.lit("")), "\n")
     eligible = F.filter(
-        lines, lambda ln: F.length(F.trim(ln)) >= min_len
+        lines, lambda ln: F.length(F.trim(ln)) >= LINE_MIN_LEN
     )
     hot = (
         docs.select(
@@ -653,11 +612,11 @@ def line_dedup(
         .select("lh", "is_hot")
     )
     ex = docs.select(
-        F.col(id_col), F.posexplode(lines).alias("pos", "line")
+        "doc_id", F.posexplode(lines).alias("pos", "line")
     ).withColumn(
         "lh",
         F.when(
-            F.length(F.trim("line")) >= min_len, F.xxhash64("line")
+            F.length(F.trim("line")) >= LINE_MIN_LEN, F.xxhash64("line")
         ),  # ineligible lines get NULL -> never match the hot dim
     )
     joined = ex.join(hot, "lh", "left")
@@ -665,7 +624,7 @@ def line_dedup(
         F.col("is_hot").isNull(), F.struct("pos", "line")
     )  # collect_list skips NULLs: hot lines drop out here
     return (
-        joined.groupBy(id_col)
+        joined.groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_lines"),
             F.count(kept_struct).alias("n_kept"),
@@ -677,7 +636,7 @@ def line_dedup(
                 "\n",
             ).alias("clean_text"),
         )
-        .select(id_col, "clean_text", "n_lines", "n_kept")
+        .select("doc_id", "clean_text", "n_lines", "n_kept")
     )
 
 
@@ -685,7 +644,6 @@ def neardup_keep_best(
     docs: DataFrame,
     pairs: DataFrame,
     score,
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """(cluster_id, keep_id): collapse a near-duplicate pair graph to
     one representative per cluster — the doc with the highest
@@ -710,7 +668,7 @@ def neardup_keep_best(
     )
     cc = connected_components(edges)
     labeled = (
-        docs.select(F.col(id_col).alias("id"), score.alias("s"))
+        docs.select(F.col("doc_id").alias("id"), score.alias("s"))
         .join(cc.withColumnRenamed("node", "id"), "id", "left")
         .withColumn("comp", F.coalesce("comp", F.col("id")))
     )
@@ -723,11 +681,7 @@ def neardup_keep_best(
     )
 
 def duplicated_window_stats(
-    docs: DataFrame,
-    w: int = 8,
-    min_df: int = 2,
-    id_col: str = "doc_id",
-    text_col: str = "text",
+    docs: DataFrame, w: int = 8, min_df: int = 2
 ) -> DataFrame:
     """Exact-substring duplication profile (Lee et al. 2022,
     "Deduplicating Training Data Makes Language Models Better",
@@ -741,7 +695,7 @@ def duplicated_window_stats(
     deliberately does not build — windows are the distributed-friendly
     approximation the paper itself uses for its NearDup comparison).
 
-    Output: (id_col, n_windows, n_dup_windows) — one row per document
+    Output: (doc_id, n_windows, n_dup_windows) — one row per document
     having at least one window (docs shorter than ``w`` tokens carry
     no signal and emit nothing). Integer columns only: the ratio is
     left to the caller so the result stays engine-exact.
@@ -760,7 +714,7 @@ def duplicated_window_stats(
     (hashes are uniform by construction).
     """
     toks = F.filter(
-        F.split(F.col(text_col), r"\s+"), lambda t: t != F.lit("")
+        F.split(F.col("text"), r"\s+"), lambda t: t != F.lit("")
     )
     nwin = F.size(toks) - F.lit(w - 1)
     wins = F.array_distinct(
@@ -770,7 +724,7 @@ def duplicated_window_stats(
         )
     )
     ex = docs.select(
-        F.col(id_col),
+        "doc_id",
         F.explode(
             F.when(nwin >= 1, wins)  # sequence(1,0) would DESCEND
         ).alias("wh"),
@@ -783,7 +737,7 @@ def duplicated_window_stats(
     )
     return (
         ex.join(hot, "wh", "left")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_windows"),
             F.count(F.col("is_hot")).alias("n_dup_windows"),
@@ -792,11 +746,7 @@ def duplicated_window_stats(
 
 
 def remove_duplicated_windows(
-    docs: DataFrame,
-    w: int = 8,
-    min_df: int = 2,
-    id_col: str = "doc_id",
-    text_col: str = "text",
+    docs: DataFrame, w: int = 8, min_df: int = 2
 ) -> DataFrame:
     """The REMOVAL counterpart of ``duplicated_window_stats`` — Lee et
     al. 2022's exact-substring deduplication at token-window
@@ -805,7 +755,7 @@ def remove_duplicated_windows(
     dropped iff at least one duplicated window covers it; survivors
     are re-joined with single spaces, the standard normalization for
     this transform). Docs shorter than ``w`` tokens pass through
-    untouched. Returns (id_col, clean_text, n_tokens, n_removed).
+    untouched. Returns (doc_id, clean_text, n_tokens, n_removed).
 
     Plan (zero per-row Python, three uniform-key exchanges):
 
@@ -818,7 +768,9 @@ def remove_duplicated_windows(
        regroups to one hot-hash array per affected doc — exchange 2;
     3. that per-doc array joins the original text — exchange 3, on the
        doc id (only docs that HAVE duplicated windows carry a row on
-       the build side) — and the cut itself is a pure narrow map:
+       the build side; while that side is small the planner broadcasts
+       it instead, and the plan has two exchanges) — and the cut
+       itself is a pure narrow map:
        window hashes are RECOMPUTED against the hot array to recover
        positions (the same recompute-over-materialize trade argued at
        ``minhash_signatures``), and a higher-order filter keeps tokens
@@ -830,7 +782,7 @@ def remove_duplicated_windows(
     key. The clean_text re-join is the only output materialization.
     """
     toks = F.filter(
-        F.split(F.coalesce(F.col(text_col), F.lit("")), r"\s+"),
+        F.split(F.coalesce(F.col("text"), F.lit("")), r"\s+"),
         lambda t: t != F.lit(""),
     )
     nwin = F.size(toks) - F.lit(w - 1)
@@ -842,7 +794,7 @@ def remove_duplicated_windows(
         F.transform(F.sequence(F.lit(1), nwin), winh)
     )
     ex = docs.select(
-        F.col(id_col),
+        "doc_id",
         F.explode(F.when(nwin >= 1, wins)).alias("wh"),  # guard: desc seq
     )
     hot = (
@@ -853,10 +805,10 @@ def remove_duplicated_windows(
     )
     doc_hot = (
         ex.join(hot, "wh", "left_semi")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.collect_list("wh").alias("hot_whs"))
     )
-    joined = docs.join(doc_hot, id_col, "left")
+    joined = docs.join(doc_hot, "doc_id", "left")
     hot_arr = F.coalesce(
         F.col("hot_whs"), F.array().cast("array<bigint>")
     )
@@ -877,7 +829,7 @@ def remove_duplicated_windows(
         ),
     )
     return joined.select(
-        F.col(id_col),
+        "doc_id",
         F.concat_ws(" ", kept).alias("clean_text"),
         F.size(toks).cast("long").alias("n_tokens"),
         (F.size(toks) - F.size(kept)).cast("long").alias("n_removed"),
@@ -910,10 +862,8 @@ def _bloom_positions(shingle, m_bits: int, k: int) -> list:
 
 def bloom_bitmap(
     eval_docs: DataFrame,
-    text_col: str = "text",
-    shingle_n: int = 3,
     m_bits: int = 1 << 18,
-    k: int = 3,
+    k: int = BLOOM_K,
 ) -> DataFrame:
     """Build a Bloom filter over the eval set's shingles as (word,
     bits) rows — ``m_bits`` bits packed into ``m_bits/64`` BIGINT
@@ -929,7 +879,7 @@ def bloom_bitmap(
     at most m_bits/64 output rows.
     """
     sh = eval_docs.select(
-        F.explode(shingles_col(text_col, shingle_n)).alias("shingle")
+        F.explode(shingles_col("text", SHINGLE_N)).alias("shingle")
     )
     pos = sh.select(
         F.explode(
@@ -951,11 +901,8 @@ def bloom_bitmap(
 def bloom_contamination(
     train: DataFrame,
     eval_docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_n: int = 3,
     m_bits: int = 1 << 18,
-    k: int = 3,
+    k: int = BLOOM_K,
 ) -> DataFrame:
     """Approximate decontamination against a Bloom filter of the eval
     set: per train doc, how many of its distinct shingles MIGHT be in
@@ -978,11 +925,11 @@ def bloom_contamination(
     Python anywhere.
     """
     bitmap = F.broadcast(
-        bloom_bitmap(eval_docs, text_col, shingle_n, m_bits, k)
+        bloom_bitmap(eval_docs, m_bits, k)
     )
     tr = train.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(shingles_col(text_col, shingle_n)).alias("shingle"),
+        "doc_id",
+        F.explode(shingles_col("text", SHINGLE_N)).alias("shingle"),
     )
     probes = _bloom_positions(F.col("shingle"), m_bits, k)
     proj = tr.select(

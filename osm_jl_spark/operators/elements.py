@@ -30,21 +30,21 @@ ADDR_POSTCODE = "addr:postcode"
 ADDR_CITY = "addr:city"
 
 
-def hastag(key: str, tags: str = "tags") -> Column:
-    """Tag-key existence (src/elements.jl:38)."""
-    return F.map_contains_key(F.col(tags), F.lit(key))
+def hastag(key: str) -> Column:
+    """Tag-key existence in the ``tags`` map (src/elements.jl:38)."""
+    return F.map_contains_key(F.col("tags"), F.lit(key))
 
 
-def gettag(key: str, tags: str = "tags") -> Column:
+def gettag(key: str) -> Column:
     """Tag value, NULL when absent — the reference's ``missing``
     (src/elements.jl:46)."""
-    return F.element_at(F.col(tags), F.lit(key))
+    return F.element_at(F.col("tags"), F.lit(key))
 
 
-def tag_eq(key: str, value, tags: str = "tags") -> Column:
+def tag_eq(key: str, value) -> Column:
     """Missing-safe equality: ``coalesce(tag == v, false)`` in the
     reference (src/OSM.jl:155) == SQL null-safe equal ``<=>``."""
-    return gettag(key, tags).eqNullSafe(F.lit(value))
+    return gettag(key).eqNullSafe(F.lit(value))
 
 
 def filternodes(df: DataFrame, predicate: Column) -> DataFrame:
@@ -79,14 +79,11 @@ def search_address(
     nodes: DataFrame,
     street: str,
     housenumber: str,
-    postcode: str = "",
-    city: str = "",
 ) -> tuple[DataFrame, DataFrame]:
     """Conjunctive street AND housenumber equality (src/OSM.jl:177-201).
 
-    postcode/city are accepted-but-unused exactly like the reference
-    (its predicate never reads them, src/OSM.jl:186-189) — kept for API
-    parity, documented as inert.
+    The reference also accepts postcode/city but its predicate never
+    reads them (src/OSM.jl:186-189), so they are not parameters here.
     """
     pred = tag_eq(ADDR_STREET, street) & tag_eq(ADDR_HOUSENUMBER, housenumber)
     return ways.filter(pred), nodes.filter(pred)
@@ -96,69 +93,69 @@ def search_address(
 # one-line Column factory here, so it composes into any filter/select.
 
 
-def name_of(tags: str = "tags") -> Column:
+def name_of() -> Column:
     """``@name`` (src/utils.jl:7-9)."""
-    return gettag(NAME, tags)
+    return gettag(NAME)
 
 
-def isaddress(tags: str = "tags") -> Column:
+def isaddress() -> Column:
     """``@isaddress`` — has an addr:street tag (src/utils.jl:16-18)."""
-    return hastag(ADDR_STREET, tags)
+    return hastag(ADDR_STREET)
 
 
-def addr_street(tags: str = "tags") -> Column:
+def addr_street() -> Column:
     """``@addr_street`` (src/utils.jl:20-22)."""
-    return gettag(ADDR_STREET, tags)
+    return gettag(ADDR_STREET)
 
 
-def addr_housenumber(tags: str = "tags") -> Column:
+def addr_housenumber() -> Column:
     """``@addr_housenumber`` (src/utils.jl:24-26)."""
-    return gettag(ADDR_HOUSENUMBER, tags)
+    return gettag(ADDR_HOUSENUMBER)
 
 
-def addr_postcode(tags: str = "tags") -> Column:
+def addr_postcode() -> Column:
     """``@addr_postcode`` (src/utils.jl:28-30)."""
-    return gettag(ADDR_POSTCODE, tags)
+    return gettag(ADDR_POSTCODE)
 
 
-def addr_city(tags: str = "tags") -> Column:
+def addr_city() -> Column:
     """``@addr_city`` (src/utils.jl:32-34)."""
-    return gettag(ADDR_CITY, tags)
+    return gettag(ADDR_CITY)
 
 
-def is_closed(node_refs: str = "node_refs") -> Column:
-    """First ref == last ref (src/elements.jl:234). Uses element_at
-    (1-based; -1 = last); NULL-safe for empty arrays."""
-    c = F.col(node_refs)
+def is_closed() -> Column:
+    """First ``node_refs`` entry == last (src/elements.jl:234). Uses
+    element_at (1-based; -1 = last); NULL-safe for empty arrays."""
+    c = F.col("node_refs")
     return F.when(
         F.size(c) > 0,
         F.element_at(c, 1) == F.element_at(c, -1),
     ).otherwise(F.lit(False))
 
 
-def is_area(node_refs: str = "node_refs") -> Column:
+def is_area() -> Column:
     """Closed way => area (src/elements.jl:241-243)."""
-    return is_closed(node_refs)
+    return is_closed()
 
 
-def is_road(node_refs: str = "node_refs") -> Column:
+def is_road() -> Column:
     """Not an area => road (src/elements.jl:248-250)."""
-    return ~is_closed(node_refs)
+    return ~is_closed()
 
 
-def relation_type(tags: str = "tags") -> Column:
+def relation_type() -> Column:
     """Relation 'type' tag (src/elements.jl:318)."""
-    return gettag("type", tags)
+    return gettag("type")
 
 
-def tag_set(key: str, value, tags: str = "tags") -> Column:
+def tag_set(key: str, value) -> Column:
     """C8 ``tag!(e, k, v)`` (src/elements.jl:53-58) as a functional
     map update: remove any existing entry for ``key``, append the new
     one. (map_concat is NOT usable here — Spark's default
     mapKeyDedupPolicy=EXCEPTION throws on duplicate keys.)"""
     val = value if isinstance(value, Column) else F.lit(value)
     kept = F.filter(
-        F.map_entries(F.col(tags)), lambda e: e["key"] != F.lit(key)
+        F.map_entries(F.col("tags")), lambda e: e["key"] != F.lit(key)
     )
     entry = F.array(
         F.struct(F.lit(key).alias("key"), val.alias("value"))
@@ -166,7 +163,7 @@ def tag_set(key: str, value, tags: str = "tags") -> Column:
     return F.map_from_entries(F.concat(kept, entry))
 
 
-def tags_canonical(tags: str = "tags") -> Column:
+def tags_canonical() -> Column:
     """Deterministic string form of a tags map: sorted 'k=v' entries
     joined with ';' — maps have no cross-engine canonical order, so
     comparisons (and the DuckDB oracle) use this."""
@@ -174,7 +171,7 @@ def tags_canonical(tags: str = "tags") -> Column:
         ";",
         F.array_sort(
             F.transform(
-                F.map_entries(F.col(tags)),
+                F.map_entries(F.col("tags")),
                 lambda e: F.concat(e["key"], F.lit("="), e["value"]),
             )
         ),

@@ -36,17 +36,17 @@ from pyspark.sql import functions as F
 
 from osm_jl_spark.operators.elements import is_road
 
+CC_MAX_ITER = 30  # connected_components label-propagation round cap
 
-def way_edges(ways: DataFrame, roads_only: bool = True) -> DataFrame:
-    """Undirected edge list (src, dst) from consecutive way refs.
+
+def way_edges(ways: DataFrame) -> DataFrame:
+    """Undirected edge list (src, dst) from consecutive refs of the
+    visible open ways (the reference's road predicate).
 
     Native column ops only: zip node_refs with itself shifted by one,
-    explode the pairs, mirror, distinct. ``roads_only`` keeps visible
-    open ways (the reference's road predicate).
+    explode the pairs, mirror, distinct.
     """
-    w = ways
-    if roads_only:
-        w = w.filter(F.col("visible") & is_road("node_refs"))
+    w = ways.filter(F.col("visible") & is_road())
     n = F.size("node_refs")
     pairs = w.select(
         F.explode(
@@ -105,9 +105,7 @@ def bfs_hops(
     return visited
 
 
-def connected_components(
-    edges: DataFrame, max_iter: int = 30
-) -> DataFrame:
+def connected_components(edges: DataFrame) -> DataFrame:
     """Connected components: (node, comp) where ``comp`` is the
     minimum node id reachable from ``node`` — the canonical cluster
     label for near-duplicate grouping (every doc in a dup cluster maps
@@ -122,7 +120,8 @@ def connected_components(
     node takes the min of its own label and its neighbors' labels —
     one shuffle join + one groupBy per round, labels live in
     DataFrames end to end, the driver sees only a 1-row convergence
-    probe. Converges in O(component diameter) rounds, which is the
+    probe, for at most ``CC_MAX_ITER`` rounds. Converges in
+    O(component diameter) rounds, which is the
     right trade for near-dup graphs: LSH/jaccard clusters are small
     and dense (diameter a handful), so 3-5 rounds finish, each a
     plain shuffle that AQE sizes. For adversarially long path graphs
@@ -141,7 +140,7 @@ def connected_components(
         .distinct()
     )
     labels = nodes.withColumn("comp", F.col("node")).localCheckpoint()
-    for _ in range(max_iter):
+    for _ in range(CC_MAX_ITER):
         nbr_min = (
             edges.join(
                 labels.select(
@@ -181,7 +180,6 @@ def connected_components(
 def shortest_paths(
     edges: DataFrame,
     sources: DataFrame,
-    weight_col: str = "w",
     max_hops: int = 10,
 ) -> DataFrame:
     """Weighted single-source(-set) shortest paths: (node, dist) =
@@ -190,7 +188,7 @@ def shortest_paths(
     ``path`` surface (src/OSM.jl stub; :func:`bfs_hops` is the
     unweighted case).
 
-    ``edges`` carries (src, dst, ``weight_col``); weights must be
+    ``edges`` carries (src, dst, w); weights ``w`` must be
     non-negative (BIGINT recommended — integer sums are
     order-independent, which is what makes the result oracle-equal
     across engines; metre-valued haversine weights drop into the same
@@ -219,7 +217,7 @@ def shortest_paths(
             dist.join(edges, dist["node"] == edges["src"])
             .select(
                 F.col("dst").alias("node"),
-                (F.col("dist") + F.col(weight_col)).alias("dist"),
+                (F.col("dist") + F.col("w")).alias("dist"),
             )
         )
         new_dist = (

@@ -178,8 +178,6 @@ def nodes_in_polygons(
     points: DataFrame,
     polygons: dict[int, Ring],
     precision: int = 2,
-    lon: str = "lon",
-    lat: str = "lat",
 ) -> DataFrame:
     """J3 (src/OSM.jl:210-218) as a scalable spatial join.
 
@@ -271,7 +269,7 @@ def nodes_in_polygons(
             (pid, cx, cy, False, *bbox, *edges) for cx, cy in sorted(boundary)
         ]
 
-    pts = with_cell(points, precision, lon=lon, lat=lat)
+    pts = with_cell(points, precision)
     out = [sql_ident(c) for c in points.columns if c not in ("cx", "cy")]
     out += ["cx", "cy", "polygon_id"]
     cand = None
@@ -301,11 +299,10 @@ def nodes_in_polygons(
     # strict superset test (BETWEEN is inclusive; even-odd's strict
     # inequalities exclude boundary points anyway), so semantics are
     # untouched; full cells skip it like they skip the exact test.
-    qlon, qlat = sql_ident(lon), sql_ident(lat)
-    bbox_sql = (f"{qlon} BETWEEN bminx AND bmaxx AND "
-                f"{qlat} BETWEEN bminy AND bmaxy")
+    bbox_sql = ("`lon` BETWEEN bminx AND bmaxx AND "
+                "`lat` BETWEEN bminy AND bmaxy")
     if slots:
-        test = pip_slots_sql(lon, lat, "slots", k)
+        test = pip_slots_sql("lon", "lat", "slots", k)
         return cand.filter(f"is_full OR ({bbox_sql} AND {test})").selectExpr(
             *out
         )
@@ -315,7 +312,7 @@ def nodes_in_polygons(
     return (
         cand.filter(f"is_full OR ({bbox_sql})")
         .join(F.broadcast(edge_dim), "polygon_id")
-        .filter(f"is_full OR {pip_edges_fold_sql(lon, lat, 'edges')}")
+        .filter(f"is_full OR {pip_edges_fold_sql('lon', 'lat', 'edges')}")
         .selectExpr(*out)
     )
 
@@ -325,7 +322,6 @@ def ways_in_polygon(
     nodes: DataFrame,
     ring: Ring,
     precision: int = 2,
-    polygon_id: int = 1,
 ) -> DataFrame:
     """J4 (src/OSM.jl:225-239): ways with ANY node inside the polygon.
 
@@ -335,7 +331,7 @@ def ways_in_polygon(
     rows.
     """
     inside = nodes_in_polygons(
-        nodes.select("id", "lon", "lat"), {polygon_id: ring}, precision
+        nodes.select("id", "lon", "lat"), {1: ring}, precision
     ).select(F.col("id").alias("ref"))
     refs = explode_way_refs(ways).select("way_id", "ref")
     hit_ways = refs.join(inside, "ref", "left_semi").select(
@@ -414,8 +410,6 @@ def within_distance_join(
     points: DataFrame,
     centers: DataFrame,
     radius_u: int,
-    point_id: str = "id",
-    center_id: str = "center_id",
 ) -> DataFrame:
     """Radius (distance) join: every (center, point) pair with planar
     integer distance² ≤ radius_u² in micro-degree units — the
@@ -428,7 +422,8 @@ def within_distance_join(
     hash-exact across engines (a geodesic variant would swap the final
     filter for haversine and lose oracle bit-parity at the boundary;
     at city radii the planar form is the standard web-mercator-style
-    approximation). Returns (center_id, point_id, d2).
+    approximation). Both sides are (id, lon, lat); returns (center_id,
+    point_id, d2).
 
     Scale shape (the 10^12-point design):
     - the CENTER side is the dimension: each center explodes into the
@@ -457,20 +452,20 @@ def within_distance_join(
     )
     cdim = (
         centers.select(
-            F.col(point_id).alias(center_id),
+            F.col("id").alias("center_id"),
             _micro("lon").alias("_cx_u"),
             _micro("lat").alias("_cy_u"),
         )
         .withColumn("_dx", off)
         .withColumn("_dy", off)
         .select(
-            center_id, "_cx_u", "_cy_u",
+            "center_id", "_cx_u", "_cy_u",
             (fdiv(F.col("_cx_u")) + F.col("_dx")).alias("_gx"),
             (fdiv(F.col("_cy_u")) + F.col("_dy")).alias("_gy"),
         )
     )
     pts = points.select(
-        F.col(point_id).alias("point_id"),
+        F.col("id").alias("point_id"),
         _micro("lon").alias("_px_u"),
         _micro("lat").alias("_py_u"),
     ).select(
@@ -484,7 +479,7 @@ def within_distance_join(
     )
     return (
         pts.join(F.broadcast(cdim), ["_gx", "_gy"])
-        .select(center_id, "point_id", d2.alias("d2"))
+        .select("center_id", "point_id", d2.alias("d2"))
         .where(F.col("d2") <= F.lit(int(radius_u) ** 2))
     )
 

@@ -203,15 +203,13 @@ def pagerank_scaled(
     return r
 
 
-def triangle_census(
-    edges: DataFrame, a_col: str = "a", b_col: str = "b"
-) -> DataFrame:
+def triangle_census(edges: DataFrame) -> DataFrame:
     """Exact per-vertex triangle counts of an undirected graph:
     (host, n_triangles) for every vertex in at least one triangle —
     the classic cohesion signal (spam farms and link rings are
     triangle-dense; editorial link neighborhoods are sparse).
 
-    Input is a directed/duplicated edge list; self-loops drop and
+    Input is a directed/duplicated (a, b) edge list; self-loops drop and
     (a,b)/(b,a) duplicates collapse to one undirected edge first.
 
     Scale shape — degree-ordered orientation (the standard
@@ -226,7 +224,7 @@ def triangle_census(
     order). Per-vertex counts are one explode + map-side-combinable
     count.
     """
-    a, b = F.col(a_col), F.col(b_col)
+    a, b = F.col("a"), F.col("b")
     und = edges.select(
         F.least(a, b).alias("x"), F.greatest(a, b).alias("y")
     )
@@ -279,13 +277,8 @@ def triangle_census(
     )
 
 
-def hits_scores(
-    edges: DataFrame,
-    iters: int = 2,
-    src_col: str = "src",
-    dst_col: str = "dst",
-) -> DataFrame:
-    """HITS hubs & authorities over a directed edge multiset, as
+def hits_scores(edges: DataFrame, iters: int = 2) -> DataFrame:
+    """HITS hubs & authorities over a directed (src, dst) edge multiset, as
     UNNORMALIZED exact-integer power iterations: h_0 = a_0 = 1; then
     per iteration a_t(v) = sum over in-edges (u,v) of h_{t-1}(u) and
     h_t(u) = sum over out-edges (u,v) of a_t(v) — Kleinberg's update
@@ -307,9 +300,7 @@ def hits_scores(
     aggregation per direction (the pagerank shape, twice);
     localCheckpoint bounds lineage.
     """
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    )
+    e = edges.select("src", "dst")
     nodes = (
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))

@@ -58,6 +58,7 @@ from pyspark.sql import functions as F
 from osm_jl_spark.functions.text import tokens_col
 
 _TRI_T = "array<struct<g3:string,g2:string>>"
+BAND_PCTS = (33, 66)  # perplexity_filter's head/middle band percentiles
 
 
 def trigram_ctx_col(text: Column | str) -> Column:
@@ -78,27 +79,20 @@ def trigram_ctx_col(text: Column | str) -> Column:
     )
 
 
-def trigram_stream(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    lang_col: str = "lang",
-    text_col: str = "text",
-) -> DataFrame:
-    """(id, lang, g3, g2) — one row per trigram OCCURRENCE (duplicates
-    kept: counts are the LM statistic). Pure narrow map."""
+def trigram_stream(docs: DataFrame) -> DataFrame:
+    """(id, lang, g3, g2) of (doc_id, lang, text) documents — one row
+    per trigram OCCURRENCE (duplicates kept: counts are the LM
+    statistic). Pure narrow map."""
     return docs.select(
-        F.col(id_col).alias("id"),
-        F.col(lang_col).alias("lang"),
-        F.explode(trigram_ctx_col(text_col)).alias("t"),
+        F.col("doc_id").alias("id"),
+        "lang",
+        F.explode(trigram_ctx_col("text")).alias("t"),
     ).select("id", "lang", F.col("t.g3").alias("g3"),
              F.col("t.g2").alias("g2"))
 
 
 def train_trigram_lm(
     train_docs: DataFrame,
-    id_col: str = "doc_id",
-    lang_col: str = "lang",
-    text_col: str = "text",
     min_count: int = 1,
 ) -> dict[str, DataFrame]:
     """Count statistics for the per-language trigram LM:
@@ -112,7 +106,7 @@ def train_trigram_lm(
       the smoothed distribution normalizes exactly);
     - ``vocab`` (lang, v): distinct training unigrams per language.
     """
-    tris = trigram_stream(train_docs, id_col, lang_col, text_col)
+    tris = trigram_stream(train_docs)
     tri = (
         tris.groupBy("lang", "g3")
         .agg(F.count(F.lit(1)).alias("c3"))
@@ -121,8 +115,8 @@ def train_trigram_lm(
     ctx = tris.groupBy("lang", "g2").agg(F.count(F.lit(1)).alias("c2"))
     vocab = (
         train_docs.select(
-            F.col(lang_col).alias("lang"),
-            F.explode(tokens_col(text_col)).alias("tok"),
+            "lang",
+            F.explode(tokens_col("text")).alias("tok"),
         )
         .groupBy("lang")
         .agg(F.count_distinct("tok").alias("v"))
@@ -133,9 +127,6 @@ def train_trigram_lm(
 def score_docs(
     docs: DataFrame,
     lm: dict[str, DataFrame],
-    id_col: str = "doc_id",
-    lang_col: str = "lang",
-    text_col: str = "text",
 ) -> DataFrame:
     """(id, lang, n_tri, bits, bpt_milli) per document with >= 1
     trigram: total quantized surprisal, trigram count, and the
@@ -146,7 +137,7 @@ def score_docs(
     corpus-sized side — stays unshuffled until the single per-doc
     aggregation.
     """
-    tris = trigram_stream(docs, id_col, lang_col, text_col)
+    tris = trigram_stream(docs)
     j = (
         tris.join(F.broadcast(lm["tri"]), ["lang", "g3"], "left")
         .join(F.broadcast(lm["ctx"]), ["lang", "g2"], "left")
@@ -178,22 +169,14 @@ def score_docs(
     )
 
 
-def perplexity_filter(
-    docs: DataFrame,
-    train_docs: DataFrame | None = None,
-    id_col: str = "doc_id",
-    lang_col: str = "lang",
-    text_col: str = "text",
-    min_count: int = 1,
-    band_pcts: tuple[int, int] = (33, 66),
-) -> DataFrame:
-    """The full CCNet-style pipeline: train on ``train_docs`` (default
-    the even-``id_col`` half of ``docs`` — a deterministic split so
-    held-out scoring exercises the unseen-trigram path), score every
-    doc, and band per language by exact bpt_milli quantiles:
+def perplexity_filter(docs: DataFrame, min_count: int = 1) -> DataFrame:
+    """The full CCNet-style pipeline: train on the even-``doc_id`` half
+    of ``docs`` (a deterministic split so held-out scoring exercises
+    the unseen-trigram path), score every doc, and band per language
+    by exact bpt_milli quantiles:
 
-        head   bpt_milli <= q(band_pcts[0])
-        middle bpt_milli <= q(band_pcts[1])
+        head   bpt_milli <= q(BAND_PCTS[0])
+        middle bpt_milli <= q(BAND_PCTS[1])
         tail   otherwise
 
     ``keep`` = 1 for head+middle (CCNet keeps the low-perplexity
@@ -204,13 +187,11 @@ def perplexity_filter(
     """
     from osm_jl_spark.operators.stats import group_quantiles_exact
 
-    if train_docs is None:
-        train_docs = docs.where(F.col(id_col) % 2 == 0)
     lm = train_trigram_lm(
-        train_docs, id_col, lang_col, text_col, min_count=min_count
+        docs.where(F.col("doc_id") % 2 == 0), min_count=min_count
     )
-    scored = score_docs(docs, lm, id_col, lang_col, text_col)
-    lo, hi = band_pcts
+    scored = score_docs(docs, lm)
+    lo, hi = BAND_PCTS
     qs = group_quantiles_exact(scored, "lang", "bpt_milli", [lo, hi])
     thr = qs.groupBy("lang").agg(
         F.min(F.when(F.col("pct") == lo, F.col("q"))).alias("q_lo"),

@@ -27,6 +27,7 @@ FEATURE_SCHEMA = (
     "media_id BIGINT, kind STRING, feat ARRAY<DOUBLE>, "
     "out_width INT, out_height INT"
 )
+FEATURE_SIZE = (8, 8)  # (width, height) of the block-mean feature grid
 
 
 def _fake_decode_image(payload: bytes, width: int, height: int) -> np.ndarray:
@@ -40,18 +41,15 @@ def _fake_decode_image(payload: bytes, width: int, height: int) -> np.ndarray:
     return np.tile(seed, reps)[:n].reshape(height, width) / 255.0
 
 
-def decode_and_featurize(
-    media: DataFrame,
-    out_size: tuple[int, int] = (8, 8),
-    batch_hint: int = 1024,
-) -> DataFrame:
+def decode_and_featurize(media: DataFrame) -> DataFrame:
     """media table -> per-item feature vectors via mapInPandas.
 
-    The resize is a real block-mean downsample (numpy); only the codec
-    byte->pixels step is the deterministic fake. Batches stream through
-    Arrow; nothing materializes a whole partition in memory.
+    The resize is a real block-mean downsample (numpy) to
+    ``FEATURE_SIZE``; only the codec byte->pixels step is the
+    deterministic fake. Batches stream through Arrow; nothing
+    materializes a whole partition in memory.
     """
-    ow, oh = out_size
+    ow, oh = FEATURE_SIZE
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -27,34 +27,32 @@ from pyspark.sql import functions as F
 from osm_jl_spark.functions.text import token_count_col
 from osm_jl_spark.operators.sampling import HASH_SPACE, _rank_hash
 
+PACK_BUCKETS = 1024  # rows of pack_sequences' bucket table
 
-def pack_sequences(
-    docs: DataFrame,
-    budget: int,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    buckets: int = 1024,
-) -> DataFrame:
-    """(id, n_tokens, tok_offset, seq_id): lay the corpus out in the
+
+def pack_sequences(docs: DataFrame, budget: int) -> DataFrame:
+    """(doc_id, n_tokens, tok_offset, seq_id) of (doc_id, text)
+    documents: lay the corpus out in the
     deterministic hash-rank order, give each doc its exclusive
     cumulative token offset, and assign it to the fixed-``budget``
     training sequence its first token lands in (greedy concatenation
     — docs may straddle a boundary, exactly like pretraining packing
     before the split step).
 
-    ``buckets`` bounds the single-partition work: the global scan
-    touches one B-row table, never the corpus. With B=8192 and 10^12
-    docs, the heaviest window partition is corpus/B docs — tune B to
-    the cluster, the result is identical for any B (pinned by tests).
+    ``PACK_BUCKETS`` (B) bounds the single-partition work: the global
+    scan touches one B-row table, never the corpus. With B=8192 and
+    10^12 docs, the heaviest window partition is corpus/B docs — tune
+    B to the cluster, the result is identical for any B (pinned by
+    tests).
     """
-    width = HASH_SPACE // buckets
+    width = HASH_SPACE // PACK_BUCKETS
     # rk is a Generate output (a one-element explode), so the join's
     # inferred isnotnull(bucket) filter reads it instead of running
     # md5 a second time per doc below the Project
     d = docs.select(
-        F.col(id_col).alias("id"),
-        token_count_col(text_col).cast("long").alias("n_tokens"),
-        F.explode(F.array(_rank_hash(id_col))).alias("rk"),
+        F.col("doc_id").alias("id"),
+        token_count_col("text").cast("long").alias("n_tokens"),
+        F.explode(F.array(_rank_hash())).alias("rk"),
     ).withColumn("bucket", (F.col("rk") / F.lit(width)).cast("long"))
 
     bsums = d.groupBy("bucket").agg(F.sum("n_tokens").alias("bsum"))
@@ -84,7 +82,7 @@ def pack_sequences(
             ).cast("long"),
         )
         .select(
-            F.col("id").alias(id_col),
+            F.col("id").alias("doc_id"),
             "n_tokens",
             "tok_offset",
             F.expr(f"tok_offset DIV {int(budget)}").alias("seq_id"),

@@ -42,13 +42,14 @@ def _explode_points(pages: DataFrame, text: Column) -> DataFrame:
     ).selectExpr("url", "pt_idx", "p.lon AS lon", "p.lat AS lat")
 
 
-def geoparse_points(pages: DataFrame, text_col: str = "text") -> DataFrame:
-    """(url, pt_idx, lon, lat): ordered coordinate mentions per page.
+def geoparse_points(pages: DataFrame) -> DataFrame:
+    """(url, pt_idx, lon, lat): ordered coordinate mentions of each
+    page's ``text``.
 
     NATIVE kernel (functions/text.geoparse_col): the regex runs in
     whole-stage codegen and the text column never crosses into Python.
     Equality with oracle.geoparse is pinned by tests/test_text.py."""
-    return _explode_points(pages, F.col(text_col))
+    return _explode_points(pages, F.col("text"))
 
 
 def geoparse_points_from_html(pages: DataFrame) -> DataFrame:

@@ -11,6 +11,9 @@ map-side combine and AQE-sized shuffles for free.
 Composite per-row RULESETS (gopher_quality) also live here: they stay
 narrow maps, but they return a signal table + verdict rather than one
 Column, so their natural surface is a DataFrame operator.
+
+Every operator reads (doc_id, text) documents and keys its output on
+doc_id.
 """
 
 from __future__ import annotations
@@ -26,20 +29,23 @@ from osm_jl_spark.functions.text import ngrams_col, tokens_col
 # robustness).
 GOPHER_STOPWORDS = ("the", "a", "and", "of", "to", "be", "that", "with")
 
+# Gopher rule thresholds (Rae et al. 2021 §A1.1): ``keep`` needs
+# n_words in [GOPHER_MIN_WORDS, GOPHER_MAX_WORDS], mean word length in
+# [GOPHER_MIN_MEAN_WORD_LEN, GOPHER_MAX_MEAN_WORD_LEN], every ratio on
+# the right side of its bound and >= GOPHER_MIN_STOP_HITS stopwords.
+GOPHER_MIN_WORDS = 50
+GOPHER_MAX_WORDS = 100_000
+GOPHER_MIN_MEAN_WORD_LEN = 3.0
+GOPHER_MAX_MEAN_WORD_LEN = 10.0
+GOPHER_MAX_SYMBOL_RATIO = 0.1
+GOPHER_MAX_BULLET_FRAC = 0.9
+GOPHER_MAX_ELLIPSIS_FRAC = 0.3
+GOPHER_MIN_ALPHA_FRAC = 0.8
+GOPHER_MIN_STOP_HITS = 2
+
 
 def gopher_quality(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_words: int = 50,
-    max_words: int = 100_000,
-    min_mean_word_len: float = 3.0,
-    max_mean_word_len: float = 10.0,
-    max_symbol_ratio: float = 0.1,
-    max_bullet_frac: float = 0.9,
-    max_ellipsis_frac: float = 0.3,
-    min_alpha_frac: float = 0.8,
-    min_stop_hits: int = 2,
     keep_cols: list[str] | None = None,
 ) -> DataFrame:
     """Gopher-style composite document-quality filter (Rae et al. 2021
@@ -67,7 +73,7 @@ def gopher_quality(
     Ratios guard n_words = 0 / n_lines = 0 to NULL (no text ⇒ no
     signal ⇒ keep = false via NULL-safe conjunction).
     """
-    text = F.col(text_col)
+    text = F.col("text")
     lines = F.split(text, "\n")
     words = F.filter(F.split(text, r"\s+"), lambda w: w != F.lit(""))
     n_words = F.size(words)
@@ -94,7 +100,7 @@ def gopher_quality(
     guard = n_words > 0
     lguard = n_lines > 0
     sig = docs.select(
-        F.col(id_col),
+        "doc_id",
         *[F.col(c) for c in keep_cols or []],
         n_words.cast("long").alias("n_words"),
         F.when(guard, wchars / n_words).alias("mean_word_len"),
@@ -105,25 +111,20 @@ def gopher_quality(
         stop_hits.cast("long").alias("stop_hits"),
     )
     keep = (
-        F.col("n_words").between(min_words, max_words)
-        & F.col("mean_word_len").between(min_mean_word_len,
-                                         max_mean_word_len)
-        & (F.col("symbol_ratio") < max_symbol_ratio)
-        & (F.col("bullet_frac") < max_bullet_frac)
-        & (F.col("ellipsis_frac") < max_ellipsis_frac)
-        & (F.col("alpha_frac") > min_alpha_frac)
-        & (F.col("stop_hits") >= min_stop_hits)
+        F.col("n_words").between(GOPHER_MIN_WORDS, GOPHER_MAX_WORDS)
+        & F.col("mean_word_len").between(GOPHER_MIN_MEAN_WORD_LEN,
+                                         GOPHER_MAX_MEAN_WORD_LEN)
+        & (F.col("symbol_ratio") < GOPHER_MAX_SYMBOL_RATIO)
+        & (F.col("bullet_frac") < GOPHER_MAX_BULLET_FRAC)
+        & (F.col("ellipsis_frac") < GOPHER_MAX_ELLIPSIS_FRAC)
+        & (F.col("alpha_frac") > GOPHER_MIN_ALPHA_FRAC)
+        & (F.col("stop_hits") >= GOPHER_MIN_STOP_HITS)
     )
     return sig.withColumn("keep", F.coalesce(keep, F.lit(False)))
 
 
-def repetition_scores(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 2,
-) -> DataFrame:
-    """(id, top_ngram_count, ngram_total, repetition_ratio): the share
+def repetition_scores(docs: DataFrame, n: int = 2) -> DataFrame:
+    """(doc_id, top_ngram_count, ngram_total, repetition_ratio): the share
     of the document's word ``n``-grams taken by its single most
     frequent n-gram — the standard boilerplate/spam signal (a page
     that repeats one phrase scores near 1; clean prose scores low).
@@ -137,8 +138,8 @@ def repetition_scores(
     possible group is one document's own gram list.
     """
     grams = docs.select(
-        F.col(id_col).alias("id"),
-        F.explode(ngrams_col(text_col, n)).alias("gram"),
+        F.col("doc_id").alias("id"),
+        F.explode(ngrams_col("text", n)).alias("gram"),
     )
     counts = grams.groupBy("id", "gram").agg(
         F.count(F.lit(1)).alias("c")
@@ -150,7 +151,7 @@ def repetition_scores(
             F.sum("c").alias("ngram_total"),
         )
         .select(
-            F.col("id").alias(id_col),
+            F.col("id").alias("doc_id"),
             "top_ngram_count",
             F.col("ngram_total").cast("long").alias("ngram_total"),
             (F.col("top_ngram_count") / F.col("ngram_total"))
@@ -159,11 +160,7 @@ def repetition_scores(
     )
 
 
-def doc_repetition(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def doc_repetition(docs: DataFrame) -> DataFrame:
     """Within-document line-repetition signals (the second half of the
     Gopher repetition family; ``repetition_scores`` covers the n-gram
     half): per document, ``dup_line_frac`` = lines that are repeats of
@@ -181,9 +178,9 @@ def doc_repetition(
     division — bit-equal across engines.
     """
     lines = docs.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         F.explode(
-            F.filter(F.split(text_col, "\n"), lambda l: l != F.lit(""))
+            F.filter(F.split("text", "\n"), lambda l: l != F.lit(""))
         ).alias("line"),
     )
     per = lines.groupBy("id", "line").agg(F.count(F.lit(1)).alias("c"))
@@ -196,7 +193,7 @@ def doc_repetition(
         .alias("chars_dup"),
     )
     return agg.select(
-        F.col("id").alias(id_col),
+        F.col("id").alias("doc_id"),
         F.col("n_lines").cast("long").alias("n_lines"),
         ((F.col("n_lines") - F.col("n_distinct")) / F.col("n_lines"))
         .alias("dup_line_frac"),
@@ -205,13 +202,8 @@ def doc_repetition(
     )
 
 
-def tfidf_top_terms(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    top: int = 3,
-) -> DataFrame:
-    """(id, token, tf, df, score, rk): each document's ``top``
+def tfidf_top_terms(docs: DataFrame, top: int = 3) -> DataFrame:
+    """(doc_id, token, tf, df, score, rk): each document's ``top``
     characteristic terms by tf·N/df — the log-free tf-idf variant, on
     purpose: tf·N is exact BIGINT and the score is then ONE float
     division, so rankings are bit-reproducible across engines and
@@ -226,8 +218,8 @@ def tfidf_top_terms(
     per-corpus vocabulary.
     """
     toks = docs.select(
-        F.col(id_col).alias("id"),
-        F.explode(tokens_col(text_col)).alias("token"),
+        F.col("doc_id").alias("id"),
+        F.explode(tokens_col("text")).alias("token"),
     )
     tf = toks.groupBy("id", "token").agg(F.count(F.lit(1)).alias("tf"))
     dfreq = tf.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
@@ -244,7 +236,7 @@ def tfidf_top_terms(
         scored.withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= top)
         .select(
-            F.col("id").alias(id_col),
+            F.col("id").alias("doc_id"),
             "token",
             "tf",
             "df",

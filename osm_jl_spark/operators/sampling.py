@@ -4,7 +4,7 @@ Training corpora need REPRODUCIBLE sampling — the same doc set must
 come out on every rerun, on any cluster size, after any repartition.
 `df.sample()` gives none of that (seed is per-partition-split), so
 both operators here derive keep/rank decisions from a content hash of
-the row's id: pure column math, no RNG, no state.
+the row's ``doc_id``: pure column math, no RNG, no state.
 
 Cross-engine note: ranks/thresholds use the md5-hex prefix trick from
 operators/dedup.py (`_hash60`) so a DuckDB oracle reproduces the
@@ -20,17 +20,15 @@ from pyspark.sql import functions as F
 HASH_SPACE = 1 << 60
 
 
-def _rank_hash(id_col: str):
-    """60-bit uniform hash of the id's decimal string — identical in
+def _rank_hash():
+    """60-bit uniform hash of the ``doc_id``'s decimal string — identical in
     DuckDB: CAST('0x'||substr(md5(CAST(id AS VARCHAR)),1,15) AS BIGINT).
     """
-    s = F.col(id_col).cast("string")
+    s = F.col("doc_id").cast("string")
     return F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long")
 
 
-def hash_sample(
-    df: DataFrame, fraction: float, id_col: str = "doc_id"
-) -> DataFrame:
+def hash_sample(df: DataFrame, fraction: float) -> DataFrame:
     """Keep a deterministic ~``fraction`` of rows: hash(id) < f·2^60.
 
     This is the ONLY sampler that scales without cost: a narrow
@@ -41,15 +39,15 @@ def hash_sample(
     sample is a strict subset of a 10% sample (nested samples — the
     property ablation studies need).
     """
-    return df.filter(_rank_hash(id_col) < int(fraction * HASH_SPACE))
+    return df.filter(_rank_hash() < int(fraction * HASH_SPACE))
 
 
 def stratified_sample(
-    df: DataFrame, strata_cols: list[str], k: int, id_col: str = "doc_id"
+    df: DataFrame, strata_cols: list[str], k: int
 ) -> DataFrame:
     """Exactly ``k`` rows per stratum (fewer if the stratum is small),
     chosen by hash rank — deterministic across reruns and cluster
-    sizes, with ``id_col`` as the total-order tie-break.
+    sizes, with ``doc_id`` as the total-order tie-break.
 
     Plan: one shuffle on the strata key + a rank window. Right when
     strata counts are dimension-sized (languages, sources, buckets);
@@ -58,7 +56,7 @@ def stratified_sample(
     :func:`hash_sample` after a stratum filter instead.
     """
     w = Window.partitionBy(*strata_cols).orderBy(
-        _rank_hash(id_col).asc(), F.col(id_col).asc()
+        _rank_hash().asc(), F.col("doc_id").asc()
     )
     return (
         df.withColumn("__rk", F.row_number().over(w))
@@ -67,50 +65,32 @@ def stratified_sample(
     )
 
 
-def temperature_sample(
-    df: DataFrame,
-    lang_col: str = "lang",
-    alpha: float = 0.5,
-    id_col: str = "doc_id",
-) -> DataFrame:
+def temperature_sample(df: DataFrame) -> DataFrame:
     """Temperature-based multilingual rebalancing (the XLM-R/mT5
-    sampler): keep language ``l`` with probability proportional to
-    ``n_l^alpha / n_l``, scaled so the largest resulting rate is 1 —
-    low-resource languages keep (nearly) everything, the head
-    language downsamples toward the ``alpha``-tempered distribution.
-    ``alpha=1`` keeps everything; ``alpha=0`` equalizes expected
-    per-language counts (to the smallest language's size).
+    sampler) at temperature alpha = 0.5: keep ``lang`` ``l`` with
+    probability proportional to ``n_l^0.5 / n_l``, scaled so the
+    largest resulting rate is 1 — low-resource languages keep (nearly)
+    everything, the head language downsamples toward the tempered
+    distribution.
 
-    Determinism/exactness contract: membership is hash(id) <
+    Determinism/exactness contract: membership is hash(doc_id) <
     trunc(p_l * 2^60) — the same 60-bit md5 rank as
     :func:`hash_sample`, so the sample is reproducible across reruns
-    and partitionings AND bit-identical in a DuckDB oracle. For the
-    default ``alpha=0.5``, p_l = (sqrt(n_l)/n_l) / max_m(...) uses
-    only IEEE-correctly-rounded ops (sqrt, divide, multiply), so both
-    engines compute the identical threshold from identical counts —
-    no float tolerance anywhere. Non-(0.5|1|0) alphas use pow(), which
-    is NOT correctly rounded across libms; the oracle-checked query
-    pins alpha=0.5 and the docstring warns general alphas are
-    deterministic within one engine only.
+    and partitionings AND bit-identical in a DuckDB oracle:
+    p_l = (sqrt(n_l)/n_l) / max_m(...) uses only IEEE-correctly-rounded
+    ops (sqrt, divide, multiply), so both engines compute the identical
+    threshold from identical counts — no float tolerance anywhere (a
+    general alpha would need pow(), which is NOT correctly rounded
+    across libms).
 
     Plan: one map-side-combinable count per language (dimension-
     sized), thresholds broadcast back, then the same zero-shuffle
     narrow keep-filter as hash_sample — the 100 TB side never
     shuffles.
     """
-    if alpha == 1.0:
-        w_over_n = F.lit(1.0)
-    elif alpha == 0.5:
-        w_over_n = F.sqrt(F.col("n").cast("double")) / F.col("n")
-    elif alpha == 0.0:
-        w_over_n = F.lit(1.0) / F.col("n")
-    else:
-        w_over_n = (
-            F.pow(F.col("n").cast("double"), F.lit(float(alpha)))
-            / F.col("n")
-        )
+    w_over_n = F.sqrt(F.col("n").cast("double")) / F.col("n")
     rates = (
-        df.groupBy(F.col(lang_col).alias("_lang"))
+        df.groupBy(F.col("lang").alias("_lang"))
         .agg(F.count(F.lit(1)).alias("n"))
         .withColumn("_r", w_over_n)
     )
@@ -128,8 +108,8 @@ def temperature_sample(
     return (
         df.join(
             F.broadcast(thresholds),
-            df[lang_col] == thresholds["_lang"],
+            df["lang"] == thresholds["_lang"],
         )
-        .filter(_rank_hash(id_col) < F.col("_thr"))
+        .filter(_rank_hash() < F.col("_thr"))
         .drop("_lang", "_thr")
     )

@@ -10,12 +10,20 @@ Two paths:
   from hashed sample vectors), search only the ``nprobe`` closest
   centroids' buckets. At 10^12 rows the bucket assignment is the
   partition key, so a query touches nprobe partitions instead of N.
+
+Corpora are (vec_id, embedding) and query sets (query_id, qvec), the
+schema the registry feeds.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+SEMDEDUP_THRESHOLD = 0.95  # cosine at or above which a pair is a near-dup
+CENTROID_STEP = 125  # semdedup's default medoids: ids divisible by this
+PQ_SUBSPACES = 8  # pq_train_codebooks: m subspaces
+PQ_CODEWORDS = 16  # pq_train_codebooks: k codewords per subspace
 
 
 def _dot(a, b):
@@ -31,10 +39,6 @@ def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    qid_col: str = "query_id",
-    qvec_col: str = "qvec",
     rank_round: int | None = None,
 ) -> DataFrame:
     """Exact cosine top-k: (query_id, neighbor_id, rank, cosine).
@@ -44,14 +48,14 @@ def cosine_topk(
     reproducible ordering for oracle comparison).
     """
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("v"),
-        _norm(F.col(vec_col)).alias("vn"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("v"),
+        _norm(F.col("embedding")).alias("vn"),
     )
     q = queries.select(
-        F.col(qid_col).alias("query_id"),
-        F.col(qvec_col).alias("qv"),
-        _norm(F.col(qvec_col)).alias("qn"),
+        "query_id",
+        F.col("qvec").alias("qv"),
+        _norm(F.col("qvec")).alias("qn"),
     )
     scored = c.crossJoin(F.broadcast(q)).withColumn(
         "cosine", _dot(F.col("v"), F.col("qv")) / (F.col("vn") * F.col("qn"))
@@ -102,8 +106,6 @@ def _group_means(df: DataFrame, g_col: str, vec_col: str) -> dict[int, list[floa
 def build_ivf(
     corpus: DataFrame,
     n_centroids: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     refine: int = 0,
 ) -> tuple[DataFrame, list[list[float]]]:
     """Deterministic IVF index: centroids seeded as the means of
@@ -124,21 +126,21 @@ def build_ivf(
     so probes prune partitions.
     """
     seeded = corpus.withColumn(
-        "_g", F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_centroids))
+        "_g", F.pmod(F.xxhash64(F.col("vec_id")), F.lit(n_centroids))
     )
-    means = _group_means(seeded, "_g", vec_col)
+    means = _group_means(seeded, "_g", "embedding")
     centroids = [means[g] for g in sorted(means)]
     for _ in range(refine):
         assigned = corpus.withColumn(
-            "_g", _nearest_centroid(F.col(vec_col), centroids)["c"]
+            "_g", _nearest_centroid(F.col("embedding"), centroids)["c"]
         )
-        means = _group_means(assigned, "_g", vec_col)
+        means = _group_means(assigned, "_g", "embedding")
         centroids = [
             means.get(ci, centroids[ci]) for ci in range(len(centroids))
         ]
     assigned = corpus.withColumn(
         "bucket",
-        _nearest_centroid(F.col(vec_col), centroids)["c"].cast("int"),
+        _nearest_centroid(F.col("embedding"), centroids)["c"].cast("int"),
     )
     return assigned, centroids
 
@@ -149,10 +151,6 @@ def ivf_topk(
     queries: DataFrame,
     k: int = 5,
     nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    qid_col: str = "query_id",
-    qvec_col: str = "qvec",
     rank_round: int | None = None,
 ) -> DataFrame:
     """Approximate cosine top-k probing only the nprobe nearest
@@ -182,8 +180,8 @@ def ivf_topk(
         return F.when(n == 0.0, F.lit(1.0)).otherwise(n)
 
     qc = queries.select(
-        F.col(qid_col).alias("query_id"),
-        F.col(qvec_col).cast("array<double>").alias("qv"),
+        "query_id",
+        F.col("qvec").cast("array<double>").alias("qv"),
     ).withColumn("_c", F.explode(cent_lit))
     ccos = _dot(F.col("qv"), F.col("_c.cv")) / (
         _safe_norm(F.col("qv")) * _safe_norm(F.col("_c.cv"))
@@ -198,8 +196,8 @@ def ivf_topk(
         .select("query_id", F.col("_c.c").alias("bucket"), "qv")
     )
     cand = assigned.join(F.broadcast(probes), "bucket", "inner")
-    cos = _dot(F.col(vec_col), F.col("qv")) / (
-        _norm(F.col(vec_col)) * _norm(F.col("qv"))
+    cos = _dot(F.col("embedding"), F.col("qv")) / (
+        _norm(F.col("embedding")) * _norm(F.col("qv"))
     )
     rank_key = (
         F.round(F.col("cosine"), rank_round) if rank_round is not None
@@ -212,7 +210,7 @@ def ivf_topk(
         cand.withColumn("cosine", cos)
         .select(
             "query_id",
-            F.col(id_col).alias("neighbor_id"),
+            F.col("vec_id").alias("neighbor_id"),
             "cosine",
         )
         .withColumn("rank", F.row_number().over(w))
@@ -223,10 +221,6 @@ def ivf_topk(
 
 def semdedup(
     corpus: DataFrame,
-    centroid_step: int = 125,
-    threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     centroids: DataFrame | None = None,
 ) -> DataFrame:
     """SemDeDup-style semantic dedup (Abbas et al. 2023): cluster the
@@ -235,14 +229,15 @@ def semdedup(
     search, which is the whole point of the method at corpus scale.
     Returns (id, cluster, keep): ``cluster`` is the assigned medoid's
     id, ``keep`` = false iff SOME lower-id vector in the same cluster
-    is a near-duplicate (the deterministic stand-in for the paper's
-    keep-one-representative policy: the lowest id of every duplicate
-    group always survives).
+    is a near-duplicate (cosine >= ``SEMDEDUP_THRESHOLD``; the
+    deterministic stand-in for the paper's keep-one-representative
+    policy: the lowest id of every duplicate group always survives).
 
     Determinism / oracle story (unlike ``build_ivf``'s Lloyd means,
     which are float averages and therefore ulp-fragile across
     engines): centroids here are MEDOIDS — the actual stored vectors
-    of ids divisible by ``centroid_step`` — and every distance is a
+    of ids divisible by ``CENTROID_STEP`` unless ``centroids`` are
+    given — and every distance is a
     LEFT-TO-RIGHT ``F.aggregate`` fold, which DuckDB reproduces
     bit-exactly with ``list_reduce`` over the identical stored
     doubles. Assignment argmin ties break on centroid id. No rounding
@@ -250,8 +245,8 @@ def semdedup(
     policy exactly (query ``semdedup_clusters``).
 
     Scale shape (10^12 rows): the medoid table is a broadcast
-    dimension (corpus/centroid_step rows — pick the step so it stays
-    one); assignment is the broadcast cross product + ONE
+    dimension (corpus/CENTROID_STEP rows — pick the medoids so it
+    stays one); assignment is the broadcast cross product + ONE
     map-side-combinable min_by shuffle on the uniform vector id; the
     pair search self-joins ON THE CLUSTER KEY, so each task's
     candidate set is one cluster's rows (raise the centroid count to
@@ -262,10 +257,10 @@ def semdedup(
         # default medoid pick: ids divisible by the step (callers with
         # a curated medoid set — k-means++ seeds, per-shard samples —
         # pass it explicitly)
-        centroids = corpus.where(F.col(id_col) % centroid_step == 0)
+        centroids = corpus.where(F.col("vec_id") % CENTROID_STEP == 0)
     cents = F.broadcast(
         centroids.select(
-            F.col(id_col).alias("_cid"), F.col(vec_col).alias("_cv")
+            F.col("vec_id").alias("_cid"), F.col("embedding").alias("_cv")
         )
     )
     d2 = F.aggregate(
@@ -274,7 +269,8 @@ def semdedup(
         F.lit(0.0), lambda acc, v: acc + v,
     )
     assigned = (
-        corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
+        corpus.select(F.col("vec_id").alias("id"),
+                      F.col("embedding").alias("v"))
         .crossJoin(cents)
         .select("id", "v", F.struct(d2.alias("d"), F.col("_cid").alias("c"),
                                     ).alias("_dc"))
@@ -303,7 +299,7 @@ def semdedup(
     pairs = (
         a.join(b, "cluster")
         .where(F.col("id_a") < F.col("id_b"))
-        .where(dot / safe_den >= F.lit(float(threshold)))
+        .where(dot / safe_den >= F.lit(SEMDEDUP_THRESHOLD))
         .select("cluster", "id_a", "id_b")
     )
     dropped = pairs.select(F.col("id_b").alias("id")).distinct()
@@ -335,28 +331,26 @@ def pq_codebooks_from_samples(
 
 def pq_train_codebooks(
     corpus: DataFrame,
-    m: int = 8,
-    k: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     refine: int = 0,
 ) -> list[list[list[float]]]:
-    """Trained PQ codebooks: per subspace, ``k`` centroids seeded as
+    """Trained PQ codebooks: per each of ``PQ_SUBSPACES`` subspaces,
+    ``PQ_CODEWORDS`` centroids seeded as
     hash-group means of the sub-vectors (per-subspace hash salt so
     subspaces seed independently), then ``refine`` Lloyd iterations —
     the identical deterministic machinery as :func:`build_ivf`, run m
     times on slices. Per-subspace distortion is non-increasing in
     ``refine`` (pinned in tests/test_pq.py). Driver transfer per
     iteration is the m*k*(d/m) = k*d codeword table — fixed size."""
-    n_dim = len(corpus.select(vec_col).first()[0])
+    m, k = PQ_SUBSPACES, PQ_CODEWORDS
+    n_dim = len(corpus.select("embedding").first()[0])
     if n_dim % m:
         raise ValueError(f"dim {n_dim} not divisible by m={m} subspaces")
     s = n_dim // m
     books: list[list[list[float]]] = []
     for j in range(m):
         sub = corpus.select(
-            F.col(id_col).alias("id"),
-            F.slice(F.col(vec_col).cast("array<double>"),
+            F.col("vec_id").alias("id"),
+            F.slice(F.col("embedding").cast("array<double>"),
                     j * s + 1, s).alias("sv"),
         )
         seeded = sub.withColumn(
@@ -405,8 +399,6 @@ def _argmin_codeword(sub_col, codebook_j: list[list[float]]):
 def pq_encode(
     corpus: DataFrame,
     codebooks: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """(id, codes ARRAY<INT>): each vector compressed to m subspace
     codeword ids — d floats become m small ints (16x at d=64, m=8,
@@ -418,14 +410,14 @@ def pq_encode(
     the codes column is what ships to the ANN serving tier; raw
     vectors stay in cold storage."""
     s = len(codebooks[0][0])
-    v = F.col(vec_col).cast("array<double>")
+    v = F.col("embedding").cast("array<double>")
     codes = F.array(*[
         _argmin_codeword(F.slice(v, j * s + 1, s), codebooks[j])["c"]
         .cast("int")
         for j in range(len(codebooks))
     ])
     return corpus.select(
-        F.col(id_col).alias("id"), codes.alias("codes")
+        F.col("vec_id").alias("id"), codes.alias("codes")
     )
 
 
@@ -434,8 +426,6 @@ def pq_adc_topk(
     codebooks: list[list[list[float]]],
     queries: DataFrame,
     k: int = 5,
-    qid_col: str = "query_id",
-    qvec_col: str = "qvec",
 ) -> DataFrame:
     """Asymmetric-distance top-k over PQ codes: for each query,
     d2_adc = sum_j ||q_j - codeword(j, codes[j])||² — the exact
@@ -481,8 +471,8 @@ def pq_adc_topk(
 
     dtab = F.array(*[dtab_sub(j) for j in range(mm)])
     q = queries.select(
-        F.col(qid_col).alias("query_id"),
-        F.col(qvec_col).cast("array<double>").alias("qv"),
+        "query_id",
+        F.col("qvec").cast("array<double>").alias("qv"),
     ).withColumn("_dtab", dtab).drop("qv")
     paired = codes.crossJoin(F.broadcast(q))
 

@@ -62,20 +62,15 @@ def _dp_keep_indices(xs: list[int], ys: list[int], eps2: int) -> list[int]:
     return sorted(kept)
 
 
-def simplify_ways(
-    geoms: DataFrame,
-    epsilon_u: int,
-    id_col: str = "way_id",
-    coords_col: str = "coords",
-) -> DataFrame:
+def simplify_ways(geoms: DataFrame, epsilon_u: int) -> DataFrame:
     """(way_id, idx, lon_u, lat_u): the Douglas-Peucker-kept points of
     each way, ``idx`` = 0-based position in the ORIGINAL node order,
     coordinates in exact 1e-5-degree integers. ``epsilon_u`` is the
     deviation tolerance in the same integer unit.
 
-    Input is ``way_geometries`` output (one row per way, pos-ordered
-    coord array) — the UDF sees whole ways, so the plan adds NO
-    exchange over the J1 regroup; the Arrow batch carries a few
+    Input is ``way_geometries`` output (way_id, coords: one row per
+    way, pos-ordered coord array) — the UDF sees whole ways, so the
+    plan adds NO exchange over the J1 regroup; the Arrow batch carries a few
     thousand ways at a time and each DP is O(n log n) expected on its
     own way only. Guarantee (pinned in tests): every dropped point
     lies within epsilon of the kept chain's covering segment.
@@ -95,9 +90,9 @@ def simplify_ways(
             ]
         )
 
-    pts = F.col(coords_col)
+    pts = F.col("coords")
     with_u = geoms.select(
-        F.col(id_col),
+        "way_id",
         F.transform(
             pts, lambda c: F.round(c["lon"] * 100000).cast("long")
         ).alias("xs"),
@@ -107,12 +102,12 @@ def simplify_ways(
     )
     kept = with_u.withColumn("kept", dp_keep("xs", "ys"))
     return kept.select(
-        id_col,
+        "way_id",
         F.explode("kept").alias("idx"),
         "xs",
         "ys",
     ).select(
-        id_col,
+        "way_id",
         F.col("idx").cast("long").alias("idx"),
         F.element_at("xs", F.col("idx") + 1).alias("lon_u"),
         F.element_at("ys", F.col("idx") + 1).alias("lat_u"),

@@ -35,6 +35,8 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+QUANTILE_ACCURACY = 10_000  # percentile_approx accuracy of the sketch path
+
 
 def group_quantiles_exact(
     df: DataFrame,
@@ -78,18 +80,18 @@ def group_quantiles_approx(
     group_col: str,
     value: Column | str,
     pcts: Sequence[int],
-    accuracy: int = 10_000,
 ) -> DataFrame:
     """(group, pct, q): the one-pass sketch path for unbounded value
     domains — `percentile_approx` with a fixed-size state per group
-    (no histogram materialization, rank error <= 1/accuracy of n).
+    (no histogram materialization, rank error <= 1/QUANTILE_ACCURACY
+    of n).
     Same output shape as :func:`group_quantiles_exact` so callers can
     swap paths by cardinality.
     """
     v = F.col(value) if isinstance(value, str) else value
     fracs = F.array(*[F.lit(int(p) / 100.0) for p in pcts])
     agg = df.groupBy(group_col).agg(
-        F.percentile_approx(v, fracs, F.lit(accuracy)).alias("_qs")
+        F.percentile_approx(v, fracs, F.lit(QUANTILE_ACCURACY)).alias("_qs")
     )
     pct_arr = F.array(*[F.lit(int(p)) for p in pcts])
     pairs = F.arrays_zip(pct_arr, F.col("_qs"))

@@ -151,7 +151,6 @@ def interval_join(
     start: str,
     end: str,
     bucket_sec: int = 86_400,
-    broadcast_intervals: bool = True,
 ) -> DataFrame:
     """Containment join: every (fact, interval) pair with
     ``start <= fact.ts < end`` (half-open; all three columns are epoch
@@ -169,13 +168,11 @@ def interval_join(
 
     ``bucket_sec`` trades cover size against candidate density —
     choose it near the typical interval length (each interval then
-    explodes into ~2 rows). ``broadcast_intervals=True`` (dimensions
-    like campaign windows, outage ranges, policy epochs): the fact
-    side NEVER shuffles. For interval tables too large to broadcast,
-    pass False and both sides shuffle on the bucket key — still
-    equi-join, never a nested loop.
+    explodes into ~2 rows). The intervals are a broadcast dimension
+    (campaign windows, outage ranges, policy epochs): the fact side
+    NEVER shuffles.
     """
-    cover = intervals.withColumn(
+    cover = F.broadcast(intervals.withColumn(
         "_bkt",
         F.explode(
             F.sequence(
@@ -184,9 +181,7 @@ def interval_join(
                 F.floor((F.col(end) - 1) / bucket_sec),
             )
         ),
-    )
-    if broadcast_intervals:
-        cover = F.broadcast(cover)
+    ))
     f = facts.withColumn("_bkt", F.floor(F.col(ts) / bucket_sec))
     return (
         f.join(cover, "_bkt")

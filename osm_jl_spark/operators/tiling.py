@@ -21,23 +21,21 @@ from pyspark.sql import functions as F
 
 from osm_jl_spark.functions.cells import with_cell
 
+SALT_BUCKETS = 16  # salts per cell/tile in the two-stage aggregations
+RASTER_PRECISION = 2  # cell precision of tile_ids and vector_to_raster
 
-def tile_counts(
-    points: DataFrame,
-    precision: int = 2,
-    lon: str = "lon",
-    lat: str = "lat",
-    salt_buckets: int = 16,
-) -> DataFrame:
-    """(cx, cy, n_points) at one precision — A1 (src/index.jl:26-50).
+
+def tile_counts(points: DataFrame, precision: int = 2) -> DataFrame:
+    """(cx, cy, n_points) of (lon, lat) points at one precision — A1
+    (src/index.jl:26-50).
 
     Two-stage salted aggregation: stage 1 groups on (cx, cy, salt)
     where salt is a deterministic row-hash of the coordinates modulo
-    ``salt_buckets``, stage 2 merges partials per cell. With AQE on,
+    ``SALT_BUCKETS``, stage 2 merges partials per cell. With AQE on,
     the second (tiny) shuffle coalesces automatically.
     """
-    pts = with_cell(points, precision, lon=lon, lat=lat)
-    salt = F.pmod(F.hash(F.col(lon), F.col(lat)), F.lit(salt_buckets))
+    pts = with_cell(points, precision)
+    salt = F.pmod(F.hash(F.col("lon"), F.col("lat")), F.lit(SALT_BUCKETS))
     partial = (
         pts.withColumn("_salt", salt)
         .groupBy("cx", "cy", "_salt")
@@ -46,33 +44,23 @@ def tile_counts(
     return partial.groupBy("cx", "cy").agg(F.sum("pn").alias("n_points"))
 
 
-def tile_ids(
-    points: DataFrame,
-    precision: int = 2,
-    id_col: str = "id",
-    lon: str = "lon",
-    lat: str = "lat",
-) -> DataFrame:
-    """(cx, cy, ids ARRAY<...> sorted) — the reference's cell->id-list
-    payload, with deterministic ordering (sort_array, because
-    collect_list order is scheduling-dependent, like the reference's
-    threaded build was — SURVEY.md §7.3)."""
-    pts = with_cell(points, precision, lon=lon, lat=lat)
+def tile_ids(points: DataFrame) -> DataFrame:
+    """(cx, cy, ids ARRAY<...> sorted) of (id, lon, lat) points at
+    ``RASTER_PRECISION`` — the reference's cell->id-list payload, with
+    deterministic ordering (sort_array, because collect_list order is
+    scheduling-dependent, like the reference's threaded build was —
+    SURVEY.md §7.3)."""
+    pts = with_cell(points, RASTER_PRECISION)
     return pts.groupBy("cx", "cy").agg(
-        F.sort_array(F.collect_list(F.col(id_col))).alias("ids"),
+        F.sort_array(F.collect_list(F.col("id"))).alias("ids"),
         F.count(F.lit(1)).alias("n_points"),
     )
 
 
-def tile_rollup(
-    points: DataFrame,
-    precisions: list[int],
-    lon: str = "lon",
-    lat: str = "lat",
-    salt_buckets: int = 16,
-) -> DataFrame:
-    """Multi-resolution rollup: (precision, cx, cy, n_points) for each
-    requested precision — the H3/S2-style hierarchy (SURVEY.md §2.4).
+def tile_rollup(points: DataFrame, precisions: list[int]) -> DataFrame:
+    """Multi-resolution rollup of (lon, lat) points: (precision, cx,
+    cy, n_points) for each requested precision — the H3/S2-style
+    hierarchy (SURVEY.md §2.4).
 
     SINGLE PASS over the input: each point explodes to one row per
     requested precision (native inline array — no UDF), then one salted
@@ -100,12 +88,12 @@ def tile_rollup(
     cy = None
     for p in plist:
         cond = F.col("precision") == p
-        cxe = cell_coord(lon, p)
-        cye = cell_coord(lat, p)
+        cxe = cell_coord("lon", p)
+        cye = cell_coord("lat", p)
         cx = F.when(cond, cxe) if cx is None else cx.when(cond, cxe)
         cy = F.when(cond, cye) if cy is None else cy.when(cond, cye)
     enc = lvl.withColumn("cx", cx).withColumn("cy", cy)
-    salt = F.pmod(F.hash(F.col(lon), F.col(lat)), F.lit(salt_buckets))
+    salt = F.pmod(F.hash(F.col("lon"), F.col("lat")), F.lit(SALT_BUCKETS))
     partial = (
         enc.withColumn("_salt", salt)
         .groupBy("precision", "cx", "cy", "_salt")
@@ -120,7 +108,6 @@ def quadkey_rollup(
     points: DataFrame,
     zooms: list[int],
     qk_col: str = "qk",
-    salt_buckets: int = 16,
 ) -> DataFrame:
     """Multi-zoom rollup over an existing quadkey column:
     (zoom, qk, n_points) for each requested zoom — the web-mercator
@@ -143,7 +130,7 @@ def quadkey_rollup(
         F.col(qk_col).substr(F.lit(1), F.col("zoom")).alias("tile_qk"),
         F.col(qk_col).alias("_full"),
     )
-    salt = F.pmod(F.xxhash64("_full"), F.lit(salt_buckets))
+    salt = F.pmod(F.xxhash64("_full"), F.lit(SALT_BUCKETS))
     partial = (
         lvl.withColumn("_salt", salt)
         .groupBy("zoom", "tile_qk", "_salt")
@@ -189,10 +176,10 @@ def raster_to_vector(tiles: DataFrame, threshold: int = 1) -> DataFrame:
 def vector_to_raster(
     polygons: dict[int, list[tuple[float, float]]],
     spark,
-    precision: int = 2,
 ) -> DataFrame:
-    """Vector->raster: polygon -> its cell cover as tile rows
-    (polygon_id, cx, cy, coverage) with coverage in {'full','boundary'}.
+    """Vector->raster: polygon -> its cell cover at ``RASTER_PRECISION``
+    as tile rows (polygon_id, cx, cy, coverage) with coverage in
+    {'full','boundary'}.
 
     Polygons whose bbox exceeds the shared ``geo.COVER_BUDGET`` are
     enumerated DISTRIBUTEDLY — one range row per polygon exploded via
@@ -215,11 +202,11 @@ def vector_to_raster(
     for pid, ring in sorted(polygons.items()):
         if not ring:  # no vertices, no cells
             continue
-        xlo, xhi, ylo, yhi = cell_bbox_range(ring, precision)
+        xlo, xhi, ylo, yhi = cell_bbox_range(ring, RASTER_PRECISION)
         if (xhi - xlo + 1) * (yhi - ylo + 1) > COVER_BUDGET:
             big.append((pid, xlo, xhi, ylo, yhi))
             continue
-        full, boundary = cell_cover(ring, precision)
+        full, boundary = cell_cover(ring, RASTER_PRECISION)
         rows += [(pid, cx, cy, "full") for cx, cy in sorted(full)]
         rows += [(pid, cx, cy, "boundary") for cx, cy in sorted(boundary)]
     parts = []

@@ -95,18 +95,17 @@ def pii_counts(text: Column | str) -> Column:
     )
 
 
-def domain_stats(pages: DataFrame, url_col: str = "url",
-                 text_col: str = "text") -> DataFrame:
-    """(host, n_pages, total_chars, avg_chars): per-domain corpus
-    stats — the unit at which crawl pipelines apply allow/deny lists
-    and per-domain caps. ONE shuffle on host with map-side partial
+def domain_stats(pages: DataFrame) -> DataFrame:
+    """(host, n_pages, total_chars, avg_chars) over (url, text)
+    pages: per-domain corpus stats — the unit at which crawl pipelines
+    apply allow/deny lists and per-domain caps. ONE shuffle on host with map-side partial
     aggregation; at 10^12 pages the host key is heavy-tailed, but the
     partial agg collapses each partition to its distinct hosts before
     the exchange, so hot domains cost one row per input partition."""
     return (
         pages.select(
-            url_host(url_col).alias("host"),
-            F.length(text_col).cast("long").alias("chars"),
+            url_host("url").alias("host"),
+            F.length("text").cast("long").alias("chars"),
         )
         .groupBy("host")
         .agg(
@@ -122,7 +121,6 @@ def blocklist_filter(
     blocklist: DataFrame,
     host_col: str = "host",
     keyword_rules: list[tuple[str, Column]] | None = None,
-    reason_col: str = "reason",
 ) -> DataFrame:
     """Domain allow/deny filtering — the step a crawl pipeline runs
     right after ``domain_stats`` decides which hosts to drop. Emits
@@ -130,10 +128,10 @@ def blocklist_filter(
     host-level blocks take precedence over content ``keyword_rules``
     (ordered (reason, predicate) pairs, first match wins).
 
-    ``blocklist`` schema: ``(<host_col>: string, <reason_col>:
-    string)`` — one row per blocked host, reason free-text. A missing
-    reason column fails fast here with the expected schema rather
-    than as an opaque analysis error inside the join.
+    ``blocklist`` schema: ``(<host_col>: string, reason: string)`` —
+    one row per blocked host, reason free-text. A missing reason
+    column fails fast here with the expected schema rather than as an
+    opaque analysis error inside the join.
 
     Plan: the blocklist is a dimension table — thousands-to-millions
     of hosts vs 10^12 pages — so it is explicitly ``F.broadcast`` LEFT
@@ -142,18 +140,18 @@ def blocklist_filter(
     (site-level URL prefixes at CommonCrawl scale) would bucket both
     sides on host instead; the operator's contract doesn't change.
     """
-    missing = {host_col, reason_col} - set(blocklist.columns)
+    missing = {host_col, "reason"} - set(blocklist.columns)
     if missing:
         raise ValueError(
             f"blocklist is missing column(s) {sorted(missing)}; "
-            f"expected schema ({host_col}: string, {reason_col}: string)"
+            f"expected schema ({host_col}: string, reason: string)"
         )
     # a host listed twice (two reasons) must not FAN OUT fact rows —
     # the operator's contract is row-preserving. Collapse the
     # dimension to one deterministic reason per host (min = first
     # alphabetically) before the join.
     bl = blocklist.groupBy(F.col(host_col).alias("_bl_host")).agg(
-        F.min(reason_col).alias("_bl_reason")
+        F.min("reason").alias("_bl_reason")
     )
     joined = docs.join(
         F.broadcast(bl),
@@ -172,11 +170,10 @@ def blocklist_filter(
 
 def domain_cap(
     docs: DataFrame,
-    host_col: str = "host",
     max_per_host: int = 100,
     order_col: str = "doc_id",
 ) -> DataFrame:
-    """Per-domain cap — keep each host's first ``max_per_host``
+    """Per-domain cap — keep each ``host``'s first ``max_per_host``
     documents by ``order_col`` (CommonCrawl-style pipelines cap hot
     domains so one forum doesn't dominate the corpus). Deterministic:
     the kept set is exactly the top-N by (order_col) per host, so any
@@ -194,8 +191,8 @@ def domain_cap(
     uniform exchanges instead of one skewed one.
     """
     shard = F.spark_partition_id().alias("_shard")
-    w1 = Window.partitionBy(host_col, "_shard").orderBy(order_col)
-    w2 = Window.partitionBy(host_col).orderBy(order_col)
+    w1 = Window.partitionBy("host", "_shard").orderBy(order_col)
+    w2 = Window.partitionBy("host").orderBy(order_col)
     return (
         docs.withColumn("_shard", shard)
         .withColumn("_r1", F.row_number().over(w1))
@@ -206,12 +203,8 @@ def domain_cap(
     )
 
 
-def approx_domain_stats(
-    docs: DataFrame,
-    group_col: str = "lang",
-    host_col: str = "host",
-) -> DataFrame:
-    """Per-group page counts + APPROXIMATE distinct-host cardinality
+def approx_domain_stats(docs: DataFrame) -> DataFrame:
+    """Per-``lang`` page counts + APPROXIMATE distinct-host cardinality
     via Datasketches HLL (``hll_sketch_agg``) — the corpus-census
     shape that runs where an exact count-distinct would shuffle every
     (group, host) pair: at 10^12 pages the sketch keeps the exchange
@@ -228,11 +221,11 @@ def approx_domain_stats(
     exact column or re-sketch both sides.
     """
     return (
-        docs.groupBy(group_col)
+        docs.groupBy("lang")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.hll_sketch_estimate(
-                F.hll_sketch_agg(F.col(host_col))
+                F.hll_sketch_agg(F.col("host"))
             ).alias("distinct_hosts_est"),
         )
     )
@@ -242,12 +235,10 @@ def fetch_schedule(
     frontier: DataFrame,
     delay_sec: int = 1,
     start_epoch: int = 0,
-    url_col: str = "url",
-    host_col: str = "host",
-    priority_col: str = "priority",
 ) -> DataFrame:
     """Per-host politeness scheduling — the crawl-frontier primitive
-    between link extraction and fetching: each host's urls serialize
+    between link extraction and fetching: over a (url, host, priority)
+    frontier, each host's urls serialize
     ``delay_sec`` apart (crawl-delay), best-priority first. Returns
     (url, host, slot, fetch_at) with ``slot`` the 0-based per-host
     fetch order and ``fetch_at = start_epoch + slot * delay_sec`` —
@@ -269,9 +260,8 @@ def fetch_schedule(
     events_sessionize.
     """
     best = (
-        frontier.groupBy(F.col(host_col).alias("host"),
-                         F.col(url_col).alias("url"))
-        .agg(F.min(priority_col).alias("_pri"))
+        frontier.groupBy("host", "url")
+        .agg(F.min("priority").alias("_pri"))
     )
     w = Window.partitionBy("host").orderBy(
         F.col("_pri").asc(), F.col("url").asc()

@@ -106,12 +106,11 @@ def knn_bruteforce(
 # ------------------------------------------------------- multimodal fake
 
 
-def media_feature_sum(
-    payload: bytes, width: int, height: int, ow: int = 8, oh: int = 8
-) -> float:
+def media_feature_sum(payload: bytes, width: int, height: int) -> float:
     """Independent pure-Python (list-based, no NumPy) recomputation of
     operators/multimodal.decode_and_featurize's per-item feature sum:
-    sha256-seeded fake decode -> block-mean resize to (oh, ow) -> sum.
+    sha256-seeded fake decode -> block-mean resize to 8 x 8 (its
+    FEATURE_SIZE) -> sum.
     Used to derive golden VALUES for the multimodal oracle SQL.
 
     Bin edges i*(height/oh), j*(width/ow) are exact integers for the
@@ -120,6 +119,7 @@ def media_feature_sum(
     """
     import hashlib
 
+    ow = oh = 8
     digest = hashlib.sha256(payload).digest()
     seed = [b / 255.0 for b in digest]
     n = width * height

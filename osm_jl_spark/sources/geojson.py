@@ -104,11 +104,12 @@ FEATURE_SCHEMA = (
 )
 
 
-def read_features(features: DataFrame, json_col: str = "feature") -> DataFrame:
+def read_features(features: DataFrame) -> DataFrame:
     """GeoJSON Feature READER — the inverse of :func:`way_features`,
     so external GeoJSON (or this engine's own JSONL sink) ingests
-    back as structured rows: (way_id, geom_type, coords
-    ARRAY<STRUCT<lon,lat>>, properties MAP<STRING,STRING>).
+    back as structured rows: its ``feature`` strings become (way_id,
+    geom_type, coords ARRAY<STRUCT<lon,lat>>, properties
+    MAP<STRING,STRING>).
 
     Native ``from_json`` against a fixed Feature schema — zero UDF,
     zero exchange: parsing fuses into the scan projection like every
@@ -119,7 +120,7 @@ def read_features(features: DataFrame, json_col: str = "feature") -> DataFrame:
     what way_features emits — and the reference, which builds
     single-ring polygons only (src/geojson.jl:17-28).
     """
-    parsed = F.from_json(F.col(json_col), FEATURE_SCHEMA)
+    parsed = F.from_json(F.col("feature"), FEATURE_SCHEMA)
     ring = F.element_at(parsed["geometry"]["coordinates"], 1)
     return features.select(
         parsed["id"].alias("way_id"),

@@ -140,14 +140,14 @@ def _parse_doc(xml_text: str) -> list[dict]:
     return out
 
 
-def parse_elements(xml_docs: DataFrame, text_col: str = "xml") -> DataFrame:
-    """DataFrame of XML document strings -> unified elements table
-    (kind discriminates node/way/relation)."""
+def parse_elements(xml_docs: DataFrame) -> DataFrame:
+    """DataFrame of XML document strings (column ``xml``) -> unified
+    elements table (kind discriminates node/way/relation)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows: list[dict] = []
-            for doc in pdf[text_col]:
+            for doc in pdf["xml"]:
                 if doc:
                     rows.extend(_parse_doc(doc))
             yield pd.DataFrame(
@@ -183,18 +183,21 @@ def parse_osm_xml(
     return split_elements(parse_elements(df))
 
 
-def write_fixture_file(
-    path: str, n_nodes: int = 3000, n_ways: int = 300, n_rels: int = 30
-) -> str:
+FIXTURE_NODES, FIXTURE_WAYS, FIXTURE_RELS = 3000, 300, 30
+
+
+def write_fixture_file(path: str) -> str:
     """Deterministic multi-element .osm fixture for the splittable-file
-    path. Coordinates are emitted as exact decimal STRINGS ("10." +
-    zero-padded digits) so any engine that parses the same string gets
-    the same IEEE double — float parity is definitional, not luck.
+    path: ``FIXTURE_NODES`` nodes, ``FIXTURE_WAYS`` ways and
+    ``FIXTURE_RELS`` relations. Coordinates are emitted as exact
+    decimal STRINGS ("10." + zero-padded digits) so any engine that
+    parses the same string gets the same IEEE double — float parity is
+    definitional, not luck.
     Formatting is deliberately irregular (some elements span lines,
     some are dense) to exercise boundary scanning.
     """
     parts = ['<?xml version="1.0" encoding="UTF-8"?>\n<osm version="0.6">\n']
-    for i in range(n_nodes):
+    for i in range(FIXTURE_NODES):
         lon = f"10.{i % 1000000:06d}"
         lat = f"59.{(i * 7) % 1000000:06d}"
         tag = f'<tag k="name" v="n{i}"/>' if i % 3 == 0 else ""
@@ -205,13 +208,13 @@ def write_fixture_file(
             )
         else:
             parts.append(f'<node id="{i}" lon="{lon}" lat="{lat}">{tag}</node>\n')
-    for i in range(n_ways):
+    for i in range(FIXTURE_WAYS):
         vis = ' visible="true"' if i % 2 == 0 else ""
         nds = "".join(f'<nd ref="{j}"/>' for j in range(i, i + (i % 5) + 2))
         parts.append(
             f'<way id="{100000 + i}"{vis}>{nds}<tag k="highway" v="x"/></way>\n'
         )
-    for i in range(n_rels):
+    for i in range(FIXTURE_RELS):
         parts.append(
             f'<relation id="{200000 + i}"><member ref="{i}" type="way" '
             f'role="outer"/><member ref="{i + 1}" type="node" role=""/>'

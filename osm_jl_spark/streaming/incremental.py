@@ -43,27 +43,28 @@ from pyspark.sql import functions as F
 from osm_jl_spark.functions.cells import cell_coord
 from osm_jl_spark.functions.timeutil import epoch_sec
 
+TILE_PRECISION = 2  # cell precision of streaming_tile_counts
+TILE_WINDOW = "1 minute"
+TILE_WATERMARK = "2 minutes"
+SESSION_GAP_SEC = 21600  # the batch events_sessionize gap (6 h)
+FETCH_DELAY_SEC = 1  # streaming_fetch_schedule: fetch_schedule's defaults
+FETCH_START_EPOCH = 0
 
-def streaming_tile_counts(
-    stream: DataFrame,
-    precision: int = 2,
-    lon: str = "lon",
-    lat: str = "lat",
-    ts: str = "ts",
-    window: str = "1 minute",
-    watermark: str = "2 minutes",
-) -> DataFrame:
-    """Event stream -> per-(window, cell) counts with late-data handling.
+
+def streaming_tile_counts(stream: DataFrame) -> DataFrame:
+    """Event stream (lon, lat, ts) -> per-(window, cell) counts with
+    late-data handling: ``TILE_WINDOW`` windows closed by a
+    ``TILE_WATERMARK`` watermark, cells at ``TILE_PRECISION``.
 
     Usage: df = spark.readStream...; q = streaming_tile_counts(df)
            .writeStream.outputMode("append")... (append works because
            the watermark closes windows).
     """
     return (
-        stream.withWatermark(ts, watermark)
-        .withColumn("cx", cell_coord(lon, precision))
-        .withColumn("cy", cell_coord(lat, precision))
-        .groupBy(F.window(F.col(ts), window).alias("w"), "cx", "cy")
+        stream.withWatermark("ts", TILE_WATERMARK)
+        .withColumn("cx", cell_coord("lon", TILE_PRECISION))
+        .withColumn("cy", cell_coord("lat", TILE_PRECISION))
+        .groupBy(F.window(F.col("ts"), TILE_WINDOW).alias("w"), "cx", "cy")
         .agg(F.count(F.lit(1)).alias("n_points"))
         .select(
             F.col("w.start").alias("window_start"),
@@ -74,14 +75,10 @@ def streaming_tile_counts(
     )
 
 
-def streaming_sessionize(
-    stream: DataFrame,
-    gap_sec: int = 21600,
-    ts: str = "ts",
-    user: str = "user_id",
-) -> DataFrame:
-    """Custom stateful streaming operator: per-user sessionization with
-    an inactivity-gap rule, via ``applyInPandasWithState``.
+def streaming_sessionize(stream: DataFrame) -> DataFrame:
+    """Custom stateful streaming operator: per-``user_id`` sessionization
+    of ``ts`` events with a ``SESSION_GAP_SEC`` inactivity-gap rule, via
+    ``applyInPandasWithState``.
 
     State per user = the OPEN session (session_id, n_events,
     start_epoch, end_epoch). Each micro-batch folds its (sorted) new
@@ -123,7 +120,7 @@ def streaming_sessionize(
         for s in secs:
             if n == 0:
                 sid, n, start, end = sid + 1, 1, s, s
-            elif s - end > gap_sec:
+            elif s - end > SESSION_GAP_SEC:
                 closed.append((key[0], sid, n, start, end))
                 sid, n, start, end = sid + 1, 1, s, s
             else:
@@ -135,8 +132,8 @@ def streaming_sessionize(
         if closed:
             yield pd.DataFrame(closed, columns=out_cols)
 
-    with_sec = stream.withColumn("sec", epoch_sec(ts))
-    return with_sec.groupBy(user).applyInPandasWithState(
+    with_sec = stream.withColumn("sec", epoch_sec("ts"))
+    return with_sec.groupBy("user_id").applyInPandasWithState(
         fold,
         outputStructType=(
             "user_id BIGINT, session_id BIGINT, n_events BIGINT, "
@@ -151,12 +148,7 @@ def streaming_sessionize(
     )
 
 
-def streaming_exact_dedup(
-    stream: DataFrame,
-    text_col: str = "text",
-    ts: str | None = None,
-    watermark: str | None = None,
-) -> DataFrame:
+def streaming_exact_dedup(stream: DataFrame) -> DataFrame:
     """First-seen exact dedup over a document stream: emit each
     distinct content fingerprint's FIRST document, drop every later
     byte-identical repeat — the streaming form of
@@ -166,11 +158,11 @@ def streaming_exact_dedup(
     State design: ``dropDuplicates`` on the md5 fingerprint keeps one
     compact key per distinct document in the state store — state size
     tracks UNIQUE content, not stream length. Unbounded retention is
-    still unbounded state at 10^12 docs, so production passes
-    ``ts``/``watermark`` to switch to
+    still unbounded state at 10^12 docs; bounding it means
     ``dropDuplicatesWithinWatermark`` (re-admits a duplicate only
     after its original has aged out of the watermark horizon — the
-    standard trade for bounded state).
+    standard trade for bounded state), which gives up the batch
+    equality below.
 
     Equivalence contract (pinned by tests): when the stream delivers
     documents in id order, the kept set is exactly the batch
@@ -178,25 +170,19 @@ def streaming_exact_dedup(
     """
     from osm_jl_spark.functions.text import fingerprint_col
 
-    d = stream.withColumn("fp", fingerprint_col(text_col))
-    if ts is not None and watermark is not None:
-        return d.withWatermark(ts, watermark).dropDuplicatesWithinWatermark(
-            ["fp"]
-        )
-    return d.dropDuplicates(["fp"])
+    return stream.withColumn("fp", fingerprint_col("text")).dropDuplicates(
+        ["fp"]
+    )
 
 
-def streaming_snapshot_latest(
-    stream: DataFrame,
-    key: str = "url",
-    ts_col: str = "warc_ts",
-) -> DataFrame:
+def streaming_snapshot_latest(stream: DataFrame) -> DataFrame:
     """Live-recrawl form of ``operators/dedup.snapshot_latest``: as
-    captures stream in, maintain the newest capture per key. The
-    aggregation body IS the batch operator (one ``max_by(struct, ts)``
-    groupBy — Structured Streaming turns the same declarative plan
-    into an incremental stateful one), so batch/stream parity is by
-    construction; the test pins it across micro-batch boundaries.
+    captures stream in, maintain the newest capture (``warc_ts``) per
+    ``url``. The aggregation body IS the batch operator (one
+    ``max_by(struct, ts)`` groupBy — Structured Streaming turns the
+    same declarative plan into an incremental stateful one), so
+    batch/stream parity is by construction; the test pins it across
+    micro-batch boundaries.
 
     State: ONE compact row per key (the current winner struct + a
     count) — state tracks distinct keys, not stream length, exactly
@@ -210,22 +196,17 @@ def streaming_snapshot_latest(
     """
     from osm_jl_spark.operators.dedup import snapshot_latest
 
-    return snapshot_latest(stream, key=key, ts_col=ts_col)
+    return snapshot_latest(stream)
 
 
 def streaming_asof_enrich(
-    captures: DataFrame,
-    policies: DataFrame,
-    on: str = "url",
-    cap_ts: str = "warc_ts",
-    pol_ts: str = "warc_ts",
-    cap_id_col: str = "fetch_h",
-    pol_val_col: str = "policy_val",
+    captures: DataFrame, policies: DataFrame
 ) -> DataFrame:
     """Streaming form of ``operators/temporal.asof_join`` (backward):
-    as captures stream in, attach the newest policy snapshot seen
-    at-or-before each capture's event time, keyed by ``on``. The use
-    case is the same live-recrawl shape as
+    as captures (url, warc_ts, fetch_h) stream in, attach the newest
+    policy snapshot (url, warc_ts, policy_val) seen at-or-before each
+    capture's event time, keyed by ``url``. The use case is the same
+    live-recrawl shape as
     ``streaming_snapshot_latest`` — enrich every fetched page with the
     robots/policy version in force when it was fetched.
 
@@ -254,23 +235,20 @@ def streaming_asof_enrich(
     import pandas as pd  # noqa: PLC0415 (worker-side import)
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    # the key output column is named after the join key (``on``), not
-    # hardcoded — a caller keying on e.g. ``host`` gets a ``host``
-    # column back. The key is carried as STRING (the crawl-key shape).
-    out_cols = [on, "cap_epoch", "cap_id", "policy_epoch",
+    out_cols = ["url", "cap_epoch", "cap_id", "policy_epoch",
                 "policy_val"]
 
     caps = captures.select(
-        F.col(on).alias("k"),
-        epoch_sec(cap_ts).alias("sec"),
+        F.col("url").alias("k"),
+        epoch_sec("warc_ts").alias("sec"),
         F.lit(1).alias("side"),
-        F.col(cap_id_col).cast("long").alias("val"),
+        F.col("fetch_h").cast("long").alias("val"),
     )
     pols = policies.select(
-        F.col(on).alias("k"),
-        epoch_sec(pol_ts).alias("sec"),
+        F.col("url").alias("k"),
+        epoch_sec("warc_ts").alias("sec"),
         F.lit(0).alias("side"),
-        F.col(pol_val_col).cast("long").alias("val"),
+        F.col("policy_val").cast("long").alias("val"),
     )
 
     def fold(key, pdf_iter, state: GroupState):
@@ -307,7 +285,7 @@ def streaming_asof_enrich(
     return caps.unionByName(pols).groupBy("k").applyInPandasWithState(
         fold,
         outputStructType=(
-            f"{on} STRING, cap_epoch BIGINT, cap_id BIGINT, "
+            "url STRING, cap_epoch BIGINT, cap_id BIGINT, "
             "policy_epoch BIGINT, policy_val BIGINT"
         ),
         stateStructType="pol_epoch BIGINT, pol_val BIGINT",
@@ -346,22 +324,18 @@ def streaming_host_in_links(pages_stream: DataFrame) -> DataFrame:
 
 
 def streaming_bloom_filter(
-    stream: DataFrame,
-    bitmap_words: list[int],
-    m_bits: int = 1 << 18,
-    k: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_n: int = 3,
+    stream: DataFrame, bitmap_words: list[int]
 ) -> DataFrame:
-    """Live decontamination: score a document stream against a FIXED
+    """Live decontamination: score a (doc_id, text) stream against a FIXED
     Bloom filter of the eval set (operators/dedup.py:
     bloom_contamination's streaming form) — per doc (id, n_shingles,
     bloom_hits, contaminated), identical to the batch operator on the
     same rows (pinned in tests/test_streaming_bloom.py).
 
-    The bitmap arrives as the ``m_bits/64``-long word list
-    (:func:`~osm_jl_spark.operators.dedup.bloom_words`) and embeds as
+    The bitmap arrives as the ``m_bits/64``-long word list of a
+    :func:`~osm_jl_spark.operators.dedup.bloom_bitmap` built with the
+    default ``k`` (:func:`~osm_jl_spark.operators.dedup.bloom_words`);
+    ``m_bits`` is read off its length, and embeds as
     a PLAN CONSTANT array literal — the same unrolled-constant style
     as the polygon cell covers — so the whole operator is ONE
     stateless narrow projection: shingles, k probe positions, and the
@@ -375,13 +349,15 @@ def streaming_bloom_filter(
     at the 2^18 default; zero-shingle docs drop, matching the batch
     operator's explode semantics.
     """
-    n_words = int(m_bits) // 64
-    if len(bitmap_words) != n_words:
+    m_bits = 64 * len(bitmap_words)
+    if m_bits == 0 or m_bits & (m_bits - 1):
         raise ValueError(
-            f"bitmap_words must have m_bits/64 = {n_words} entries, "
-            f"got {len(bitmap_words)} (use dedup.bloom_words)")
+            "bitmap_words must have m_bits/64 entries for a power-of-two "
+            f"m_bits, got {len(bitmap_words)} (use dedup.bloom_words)")
     from osm_jl_spark.functions.text import shingles_col
-    from osm_jl_spark.operators.dedup import _bloom_positions
+    from osm_jl_spark.operators.dedup import (
+        BLOOM_K, SHINGLE_N, _bloom_positions,
+    )
 
     arr = F.lit([int(w) for w in bitmap_words])
 
@@ -391,7 +367,7 @@ def streaming_bloom_filter(
                 F.shiftright(p, 6).alias("w"),
                 F.pmod(p, F.lit(64)).cast("int").alias("b"),
             )
-            for p in _bloom_positions(s, int(m_bits), k)
+            for p in _bloom_positions(s, m_bits, BLOOM_K)
         ])
         return F.forall(
             probes,
@@ -400,12 +376,12 @@ def streaming_bloom_filter(
             ) == 1,
         )
 
-    sh = shingles_col(text_col, shingle_n)
+    sh = shingles_col("text", SHINGLE_N)
     n = F.size(sh)
     hits = F.size(F.filter(sh, might))
     return (
         stream.select(
-            F.col(id_col).alias("doc_id"),
+            "doc_id",
             n.cast("long").alias("n_shingles"),
             hits.cast("long").alias("bloom_hits"),
             (F.lit(2) * hits >= n).cast("int").alias("contaminated"),
@@ -414,17 +390,12 @@ def streaming_bloom_filter(
     )
 
 
-def streaming_fetch_schedule(
-    frontier: DataFrame,
-    delay_sec: int = 1,
-    start_epoch: int = 0,
-    url_col: str = "url",
-    host_col: str = "host",
-    priority_col: str = "priority",
-) -> DataFrame:
-    """Streaming form of ``operators/web.fetch_schedule`` — the shape
-    a live crawler actually runs: frontier urls stream in, each host's
-    next fetch slots assign incrementally, ``delay_sec`` apart.
+def streaming_fetch_schedule(frontier: DataFrame) -> DataFrame:
+    """Streaming form of ``operators/web.fetch_schedule`` at its
+    default ``delay_sec``/``start_epoch`` — the shape a live crawler
+    actually runs: (url, host, priority) frontier urls stream in, each
+    host's next fetch slots assign incrementally, ``FETCH_DELAY_SEC``
+    apart.
 
     State per host = ONE (next_slot, seen-url hash set? NO —) just the
     next_slot counter: state tracks hosts, not urls. The batch
@@ -441,15 +412,13 @@ def streaming_fetch_schedule(
     Equivalence contract (pinned by tests/test_streaming_schedule.py):
     when each url arrives exactly once and per-host arrivals are
     (priority, url)-ordered across batch boundaries, the emitted
-    schedule equals batch ``fetch_schedule`` row-for-row.
+    schedule equals batch ``fetch_schedule(frontier)`` row-for-row.
     """
     import pandas as pd  # noqa: PLC0415 (worker-side import)
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     src = frontier.select(
-        F.col(host_col).alias("host"),
-        F.col(url_col).alias("url"),
-        F.col(priority_col).cast("long").alias("pri"),
+        "host", "url", F.col("priority").cast("long").alias("pri")
     )
 
     def fold(key, pdf_iter, state: GroupState):
@@ -467,7 +436,7 @@ def streaming_fetch_schedule(
                            key=lambda kv: (kv[1] is not None, kv[1], kv[0])):
             emitted.append((
                 u, key[0], next_slot,
-                int(start_epoch) + next_slot * int(delay_sec),
+                FETCH_START_EPOCH + next_slot * FETCH_DELAY_SEC,
             ))
             next_slot += 1
         state.update((next_slot,))

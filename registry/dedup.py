@@ -108,7 +108,7 @@ def line_dedup_q(spark, sf_dir):
             F.lit("article "), d.cast("string"),
             F.lit(" headline "), ((d * 31 + 7) % 1000).cast("string"),
         ),
-        F.lit(""),  # blank separator: below min_len, always kept
+        F.lit(""),  # blank separator: below LINE_MIN_LEN, always kept
         F.concat(
             F.lit("body "), d.cast("string"), F.lit(" "),
             F.substring("text", 1, 40),

@@ -240,7 +240,7 @@ def way_areas_q(spark, sf_dir):
 
     ways = _ways(spark, sf_dir).filter(
         F.col("visible")
-        & E.is_closed("node_refs")
+        & E.is_closed()
         & (F.size("node_refs") >= 3)  # degenerate 1/2-ref rings out
     )
     geoms = way_geometries(ways, _nodes(spark, sf_dir))
@@ -486,7 +486,7 @@ def bfs_hops_q(spark, sf_dir):
 
     ways = _ways(spark, sf_dir)
     edges = way_edges(ways)
-    roads = ways.filter(F.col("visible") & E.is_road("node_refs"))
+    roads = ways.filter(F.col("visible") & E.is_road())
     sources = roads.filter(F.col("id") % 29 == 0).select(
         F.element_at("node_refs", 1).cast("long").alias("node")
     )
@@ -541,7 +541,7 @@ def shortest_paths_q(spark, sf_dir):
         (F.lit(1) + F.pmod(F.col("src") + F.col("dst"), F.lit(7)))
         .cast("long"),
     )
-    roads = ways.filter(F.col("visible") & E.is_road("node_refs"))
+    roads = ways.filter(F.col("visible") & E.is_road())
     sources = roads.filter(F.col("id") % 29 == 0).select(
         F.element_at("node_refs", 1).cast("long").alias("node")
     )

@@ -128,9 +128,9 @@ def test_quadkey_parent_is_prefix(spark):
            for lat in range(-60, 61, 20)]
     df = spark.createDataFrame(pts, "lon DOUBLE, lat DOUBLE")
     out = with_quadkey(
-        with_quadkey(df, zoom=11, out="qk11"), zoom=12, out="qk12"
+        with_quadkey(df, zoom=11).withColumnRenamed("qk", "qk11"), zoom=12
     )
     bad = out.filter(
-        F.substring("qk12", 1, 11) != F.col("qk11")
+        F.substring("qk", 1, 11) != F.col("qk11")
     ).count()
     assert bad == 0

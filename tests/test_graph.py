@@ -18,8 +18,8 @@ M = 600
 
 
 def _fixture_ways(spark):
-    # way 1: open path a-b-c; way 2: closed ring d-e-f-d (excluded by
-    # roads_only); way 3: invisible (excluded); way 4: self-loop edge
+    # way 1: open path a-b-c; way 2: closed ring d-e-f-d (not a
+    # road: excluded); way 3: invisible (excluded); way 4: self-loop edge
     rows = [
         (1, True, [10, 11, 12]),
         (2, True, [20, 21, 22, 20]),
@@ -40,13 +40,6 @@ def test_way_edges_semantics(spark):
     assert got == sorted(
         [(10, 11), (11, 10), (11, 12), (12, 11), (40, 41), (41, 40)]
     )
-
-
-def test_way_edges_all_ways(spark):
-    edges = way_edges(_fixture_ways(spark), roads_only=False)
-    got = set(map(tuple, edges.collect()))
-    assert (20, 21) in got and (20, 22) in got  # ring kept, wraps via last pair
-    assert (30, 31) in got  # invisible kept when roads_only=False
 
 
 def _python_bfs(adj, sources, max_hops):

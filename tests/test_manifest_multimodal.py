@@ -65,12 +65,12 @@ def test_multimodal_featurize_deterministic(spark):
     )
 
     media = synthetic_media(spark, 30)
-    f1 = decode_and_featurize(media, out_size=(4, 4)).collect()
-    f2 = decode_and_featurize(media, out_size=(4, 4)).collect()
+    f1 = decode_and_featurize(media).collect()
+    f2 = decode_and_featurize(media).collect()
     k1 = sorted((r["media_id"], tuple(r["feat"])) for r in f1)
     k2 = sorted((r["media_id"], tuple(r["feat"])) for r in f2)
     assert k1 == k2
-    assert all(len(r["feat"]) == 16 for r in f1)
+    assert all(len(r["feat"]) == 64 for r in f1)
 
     frames = frame_sample(media, every_n=10).collect()
     assert all(r["frame_idx"] % 10 == 0 for r in frames)
@@ -98,7 +98,7 @@ def test_streaming_tile_counts(spark, tmp_path):
     stream = spark.readStream.schema(
         "ts TIMESTAMP, lon DOUBLE, lat DOUBLE"
     ).parquet(src)
-    agg = streaming_tile_counts(stream, precision=2)
+    agg = streaming_tile_counts(stream)
     q = (
         agg.writeStream.format("memory")
         .queryName("tiles_stream")

@@ -2,6 +2,7 @@
 
 import hashlib
 
+from osm_jl_spark.operators import packing
 from osm_jl_spark.operators.packing import pack_sequences
 
 
@@ -32,12 +33,13 @@ def test_pack_sequences_matches_flat_scan(spark):
     assert got == _flat_oracle()
 
 
-def test_pack_sequences_bucket_count_invariant(spark):
+def test_pack_sequences_bucket_count_invariant(spark, monkeypatch):
     # the result must be identical for ANY bucket count — the
     # two-level scan is an implementation detail, not a semantic
     d = _docs(spark)
-    a = {r["doc_id"]: r["tok_offset"]
-         for r in pack_sequences(d, 64, buckets=4).collect()}
-    b = {r["doc_id"]: r["tok_offset"]
-         for r in pack_sequences(d, 64, buckets=512).collect()}
-    assert a == b
+    offsets = []
+    for buckets in (4, 512):
+        monkeypatch.setattr(packing, "PACK_BUCKETS", buckets)
+        offsets.append({r["doc_id"]: r["tok_offset"]
+                        for r in pack_sequences(d, 64).collect()})
+    assert offsets[0] == offsets[1]

@@ -268,9 +268,9 @@ def test_pack_sequences_global_window_bounded_to_buckets(spark):
     docs = spark.read.parquet(SF + "/documents.parquet").selectExpr(
         "doc_id", "text"
     )
-    plan = explain(pack_sequences(docs, budget=2048, buckets=64))
+    plan = explain(pack_sequences(docs, budget=2048))
     # exactly ONE SinglePartition exchange: the bucket-table prefix
-    # (its input is the 64-row groupBy("bucket") aggregate)
+    # (its input is the PACK_BUCKETS-row groupBy("bucket") aggregate)
     single = re.findall(r"Arguments: SinglePartition", plan)
     assert len(single) == 1, plan
     # the corpus-side window sorts WITHIN hashpartitioning(bucket) —
@@ -537,17 +537,21 @@ def test_route_lengths_single_waynodes_shuffle_chain(spark):
 def test_plans_md_lists_exactly_the_audited_plans():
     """PLANS.md has one row per audited plan, in audit order: a plan
     added to tools/plan_audit.py without regenerating the file fails
-    here."""
+    here. A why-text that states ``(N exchanges)`` states its row's
+    exchange count."""
     repo = Path(__file__).resolve().parent.parent
     sys.path.insert(0, str(repo / "tools"))
     from plan_audit import AUDITED
 
-    rows = [line[2:].split(" | ")[0]
+    rows = [line[2:].split(" | ")
             for line in (repo / "PLANS.md").read_text().splitlines()
             if line.startswith("| ")]
-    assert rows[1:] == ["flagship (stored pages table)",
-                        "write_jsonl (GeoJSON sink)",
-                        *(name for name, _ in AUDITED)]
+    assert [r[0] for r in rows[1:]] == [
+        "flagship (stored pages table)", "write_jsonl (GeoJSON sink)",
+        *(name for name, _ in AUDITED)]
+    for cells in rows[1:]:
+        stated = re.findall(r"\((\d+) exchanges?\)", cells[-1])
+        assert all(int(n) == int(cells[1]) for n in stated), cells[0]
 
 
 def test_python_operators_are_perfbench_python_operators():

@@ -101,6 +101,6 @@ def test_refine_non_increasing_distortion(spark):
             total = d if total is None else total + d
         return emb.agg(F.sum(total)).collect()[0][0]
 
-    d0 = distortion(pq_train_codebooks(emb, m=M, k=8, refine=0))
-    d2 = distortion(pq_train_codebooks(emb, m=M, k=8, refine=2))
+    d0 = distortion(pq_train_codebooks(emb, refine=0))
+    d2 = distortion(pq_train_codebooks(emb, refine=2))
     assert d2 <= d0, (d0, d2)

@@ -68,9 +68,9 @@ def test_stratified_sample_small_stratum_kept_whole(spark):
 
 
 def test_temperature_sample_properties(spark):
-    """alpha=1 keeps everything; alpha=0.5 downsamples the head
-    language hardest while the smallest language keeps everything
-    (its w/n ratio is the max, threshold = full hash space); kept
+    """The head language downsamples hardest while the smallest
+    language keeps everything (its w/n ratio is the max, threshold =
+    full hash space); kept
     sets are deterministic (a rerun returns the identical rows)."""
     from osm_jl_spark.operators.sampling import temperature_sample
 
@@ -79,9 +79,7 @@ def test_temperature_sample_properties(spark):
     ).select("doc_id", "lang")
     n_by = {r.lang: r["count"]
             for r in docs.groupBy("lang").count().collect()}
-    assert temperature_sample(docs, alpha=1.0).count() == docs.count()
-
-    kept = temperature_sample(docs, alpha=0.5)
+    kept = temperature_sample(docs)
     k_by = {r.lang: r["count"]
             for r in kept.groupBy("lang").count().collect()}
     smallest = min(n_by, key=lambda x: (n_by[x], x))

@@ -45,20 +45,19 @@ def test_cross_cluster_pairs_are_not_searched(spark):
         r["id"]: (r["cluster"], r["keep"])
         for r in semdedup(
             _emb(spark, [(1, va), (2, vb)]), centroids=cents,
-            threshold=0.9,
         ).collect()
     }
     assert out == {1: (100, True), 2: (200, True)}
 
 
 def test_default_centroid_step(spark):
-    """Without an explicit centroid table, ids divisible by the step
-    are the medoids."""
-    rows = [(i, [float(i % 3), 1.0]) for i in range(10)]
-    out = semdedup(_emb(spark, rows), centroid_step=5, threshold=2.0)
+    """Without an explicit centroid table, ids divisible by
+    CENTROID_STEP (125) are the medoids."""
+    rows = [(i, [float(i % 3), 1.0]) for i in range(0, 260, 5)]
+    out = semdedup(_emb(spark, rows))
     clusters = {r["id"]: r["cluster"] for r in out.collect()}
-    assert set(clusters.values()) <= {0, 5}
-    assert clusters[0] == 0 and clusters[5] == 5
+    assert set(clusters.values()) <= {0, 125, 250}
+    assert clusters[0] == 0 and clusters[125] == 125
 
 
 def test_deterministic(spark):

@@ -5,6 +5,7 @@ import json
 import pytest
 from pyspark.sql import functions as F
 
+from osm_jl_spark.sources import osm_xml
 from osm_jl_spark.sources.geojson import feature_collection, way_features
 from osm_jl_spark.sources.osm_xml import (
     SAMPLE_OSM_XML,
@@ -45,15 +46,19 @@ def _canon_elements(df):
 
 
 @pytest.mark.parametrize("split_bytes", [512, 7 * 1024, 10 << 20])
-def test_parse_osm_file_split_invariance(spark, tmp_path, split_bytes):
+def test_parse_osm_file_split_invariance(spark, tmp_path, split_bytes,
+                                        monkeypatch):
     """Splittable single-file ingest must yield the SAME elements at
     any split size — including splits far smaller than an element's
     surroundings and a single split covering the whole file — as the
     whole-document parser on identical content (ownership rule:
     element belongs to the split holding its opening tag)."""
-    path = write_fixture_file(
-        str(tmp_path / "fx.osm"), n_nodes=300, n_ways=40, n_rels=10
-    )
+    # a small fixture: 512-byte splits of the default one take ~20 s
+    # longer (4 CPUs) and reach no boundary case this one misses
+    monkeypatch.setattr(osm_xml, "FIXTURE_NODES", 300)
+    monkeypatch.setattr(osm_xml, "FIXTURE_WAYS", 40)
+    monkeypatch.setattr(osm_xml, "FIXTURE_RELS", 10)
+    path = write_fixture_file(str(tmp_path / "fx.osm"))
     whole = parse_elements(
         spark.createDataFrame([(open(path).read(),)], "xml STRING")
     )

@@ -39,6 +39,44 @@ def test_read_pages_parquet_and_schema_guard(spark, tmp_path):
         read_pages(spark, bad)
 
 
+def test_repeat_read_infers_the_parquet_schema_once(spark, tmp_path,
+                                                   monkeypatch):
+    """Inferring a parquet schema runs a Spark job; read_pages runs it
+    on the first read of a location only. A rewritten location (new
+    file listing) and another Spark application infer again, and the
+    schema guard still sees the rewritten columns."""
+    sc = spark.sparkContext
+    probes = iter(range(1000))
+
+    def jobs(read):
+        group = f"schema_probe_{next(probes)}"
+        sc.setJobGroup(group, group)
+        try:
+            read()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    p = str(tmp_path / "pages.parquet")
+    G.load_pages(spark, 30).write.parquet(p)
+    assert jobs(lambda: read_pages(spark, p, fmt="parquet")) == 1
+    assert jobs(lambda: read_pages(spark, p, fmt="parquet")) == 0
+    assert read_pages(spark, p, fmt="parquet").count() == 30
+
+    G.load_pages(spark, 20).write.mode("overwrite").parquet(p)
+    assert jobs(lambda: read_pages(spark, p, fmt="parquet")) == 1
+    assert read_pages(spark, p, fmt="parquet").count() == 20
+
+    monkeypatch.setattr(type(sc), "applicationId",
+                        property(lambda self: "restarted-application"))
+    assert jobs(lambda: read_pages(spark, p, fmt="parquet")) == 1
+    assert jobs(lambda: read_pages(spark, p, fmt="parquet")) == 0
+
+    G.load_pages(spark, 10).drop("html").write.mode("overwrite").parquet(p)
+    with pytest.raises(ValueError, match="html"):
+        read_pages(spark, p, fmt="parquet")
+
+
 def test_clustered_bbox_matches_unclustered(spark, clustered):
     got = {
         r["id"]

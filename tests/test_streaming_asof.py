@@ -90,18 +90,3 @@ def test_streaming_asof_matches_batch(spark, tmp_path):
     assert spark.table("asof_stream").count() > n_mid
     assert late_caps_enriched, "no cross-boundary state carry"
 
-
-def test_streaming_asof_key_column_named_from_on(spark, tmp_path):
-    """The output key column is named after the join key, not
-    hardcoded 'url' — schema check only, no query start needed."""
-    from osm_jl_spark.streaming.incremental import streaming_asof_enrich
-
-    cap_dir, pol_dir = str(tmp_path / "c"), str(tmp_path / "p")
-    schema_caps = "host STRING, warc_ts TIMESTAMP_NTZ, fetch_h BIGINT"
-    schema_pols = "host STRING, warc_ts TIMESTAMP_NTZ, policy_val BIGINT"
-    spark.createDataFrame([], schema_caps).write.parquet(cap_dir)
-    spark.createDataFrame([], schema_pols).write.parquet(pol_dir)
-    caps_s = spark.readStream.schema(schema_caps).parquet(cap_dir)
-    pols_s = spark.readStream.schema(schema_pols).parquet(pol_dir)
-    out = streaming_asof_enrich(caps_s, pols_s, on="host")
-    assert out.columns[0] == "host"

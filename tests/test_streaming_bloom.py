@@ -39,7 +39,7 @@ def test_streaming_bloom_matches_batch(spark, tmp_path):
         src
     )
     q = (
-        streaming_bloom_filter(stream, words, m_bits=M, k=K)
+        streaming_bloom_filter(stream, words)
         .writeStream.format("memory")
         .queryName("bloom_stream")
         .outputMode("append")
@@ -77,4 +77,4 @@ def test_word_list_length_validated(spark):
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     with pytest.raises(ValueError, match="m_bits/64"):
-        streaming_bloom_filter(docs, [0] * 10, m_bits=M, k=K)
+        streaming_bloom_filter(docs, [0] * 10)

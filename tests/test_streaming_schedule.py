@@ -21,7 +21,7 @@ def _stream_vs_batch(spark, tmp_path, frontier, first):
 
     stream = spark.readStream.schema(schema).parquet(src)
     q = (
-        streaming_fetch_schedule(stream, delay_sec=10, start_epoch=500)
+        streaming_fetch_schedule(stream)
         .writeStream.format("memory")
         .queryName("sched_stream")
         .outputMode("append")
@@ -41,9 +41,7 @@ def _stream_vs_batch(spark, tmp_path, frontier, first):
     }
     want = {
         r.url: (r.host, r.slot, r.fetch_at)
-        for r in fetch_schedule(
-            frontier, delay_sec=10, start_epoch=500
-        ).collect()
+        for r in fetch_schedule(frontier).collect()
     }
     return got, want
 

@@ -27,7 +27,7 @@ def test_streaming_sessionize_matches_batch(spark, tmp_path):
     stream = spark.readStream.schema(
         "user_id BIGINT, event_id BIGINT, ts TIMESTAMP_NTZ"
     ).parquet(src)
-    sess = streaming_sessionize(stream, gap_sec=21600)
+    sess = streaming_sessionize(stream)
     q = (
         sess.writeStream.format("memory")
         .queryName("sess_stream")

@@ -24,7 +24,9 @@ def test_geoparse_matches_ground_truth(spark):
     pages = pages_with_text(load_pages(spark, 300))
     got = {
         (r["url"], r["pt_idx"], r["lon"], r["lat"])
-        for r in geoparse_points(pages, "extracted_text").collect()
+        for r in geoparse_points(
+            pages.drop("text").withColumnRenamed("extracted_text", "text")
+        ).collect()
     }
     want = {
         (r["url"], r["pt_idx"], r["lon"], r["lat"])
@@ -111,7 +113,8 @@ def test_fused_geoparse_html_matches_two_stage(spark):
 
     pages = G.load_pages(spark, 500)
     two_stage = geoparse_points(
-        pages_with_text(pages), text_col="extracted_text"
+        pages_with_text(pages).drop("text")
+        .withColumnRenamed("extracted_text", "text")
     )
     fused = geoparse_points_from_html(pages)
     a = sorted(tuple(r) for r in two_stage.collect())

@@ -31,7 +31,7 @@ def test_tile_counts_matches_bruteforce(spark):
 
 def test_tile_ids_sorted_deterministic(spark):
     nodes = load_nodes(spark, M)
-    t = tile_ids(nodes, 1).collect()
+    t = tile_ids(nodes).collect()
     for r in t:
         assert r["ids"] == sorted(r["ids"])
         assert r["n_points"] == len(r["ids"])
@@ -153,13 +153,16 @@ def test_cover_budget_world_polygon_never_enumerates_on_driver(spark):
         cell_cover(world, 2)
 
     # distributed raster path: plan construction is instant (no
-    # driver-side cell loop), rows materialize on executors. Use
-    # precision 1 (~6.5M cells) to keep the executed check quick.
+    # driver-side cell loop), rows materialize on executors. The
+    # counted polygon is a 6-degree square (~361k cells): over the
+    # budget, yet quick to execute.
     t0 = time.time()
-    rast = vector_to_raster({1: world, 2: [(0.0, 0.0), (0.2, 0.0),
-                                           (0.2, 0.2)]}, spark, 1)
+    vector_to_raster({1: world}, spark)
     assert time.time() - t0 < 5.0  # no driver enumeration happened
-    xlo, xhi, ylo, yhi = cell_bbox_range(world, 1)
+    square = [(10.0, 10.0), (16.0, 10.0), (16.0, 16.0), (10.0, 16.0)]
+    rast = vector_to_raster({1: square, 2: [(0.0, 0.0), (0.2, 0.0),
+                                            (0.2, 0.2)]}, spark)
+    xlo, xhi, ylo, yhi = cell_bbox_range(square, 2)
     n_bbox = (xhi - xlo + 1) * (yhi - ylo + 1)
     assert n_bbox > COVER_BUDGET
     got = rast.filter("polygon_id = 1").count()

@@ -180,7 +180,7 @@ def test_approx_domain_stats_error_bound(spark):
             assert rel < 0.05, (parts, r["lang"], rel)
 
 
-def test_blocklist_schema_checked_and_reason_col_renameable(spark):
+def test_blocklist_schema_checked(spark):
     from osm_jl_spark.operators.web import blocklist_filter
     import pytest
 
@@ -191,12 +191,6 @@ def test_blocklist_schema_checked_and_reason_col_renameable(spark):
     bare = spark.createDataFrame([("bad.org",)], "host STRING")
     with pytest.raises(ValueError, match="reason"):
         blocklist_filter(docs, bare)
-    # a differently-named reason column works via reason_col
-    bl = spark.createDataFrame(
-        [("bad.org", "listed")], "host STRING, why STRING"
-    )
-    out = blocklist_filter(docs, bl, reason_col="why")
-    assert out.first()["block_reason"] == "listed"
 
 
 def test_fetch_schedule_politeness(spark):

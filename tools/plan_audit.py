@@ -38,7 +38,8 @@ AUDITED = [
      "condition; zero fact shuffle"),
     ("bbox_vitoria_nodes", "node side: pure native range filter on the "
      "cell columns - no UDF, no join, no shuffle; the way side is the "
-     "any-ref semi-join on the inside node ids"),
+     "any-ref semi-join on the inside node ids, whose two id-keyed "
+     "aggregations are the plan's (2 exchanges)"),
     ("tile_rollup", "multi-resolution rollup: ONE groupBy shuffle over "
      "exploded resolutions (partial aggregation map-side) plus the "
      "intentional second exchange that merges hot-cell SALT shards - "
@@ -49,11 +50,17 @@ AUDITED = [
      "level's 3x3-cell disk join against broadcast query cells and its "
      "one top-k window exchange ran inside its checkpoint, so neither "
      "shows here"),
-    ("tpch_q3", "customer dimension broadcast; orders-lineitem shuffle "
-     "join planned by AQE; parquet scans carry PushedFilters"),
+    ("tpch_q3", "customer dimension broadcast; at this scale the "
+     "orders-lineitem join broadcasts too (AQE re-plans it as a "
+     "shuffle join when it grows), so the l_orderkey aggregation is "
+     "the only shuffle (1 exchange); parquet scans carry PushedFilters"),
     ("events_sessionize", "both window functions share one (user_id) "
      "partitioning - exactly ONE shuffle for lag + running-sum + agg"),
-    ("minhash_pairs", "band-bucket self-join: shuffle on (band, sig) bucket key only; signatures are a pure NARROW map (array_min over transform, zero shuffle), recomputed per consumer by design"),
+    ("minhash_pairs", "band-bucket self-join: each side shuffles on "
+     "the (band, band hash) bucket key only, plus the candidate-pair "
+     "distinct (3 exchanges); signatures are a pure NARROW map "
+     "(array_min over transform, zero shuffle), recomputed per "
+     "consumer by design"),
     ("dedup_exact_keep", "hash-groupBy dedup: the keep pass (min id "
      "per content hash, then a semi-join) and the duplicate-group "
      "census (count per content hash), map-side partial aggregation"),
@@ -68,20 +75,23 @@ AUDITED = [
      "(row-group skipping); zero shuffle, zero Python"),
     ("contamination", "asymmetric containment: eval shingles broadcast "
      "(both the index and the sizes dim) - the train side never "
-     "shuffles; per-pair count is map-side combinable"),
+     "shuffles before the map-side-combinable per-pair count, and "
+     "the eval sizes aggregate under their broadcast (2 exchanges)"),
     ("hash_sample", "deterministic sampler is a pure narrow filter on "
      "md5 rank: no shuffle, no window, composes with the scan"),
     ("corpus_clean", "quality gates fuse into the scan projection; "
-     "repetition join + fingerprint dedup are the only shuffles; the "
-     "50% sampler stays a filter"),
+     "repetition join + fingerprint dedup are the only shuffles - the "
+     "repetition score's two aggregations on both sides of its join "
+     "plus the dedup (5 exchanges); the 50% sampler stays a filter"),
     ("pack_sequences", "two-level prefix sum: the ONLY unbounded "
      "(whole-relation) window runs over the B-row bucket table, never "
      "the corpus - corpus rows see a window PARTITIONED by bucket; "
      "greedy bin assignment stays native"),
-    ("bfs_hops", "iterative frontier expansion: the audited plan is "
-     "the FINAL round - frontier joins adjacency (one shuffle per "
-     "round), visited set localCheckpointed so lineage stays O(1) "
-     "per round instead of O(rounds)"),
+    ("bfs_hops", "iterative frontier expansion: each round's frontier "
+     "joins adjacency (one shuffle per round) inside that round's "
+     "localCheckpoint, so the audited plan - the union of the "
+     "checkpoints - shows none and lineage stays O(1) per round "
+     "instead of O(rounds)"),
     ("shortest_paths", "weighted relaxation rounds: per-round "
      "min-distance aggregation is map-side combinable; checkpointed "
      "state keeps each round's plan constant-size"),
@@ -127,8 +137,9 @@ AUDITED = [
      "the zoom-10 parent is a substring of the grouped key - rollup "
      "without re-encoding"),
     ("window_dedup_clean", "exact-substring removal: df count and "
-     "per-doc hot-array regroup on uniform keys, text join on the doc "
-     "id (3 exchanges); duplicated positions are RECOMPUTED against "
+     "per-doc hot-array regroup on uniform keys (2 exchanges); the "
+     "hot-array table broadcasts into the text join at this scale; "
+     "duplicated positions are RECOMPUTED against "
      "the broadcast-joined hot array in a narrow map and the cut is a "
      "higher-order token filter - zero Python"),
     ("tile_store_read", "tile-serving store read: stripe equality in "
@@ -147,9 +158,10 @@ AUDITED = [
      "of the host dimension; keyword predicates fuse into the same "
      "projection; the 10^12-page fact side never shuffles"),
     ("tpch_q5", "6-table join: region/nation/supplier broadcast "
-     "explicitly; lineitem-orders and the customer fact join shuffle "
-     "under AQE; the c_nationkey = s_nationkey condition rides the "
-     "broadcast supplier join without an extra exchange"),
+     "explicitly; at this scale the planner broadcasts orders and "
+     "customer too, so the n_name revenue aggregation is the only "
+     "shuffle (1 exchange); the c_nationkey = s_nationkey condition "
+     "rides the broadcast supplier join without an extra exchange"),
     ("doc_repetition", "within-doc line repetition: explode lines -> "
      "per-(doc,line) count -> per-doc fractions; two map-side "
      "combinable exchanges, groups bounded by one doc's lines - no "
@@ -174,10 +186,10 @@ AUDITED = [
      "+ posexplode is a pure narrow map the scan fuses - zero "
      "exchanges, zero Python; one pass over the html column at any "
      "corpus size (plan-pinned in tests/test_links.py)"),
-    ("host_in_links", "host-level in-link census: ONE "
-     "map-side-combinable shuffle on dst_host; the distinct-source "
-     "count expands map-side on the same key - hot hosts cost one "
-     "partial row per input partition"),
+    ("host_in_links", "host-level in-link census: two "
+     "map-side-combinable shuffles, the distinct-source count's "
+     "(dst_host, url) one and the final dst_host one (2 exchanges) - "
+     "hot hosts cost one partial row per input partition"),
     ("link_pagerank", "PageRank over the doc link graph: per "
      "iteration one src-keyed join shuffle + one dst-keyed "
      "map-side-combinable aggregation; localCheckpoint keeps the "
@@ -210,7 +222,8 @@ AUDITED = [
      "never a task failure, so one bad feature can't kill a planet "
      "ingest"),
     ("temperature_sample", "XLM-R temperature rebalancing: one "
-     "map-side-combinable per-lang count (dimension-sized), "
+     "map-side-combinable per-lang count (dimension-sized), planned "
+     "again under the single-row max of the rates (3 exchanges), "
      "thresholds broadcast back, then the same zero-shuffle md5-rank "
      "keep filter as hash_sample — the corpus side never shuffles; "
      "alpha=0.5 thresholds use only correctly-rounded IEEE ops so "
@@ -218,7 +231,9 @@ AUDITED = [
     ("link_hits", "HITS hubs/authorities as unnormalized integer "
      "power iterations: one join shuffle + one map-side-combinable "
      "aggregation per direction per iteration (the pagerank shape "
-     "twice), localCheckpointed lineage; normalization dropped "
+     "twice), localCheckpointed, so the audited plan shows only the "
+     "final hub/authority join on node (2 exchanges); normalization "
+     "dropped "
      "because it is a positive scalar that never changes the ranking "
      "— every score stays an exact path-count BIGINT"),
     ("host_triangles", "triangle census via degree-ordered "
@@ -229,7 +244,8 @@ AUDITED = [
      "left-semi equi-join; per-vertex counts map-side combine"),
     ("fetch_schedule", "crawl-frontier politeness scheduling: one "
      "min-combine shuffle on (host, url) dedups the frontier, one "
-     "per-host window serializes fetches delay_sec apart — each "
+     "per-host window serializes fetches delay_sec apart (2 "
+     "exchanges) — each "
      "host's window task is bounded by its own frontier, which "
      "politeness itself caps (horizon/delay urls); exact integer "
      "fetch_at arithmetic"),
@@ -266,13 +282,17 @@ AUDITED = [
      "contamination_pairs' per-shingle dim; the train side computes "
      "its k md5 probes in the scan projection, hash-joins the "
      "broadcast k times, and shuffles exactly once (the map-side-"
-     "combinable per-doc count); no false negatives by construction"),
+     "combinable per-doc count); the bitmap's word aggregation is "
+     "planned under each of the k = 3 broadcasts (4 exchanges); no "
+     "false negatives by construction"),
     ("semdedup_clusters", "SemDeDup cluster-bounded semantic dedup: "
      "the medoid dimension broadcasts (deliberate broadcast cross "
      "product, like cosine_topk); assignment reduces in ONE "
-     "map-side-combinable min_by shuffle on the uniform vector id; "
-     "the near-dup pair search self-joins ON THE CLUSTER KEY so "
-     "candidates are bounded per cluster, never all-pairs; exact "
+     "map-side-combinable min_by shuffle on the uniform vector id, "
+     "planned for each of its 3 consumers; the near-dup pair search "
+     "self-joins ON THE CLUSTER KEY (one shuffle per side) so "
+     "candidates are bounded per cluster, never all-pairs, and the "
+     "dropped ids dedup once (6 exchanges); exact "
      "left-to-right folds keep the DuckDB oracle bit-identical"),
     ("radius_join", "all-pairs-within-d spatial join: centers explode "
      "into 3x3 radius-width cell rings and BROADCAST; the point side "
