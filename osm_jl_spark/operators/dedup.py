@@ -33,6 +33,12 @@ EMBED_PLANES = 16  # random hyperplanes per embedding LSH bucket key
 EMBED_SEED = 7
 LINE_MIN_LEN = 1  # shorter (trimmed) lines are never deduped: blank lines
 BLOOM_K = 3  # Bloom probes per shingle
+JACCARD_THRESHOLD = 0.5  # ngram_jaccard_pairs keeps pairs at or above
+SIMHASH_MAX_HAMMING = 3  # simhash pairs within this many differing bits
+EMBED_THRESHOLD = 0.95  # embedding_near_dups keeps cosine at or above
+CONTAMINATION_THRESHOLD = 0.8  # eval shingle share that counts as leaked
+WINDOW_TOKENS = 8  # token window of the window-dedup operators
+WINDOW_MIN_DF = 2  # docs a window must occur in to count as duplicated
 
 
 def exact_duplicates(docs: DataFrame) -> DataFrame:
@@ -235,8 +241,9 @@ def minhash_dedup_pairs(
     )
 
 
-def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
-    """EXACT n-gram Jaccard near-dup: (id_a, id_b, jaccard).
+def ngram_jaccard_pairs(docs: DataFrame) -> DataFrame:
+    """EXACT n-gram Jaccard near-dup: (id_a, id_b, jaccard) for
+    jaccard >= ``JACCARD_THRESHOLD``.
 
     Inverted-index join: explode shingle hashes, self-join per shingle
     (min-id < other-id), count shared shingles per pair, then
@@ -271,7 +278,7 @@ def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
             "jaccard",
             F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")),
         )
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
         .select("id_a", "id_b", "jaccard")
     )
 
@@ -342,11 +349,10 @@ def simhash_signatures(
 
 def simhash_near_dups(
     docs: DataFrame,
-    max_hamming: int = 3,
     hash_fn: str = "xxhash64",
     bucket_cap: int | None = None,
 ) -> DataFrame:
-    """(id_a, id_b, hamming <= max_hamming) via 4-block banding:
+    """(id_a, id_b, hamming <= SIMHASH_MAX_HAMMING) via 4-block banding:
     two 64-bit hashes within hamming distance <=3 agree on at least one
     16-bit block (pigeonhole) -> block-bucket join, then exact hamming
     check with bit_count (native).
@@ -354,7 +360,7 @@ def simhash_near_dups(
     Hot-bucket honesty: a (block, value) bucket shared by d docs emits
     d*(d-1)/2 join rows, and unlike the minhash path there is NO
     default cap, because capping would break the "provably complete
-    for hamming <= max_hamming" contract — near-identical template
+    for hamming <= SIMHASH_MAX_HAMMING" contract — near-identical template
     pages really do share blocks, and those pairs are the answer. At
     web scale, where a boilerplate block value can collect millions of
     docs, pass ``bucket_cap`` to bound each bucket (pairs within a
@@ -399,16 +405,15 @@ def simhash_near_dups(
     hamming = F.bit_count(F.col("ha").bitwiseXOR(F.col("hb")))
     return (
         cand.withColumn("hamming", hamming)
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= SIMHASH_MAX_HAMMING)
         .select("id_a", "id_b", "hamming")
     )
 
 
-def embedding_near_dups(
-    embeddings: DataFrame, threshold: float = 0.95
-) -> DataFrame:
+def embedding_near_dups(embeddings: DataFrame) -> DataFrame:
     """Embedding-cosine near-dup via random-hyperplane LSH buckets
-    (``EMBED_PLANES`` bits) + exact cosine check (native
+    (``EMBED_PLANES`` bits) + exact cosine check against
+    ``EMBED_THRESHOLD`` (native
     F.aggregate/zip_with math; the plane matrix is a literal array
     baked into the plan).
 
@@ -451,7 +456,7 @@ def embedding_near_dups(
     )
     return (
         cand.withColumn("cosine", dot / (F.col("x.norm") * F.col("y.norm")))
-        .filter(F.col("cosine") >= threshold)
+        .filter(F.col("cosine") >= EMBED_THRESHOLD)
         .select(
             F.col("x.id").alias("id_a"),
             F.col("y.id").alias("id_b"),
@@ -460,13 +465,12 @@ def embedding_near_dups(
     )
 
 
-def contamination_pairs(
-    train: DataFrame, eval_docs: DataFrame, threshold: float = 0.8
-) -> DataFrame:
+def contamination_pairs(train: DataFrame, eval_docs: DataFrame) -> DataFrame:
     """Train/eval decontamination: (train_id, eval_id, containment)
     where containment = |shingles(eval) ∩ shingles(train)| /
-    |shingles(eval)| — the standard benchmark-contamination test a
-    training pipeline runs before a corpus ships (an eval item counts
+    |shingles(eval)| >= ``CONTAMINATION_THRESHOLD`` — the standard
+    benchmark-contamination test a training pipeline runs before a
+    corpus ships (an eval item counts
     as leaked into a training doc when most of its n-grams appear
     there, even if the training doc is much longer, which is why this
     is containment and not jaccard).
@@ -498,20 +502,17 @@ def contamination_pairs(
         inter.join(ev_sizes.select(F.col("id").alias("eval_id"), "ev_sz"),
                    "eval_id")
         .withColumn("containment", F.col("inter") / F.col("ev_sz"))
-        .filter(F.col("containment") >= threshold)
+        .filter(F.col("containment") >= CONTAMINATION_THRESHOLD)
         .select("train_id", "eval_id", "containment")
     )
 
 
-def snapshot_latest(
-    df: DataFrame,
-    key: str = "url",
-    ts_col: str = "warc_ts",
-) -> DataFrame:
-    """Crawl-snapshot dedup: keep the newest capture per ``key`` (the
+def snapshot_latest(df: DataFrame) -> DataFrame:
+    """Crawl-snapshot dedup: keep the newest ``warc_ts`` capture per
+    ``url`` (the
     canonical first step over a Common-Crawl-style table whose urls are
     recrawled — the input_hint's (url, warc_ts, ...) shape). Output is
-    one row per key with every payload column from the winning capture
+    one row per url with every payload column from the winning capture
     plus ``n_caps``, the capture count.
 
     Plan: ONE shuffle on the key with map-side partial aggregation —
@@ -530,20 +531,20 @@ def snapshot_latest(
     per-partition sort is by key only, over the already-reduced
     partial rows on the final side.
 
-    Edge semantics: ties on ``ts_col`` pick an unspecified capture —
+    Edge semantics: ties on ``warc_ts`` pick an unspecified capture —
     callers needing determinism under ties should order by a composite
-    struct. ``max_by`` SKIPS rows whose ``ts_col`` is NULL: a key whose
-    captures ALL have NULL ``ts_col`` still emits a row (n_caps > 0)
+    struct. ``max_by`` SKIPS rows whose ``warc_ts`` is NULL: a url whose
+    captures ALL have NULL ``warc_ts`` still emits a row (n_caps > 0)
     but with NULL payload columns — matching DuckDB ``arg_max``, which
     is what the oracle parity relies on.
     """
-    payload = [c for c in df.columns if c != key]
-    agg = df.groupBy(key).agg(
-        F.max_by(F.struct(*payload), F.col(ts_col)).alias("_latest"),
+    payload = [c for c in df.columns if c != "url"]
+    agg = df.groupBy("url").agg(
+        F.max_by(F.struct(*payload), F.col("warc_ts")).alias("_latest"),
         F.count(F.lit(1)).alias("n_caps"),
     )
     return agg.select(
-        key,
+        "url",
         *[F.col(f"_latest.{c}").alias(c) for c in payload],
         "n_caps",
     )
@@ -680,14 +681,12 @@ def neardup_keep_best(
         (-F.col("b.nid")).alias("keep_id"),
     )
 
-def duplicated_window_stats(
-    docs: DataFrame, w: int = 8, min_df: int = 2
-) -> DataFrame:
+def duplicated_window_stats(docs: DataFrame) -> DataFrame:
     """Exact-substring duplication profile (Lee et al. 2022,
     "Deduplicating Training Data Makes Language Models Better",
     approximated at token-window granularity): for every document,
-    how many of its distinct ``w``-token windows also appear in at
-    least ``min_df - 1`` OTHER documents. The per-doc
+    how many of its distinct ``WINDOW_TOKENS``-token windows also
+    appear in at least ``WINDOW_MIN_DF - 1`` OTHER documents. The per-doc
     ``n_dup_windows / n_windows`` ratio is the standard signal for
     cross-document boilerplate/quotation load, one level finer than
     ``line_dedup`` (which needs exact line boundaries) and one level
@@ -696,7 +695,7 @@ def duplicated_window_stats(
     approximation the paper itself uses for its NearDup comparison).
 
     Output: (doc_id, n_windows, n_dup_windows) — one row per document
-    having at least one window (docs shorter than ``w`` tokens carry
+    having at least one window (docs shorter than a window carry
     no signal and emit nothing). Integer columns only: the ratio is
     left to the caller so the result stays engine-exact.
 
@@ -706,21 +705,23 @@ def duplicated_window_stats(
     ``_shingle_hashes`` — so the document-frequency groupBy input is
     already (doc, window)-unique and the count is map-side
     combinable on a uniform 64-bit key. The hot-window dim
-    (df >= min_df) is a small fraction of distinct windows at corpus
+    (df >= WINDOW_MIN_DF) is a small fraction of distinct windows at corpus
     scale, so AQE broadcasts the left join back; the final per-doc
     regroup shuffles (id, hash) pairs only — never the text. At
-    10^12 docs the w-token window set is ~doc_tokens rows of 8+8
+    10^12 docs the window set is ~doc_tokens rows of 8+8
     bytes through ONE uniform-key exchange; no collect, no skew key
     (hashes are uniform by construction).
     """
     toks = F.filter(
         F.split(F.col("text"), r"\s+"), lambda t: t != F.lit("")
     )
-    nwin = F.size(toks) - F.lit(w - 1)
+    nwin = F.size(toks) - F.lit(WINDOW_TOKENS - 1)
     wins = F.array_distinct(
         F.transform(
             F.sequence(F.lit(1), nwin),
-            lambda i: F.xxhash64(F.concat_ws(" ", F.slice(toks, i, w))),
+            lambda i: F.xxhash64(
+                F.concat_ws(" ", F.slice(toks, i, WINDOW_TOKENS))
+            ),
         )
     )
     ex = docs.select(
@@ -732,7 +733,7 @@ def duplicated_window_stats(
     hot = (
         ex.groupBy("wh")
         .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") >= min_df)
+        .filter(F.col("df") >= WINDOW_MIN_DF)
         .select("wh", F.lit(True).alias("is_hot"))
     )
     return (
@@ -745,16 +746,14 @@ def duplicated_window_stats(
     )
 
 
-def remove_duplicated_windows(
-    docs: DataFrame, w: int = 8, min_df: int = 2
-) -> DataFrame:
+def remove_duplicated_windows(docs: DataFrame) -> DataFrame:
     """The REMOVAL counterpart of ``duplicated_window_stats`` — Lee et
     al. 2022's exact-substring deduplication at token-window
-    granularity: every ``w``-token window occurring in at least
-    ``min_df`` documents is cut from each document's text (a token is
-    dropped iff at least one duplicated window covers it; survivors
-    are re-joined with single spaces, the standard normalization for
-    this transform). Docs shorter than ``w`` tokens pass through
+    granularity: every ``WINDOW_TOKENS``-token window occurring in at
+    least ``WINDOW_MIN_DF`` documents is cut from each document's text
+    (a token is dropped iff at least one duplicated window covers it;
+    survivors are re-joined with single spaces, the standard
+    normalization for this transform). Docs shorter than a window pass through
     untouched. Returns (doc_id, clean_text, n_tokens, n_removed).
 
     Plan (zero per-row Python, three uniform-key exchanges):
@@ -763,7 +762,7 @@ def remove_duplicated_windows(
        ``duplicated_window_stats`` narrow map), so the document-
        frequency groupBy ships one (doc, hash) pair per distinct
        window — exchange 1, uniform 64-bit key;
-    2. the hot-window dim (df >= min_df — a small fraction of distinct
+    2. the hot-window dim (df >= WINDOW_MIN_DF — a small fraction of distinct
        windows at corpus scale) semi-joins back (AQE broadcast) and
        regroups to one hot-hash array per affected doc — exchange 2;
     3. that per-doc array joins the original text — exchange 3, on the
@@ -785,10 +784,10 @@ def remove_duplicated_windows(
         F.split(F.coalesce(F.col("text"), F.lit("")), r"\s+"),
         lambda t: t != F.lit(""),
     )
-    nwin = F.size(toks) - F.lit(w - 1)
+    nwin = F.size(toks) - F.lit(WINDOW_TOKENS - 1)
 
     def winh(i):
-        return F.xxhash64(F.concat_ws(" ", F.slice(toks, i, w)))
+        return F.xxhash64(F.concat_ws(" ", F.slice(toks, i, WINDOW_TOKENS)))
 
     wins = F.array_distinct(
         F.transform(F.sequence(F.lit(1), nwin), winh)
@@ -800,7 +799,7 @@ def remove_duplicated_windows(
     hot = (
         ex.groupBy("wh")
         .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") >= min_df)
+        .filter(F.col("df") >= WINDOW_MIN_DF)
         .select("wh")
     )
     doc_hot = (
@@ -820,12 +819,12 @@ def remove_duplicated_windows(
         ),
     ).otherwise(F.array().cast("array<int>"))
     # token at 1-based position p survives iff no dup window starting
-    # at s covers it (s <= p <= s + w - 1)
+    # at s covers it (s <= p <= s + WINDOW_TOKENS - 1)
     kept = F.filter(
         toks,
         lambda t, i: ~F.exists(
             starts,
-            lambda s: (i + 1 >= s) & (i + 1 <= s + F.lit(w - 1)),
+            lambda s: (i + 1 >= s) & (i + 1 <= s + F.lit(WINDOW_TOKENS - 1)),
         ),
     )
     return joined.select(

@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from osm_jl_spark.operators.elements import is_road
 
 CC_MAX_ITER = 30  # connected_components label-propagation round cap
+BFS_MAX_HOPS = 8  # bfs_hops reaches nodes at most this many edges out
 
 
 def way_edges(ways: DataFrame) -> DataFrame:
@@ -68,11 +69,9 @@ def way_edges(ways: DataFrame) -> DataFrame:
     )
 
 
-def bfs_hops(
-    edges: DataFrame, sources: DataFrame, max_hops: int = 8
-) -> DataFrame:
+def bfs_hops(edges: DataFrame, sources: DataFrame) -> DataFrame:
     """Multi-source BFS: (node, dist) for every node within
-    ``max_hops`` edges of any source node, dist = hop count to the
+    ``BFS_MAX_HOPS`` edges of any source node, dist = hop count to the
     NEAREST source (0 for the sources themselves).
 
     ``edges`` is a directed edge list (src, dst) — pass the output of
@@ -87,7 +86,7 @@ def bfs_hops(
         .localCheckpoint()
     )
     visited = frontier
-    for hop in range(1, max_hops + 1):
+    for hop in range(1, BFS_MAX_HOPS + 1):
         nxt = (
             frontier.join(edges, frontier["node"] == edges["src"])
             .select(F.col("dst").alias("node"))

@@ -44,6 +44,9 @@ from osm_jl_spark.operators.web import url_host
 # arithmetically instead, which is stronger).
 HREF_RE = r'href="([^"]*)"'
 
+PAGERANK_ITERS = 3  # pagerank_scaled iterations: R grows as 4^iters
+HITS_ITERS = 2  # hits_scores iterations: scores grow as degree^(2 iters)
+
 
 def extract_links(pages: DataFrame) -> DataFrame:
     """All anchor hrefs per page: (url, link_idx, href, dst_host).
@@ -135,11 +138,9 @@ def pagerank(
     return r
 
 
-def pagerank_scaled(
-    edges: DataFrame, nodes: DataFrame, iters: int = 3
-) -> DataFrame:
+def pagerank_scaled(edges: DataFrame, nodes: DataFrame) -> DataFrame:
     """EXACT PageRank at damping 1/2, integer-scaled: (node, r) longs
-    with r = rank * n_nodes * 4^iters.
+    with r = rank * n_nodes * 4^PAGERANK_ITERS.
 
     Derivation: rank_{t+1}(v) = 1/(2N) + (1/2) * sum rank_t(u)/deg(u).
     With R_t := rank_t * N * 4^t this becomes
@@ -182,7 +183,7 @@ def pagerank_scaled(
     r = nodes.select(
         "node", F.lit(1).cast("long").alias("r")
     ).localCheckpoint(eager=False)
-    for t in range(iters):
+    for t in range(PAGERANK_ITERS):
         contribs = e.join(r, e["src"] == r["node"]).select(
             F.col("dst").alias("node"),
             (F.col("coef") * F.col("r")).alias("c"),
@@ -277,7 +278,7 @@ def triangle_census(edges: DataFrame) -> DataFrame:
     )
 
 
-def hits_scores(edges: DataFrame, iters: int = 2) -> DataFrame:
+def hits_scores(edges: DataFrame) -> DataFrame:
     """HITS hubs & authorities over a directed (src, dst) edge multiset, as
     UNNORMALIZED exact-integer power iterations: h_0 = a_0 = 1; then
     per iteration a_t(v) = sum over in-edges (u,v) of h_{t-1}(u) and
@@ -292,8 +293,8 @@ def hits_scores(edges: DataFrame, iters: int = 2) -> DataFrame:
     oracle unrolls the same joins and matches hash-exactly — the same
     design as pagerank_scaled's integer form (links.py above), minus
     even the divides-2 precondition since no division exists at all.
-    Magnitude grows ~(max_degree^2)^iters: at web-ish degrees keep
-    ``iters`` small (ranks stabilize in a few iterations); ANSI mode
+    Magnitude grows ~(max_degree^2)^HITS_ITERS: at web-ish degrees keep
+    ``HITS_ITERS`` small (ranks stabilize in a few iterations); ANSI mode
     errors loudly on int64 overflow rather than wrapping.
 
     Per iteration: one join shuffle + one map-side-combinable
@@ -308,7 +309,7 @@ def hits_scores(edges: DataFrame, iters: int = 2) -> DataFrame:
     )
     h = nodes.select("node", F.lit(1).cast("long").alias("h"))
     a = nodes.select("node", F.lit(1).cast("long").alias("a"))
-    for _ in range(iters):
+    for _ in range(HITS_ITERS):
         a_sum = (
             e.join(h, e["src"] == h["node"])
             .groupBy("dst").agg(F.sum("h").alias("s"))

@@ -28,6 +28,8 @@ FEATURE_SCHEMA = (
     "out_width INT, out_height INT"
 )
 FEATURE_SIZE = (8, 8)  # (width, height) of the block-mean feature grid
+MEDIA_N = 64  # items in the synthetic_media fixture
+FRAME_EVERY = 10  # frame_sample keeps every FRAME_EVERY-th video frame
 
 
 def _fake_decode_image(payload: bytes, width: int, height: int) -> np.ndarray:
@@ -87,28 +89,28 @@ def decode_and_featurize(media: DataFrame) -> DataFrame:
     return media.mapInPandas(run, FEATURE_SCHEMA)
 
 
-def frame_sample(
-    media: DataFrame, every_n: int = 10
-) -> DataFrame:
+def frame_sample(media: DataFrame) -> DataFrame:
     """Video frame sampling plumbing: emits (media_id, frame_idx) rows
-    for every_n-th frame from meta.n_frames — native sequence/explode,
-    the decode of each frame would be another mapInPandas stage."""
+    for every ``FRAME_EVERY``-th frame from meta.n_frames — native
+    sequence/explode, the decode of each frame would be another
+    mapInPandas stage."""
     return media.filter(F.col("kind") == "video").select(
         "media_id",
         F.explode(
             F.sequence(
                 F.lit(0),
                 F.greatest(F.col("meta.n_frames") - 1, F.lit(0)),
-                F.lit(every_n),
+                F.lit(FRAME_EVERY),
             )
         ).alias("frame_idx"),
     )
 
 
-def synthetic_media(spark, n: int = 64) -> DataFrame:
-    """Deterministic media fixture: payload = utf-8 of a seeded string."""
+def synthetic_media(spark) -> DataFrame:
+    """Deterministic media fixture of ``MEDIA_N`` items: payload = utf-8
+    of a seeded string."""
     rows = []
-    for i in range(n):
+    for i in range(MEDIA_N):
         kind = ["image", "audio", "video"][i % 3]
         payload = f"media-payload-{i}".encode()
         rows.append(

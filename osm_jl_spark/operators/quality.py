@@ -43,6 +43,9 @@ GOPHER_MAX_ELLIPSIS_FRAC = 0.3
 GOPHER_MIN_ALPHA_FRAC = 0.8
 GOPHER_MIN_STOP_HITS = 2
 
+REPETITION_N = 2  # word n-gram size of repetition_scores
+TFIDF_TOP = 3  # terms kept per document by tfidf_top_terms
+
 
 def gopher_quality(
     docs: DataFrame,
@@ -123,13 +126,14 @@ def gopher_quality(
     return sig.withColumn("keep", F.coalesce(keep, F.lit(False)))
 
 
-def repetition_scores(docs: DataFrame, n: int = 2) -> DataFrame:
+def repetition_scores(docs: DataFrame) -> DataFrame:
     """(doc_id, top_ngram_count, ngram_total, repetition_ratio): the share
-    of the document's word ``n``-grams taken by its single most
-    frequent n-gram — the standard boilerplate/spam signal (a page
+    of the document's word ``REPETITION_N``-grams taken by its single
+    most frequent n-gram — the standard boilerplate/spam signal (a page
     that repeats one phrase scores near 1; clean prose scores low).
-    Documents with fewer than ``n`` tokens produce no row (no n-grams
-    to judge — callers treat absent as "no signal", not "clean").
+    Documents with fewer than ``REPETITION_N`` tokens produce no row
+    (no n-grams to judge — callers treat absent as "no signal", not
+    "clean").
 
     Plan: explode n-grams, count per (doc, gram) — a map-side
     combinable groupBy whose key cardinality is bounded by corpus
@@ -139,7 +143,7 @@ def repetition_scores(docs: DataFrame, n: int = 2) -> DataFrame:
     """
     grams = docs.select(
         F.col("doc_id").alias("id"),
-        F.explode(ngrams_col("text", n)).alias("gram"),
+        F.explode(ngrams_col("text", REPETITION_N)).alias("gram"),
     )
     counts = grams.groupBy("id", "gram").agg(
         F.count(F.lit(1)).alias("c")
@@ -202,8 +206,8 @@ def doc_repetition(docs: DataFrame) -> DataFrame:
     )
 
 
-def tfidf_top_terms(docs: DataFrame, top: int = 3) -> DataFrame:
-    """(doc_id, token, tf, df, score, rk): each document's ``top``
+def tfidf_top_terms(docs: DataFrame) -> DataFrame:
+    """(doc_id, token, tf, df, score, rk): each document's ``TFIDF_TOP``
     characteristic terms by tf·N/df — the log-free tf-idf variant, on
     purpose: tf·N is exact BIGINT and the score is then ONE float
     division, so rankings are bit-reproducible across engines and
@@ -234,7 +238,7 @@ def tfidf_top_terms(docs: DataFrame, top: int = 3) -> DataFrame:
     )
     return (
         scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= top)
+        .filter(F.col("rk") <= TFIDF_TOP)
         .select(
             F.col("id").alias("doc_id"),
             "token",

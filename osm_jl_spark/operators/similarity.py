@@ -24,6 +24,7 @@ SEMDEDUP_THRESHOLD = 0.95  # cosine at or above which a pair is a near-dup
 CENTROID_STEP = 125  # semdedup's default medoids: ids divisible by this
 PQ_SUBSPACES = 8  # pq_train_codebooks: m subspaces
 PQ_CODEWORDS = 16  # pq_train_codebooks: k codewords per subspace
+PQ_TOPK = 5  # pq_adc_topk: neighbors returned per query
 
 
 def _dot(a, b):
@@ -425,9 +426,8 @@ def pq_adc_topk(
     codes: DataFrame,
     codebooks: list[list[list[float]]],
     queries: DataFrame,
-    k: int = 5,
 ) -> DataFrame:
-    """Asymmetric-distance top-k over PQ codes: for each query,
+    """Asymmetric-distance top-``PQ_TOPK`` over PQ codes: for each query,
     d2_adc = sum_j ||q_j - codeword(j, codes[j])||² — the exact
     squared L2 between the query and the RECONSTRUCTED corpus vector
     (an identity, pinned in tests/test_pq.py), computed WITHOUT ever
@@ -496,6 +496,6 @@ def pq_adc_topk(
             d2.alias("d2_adc"),
         )
         .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= PQ_TOPK)
         .select("query_id", "neighbor_id", "rank", "d2_adc")
     )

@@ -16,13 +16,28 @@ Counts/sums are algebraic, so two-stage aggregation is exact.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from osm_jl_spark.functions.cells import with_cell
 
 SALT_BUCKETS = 16  # salts per cell/tile in the two-stage aggregations
 RASTER_PRECISION = 2  # cell precision of tile_ids and vector_to_raster
+
+
+def _salted_count(
+    df: DataFrame, keys: list[str], row_hash: Column
+) -> DataFrame:
+    """(*keys, n_points): stage 1 counts per (keys, salt), the salt
+    being ``row_hash`` modulo ``SALT_BUCKETS``, so a hot key spreads
+    over that many reducers; stage 2 sums the partial counts per key."""
+    salt = F.pmod(row_hash, F.lit(SALT_BUCKETS))
+    partial = (
+        df.withColumn("_salt", salt)
+        .groupBy(*keys, "_salt")
+        .agg(F.count(F.lit(1)).alias("pn"))
+    )
+    return partial.groupBy(*keys).agg(F.sum("pn").alias("n_points"))
 
 
 def tile_counts(points: DataFrame, precision: int = 2) -> DataFrame:
@@ -34,14 +49,8 @@ def tile_counts(points: DataFrame, precision: int = 2) -> DataFrame:
     ``SALT_BUCKETS``, stage 2 merges partials per cell. With AQE on,
     the second (tiny) shuffle coalesces automatically.
     """
-    pts = with_cell(points, precision)
-    salt = F.pmod(F.hash(F.col("lon"), F.col("lat")), F.lit(SALT_BUCKETS))
-    partial = (
-        pts.withColumn("_salt", salt)
-        .groupBy("cx", "cy", "_salt")
-        .agg(F.count(F.lit(1)).alias("pn"))
-    )
-    return partial.groupBy("cx", "cy").agg(F.sum("pn").alias("n_points"))
+    return _salted_count(with_cell(points, precision), ["cx", "cy"],
+                         F.hash(F.col("lon"), F.col("lat")))
 
 
 def tile_ids(points: DataFrame) -> DataFrame:
@@ -93,15 +102,8 @@ def tile_rollup(points: DataFrame, precisions: list[int]) -> DataFrame:
         cx = F.when(cond, cxe) if cx is None else cx.when(cond, cxe)
         cy = F.when(cond, cye) if cy is None else cy.when(cond, cye)
     enc = lvl.withColumn("cx", cx).withColumn("cy", cy)
-    salt = F.pmod(F.hash(F.col("lon"), F.col("lat")), F.lit(SALT_BUCKETS))
-    partial = (
-        enc.withColumn("_salt", salt)
-        .groupBy("precision", "cx", "cy", "_salt")
-        .agg(F.count(F.lit(1)).alias("pn"))
-    )
-    return partial.groupBy("precision", "cx", "cy").agg(
-        F.sum("pn").alias("n_points")
-    )
+    return _salted_count(enc, ["precision", "cx", "cy"],
+                         F.hash(F.col("lon"), F.col("lat")))
 
 
 def quadkey_rollup(
@@ -130,15 +132,7 @@ def quadkey_rollup(
         F.col(qk_col).substr(F.lit(1), F.col("zoom")).alias("tile_qk"),
         F.col(qk_col).alias("_full"),
     )
-    salt = F.pmod(F.xxhash64("_full"), F.lit(SALT_BUCKETS))
-    partial = (
-        lvl.withColumn("_salt", salt)
-        .groupBy("zoom", "tile_qk", "_salt")
-        .agg(F.count(F.lit(1)).alias("pn"))
-    )
-    return partial.groupBy("zoom", "tile_qk").agg(
-        F.sum("pn").alias("n_points")
-    )
+    return _salted_count(lvl, ["zoom", "tile_qk"], F.xxhash64("_full"))
 
 
 def raster_to_vector(tiles: DataFrame, threshold: int = 1) -> DataFrame:

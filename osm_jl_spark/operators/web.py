@@ -119,16 +119,16 @@ def domain_stats(pages: DataFrame) -> DataFrame:
 def blocklist_filter(
     docs: DataFrame,
     blocklist: DataFrame,
-    host_col: str = "host",
     keyword_rules: list[tuple[str, Column]] | None = None,
 ) -> DataFrame:
     """Domain allow/deny filtering — the step a crawl pipeline runs
     right after ``domain_stats`` decides which hosts to drop. Emits
-    every input row with ``block_reason`` (NULL = clean) and ``keep``;
-    host-level blocks take precedence over content ``keyword_rules``
-    (ordered (reason, predicate) pairs, first match wins).
+    every input row of ``docs`` (keyed by its ``host`` column) with
+    ``block_reason`` (NULL = clean) and ``keep``; host-level blocks
+    take precedence over content ``keyword_rules`` (ordered (reason,
+    predicate) pairs, first match wins).
 
-    ``blocklist`` schema: ``(<host_col>: string, reason: string)`` —
+    ``blocklist`` schema: ``(host: string, reason: string)`` —
     one row per blocked host, reason free-text. A missing reason
     column fails fast here with the expected schema rather than as an
     opaque analysis error inside the join.
@@ -140,22 +140,22 @@ def blocklist_filter(
     (site-level URL prefixes at CommonCrawl scale) would bucket both
     sides on host instead; the operator's contract doesn't change.
     """
-    missing = {host_col, "reason"} - set(blocklist.columns)
+    missing = {"host", "reason"} - set(blocklist.columns)
     if missing:
         raise ValueError(
             f"blocklist is missing column(s) {sorted(missing)}; "
-            f"expected schema ({host_col}: string, reason: string)"
+            "expected schema (host: string, reason: string)"
         )
     # a host listed twice (two reasons) must not FAN OUT fact rows —
     # the operator's contract is row-preserving. Collapse the
     # dimension to one deterministic reason per host (min = first
     # alphabetically) before the join.
-    bl = blocklist.groupBy(F.col(host_col).alias("_bl_host")).agg(
+    bl = blocklist.groupBy(F.col("host").alias("_bl_host")).agg(
         F.min("reason").alias("_bl_reason")
     )
     joined = docs.join(
         F.broadcast(bl),
-        docs[host_col] == bl["_bl_host"],
+        docs["host"] == bl["_bl_host"],
         "left",
     )
     reason = F.col("_bl_reason")
@@ -171,12 +171,11 @@ def blocklist_filter(
 def domain_cap(
     docs: DataFrame,
     max_per_host: int = 100,
-    order_col: str = "doc_id",
 ) -> DataFrame:
     """Per-domain cap — keep each ``host``'s first ``max_per_host``
-    documents by ``order_col`` (CommonCrawl-style pipelines cap hot
+    documents by ``doc_id`` (CommonCrawl-style pipelines cap hot
     domains so one forum doesn't dominate the corpus). Deterministic:
-    the kept set is exactly the top-N by (order_col) per host, so any
+    the kept set is exactly the top-N by doc_id per host, so any
     engine computing the same contract agrees row for row.
 
     Plan (the skew story): a single ``row_number() over (partition by
@@ -191,8 +190,8 @@ def domain_cap(
     uniform exchanges instead of one skewed one.
     """
     shard = F.spark_partition_id().alias("_shard")
-    w1 = Window.partitionBy("host", "_shard").orderBy(order_col)
-    w2 = Window.partitionBy("host").orderBy(order_col)
+    w1 = Window.partitionBy("host", "_shard").orderBy("doc_id")
+    w2 = Window.partitionBy("host").orderBy("doc_id")
     return (
         docs.withColumn("_shard", shard)
         .withColumn("_r1", F.row_number().over(w1))

@@ -43,6 +43,13 @@ PAGES_COLS = ["url", "warc_ts", "html", "text", "lang"]
 # creating a small-file problem.
 STRIPE = 100
 
+# the quadkey store's layout, shared by its writer and reader: points
+# sorted by their zoom-QK_ZOOM quadkey within directories partitioned on
+# its QK_STRIPE_ZOOM-digit prefix (a reader pruning on another prefix
+# length would miss every directory)
+QK_ZOOM = 12
+QK_STRIPE_ZOOM = 2
+
 # (application id, location) -> (sorted file listing, schema) of the
 # parquet locations read by the live Spark application. Inferring a
 # parquet schema runs a Spark job on every read, a read with the schema
@@ -167,22 +174,17 @@ def read_points_bbox(
     )
 
 
-def write_points_quadkey(
-    points: DataFrame,
-    path: str,
-    zoom: int = 12,
-    stripe_zoom: int = 2,
-) -> None:
+def write_points_quadkey(points: DataFrame, path: str) -> None:
     """Persist a (lon, lat) points table in the TILE-SERVING layout: directory
-    partitioning on the zoom-``stripe_zoom`` quadkey prefix and full
-    zoom-``zoom`` quadkey sorting within files.
+    partitioning on the zoom-``QK_STRIPE_ZOOM`` quadkey prefix and full
+    zoom-``QK_ZOOM`` quadkey sorting within files.
 
     Because a parent tile's quadkey is a string PREFIX of every
     descendant's (functions/cells.py:quadkey_col), any "give me tile
     X's subtree" request is a contiguous key range in this layout:
     the stripe prefix prunes directories, and parquet string min/max
     statistics skip row groups inside a stripe. On Iceberg the same
-    layout is ``PARTITIONED BY truncate(stripe_zoom, qk)`` + a sort
+    layout is ``PARTITIONED BY truncate(QK_STRIPE_ZOOM, qk)`` + a sort
     order on qk.
 
     The stripe value is prefixed with a literal ``q`` so the
@@ -192,11 +194,11 @@ def write_points_quadkey(
     """
     from osm_jl_spark.functions.cells import with_quadkey
 
-    pts = points if "qk" in points.columns else with_quadkey(points, zoom)
+    pts = points if "qk" in points.columns else with_quadkey(points, QK_ZOOM)
     (
         pts.withColumn(
             "qk_stripe",
-            F.concat(F.lit("q"), F.substring("qk", 1, stripe_zoom)),
+            F.concat(F.lit("q"), F.substring("qk", 1, QK_STRIPE_ZOOM)),
         )
         .repartition("qk_stripe")
         .sortWithinPartitions("qk")
@@ -207,10 +209,7 @@ def write_points_quadkey(
 
 
 def read_points_tile(
-    spark: SparkSession,
-    path: str,
-    tile_qk: str,
-    stripe_zoom: int = 2,
+    spark: SparkSession, path: str, tile_qk: str
 ) -> DataFrame:
     """All stored points inside one tile's subtree (every zoom level
     at or below the tile's): rows whose quadkey starts with
@@ -221,8 +220,8 @@ def read_points_tile(
     serving a map tile at 10^12 points is a pruned scan.
     """
     df = _read_parquet(spark, path)
-    if len(tile_qk) >= stripe_zoom:
-        part = F.col("qk_stripe") == "q" + tile_qk[:stripe_zoom]
+    if len(tile_qk) >= QK_STRIPE_ZOOM:
+        part = F.col("qk_stripe") == "q" + tile_qk[:QK_STRIPE_ZOOM]
     else:
         part = F.col("qk_stripe").startswith("q" + tile_qk)
     return df.filter(part & F.col("qk").startswith(tile_qk))

@@ -172,7 +172,7 @@ def window_dup_stats_q(spark, sf_dir):
         F.col("text"),
     )
     corpus = docs.select("doc_id", txt.alias("text"))
-    return D.duplicated_window_stats(corpus, w=8, min_df=2)
+    return D.duplicated_window_stats(corpus)
 
 
 # the removal transform, replayed end to end over window STRINGS:
@@ -251,7 +251,7 @@ def window_dedup_clean_q(spark, sf_dir):
         F.col("text"),
     )
     corpus = docs.select("doc_id", txt.alias("text"))
-    return D.remove_duplicated_windows(corpus, w=8, min_df=2)
+    return D.remove_duplicated_windows(corpus)
 
 
 shingle_ctes = f"""{_NEARDUP_SQL},
@@ -281,7 +281,7 @@ JOIN sizes sb ON sb.doc_id = i.id_b
 WHERE i.i / (sa.sz + sb.sz - i.i) >= 0.5""")
 def ngram_jaccard_q(spark, sf_dir):
     corpus = _neardup_corpus(_pq(spark, sf_dir, "documents"))
-    return D.ngram_jaccard_pairs(corpus, threshold=0.5)
+    return D.ngram_jaccard_pairs(corpus)
 
 
 # same jaccard>=0.5 edge set, then min-reachable-id per node via a
@@ -317,7 +317,7 @@ def dedup_clusters_q(spark, sf_dir):
     from osm_jl_spark.operators.graph import connected_components
 
     corpus = _neardup_corpus(_pq(spark, sf_dir, "documents"))
-    pairs = D.ngram_jaccard_pairs(corpus, threshold=0.5)
+    pairs = D.ngram_jaccard_pairs(corpus)
     e = pairs.select(
         F.col("id_a").alias("src"), F.col("id_b").alias("dst")
     )
@@ -376,7 +376,7 @@ def neardup_keep_best_q(spark, sf_dir):
     from osm_jl_spark.functions.text import token_count_col
 
     corpus = _neardup_corpus(_pq(spark, sf_dir, "documents"))
-    pairs = D.ngram_jaccard_pairs(corpus, threshold=0.5)
+    pairs = D.ngram_jaccard_pairs(corpus)
     return D.neardup_keep_best(
         corpus, pairs, token_count_col("text")
     ).select(
@@ -472,7 +472,7 @@ FROM sims x JOIN sims y ON x.doc_id < y.doc_id
 WHERE bit_count(xor(x.simhash, y.simhash)) <= 3""")
 def simhash_pairs_q(spark, sf_dir):
     corpus = _neardup_corpus(_pq(spark, sf_dir, "documents"))
-    return D.simhash_near_dups(corpus, max_hamming=3, hash_fn="md5_60")
+    return D.simhash_near_dups(corpus, hash_fn="md5_60")
 
 
 # asymmetric containment over the same shingle machinery: eval
@@ -522,7 +522,7 @@ def contamination_q(spark, sf_dir):
         F.concat_ws(" ", F.slice(tokens_col("text"), 1, 15))
         .alias("text"),
     )
-    return D.contamination_pairs(corpus, ev, threshold=0.8).select(
+    return D.contamination_pairs(corpus, ev).select(
         "train_id", "eval_id", "containment"
     )
 
@@ -721,7 +721,7 @@ def embedding_near_dups_q(spark, sf_dir):
             (F.col("vec_id") + 10000).alias("vec_id"), "embedding"
         )
     )
-    return D.embedding_near_dups(emb2, threshold=0.95).select(
+    return D.embedding_near_dups(emb2).select(
         "id_a", "id_b"
     )
 
@@ -846,4 +846,4 @@ def pq_topk_q(spark, sf_dir):
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("qvec"),
     )
-    return S.pq_adc_topk(codes, books, qs, k=5)
+    return S.pq_adc_topk(codes, books, qs)

@@ -490,7 +490,7 @@ def bfs_hops_q(spark, sf_dir):
     sources = roads.filter(F.col("id") % 29 == 0).select(
         F.element_at("node_refs", 1).cast("long").alias("node")
     )
-    out = bfs_hops(edges, sources, max_hops=8)
+    out = bfs_hops(edges, sources)
     return out.select(F.col("node").alias("node_id"), "dist")
 
 

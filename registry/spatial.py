@@ -255,10 +255,7 @@ def _qk_store(spark, sf_dir) -> str:
     path = os.path.join(tempfile.gettempdir(), f"osm_store_qk_{n}")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         write_points_quadkey(
-            _nodes(spark, sf_dir).select("id", "lon", "lat"),
-            path,
-            zoom=12,
-            stripe_zoom=2,
+            _nodes(spark, sf_dir).select("id", "lon", "lat"), path
         )
     return path
 
@@ -306,9 +303,7 @@ def tile_store_read_q(spark, sf_dir):
     from osm_jl_spark.sources.store import read_points_tile
 
     path = _qk_store(spark, sf_dir)
-    return read_points_tile(spark, path, "2110", stripe_zoom=2).select(
-        "id", "qk"
-    )
+    return read_points_tile(spark, path, "2110").select("id", "qk")
 
 
 # the serving composite: same from-scratch quadkey recomputation,
@@ -334,8 +329,7 @@ def tile_serving_q(spark, sf_dir):
     # from raw lon/lat and replays prefix filter + rollup.
     from osm_jl_spark.sources.store import read_points_tile
 
-    served = read_points_tile(spark, _qk_store(spark, sf_dir), "2110",
-                              stripe_zoom=2)
+    served = read_points_tile(spark, _qk_store(spark, sf_dir), "2110")
     return TL.quadkey_rollup(served, [4, 6, 8, 12]).select(
         "zoom", "tile_qk", "n_points"
     )

@@ -69,7 +69,7 @@ def repetition_scores_q(spark, sf_dir):
     from osm_jl_spark.operators.quality import repetition_scores
 
     docs = _pq(spark, sf_dir, "documents")
-    return repetition_scores(docs, n=2)
+    return repetition_scores(docs)
 
 
 @query("tfidf_top_terms", """WITH
@@ -102,7 +102,7 @@ def tfidf_top_terms_q(spark, sf_dir):
     from osm_jl_spark.operators.quality import tfidf_top_terms
 
     docs = _pq(spark, sf_dir, "documents")
-    return tfidf_top_terms(docs, top=3)
+    return tfidf_top_terms(docs)
 
 
 @query("token_count_by_lang", """WITH
@@ -498,7 +498,7 @@ def pipeline_hygiene_q(spark, sf_dir):
     )
     kept = (
         blocklist_filter(
-            corpus, bl, host_col="host",
+            corpus, bl,
             keyword_rules=[(
                 "kw_customer",
                 F.col("text").contains("customer")
@@ -513,7 +513,7 @@ def pipeline_hygiene_q(spark, sf_dir):
         .where("keep")
         .select("doc_id", "host")
     )
-    out = domain_cap(good, max_per_host=2, order_col="doc_id")
+    out = domain_cap(good, max_per_host=2)
     return out.select(
         "doc_id", "host",
         F.col("host_rank").cast("long").alias("host_rank"),
@@ -654,7 +654,7 @@ def blocklist_filter_q(spark, sf_dir):
         "host STRING, reason STRING",
     )
     out = blocklist_filter(
-        corpus, bl, host_col="host",
+        corpus, bl,
         keyword_rules=[(
             "kw_customer",
             F.col("text").contains("customer")
@@ -725,7 +725,7 @@ def corpus_clean_q(spark, sf_dir):
         uniq_token_ratio_col("text").alias("uq"),
         stopword_ratio_col("text").alias("st"),
     )
-    rep = repetition_scores(docs, n=2).select(
+    rep = repetition_scores(docs).select(
         "doc_id", "repetition_ratio"
     )
     kept = (
@@ -869,7 +869,7 @@ def multimodal_q(spark, sf_dir):
         synthetic_media,
     )
 
-    feats = decode_and_featurize(synthetic_media(spark, 64))
+    feats = decode_and_featurize(synthetic_media(spark))
     return feats.select(
         "media_id", "kind", "out_width", "out_height",
         F.round(
@@ -878,7 +878,7 @@ def multimodal_q(spark, sf_dir):
     )
 
 
-# the videos of synthetic_media(64) and their frame counts
+# the videos of synthetic_media (MEDIA_N = 64 items) and their frame counts
 _VIDEOS = ", ".join(f"({i}, {30 + i})" for i in range(64) if i % 3 == 2)
 
 
@@ -894,4 +894,4 @@ def frame_sample_q(spark, sf_dir):
         synthetic_media,
     )
 
-    return frame_sample(synthetic_media(spark, 64), every_n=10)
+    return frame_sample(synthetic_media(spark))

@@ -114,7 +114,7 @@ def link_pagerank_q(spark, sf_dir):
         F.regexp_extract("url", r"/p/([0-9]+)$", 1)
         .cast("long").alias("node")
     )
-    r = pagerank_scaled(edges, nodes, iters=3)
+    r = pagerank_scaled(edges, nodes)
     return r.select(F.col("node").alias("doc_id"), F.col("r").alias("rank_s"))
 
 
@@ -225,7 +225,7 @@ def link_hits_q(spark, sf_dir):
         F.regexp_extract("href", r"/d/([0-9]+)$", 1)
         .cast("long").alias("dst"),
     )
-    return hits_scores(edges, iters=2)
+    return hits_scores(edges)
 
 
 # triangle census: the oracle is the NAIVE canonical a<b<c
@@ -405,7 +405,7 @@ def domain_cap_q(spark, sf_dir):
             F.lit(".example.org"),
         ).alias("host"),
     )
-    out = domain_cap(corpus, max_per_host=3, order_col="doc_id")
+    out = domain_cap(corpus, max_per_host=3)
     return out.select(
         "doc_id", "host", F.col("host_rank").cast("long").alias("host_rank")
     )
@@ -515,7 +515,7 @@ def snapshot_latest_q(spark, sf_dir):
     # epoch and its fetch_h pin that the whole winning ROW is kept,
     # not just the max timestamp.
     crawls = G.load_crawls(spark, _counts(sf_dir)["docs"])
-    out = D.snapshot_latest(crawls, key="url", ts_col="warc_ts")
+    out = D.snapshot_latest(crawls)
     return out.select(
         "url",
         _epoch_sec("warc_ts").alias("last_epoch"),

@@ -28,11 +28,12 @@ def test_exact_dedup(spark):
     assert kept == {1, 3, 4, 5}
 
 
-def test_ngram_jaccard_exact_value(spark):
+def test_ngram_jaccard_exact_value(spark, monkeypatch):
+    monkeypatch.setattr(D, "JACCARD_THRESHOLD", 0.2)
     docs = _corpus(spark)
     pairs = {
         (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in D.ngram_jaccard_pairs(docs, threshold=0.2).collect()
+        for r in D.ngram_jaccard_pairs(docs).collect()
     }
     assert pairs[(1, 2)] == 1.0
     # doc1 vs doc3: 12 tokens -> 10 shingles each, 9 shared
@@ -50,11 +51,12 @@ def test_minhash_finds_near_dups(spark):
     assert (1, 4) not in pairs and (4, 5) not in pairs
 
 
-def test_simhash_near_dups(spark):
+def test_simhash_near_dups(spark, monkeypatch):
+    monkeypatch.setattr(D, "SIMHASH_MAX_HAMMING", 10)
     docs = _corpus(spark)
     pairs = {
         (r["id_a"], r["id_b"]): r["hamming"]
-        for r in D.simhash_near_dups(docs, max_hamming=10).collect()
+        for r in D.simhash_near_dups(docs).collect()
     }
     assert pairs.get((1, 2)) == 0
     assert (1, 4) not in pairs
@@ -82,11 +84,12 @@ def test_cosine_topk_bruteforce(spark):
     assert order == [0, 1, 5]
 
 
-def test_embedding_near_dups(spark):
+def test_embedding_near_dups(spark, monkeypatch):
+    monkeypatch.setattr(D, "EMBED_THRESHOLD", 0.99)
     emb = _vectors(spark)
     pairs = {
         (r["id_a"], r["id_b"])
-        for r in D.embedding_near_dups(emb, threshold=0.99).collect()
+        for r in D.embedding_near_dups(emb).collect()
     }
     assert pairs <= {(0, 1), (2, 3)}  # only near-parallel pairs survive
 
@@ -121,12 +124,12 @@ def test_contamination_pairs(spark):
         ],
         "doc_id BIGINT, text STRING",
     )
-    got = D.contamination_pairs(train, ev, threshold=0.8).collect()
+    got = D.contamination_pairs(train, ev).collect()
     assert [(r["train_id"], r["eval_id"], r["containment"])
             for r in got] == [(1, 100, 1.0)]
 
 
-def test_contamination_threshold_partial(spark):
+def test_contamination_threshold_partial(spark, monkeypatch):
     # 4 tokens shared of eval's 6 -> 2 of 4 trigram shingles present
     train = spark.createDataFrame(
         [(1, "alpha beta gamma delta other words here")],
@@ -136,9 +139,11 @@ def test_contamination_threshold_partial(spark):
         [(200, "alpha beta gamma delta epsilon zeta")],
         "doc_id BIGINT, text STRING",
     )
-    out = D.contamination_pairs(train, ev, threshold=0.4).collect()
+    monkeypatch.setattr(D, "CONTAMINATION_THRESHOLD", 0.4)
+    out = D.contamination_pairs(train, ev).collect()
     assert len(out) == 1 and out[0]["containment"] == 0.5
-    assert D.contamination_pairs(train, ev, threshold=0.6).count() == 0
+    monkeypatch.setattr(D, "CONTAMINATION_THRESHOLD", 0.6)
+    assert D.contamination_pairs(train, ev).count() == 0
 
 
 def test_neardup_keep_best_argmax_not_min_id(spark):
@@ -209,8 +214,8 @@ def test_simhash_bucket_cap_bounds_hot_buckets(spark):
     rows += [(100 + i, f"unrelated text {i} " + "x y z " * 10)
              for i in range(3)]
     docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    full = D.simhash_near_dups(docs, max_hamming=3)
-    capped = D.simhash_near_dups(docs, max_hamming=3, bucket_cap=5)
+    full = D.simhash_near_dups(docs)
+    capped = D.simhash_near_dups(docs, bucket_cap=5)
     full_pairs = {(r["id_a"], r["id_b"]) for r in full.collect()}
     capped_pairs = {(r["id_a"], r["id_b"]) for r in capped.collect()}
     # identical docs 0..11 all pair up uncapped: 66 pairs
@@ -287,11 +292,12 @@ def test_line_dedup_blank_lines_exempt_and_null_text(spark):
     assert out[3]["clean_text"] == "" and out[3]["n_lines"] == 1
 
 
-def test_window_dup_stats_cross_doc_only(spark):
-    """Lee-et-al window dedup: a w-token window shared by two docs is
-    counted for both; a window repeated INSIDE one doc (df=1) is not;
-    docs shorter than w tokens emit no row."""
-    shared = "alpha bravo charlie delta"  # 4 tokens, w=4
+def test_window_dup_stats_cross_doc_only(spark, monkeypatch):
+    """Lee-et-al window dedup: a window shared by two docs is counted
+    for both; a window repeated INSIDE one doc (df=1) is not; docs
+    shorter than a window emit no row."""
+    monkeypatch.setattr(D, "WINDOW_TOKENS", 4)
+    shared = "alpha bravo charlie delta"  # one 4-token window
     rows = [
         (1, shared + " one two three"),
         (2, shared + " four five six"),
@@ -301,7 +307,7 @@ def test_window_dup_stats_cross_doc_only(spark):
     docs = spark.createDataFrame(rows, "doc_id BIGINT, text STRING")
     out = {
         r["doc_id"]: r
-        for r in D.duplicated_window_stats(docs, w=4, min_df=2).collect()
+        for r in D.duplicated_window_stats(docs).collect()
     }
     assert set(out) == {1, 2, 3}  # doc 4 < w tokens: no row
     # docs 1/2: 7 tokens -> 4 windows, only the leading one is shared
@@ -312,8 +318,11 @@ def test_window_dup_stats_cross_doc_only(spark):
     assert out[3]["n_windows"] == 2 and out[3]["n_dup_windows"] == 0
 
 
-def test_window_dup_stats_df_threshold(spark):
-    """min_df=3: a window in exactly two docs stays below threshold."""
+def test_window_dup_stats_df_threshold(spark, monkeypatch):
+    """WINDOW_MIN_DF=3: a window in exactly two docs stays below
+    threshold."""
+    monkeypatch.setattr(D, "WINDOW_TOKENS", 4)
+    monkeypatch.setattr(D, "WINDOW_MIN_DF", 3)
     rows = [
         (1, "red green blue yellow tail1"),
         (2, "red green blue yellow tail2"),
@@ -323,17 +332,18 @@ def test_window_dup_stats_df_threshold(spark):
     docs = spark.createDataFrame(rows, "doc_id BIGINT, text STRING")
     out3 = {
         r["doc_id"]: r["n_dup_windows"]
-        for r in D.duplicated_window_stats(docs, w=4, min_df=3).collect()
+        for r in D.duplicated_window_stats(docs).collect()
     }
     # "red green blue yellow" has df=3 -> dup for docs 1-3; doc 4's
     # windows all have df<3
     assert out3[1] == 1 and out3[2] == 1 and out3[3] == 1 and out3[4] == 0
 
 
-def test_remove_duplicated_windows_semantics(spark):
+def test_remove_duplicated_windows_semantics(spark, monkeypatch):
     """Exact-substring removal: a cross-doc window is cut from every
     doc carrying it; an internal repeat (df=1) survives; docs shorter
-    than w and null-text docs pass through untouched."""
+    than a window and null-text docs pass through untouched."""
+    monkeypatch.setattr(D, "WINDOW_TOKENS", 4)
     rows = [
         (1, "alpha bravo charlie delta one two three"),
         (2, "alpha bravo charlie delta four five six"),
@@ -344,7 +354,7 @@ def test_remove_duplicated_windows_semantics(spark):
     docs = spark.createDataFrame(rows, "doc_id BIGINT, text STRING")
     out = {
         r["doc_id"]: r
-        for r in D.remove_duplicated_windows(docs, w=4, min_df=2).collect()
+        for r in D.remove_duplicated_windows(docs).collect()
     }
     assert out[1]["clean_text"] == "one two three"
     assert out[1]["n_tokens"] == 7 and out[1]["n_removed"] == 4
@@ -355,10 +365,11 @@ def test_remove_duplicated_windows_semantics(spark):
     assert out[5]["clean_text"] == "" and out[5]["n_tokens"] == 0
 
 
-def test_remove_duplicated_windows_overlap_covers_union(spark):
+def test_remove_duplicated_windows_overlap_covers_union(spark, monkeypatch):
     """Overlapping dup windows remove the UNION of covered tokens: two
-    docs sharing a 5-token run with w=4 have dup windows at starts 1
-    and 2, so all 5 tokens go."""
+    docs sharing a 5-token run with 4-token windows have dup windows at
+    starts 1 and 2, so all 5 tokens go."""
+    monkeypatch.setattr(D, "WINDOW_TOKENS", 4)
     rows = [
         (1, "v w x y z tail1"),
         (2, "v w x y z tail2"),
@@ -366,7 +377,7 @@ def test_remove_duplicated_windows_overlap_covers_union(spark):
     docs = spark.createDataFrame(rows, "doc_id BIGINT, text STRING")
     out = {
         r["doc_id"]: r
-        for r in D.remove_duplicated_windows(docs, w=4, min_df=2).collect()
+        for r in D.remove_duplicated_windows(docs).collect()
     }
     assert out[1]["clean_text"] == "tail1" and out[1]["n_removed"] == 5
     assert out[2]["clean_text"] == "tail2" and out[2]["n_removed"] == 5

@@ -11,6 +11,7 @@ from collections import deque
 from pyspark.sql import functions as F
 
 from osm_jl_spark.datagen import load_ways
+from osm_jl_spark.operators import graph
 from osm_jl_spark.operators.graph import bfs_hops, way_edges
 
 W = 120
@@ -56,7 +57,7 @@ def _python_bfs(adj, sources, max_hops):
     return dist
 
 
-def test_bfs_hops_matches_python_oracle(spark):
+def test_bfs_hops_matches_python_oracle(spark, monkeypatch):
     ways = load_ways(spark, W, M)
     edges = way_edges(ways)
     # python-side adjacency from the same edge definition
@@ -74,24 +75,22 @@ def test_bfs_hops_matches_python_oracle(spark):
     assert srcs, "fixture must yield at least one source"
     want = _python_bfs(adj, srcs, max_hops=5)
 
+    monkeypatch.setattr(graph, "BFS_MAX_HOPS", 5)
     out = bfs_hops(
-        edges,
-        spark.createDataFrame([(s,) for s in srcs], "node LONG"),
-        max_hops=5,
+        edges, spark.createDataFrame([(s,) for s in srcs], "node LONG")
     )
     got = {r["node"]: r["dist"] for r in out.collect()}
     assert got == want
 
 
-def test_bfs_early_termination(spark):
+def test_bfs_early_termination(spark, monkeypatch):
     # two isolated edges: BFS from one endpoint exhausts in 1 hop and
-    # must stop well before max_hops without error
+    # must stop well before BFS_MAX_HOPS without error
+    monkeypatch.setattr(graph, "BFS_MAX_HOPS", 50)
     edges = spark.createDataFrame(
         [(1, 2), (2, 1), (8, 9), (9, 8)], "src LONG, dst LONG"
     )
-    out = bfs_hops(
-        edges, spark.createDataFrame([(1,)], "node LONG"), max_hops=50
-    )
+    out = bfs_hops(edges, spark.createDataFrame([(1,)], "node LONG"))
     assert sorted(map(tuple, out.select("node", "dist").collect())) == [
         (1, 0),
         (2, 1),

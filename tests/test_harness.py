@@ -59,13 +59,17 @@ def _tool(name):
 
 def test_correctness_gate_session_fits_the_host(monkeypatch):
     """tools/check_correctness.py takes get_spark's CPU default and
-    perfbench's driver heap for the host's RAM."""
+    perfbench's driver heap for the host's RAM, and turns Spark's
+    console progress bar off so no bar shares a line with a verdict."""
     cc = _tool("check_correctness")
     calls = []
     monkeypatch.setattr(cc, "get_spark", lambda **kw: calls.append(kw))
     monkeypatch.setattr(cc.host, "mem_gb", lambda: 15.0)
     cc.session()
-    assert calls == [{"driver_memory": "1g"}]
+    assert calls == [{
+        "driver_memory": "1g",
+        "extra": {"spark.ui.showConsoleProgress": "false"},
+    }]
 
 
 @pytest.fixture(scope="module")

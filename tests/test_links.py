@@ -7,6 +7,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 
 from osm_jl_spark import datagen as G
+from osm_jl_spark.operators import links as L
 from osm_jl_spark.operators.links import (
     extract_links,
     host_in_links,
@@ -82,10 +83,11 @@ def test_pagerank_scaled_equals_float_at_damping_half(spark):
     damping 1/2: rank = r_scaled / (N * 4^iters) to fp precision."""
     _, _, edges, nodes = _graph(spark)
     exact = {r["node"]: r["r"]
-             for r in pagerank_scaled(edges, nodes, iters=3).collect()}
-    fl = pagerank(edges, nodes, N, iters=3, damping=0.5)
+             for r in pagerank_scaled(edges, nodes).collect()}
+    fl = pagerank(edges, nodes, N, iters=L.PAGERANK_ITERS, damping=0.5)
+    scale = N * 4 ** L.PAGERANK_ITERS
     for row in fl.collect():
-        assert abs(exact[row["node"]] / (N * 64) - row["r"]) < 1e-12
+        assert abs(exact[row["node"]] / scale - row["r"]) < 1e-12
     assert len(exact) == N
 
 
@@ -96,7 +98,7 @@ def test_pagerank_dangling_mass_drops(spark):
     _, _, edges, nodes = _graph(spark)
     n_dangling = N - edges.select("src").distinct().count()
     assert n_dangling > 0  # dh % 3 == 0 docs exist at N=60
-    rows = pagerank_scaled(edges, nodes, iters=3).collect()
+    rows = pagerank_scaled(edges, nodes).collect()
     total = sum(r["r"] for r in rows)
     assert total < N * 64
     # teleport floor: 2*4^2 = 32 for the last iteration
@@ -109,13 +111,13 @@ def test_pagerank_sink_accumulates(spark):
     edges = spark.createDataFrame([(0, 1)], "src LONG, dst LONG")
     nodes = spark.createDataFrame([(0,), (1,)], "node LONG")
     r = {row["node"]: row["r"]
-         for row in pagerank_scaled(edges, nodes, iters=3).collect()}
+         for row in pagerank_scaled(edges, nodes).collect()}
     # by hand: R0=(1,1); R1=(2, 2+2*1)=(2,4); R2=(8, 8+2*2)=(8,12);
     # R3=(32, 32+2*8)=(32,48)
     assert r == {0: 32, 1: 48}
 
 
-def test_pagerank_scaled_rejects_outdegree_over_two(spark):
+def test_pagerank_scaled_rejects_outdegree_over_two(spark, monkeypatch):
     """The divides-2 precondition is enforced at execution: deg >= 3
     needs coefficient 2/deg (non-integer), so the coef expression
     raises instead of producing plausible wrong integers."""
@@ -127,8 +129,9 @@ def test_pagerank_scaled_rejects_outdegree_over_two(spark):
     nodes = spark.createDataFrame(
         [(i,) for i in range(1, 5)], "node BIGINT"
     )
+    monkeypatch.setattr(L, "PAGERANK_ITERS", 1)
     with pytest.raises(Exception, match="out-degree"):
-        pagerank_scaled(edges, nodes, iters=1).collect()
+        pagerank_scaled(edges, nodes).collect()
 
 
 def test_triangle_census_matches_naive(spark):
@@ -200,7 +203,7 @@ def test_triangle_census_known_graphs(spark):
         spark.createDataFrame(path, "a STRING, b STRING")).count() == 0
 
 
-def test_hits_one_iteration_hand_computed(spark):
+def test_hits_one_iteration_hand_computed(spark, monkeypatch):
     """Kleinberg update order on a 4-node graph, one iteration:
     a1 = in-degree, h1 = sum of fresh a1 over out-edges."""
     from osm_jl_spark.operators.links import hits_scores
@@ -208,8 +211,9 @@ def test_hits_one_iteration_hand_computed(spark):
     edges = spark.createDataFrame(
         [(1, 3), (1, 4), (2, 3)], "src BIGINT, dst BIGINT"
     )
+    monkeypatch.setattr(L, "HITS_ITERS", 1)
     out = {r.node: (r.hub, r.auth)
-           for r in hits_scores(edges, iters=1).collect()}
+           for r in hits_scores(edges).collect()}
     assert out == {1: (3, 0), 2: (2, 0), 3: (0, 2), 4: (0, 1)}
 
 
@@ -233,14 +237,13 @@ def test_hits_ranking_matches_normalized_reference(spark):
     for s, d in edges:
         A[s, d] = 1.0
     h = np.ones(n)
-    for _ in range(2):
+    for _ in range(L.HITS_ITERS):
         a = A.T @ h
         a /= np.linalg.norm(a)
         h = A @ a
         h /= np.linalg.norm(h)
     got = {r.node: (r.hub, r.auth) for r in hits_scores(
-        spark.createDataFrame(edges, "src BIGINT, dst BIGINT"),
-        iters=2).collect()}
+        spark.createDataFrame(edges, "src BIGINT, dst BIGINT")).collect()}
     in_graph = sorted(got)
     by_hub_int = sorted(in_graph, key=lambda v: (-got[v][0], v))
     by_hub_ref = sorted(in_graph, key=lambda v: (-h[v], v))

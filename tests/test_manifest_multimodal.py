@@ -57,14 +57,16 @@ def test_manifest_resume_idempotent(spark, tmp_path):
     assert sum(r["metrics"]["rows"] for r in {x["unit_id"]: x for x in recs}.values()) == before
 
 
-def test_multimodal_featurize_deterministic(spark):
+def test_multimodal_featurize_deterministic(spark, monkeypatch):
+    from osm_jl_spark.operators import multimodal
     from osm_jl_spark.operators.multimodal import (
         decode_and_featurize,
         frame_sample,
         synthetic_media,
     )
 
-    media = synthetic_media(spark, 30)
+    monkeypatch.setattr(multimodal, "MEDIA_N", 30)
+    media = synthetic_media(spark)
     f1 = decode_and_featurize(media).collect()
     f2 = decode_and_featurize(media).collect()
     k1 = sorted((r["media_id"], tuple(r["feat"])) for r in f1)
@@ -72,7 +74,7 @@ def test_multimodal_featurize_deterministic(spark):
     assert k1 == k2
     assert all(len(r["feat"]) == 64 for r in f1)
 
-    frames = frame_sample(media, every_n=10).collect()
+    frames = frame_sample(media).collect()
     assert all(r["frame_idx"] % 10 == 0 for r in frames)
     assert len(frames) > 0
 

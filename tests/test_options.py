@@ -1,11 +1,14 @@
 """No library option without a caller: every defaulted parameter of a
-public ``osm_jl_spark`` function is set by some non-test caller, or is
-listed in ``ALLOWED`` with the reason it stays.
+public ``osm_jl_spark`` function is set by some non-test caller to a
+value other than its default, or is listed in ``ALLOWED`` with the
+reason it stays.
 
 The audit is static (an AST walk, no Spark). A call sets a parameter
-when it passes it by keyword or positionally; calls are matched to
-definitions by function name, so a same-named function elsewhere can
-only make the check more lenient, never fail it.
+when it passes it by keyword or positionally, unless what it passes is
+a literal equal to the parameter's literal default (one value in use
+behind a knob is a constant); calls are matched to definitions by
+function name, so a same-named function elsewhere can only make the
+check more lenient, never fail it.
 """
 
 from __future__ import annotations
@@ -52,10 +55,21 @@ def _files(roots):
         yield from [p] if p.is_file() else sorted(p.rglob("*.py"))
 
 
-def _defaulted_params() -> dict[tuple[str, str, str], int | None]:
-    """(module, function, parameter) -> positional index (None for
-    keyword-only) of every defaulted parameter of a public function or
-    public-class method (``__init__`` under the class name)."""
+def _literal(node: ast.expr):
+    """(type, value) of a literal expression, None for anything else
+    (the type keeps ``1``, ``1.0`` and ``True`` apart)."""
+    try:
+        v = ast.literal_eval(node)
+    except ValueError:
+        return None
+    return type(v), v
+
+
+def _defaulted_params() -> dict[tuple[str, str, str], tuple]:
+    """(module, function, parameter) -> (positional index, None for
+    keyword-only; literal default, None if not a literal) of every
+    defaulted parameter of a public function or public-class method
+    (``__init__`` under the class name)."""
     out = {}
     for f in _files(["osm_jl_spark"]):
         mod = f.relative_to(ROOT).with_suffix("").as_posix().replace("/", ".")
@@ -74,18 +88,20 @@ def _defaulted_params() -> dict[tuple[str, str, str], int | None]:
                 pos = [x.arg for x in a.posonlyargs + a.args]
                 if pos and pos[0] in ("self", "cls"):
                     pos = pos[1:]
-                for p in pos[len(pos) - len(a.defaults):]:
-                    out[(mod, name, p)] = pos.index(p)
+                for p, d in zip(pos[len(pos) - len(a.defaults):],
+                                a.defaults):
+                    out[(mod, name, p)] = (pos.index(p), _literal(d))
                 for k, d in zip(a.kwonlyargs, a.kw_defaults):
                     if d is not None:
-                        out[(mod, name, k.arg)] = None
+                        out[(mod, name, k.arg)] = (None, _literal(d))
     return out
 
 
-def _set_by_callers() -> dict[str, set]:
-    """function name -> the keywords and positional indexes its calls
-    from the non-test callers pass ('**'/'*' when they splat)."""
-    calls: dict[str, set] = {}
+def _set_by_callers() -> dict[str, list]:
+    """function name -> (keyword or positional index, literal passed or
+    None) of every argument its calls from the non-test callers pass
+    ('**'/'*' when they splat)."""
+    calls: dict[str, list] = {}
     for f in _files(CALLERS):
         if "tests" in f.relative_to(ROOT).parts:
             continue
@@ -95,20 +111,23 @@ def _set_by_callers() -> dict[str, set]:
             fn = node.func
             name = (fn.attr if isinstance(fn, ast.Attribute)
                     else getattr(fn, "id", None))
-            s = calls.setdefault(name, set())
+            s = calls.setdefault(name, [])
             if any(isinstance(x, ast.Starred) for x in node.args):
-                s.add("*")
-            s.update(range(len(node.args)))
-            s.update(k.arg or "**" for k in node.keywords)
+                s.append(("*", None))
+            s += [(i, _literal(x)) for i, x in enumerate(node.args)]
+            s += [(k.arg or "**", _literal(k.value)) for k in node.keywords]
     return calls
 
 
 def _unset() -> set[tuple[str, str, str]]:
+    """Defaulted parameters no non-test call passes a value other than
+    the literal default."""
     calls = _set_by_callers()
     unset = set()
-    for (mod, name, p), idx in _defaulted_params().items():
-        s = calls.get(name, set())
-        if not ({p, "**"} & s or (idx is not None and ({idx, "*"} & s))):
+    for (mod, name, p), (idx, default) in _defaulted_params().items():
+        keys = {p, "**"} | ({idx, "*"} if idx is not None else set())
+        if not any(k in keys and (default is None or v != default)
+                   for k, v in calls.get(name, [])):
             unset.add((mod, name, p))
     return unset
 
@@ -116,8 +135,9 @@ def _unset() -> set[tuple[str, str, str]]:
 def test_every_option_is_set_by_a_caller():
     extra = sorted(_unset() - ALLOWED.keys())
     assert not extra, (
-        "defaulted parameters no non-test caller sets — make each a "
-        f"constant, or add it to ALLOWED with its reason: {extra}"
+        "defaulted parameters no non-test caller sets to another value "
+        "than the default — make each a constant, or add it to ALLOWED "
+        f"with its reason: {extra}"
     )
 
 

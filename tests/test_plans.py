@@ -41,19 +41,14 @@ def pages_parquet(spark, tmp_path_factory):
 
 
 def test_flagship_scan_prunes_html(spark, pages_parquet):
-    """The pages scan must read only (url, text) — html is the bulk of
-    the bytes at production scale and this query never needs it."""
+    """The pages scan must read only text — html is the bulk of the
+    bytes at production scale and this query never needs it; the
+    flagship aggregates counts only, so Catalyst prunes even url."""
     from osm_jl_spark import datagen as G
     from osm_jl_spark.operators.pipeline import flagship
 
     d = digest(flagship(spark.read.parquet(pages_parquet), G.POLYGONS, 2))
-    assert d.read_schemas, d.plan
-    for s in d.read_schemas:
-        assert "html" not in s, s
-        assert "warc_ts" not in s, s
-    # flagship aggregates counts only -> Catalyst prunes even `url`;
-    # the scan reads just the text column
-    assert "text" in d.read_schemas[0]
+    assert d.read_schemas == ["struct<text:string>"], d.plan
 
 
 def test_flagship_cover_join_broadcasts(spark, pages_parquet):
@@ -338,7 +333,7 @@ def test_window_dup_stats_two_uniform_shuffles(spark):
     docs = spark.read.parquet(SF + "/documents.parquet").selectExpr(
         "doc_id", "text"
     )
-    d = digest(duplicated_window_stats(docs, w=8, min_df=2))
+    d = digest(duplicated_window_stats(docs))
     assert (d.exchanges, d.python_ops) == (2, 0), d.plan
     assert "BroadcastHashJoin" in d.plan, d.plan
     assert "SortMergeJoin" not in d.plan, d.plan
@@ -380,7 +375,7 @@ def test_window_dedup_clean_three_uniform_shuffles(spark):
     docs = spark.read.parquet(SF + "/documents.parquet").selectExpr(
         "doc_id", "text"
     )
-    d = digest(remove_duplicated_windows(docs, w=8, min_df=2))
+    d = digest(remove_duplicated_windows(docs))
     assert d.exchanges <= 3, d.plan
     assert "BroadcastHashJoin" in d.plan, d.plan
     assert d.python_ops == 0, d.plan

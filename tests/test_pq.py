@@ -7,6 +7,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from osm_jl_spark.operators import similarity
 from osm_jl_spark.operators.similarity import (
     pq_adc_topk,
     pq_codebooks_from_samples,
@@ -43,7 +44,7 @@ def test_encode_is_zero_shuffle(spark):
     assert (d.exchanges, d.broadcasts, d.python_ops) == (0, 0, 0), d.plan
 
 
-def test_adc_is_exact_reconstruction_distance(spark):
+def test_adc_is_exact_reconstruction_distance(spark, monkeypatch):
     """The ADC identity, at the BIT level: d2_adc(q, codes(x)) equals
     squared L2 between q and x's codebook reconstruction when computed
     with the same fold structure (per-subspace inner fold from 0.0,
@@ -57,7 +58,8 @@ def test_adc_is_exact_reconstruction_distance(spark):
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
     )
     qvecs = {r.query_id: list(r.qvec) for r in qs.collect()}
-    got = pq_adc_topk(pq_encode(emb, books), books, qs, k=3).collect()
+    monkeypatch.setattr(similarity, "PQ_TOPK", 3)
+    got = pq_adc_topk(pq_encode(emb, books), books, qs).collect()
     s = len(books[0][0])
     for r in got:
         q, cs = qvecs[r.query_id], codes[r.neighbor_id]
@@ -72,7 +74,7 @@ def test_adc_is_exact_reconstruction_distance(spark):
         assert r.d2_adc == d2, (r, d2)
 
 
-def test_sample_vectors_reconstruct_themselves(spark):
+def test_sample_vectors_reconstruct_themselves(spark, monkeypatch):
     """A vector whose slices ARE codewords encodes to itself: querying
     with it must return itself at rank 1 with d2_adc exactly 0."""
     books = _sample_books(spark)
@@ -80,7 +82,8 @@ def test_sample_vectors_reconstruct_themselves(spark):
     qs = emb.filter("vec_id % 17 = 0").limit(1).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
     )
-    top = pq_adc_topk(pq_encode(emb, books), books, qs, k=1).collect()[0]
+    monkeypatch.setattr(similarity, "PQ_TOPK", 1)
+    top = pq_adc_topk(pq_encode(emb, books), books, qs).collect()[0]
     assert top.neighbor_id == top.query_id and top.d2_adc == 0.0
 
 

@@ -1,5 +1,6 @@
 """Repetition-quality signal (operators/quality.py)."""
 
+from osm_jl_spark.operators import quality as Q
 from osm_jl_spark.operators.quality import repetition_scores
 
 
@@ -12,7 +13,7 @@ def test_repetition_ratio_values(spark):
         ],
         "doc_id BIGINT, text STRING",
     )
-    got = {r["doc_id"]: r for r in repetition_scores(docs, n=2).collect()}
+    got = {r["doc_id"]: r for r in repetition_scores(docs).collect()}
     # doc 1: 7 bigrams, 'buy now' x4 -> 4/7
     assert got[1]["top_ngram_count"] == 4
     assert got[1]["ngram_total"] == 7
@@ -24,18 +25,20 @@ def test_repetition_ratio_values(spark):
     assert 3 not in got
 
 
-def test_repetition_trigram_order(spark):
+def test_repetition_trigram_order(spark, monkeypatch):
     # n=3: "a b a b a" -> trigrams: 'a b a','b a b','a b a' -> top 2/3
+    monkeypatch.setattr(Q, "REPETITION_N", 3)
     docs = spark.createDataFrame(
         [(1, "a b a b a")], "doc_id BIGINT, text STRING"
     )
-    r = repetition_scores(docs, n=3).collect()[0]
+    r = repetition_scores(docs).collect()[0]
     assert (r["top_ngram_count"], r["ngram_total"]) == (2, 3)
 
 
-def test_tfidf_top_terms_ranks_distinctive_tokens(spark):
+def test_tfidf_top_terms_ranks_distinctive_tokens(spark, monkeypatch):
     from osm_jl_spark.operators.quality import tfidf_top_terms
 
+    monkeypatch.setattr(Q, "TFIDF_TOP", 2)
     docs = spark.createDataFrame(
         [
             (1, "common common zebra"),
@@ -46,7 +49,7 @@ def test_tfidf_top_terms_ranks_distinctive_tokens(spark):
     )
     got = {
         (r["doc_id"], r["rk"]): (r["token"], r["score"])
-        for r in tfidf_top_terms(docs, top=2).collect()
+        for r in tfidf_top_terms(docs).collect()
     }
     # 'common' appears in all 3 docs (df=3); unique animals (df=1)
     # dominate: zebra 1*3/1=3 > common 2*3/3=2

@@ -110,7 +110,7 @@ def qk_store(spark, tmp_path_factory):
 
     path = str(tmp_path_factory.mktemp("store") / "points_qk")
     nodes = G.load_nodes(spark, 4000).select("id", "lon", "lat")
-    write_points_quadkey(nodes, path, zoom=12, stripe_zoom=2)
+    write_points_quadkey(nodes, path)
     return path
 
 
@@ -128,7 +128,7 @@ def test_tile_read_matches_direct_filter(spark, qk_store):
     for prefix in ("2110", "2"):
         got = {
             r["id"]
-            for r in read_points_tile(spark, qk_store, prefix, 2).collect()
+            for r in read_points_tile(spark, qk_store, prefix).collect()
         }
         want = {
             r["id"]
@@ -148,7 +148,7 @@ def test_tile_read_prunes_and_pushes(spark, qk_store):
     exchanges, zero Python."""
     from osm_jl_spark.sources.store import read_points_tile
 
-    d = digest(read_points_tile(spark, qk_store, "2110", 2))
+    d = digest(read_points_tile(spark, qk_store, "2110"))
     assert any("qk_stripe" in p for p in d.partition_filters), d.plan
     assert any("StartsWith(qk,2110)" in p for p in d.pushed_filters), d.plan
     assert (d.exchanges, d.python_ops) == (0, 0), d.plan
@@ -165,7 +165,7 @@ def test_tile_serving_rollup_composes_with_pruned_read(spark, qk_store):
     from osm_jl_spark.operators.tiling import quadkey_rollup
     from osm_jl_spark.sources.store import read_points_tile
 
-    served = read_points_tile(spark, qk_store, "2110", 2)
+    served = read_points_tile(spark, qk_store, "2110")
     out = quadkey_rollup(served, [4, 6, 8, 12])
 
     d = digest(out)

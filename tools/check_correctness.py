@@ -95,9 +95,13 @@ def rows_key(rows, cols):
 
 
 def session():
-    """Every CPU ``get_spark`` sees (``SPARK_GRAFT_CPUS`` or local[*]) and
-    the driver heap perfbench gives this host's RAM."""
-    return get_spark(driver_memory=host.driver_memory(host.mem_gb()))
+    """Every CPU ``get_spark`` sees (``SPARK_GRAFT_CPUS`` or local[*]),
+    the driver heap perfbench gives this host's RAM, and no console
+    progress bar, so every PASS/FAIL/ROWS line starts at column 0."""
+    return get_spark(
+        driver_memory=host.driver_memory(host.mem_gb()),
+        extra={"spark.ui.showConsoleProgress": "false"},
+    )
 
 
 def main():

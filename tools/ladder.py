@@ -146,7 +146,7 @@ def pagerank(spark, n: int, store: str):
     nodes = pages.select(
         F.regexp_extract("url", r"/p/([0-9]+)$", 1).cast("long").alias("node")
     )
-    return lambda: pagerank_scaled(edges, nodes, iters=3)
+    return lambda: pagerank_scaled(edges, nodes)
 
 
 def lm(spark, n: int, store: str):
@@ -168,7 +168,7 @@ def minhash(spark, n: int, store: str):
 def window(spark, n: int, store: str):
     docs = _pages(spark, n, store).select(
         F.col("url").alias("doc_id"), "text")
-    return lambda: duplicated_window_stats(docs, w=8, min_df=2)
+    return lambda: duplicated_window_stats(docs)
 
 
 def _write_nodes_pbf(path: str, n: int) -> None:

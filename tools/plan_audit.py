@@ -353,7 +353,7 @@ def audited() -> list[tuple]:
     qs = entry.queries()
     return [
         ("flagship (stored pages table)",
-         "parquet scan prunes to (url, text) - html binary never read; "
+         "parquet scan prunes to text - html binary never read; "
          "no lambda, the isnotnull filters read the Generate's parsed "
          "doubles; cells encoded once and reused by the tile agg; one "
          "broadcast (cover + edge slots); tile agg is the only fact "
