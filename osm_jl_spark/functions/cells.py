@@ -28,6 +28,8 @@ from pyspark.sql import functions as F
 
 from osm_jl_spark.functions.geo import sql_ident
 
+PRECISION = 2  # the grid's one cell precision (src/index.jl:26-50)
+
 
 def cell_coord(c: Column | str, precision: int) -> Column:
     """trunc-toward-zero of coord * 10^precision (src/index.jl:17)."""

@@ -154,10 +154,9 @@ def pip_edges_fold_sql(lon: str, lat: str, edges: str) -> str:
 # Shared by cell_cover, joins.nodes_in_polygons (which pre-tests the
 # bbox and routes over-budget polygons to the broadcast cell-RANGE
 # join) and tiling.vector_to_raster (which enumerates over-budget
-# covers DISTRIBUTEDLY via sequence+explode). Keeping one constant is
-# the point: round 3 duplicated the value in joins.py, and a drift
-# would have let a continent polygon slip past the guard into the
-# driver-side enumeration below.
+# covers DISTRIBUTEDLY via sequence+explode). One constant, so the
+# callers' pre-tests and the guard below cannot drift apart and let a
+# continent polygon into the driver-side enumeration.
 COVER_BUDGET = 250_000
 
 
@@ -200,11 +199,9 @@ def cell_cover(
 
     Raises :class:`CoverBudgetError` when the bbox exceeds
     :data:`COVER_BUDGET` (read at call time): this function
-    enumerates cells into driver-side Python sets, and the pre-round-4
-    fallback ("everything is
-    boundary" over the bbox) enumerated the very set the budget
-    existed to prevent — ~GB of driver heap for a world polygon.
-    Callers with big polygons must use :func:`cell_bbox_range` and a
+    enumerates cells into driver-side Python sets — ~GB of driver heap
+    for a world polygon, whatever the classification. Callers with big
+    polygons must use :func:`cell_bbox_range` and a
     range-predicate join (joins.py) or distributed enumeration
     (tiling.py) instead.
     """

@@ -32,9 +32,12 @@ MINHASH_SEED = 42
 EMBED_PLANES = 16  # random hyperplanes per embedding LSH bucket key
 EMBED_SEED = 7
 LINE_MIN_LEN = 1  # shorter (trimmed) lines are never deduped: blank lines
+LINE_MIN_DF = 3  # docs a line must occur in to count as boilerplate
 BLOOM_K = 3  # Bloom probes per shingle
+BLOOM_M_BITS = 1 << 14  # Bloom filter bits, a power of two
 JACCARD_THRESHOLD = 0.5  # ngram_jaccard_pairs keeps pairs at or above
 SIMHASH_MAX_HAMMING = 3  # simhash pairs within this many differing bits
+SIMHASH_BUCKET_CAP: int | None = None  # docs kept per simhash block bucket
 EMBED_THRESHOLD = 0.95  # embedding_near_dups keeps cosine at or above
 CONTAMINATION_THRESHOLD = 0.8  # eval shingle share that counts as leaked
 WINDOW_TOKENS = 8  # token window of the window-dedup operators
@@ -283,12 +286,11 @@ def ngram_jaccard_pairs(docs: DataFrame) -> DataFrame:
     )
 
 
-def simhash_signatures(
-    docs: DataFrame, hash_fn: str = "xxhash64"
-) -> DataFrame:
+def simhash_signatures(docs: DataFrame) -> DataFrame:
     """(id, simhash BIGINT): 64-bit SimHash over ``SIMHASH_SHINGLE_N``-
-    gram shingles — a pure NARROW map. ``hash_fn`` as in
-    :func:`minhash_signatures`.
+    gram shingles hashed with :func:`_hash60` (bit-identical in
+    DuckDB, so the fingerprints are oracle-checkable) — a pure NARROW
+    map.
 
     Votes: for bit j, sum over shingles of (bit_j(h) ? 1 : -1); sign
     of the sum sets bit j. The doc keeps its shingle hashes as an
@@ -306,11 +308,7 @@ def simhash_signatures(
     Long.MIN_VALUE (== 1L << 63 wrapped, no ANSI overflow since it is
     added to a sum of non-negative lower bits).
     """
-
-    def h(s):
-        return F.xxhash64(s) if hash_fn == "xxhash64" else _hash60(s)
-
-    hs = F.transform(shingles_col("text", SIMHASH_SHINGLE_N), h)
+    hs = F.transform(shingles_col("text", SIMHASH_SHINGLE_N), _hash60)
 
     def signs(x):
         # per-shingle ±1 vote vector over the 64 bit positions
@@ -347,11 +345,7 @@ def simhash_signatures(
     )
 
 
-def simhash_near_dups(
-    docs: DataFrame,
-    hash_fn: str = "xxhash64",
-    bucket_cap: int | None = None,
-) -> DataFrame:
+def simhash_near_dups(docs: DataFrame) -> DataFrame:
     """(id_a, id_b, hamming <= SIMHASH_MAX_HAMMING) via 4-block banding:
     two 64-bit hashes within hamming distance <=3 agree on at least one
     16-bit block (pigeonhole) -> block-bucket join, then exact hamming
@@ -363,12 +357,12 @@ def simhash_near_dups(
     for hamming <= SIMHASH_MAX_HAMMING" contract — near-identical template
     pages really do share blocks, and those pairs are the answer. At
     web scale, where a boilerplate block value can collect millions of
-    docs, pass ``bucket_cap`` to bound each bucket (pairs within a
-    capped bucket are still exact; pairs BETWEEN the dropped overflow
+    docs, set ``SIMHASH_BUCKET_CAP`` to bound each bucket (pairs within
+    a capped bucket are still exact; pairs BETWEEN the dropped overflow
     docs may be missed — the same bounded-recall trade
     minhash_lsh_candidates makes), or exact-dedup boilerplate first.
     """
-    sigs = simhash_signatures(docs, hash_fn)
+    sigs = simhash_signatures(docs)
     blocks = sigs.select(
         "id",
         "simhash",
@@ -381,11 +375,11 @@ def simhash_near_dups(
             )
         ).alias("blk", "bv"),
     )
-    if bucket_cap is not None:
+    if SIMHASH_BUCKET_CAP is not None:
         w = Window.partitionBy("blk", "bv").orderBy("id")
         blocks = blocks.withColumn(
             "_rn", F.row_number().over(w)
-        ).filter(F.col("_rn") <= bucket_cap).drop("_rn")
+        ).filter(F.col("_rn") <= SIMHASH_BUCKET_CAP).drop("_rn")
     cand = (
         blocks.alias("x")
         .join(
@@ -550,9 +544,9 @@ def snapshot_latest(df: DataFrame) -> DataFrame:
     )
 
 
-def line_dedup(docs: DataFrame, min_df: int = 2) -> DataFrame:
+def line_dedup(docs: DataFrame) -> DataFrame:
     """Line-level dedup (CCNet/C4-style boilerplate stripping): remove
-    every line that occurs in at least ``min_df`` DISTINCT documents —
+    every line that occurs in at least ``LINE_MIN_DF`` DISTINCT docs —
     navigation menus, cookie banners, copyright footers — while
     preserving each document's surviving lines in order. The standard
     pretraining-hygiene pass a corpus pipeline runs between crawl
@@ -581,7 +575,7 @@ def line_dedup(docs: DataFrame, min_df: int = 2) -> DataFrame:
        combinable count per line hash. No count_distinct expand, no
        second exchange.
     2. Removal + reassembly: posexplode lines, left-join the hot-line
-       dim (df >= min_df — at web scale a tiny fraction of distinct
+       dim (df >= LINE_MIN_DF — at web scale a tiny fraction of distinct
        lines, so AQE broadcasts it; the join key is the uniform hash
        either way), then ONE groupBy on the doc id rebuilding the text
        with sort_array + array_join. The regroup shuffles the corpus
@@ -589,7 +583,7 @@ def line_dedup(docs: DataFrame, min_df: int = 2) -> DataFrame:
        bounded-memory alternative at 10^12 docs is writing the hot-line
        dim to a table once and applying this second stage as a narrow
        broadcast-filter over ``F.filter(lines, ...)`` — possible only
-       when the hot set fits a broadcast, which min_df thresholds are
+       when the hot set fits a broadcast, which LINE_MIN_DF thresholds are
        designed to make true.
     """
     # NULL text behaves as empty (one blank line, kept): posexplode of
@@ -608,7 +602,7 @@ def line_dedup(docs: DataFrame, min_df: int = 2) -> DataFrame:
         )
         .groupBy("lh")
         .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") >= min_df)
+        .filter(F.col("df") >= LINE_MIN_DF)
         .withColumn("is_hot", F.lit(True))
         .select("lh", "is_hot")
     )
@@ -837,12 +831,12 @@ def remove_duplicated_windows(docs: DataFrame) -> DataFrame:
 
 # ------------------------------------------------------------ bloom
 
-def _bloom_positions(shingle, m_bits: int, k: int) -> list:
-    """k Bloom bit positions for one shingle string, via double
-    hashing on two disjoint md5 substrings: ``pos_i = (h1 + i*h2) %
-    m`` with h1 = 60-bit md5 prefix (hex chars 1-15) and h2 = the
-    49-bit odd value ``2*prefix(16..27) + 1`` (odd keeps the probe
-    stride coprime to the power-of-two ``m_bits``). Everything is
+def _bloom_positions(shingle) -> list:
+    """``BLOOM_K`` Bloom bit positions for one shingle string, via
+    double hashing on two disjoint md5 substrings: ``pos_i = (h1 +
+    i*h2) % m`` with h1 = 60-bit md5 prefix (hex chars 1-15) and h2 =
+    the 49-bit odd value ``2*prefix(16..27) + 1`` (odd keeps the probe
+    stride coprime to the power-of-two ``BLOOM_M_BITS``). Everything is
     positive BIGINT arithmetic bounded by 2^60 + k*2^50 — ANSI-safe
     and bit-identical in DuckDB via the same substr(md5(s)) casts,
     which is what makes the bloom queries oracle-checkable (same
@@ -855,34 +849,31 @@ def _bloom_positions(shingle, m_bits: int, k: int) -> list:
         * F.lit(2) + F.lit(1)
     )
     return [
-        F.pmod(h1 + F.lit(i) * h2, F.lit(m_bits)) for i in range(k)
+        F.pmod(h1 + F.lit(i) * h2, F.lit(BLOOM_M_BITS))
+        for i in range(BLOOM_K)
     ]
 
 
-def bloom_bitmap(
-    eval_docs: DataFrame,
-    m_bits: int = 1 << 18,
-    k: int = BLOOM_K,
-) -> DataFrame:
+def bloom_bitmap(eval_docs: DataFrame) -> DataFrame:
     """Build a Bloom filter over the eval set's shingles as (word,
-    bits) rows — ``m_bits`` bits packed into ``m_bits/64`` BIGINT
-    words, each the bit_or of the masks that land in it.
+    bits) rows — ``BLOOM_M_BITS`` bits packed into ``BLOOM_M_BITS/64``
+    BIGINT words, each the bit_or of the masks that land in it.
 
     The bitmap is FIXED-SIZE regardless of eval volume (like the HLL
     census, web.py): where :func:`contamination_pairs` broadcasts
     every eval shingle hash — fine for benchmark-sized eval sets, but
-    linear in them — the bloom form caps the broadcast at m_bits/8
-    bytes (32 KiB at the 2^18 default) no matter how many shingles
-    feed it, trading exactness for a quantified false-positive rate
+    linear in them — the bloom form caps the broadcast at m/8 bytes
+    (2 KiB at m = 2^14) no matter how many shingles feed it, trading
+    exactness for a quantified false-positive rate
     fpr = (1 - exp(-k*n/m))^k. One small shuffle over eval positions;
-    at most m_bits/64 output rows.
+    at most m/64 output rows.
     """
     sh = eval_docs.select(
         F.explode(shingles_col("text", SHINGLE_N)).alias("shingle")
     )
     pos = sh.select(
         F.explode(
-            F.array(*_bloom_positions(F.col("shingle"), m_bits, k))
+            F.array(*_bloom_positions(F.col("shingle")))
         ).alias("pos")
     )
     return (
@@ -897,12 +888,7 @@ def bloom_bitmap(
     )
 
 
-def bloom_contamination(
-    train: DataFrame,
-    eval_docs: DataFrame,
-    m_bits: int = 1 << 18,
-    k: int = BLOOM_K,
-) -> DataFrame:
+def bloom_contamination(train: DataFrame, eval_docs: DataFrame) -> DataFrame:
     """Approximate decontamination against a Bloom filter of the eval
     set: per train doc, how many of its distinct shingles MIGHT be in
     the eval set, and an integer containment verdict.
@@ -916,21 +902,19 @@ def bloom_contamination(
     the direction a decontamination pass must not get wrong.
 
     Plan (the 100 TB shape): the bitmap builds from the eval side
-    (dimension-sized) and BROADCASTS as a fixed <= m_bits/64-row dim;
+    (dimension-sized) and BROADCASTS as a fixed <= m/64-row dim;
     the train side explodes its per-doc-distinct shingles in the scan
     projection, computes its k (word, bit) probes natively, and
     hash-joins the broadcast k times — the 100 TB fact side never
     shuffles until the final map-side-combinable per-doc count. Zero
     Python anywhere.
     """
-    bitmap = F.broadcast(
-        bloom_bitmap(eval_docs, m_bits, k)
-    )
+    bitmap = F.broadcast(bloom_bitmap(eval_docs))
     tr = train.select(
         "doc_id",
         F.explode(shingles_col("text", SHINGLE_N)).alias("shingle"),
     )
-    probes = _bloom_positions(F.col("shingle"), m_bits, k)
+    probes = _bloom_positions(F.col("shingle"))
     proj = tr.select(
         "doc_id",
         *[F.shiftright(p, 6).alias(f"w{i}") for i, p in enumerate(probes)],
@@ -938,7 +922,7 @@ def bloom_contamination(
           for i, p in enumerate(probes)],
     )
     joined = proj
-    for i in range(k):
+    for i in range(BLOOM_K):
         joined = joined.join(
             bitmap.select(
                 F.col("word").alias(f"w{i}"), F.col("bits").alias(f"_bits{i}")
@@ -947,7 +931,7 @@ def bloom_contamination(
             "left",
         )
     might = F.lit(True)
-    for i in range(k):
+    for i in range(BLOOM_K):
         # arithmetic shiftright keeps bit b of the original word at
         # position 0 even when bit 63 (sign) is set in the bitmap word
         might = might & F.expr(
@@ -969,15 +953,15 @@ def bloom_contamination(
     )
 
 
-def bloom_words(bitmap: DataFrame, m_bits: int) -> list[int]:
+def bloom_words(bitmap: DataFrame) -> list[int]:
     """Densify a :func:`bloom_bitmap` result into the full
-    ``m_bits/64``-long word list (missing words zero) — the plan-
+    ``BLOOM_M_BITS/64``-long word list (missing words zero) — the plan-
     constant form :func:`osm_jl_spark.streaming.incremental.
     streaming_bloom_filter` embeds. The collect is FIXED-size
-    (m_bits/8 bytes, 32 KiB at the 2^18 default) regardless of eval
-    volume — the same bounded-driver-transfer argument as the HLL
-    census, not a data-sized collect."""
-    words = [0] * (int(m_bits) // 64)
+    (m/8 bytes, 2 KiB at m = 2^14) regardless of eval volume — the
+    same bounded-driver-transfer argument as the HLL census, not a
+    data-sized collect."""
+    words = [0] * (BLOOM_M_BITS // 64)
     for r in bitmap.collect():
         words[r["word"]] = r["bits"]
     return words

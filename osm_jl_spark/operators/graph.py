@@ -38,6 +38,7 @@ from osm_jl_spark.operators.elements import is_road
 
 CC_MAX_ITER = 30  # connected_components label-propagation round cap
 BFS_MAX_HOPS = 8  # bfs_hops reaches nodes at most this many edges out
+SSSP_MAX_HOPS = 6  # shortest_paths' Bellman-Ford rounds (walk length cap)
 
 
 def way_edges(ways: DataFrame) -> DataFrame:
@@ -176,13 +177,9 @@ def connected_components(edges: DataFrame) -> DataFrame:
     return labels
 
 
-def shortest_paths(
-    edges: DataFrame,
-    sources: DataFrame,
-    max_hops: int = 10,
-) -> DataFrame:
+def shortest_paths(edges: DataFrame, sources: DataFrame) -> DataFrame:
     """Weighted single-source(-set) shortest paths: (node, dist) =
-    minimum total edge weight over walks of at most ``max_hops`` edges
+    minimum total edge weight over walks of at most ``SSSP_MAX_HOPS`` edges
     from any source — the routing core behind the reference's declared
     ``path`` surface (src/OSM.jl stub; :func:`bfs_hops` is the
     unweighted case).
@@ -196,7 +193,7 @@ def shortest_paths(
 
     Algorithm: Bellman-Ford relaxation, one round per hop. After
     round r every node holds the exact min weight over walks of <= r
-    edges, so running to ``max_hops`` (>= graph diameter) is exact
+    edges, so running to ``SSSP_MAX_HOPS`` (>= graph diameter) is exact
     SSSP. Each round is one shuffle join (dist x edges) + one
     groupBy-min; distances stay in DataFrames end to end and the
     driver sees only a 1-row improvement probe, the same contract as
@@ -211,7 +208,7 @@ def shortest_paths(
         .withColumn("dist", F.lit(0).cast("long"))
         .localCheckpoint()
     )
-    for _ in range(max_hops):
+    for _ in range(SSSP_MAX_HOPS):
         cand = (
             dist.join(edges, dist["node"] == edges["src"])
             .select(

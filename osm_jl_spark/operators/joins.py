@@ -24,7 +24,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from osm_jl_spark.functions.cells import bbox_cell_range, with_cell
+from osm_jl_spark.functions.cells import PRECISION, bbox_cell_range, with_cell
 from osm_jl_spark.functions.geo import (
     Ring,
     cell_cover,
@@ -226,9 +226,8 @@ def nodes_in_polygons(
     slot_field = [("slots", pa.struct(
         [(c, pa.float64()) for c in edge_slot_columns(k)]
     ))] if slots else []
-    # Budgets (geo.COVER_BUDGET is the single shared constant — round 3
-    # duplicated the value here, and a drift would have sent continent
-    # polygons into cell_cover's driver-side enumeration):
+    # Budgets (geo.COVER_BUDGET, the one constant cell_cover also
+    # enforces, so the two cannot drift):
     # - per polygon: an over-budget bbox never enumerates; it becomes
     #   ONE broadcast range row.
     # - AGGREGATE (ADVICE r3): N medium polygons can each stay under
@@ -321,7 +320,6 @@ def ways_in_polygon(
     ways: DataFrame,
     nodes: DataFrame,
     ring: Ring,
-    precision: int = 2,
 ) -> DataFrame:
     """J4 (src/OSM.jl:225-239): ways with ANY node inside the polygon.
 
@@ -331,7 +329,7 @@ def ways_in_polygon(
     rows.
     """
     inside = nodes_in_polygons(
-        nodes.select("id", "lon", "lat"), {1: ring}, precision
+        nodes.select("id", "lon", "lat"), {1: ring}, PRECISION
     ).select(F.col("id").alias("ref"))
     refs = explode_way_refs(ways).select("way_id", "ref")
     hit_ways = refs.join(inside, "ref", "left_semi").select(
@@ -484,12 +482,7 @@ def within_distance_join(
     )
 
 
-def envelope_join(
-    a: DataFrame,
-    b: DataFrame,
-    cell_w: int,
-    oversize: str = "broadcast",
-) -> DataFrame:
+def envelope_join(a: DataFrame, b: DataFrame, cell_w: int) -> DataFrame:
     """Rectangle-overlap (envelope intersection) join — the R-tree-probe
     analogue for axis-aligned bounding boxes, grid-partitioned the same
     way the PIP cell cover (nodes_in_polygons) and the radius join
@@ -500,28 +493,21 @@ def envelope_join(
 
     Plan (the 10^12-rect design):
 
-    - COMPACT rectangles (both extents < ``cell_w``) explode into their
-      grid-cell cover — at most 2x2 cells each by the extent bound —
-      and equi-join on the cell key: candidates are bounded by local
-      rectangle density per cell, never all-pairs, and the overlap
-      predicate plus area run in the same codegen stage.
+    - Rectangles must be COMPACT (both extents < ``cell_w``): each
+      explodes into its grid-cell cover — at most 2x2 cells by the
+      extent bound — and equi-joins on the cell key, so candidates are
+      bounded by local rectangle density per cell, never all-pairs,
+      and the overlap predicate plus area run in the same codegen
+      stage. An oversized rectangle fails the query with a raise_error
+      (its cover is unbounded; pick cell_w >= the common extent — a
+      world-spanning envelope is a data bug at scale).
     - Exact-once WITHOUT a distinct shuffle: a pair spanning several
       shared cells is emitted only in its REPORTING CELL — the cell of
       the intersection's lower-left corner (max(minx), max(miny)),
       which lies inside both rectangles and hence both covers. The
       classic partitioned-spatial-join dedup (Sedona/SpatialHadoop do
       the same), one comparison instead of a global distinct.
-    - OVERSIZED rectangles (either extent >= cell_w) can't bound their
-      cover, so they route to a broadcast sidecar: oversized-A crosses
-      ALL of B, compact-A crosses oversized-B (no double count). The
-      contract is that oversized rectangles are DIMENSION-sized
-      (pick cell_w >= the common extent; a world-spanning envelope is
-      a data bug at scale) — ``oversize='strict'`` enforces it with a
-      raise_error instead, keeping the plan free of the nested-loop
-      branch when the caller guarantees compactness.
     """
-    if oversize not in ("broadcast", "strict"):
-        raise ValueError(f"oversize must be broadcast|strict: {oversize}")
     w = int(cell_w)
     if w <= 0:
         raise ValueError(f"cell_w must be positive, got {cell_w}")
@@ -529,32 +515,23 @@ def envelope_join(
     def fdiv(col: F.Column) -> F.Column:
         return ((col - F.pmod(col, F.lit(w))) / F.lit(w)).cast("long")
 
-    def is_compact(p: str) -> F.Column:
-        return (
+    def cover(df: DataFrame, p: str) -> DataFrame:
+        cols = ["id", "minx", "miny", "maxx", "maxy"]
+        compact = (
             (F.col(f"{p}maxx") - F.col(f"{p}minx") < w)
             & (F.col(f"{p}maxy") - F.col(f"{p}miny") < w)
         )
-
-    def prep(df: DataFrame, p: str) -> DataFrame:
-        cols = ["id", "minx", "miny", "maxx", "maxy"]
-        out = df.select(*[F.col(c).alias(f"{p}{c}") for c in cols])
-        if oversize == "strict":
-            # fail fast on contract violation, zero plan pollution
-            out = out.withColumn(
-                f"{p}minx",
-                F.when(is_compact(p), F.col(f"{p}minx")).otherwise(
-                    F.raise_error(F.lit(
-                        f"envelope_join(strict): rectangle extent >= "
-                        f"cell_w={w}; use oversize='broadcast' or a "
-                        f"larger cell_w"))),
-            )
-        return out
-
-    pa, pb = prep(a, "a_"), prep(b, "b_")
-
-    def cover(df: DataFrame, p: str) -> DataFrame:
         return (
-            df.withColumn(
+            df.select(*[F.col(c).alias(f"{p}{c}") for c in cols])
+            # fail fast on an oversized rectangle, zero plan pollution
+            .withColumn(
+                f"{p}minx",
+                F.when(compact, F.col(f"{p}minx")).otherwise(
+                    F.raise_error(F.lit(
+                        f"envelope_join: rectangle extent >= "
+                        f"cell_w={w}; use a larger cell_w"))),
+            )
+            .withColumn(
                 "_gx",
                 F.explode(F.sequence(fdiv(F.col(f"{p}minx")),
                                      fdiv(F.col(f"{p}maxx")))),
@@ -576,42 +553,19 @@ def envelope_join(
         (F.least("a_maxx", "b_maxx") - F.greatest("a_minx", "b_minx"))
         * (F.least("a_maxy", "b_maxy") - F.greatest("a_miny", "b_miny"))
     )
-    out_cols = [
-        F.col("a_id").alias("a_id"),
-        F.col("b_id").alias("b_id"),
-        area.alias("ix_area"),
-    ]
-
-    if oversize == "strict":
-        ca, cb = cover(pa, "a_"), cover(pb, "b_")
-        return (
-            ca.join(cb, ["_gx", "_gy"])
-            .where(
-                overlap
-                & (F.col("_gx")
-                   == fdiv(F.greatest("a_minx", "b_minx")))
-                & (F.col("_gy")
-                   == fdiv(F.greatest("a_miny", "b_miny")))
-            )
-            .select(*out_cols)
-        )
-
-    a_c, a_o = pa.filter(is_compact("a_")), pa.filter(~is_compact("a_"))
-    b_c, b_o = pb.filter(is_compact("b_")), pb.filter(~is_compact("b_"))
-    grid = (
-        cover(a_c, "a_").join(cover(b_c, "b_"), ["_gx", "_gy"])
+    return (
+        cover(a, "a_").join(cover(b, "b_"), ["_gx", "_gy"])
         .where(
             overlap
             & (F.col("_gx") == fdiv(F.greatest("a_minx", "b_minx")))
             & (F.col("_gy") == fdiv(F.greatest("a_miny", "b_miny")))
         )
-        .select(*out_cols)
+        .select(
+            F.col("a_id").alias("a_id"),
+            F.col("b_id").alias("b_id"),
+            area.alias("ix_area"),
+        )
     )
-    # oversized sidecar: a_over x ALL b, plus compact-a x b_over —
-    # covers every oversized pair exactly once
-    side1 = F.broadcast(a_o).join(pb, overlap).select(*out_cols)
-    side2 = a_c.join(F.broadcast(b_o), overlap).select(*out_cols)
-    return grid.unionByName(side1).unionByName(side2)
 
 
 def route_lengths(

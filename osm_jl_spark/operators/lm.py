@@ -31,7 +31,7 @@ preserved semantics.
 Smoothing denominators: c2 counts the bigram's occurrences AS A
 TRIGRAM CONTEXT (positions 1..len-2), so sum_w (c3+1)/(c2+V) = 1
 exactly; V is the training vocabulary size per language. Trigrams
-pruned by ``min_count`` (or never seen) fall back to the same formula
+pruned by ``LM_MIN_COUNT`` (or never seen) fall back to the same formula
 with c3 = 0 — and a context never seen contributes
 floor(log2(V / 1)) bits, the uniform-over-vocab cost.
 
@@ -39,7 +39,7 @@ Scale shape at 10^12 docs:
 - training: one narrow trigram explode, two uniform-key groupBys with
   map-side combine (trigram and context counts) + a per-lang distinct
   vocab count — the classic word-count profile;
-- the LM is a DIMENSION: pruned to ``min_count`` it broadcasts, so
+- the LM is a DIMENSION: pruned to ``LM_MIN_COUNT`` it broadcasts, so
   scoring is broadcast-hash joins on the exploded token stream — the
   corpus-sized side shuffles exactly ONCE (the per-doc sum);
 - banding reuses stats.group_quantiles_exact's histogram-first
@@ -59,6 +59,7 @@ from osm_jl_spark.functions.text import tokens_col
 
 _TRI_T = "array<struct<g3:string,g2:string>>"
 BAND_PCTS = (33, 66)  # perplexity_filter's head/middle band percentiles
+LM_MIN_COUNT = 2  # trigrams seen fewer times take the unseen path
 
 
 def trigram_ctx_col(text: Column | str) -> Column:
@@ -91,15 +92,12 @@ def trigram_stream(docs: DataFrame) -> DataFrame:
              F.col("t.g2").alias("g2"))
 
 
-def train_trigram_lm(
-    train_docs: DataFrame,
-    min_count: int = 1,
-) -> dict[str, DataFrame]:
+def train_trigram_lm(train_docs: DataFrame) -> dict[str, DataFrame]:
     """Count statistics for the per-language trigram LM:
 
     - ``tri``   (lang, g3, c3): trigram occurrence counts, pruned to
-      c3 >= min_count (the broadcast-size knob: at corpus scale keep
-      min_count high enough that the surviving table broadcasts —
+      c3 >= LM_MIN_COUNT (the broadcast-size knob: at corpus scale keep
+      it high enough that the surviving table broadcasts —
       pruned trigrams take the unseen path, standard LM practice);
     - ``ctx``   (lang, g2, c2): context counts — occurrences of the
       bigram as positions 1-2 of a trigram (NOT raw bigram counts, so
@@ -110,7 +108,7 @@ def train_trigram_lm(
     tri = (
         tris.groupBy("lang", "g3")
         .agg(F.count(F.lit(1)).alias("c3"))
-        .where(F.col("c3") >= min_count)
+        .where(F.col("c3") >= LM_MIN_COUNT)
     )
     ctx = tris.groupBy("lang", "g2").agg(F.count(F.lit(1)).alias("c2"))
     vocab = (
@@ -169,7 +167,7 @@ def score_docs(
     )
 
 
-def perplexity_filter(docs: DataFrame, min_count: int = 1) -> DataFrame:
+def perplexity_filter(docs: DataFrame) -> DataFrame:
     """The full CCNet-style pipeline: train on the even-``doc_id`` half
     of ``docs`` (a deterministic split so held-out scoring exercises
     the unseen-trigram path), score every doc, and band per language
@@ -187,9 +185,7 @@ def perplexity_filter(docs: DataFrame, min_count: int = 1) -> DataFrame:
     """
     from osm_jl_spark.operators.stats import group_quantiles_exact
 
-    lm = train_trigram_lm(
-        docs.where(F.col("doc_id") % 2 == 0), min_count=min_count
-    )
+    lm = train_trigram_lm(docs.where(F.col("doc_id") % 2 == 0))
     scored = score_docs(docs, lm)
     lo, hi = BAND_PCTS
     qs = group_quantiles_exact(scored, "lang", "bpt_milli", [lo, hi])

@@ -25,6 +25,7 @@ CENTROID_STEP = 125  # semdedup's default medoids: ids divisible by this
 PQ_SUBSPACES = 8  # pq_train_codebooks: m subspaces
 PQ_CODEWORDS = 16  # pq_train_codebooks: k codewords per subspace
 PQ_TOPK = 5  # pq_adc_topk: neighbors returned per query
+TOPK = 5  # cosine_topk and ivf_topk: neighbors returned per query
 
 
 def _dot(a, b):
@@ -39,10 +40,9 @@ def _norm(v):
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
-    k: int = 5,
     rank_round: int | None = None,
 ) -> DataFrame:
-    """Exact cosine top-k: (query_id, neighbor_id, rank, cosine).
+    """Exact cosine top-``TOPK``: (query_id, neighbor_id, rank, cosine).
 
     Ties broken by (cosine desc, neighbor_id asc) — deterministic.
     ``rank_round`` ranks on round(cosine, d) instead (cross-engine
@@ -70,7 +70,7 @@ def cosine_topk(
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOPK)
         .select("query_id", "neighbor_id", "rank", "cosine")
     )
 
@@ -150,11 +150,10 @@ def ivf_topk(
     assigned: DataFrame,
     centroids: list[list[float]],
     queries: DataFrame,
-    k: int = 5,
     nprobe: int = 4,
     rank_round: int | None = None,
 ) -> DataFrame:
-    """Approximate cosine top-k probing only the nprobe nearest
+    """Approximate cosine top-``TOPK`` probing only the nprobe nearest
     centroid buckets per query. Join is (bucket == query_probe_bucket)
     — on a bucket-partitioned corpus this prunes to nprobe/C of data.
 
@@ -215,7 +214,7 @@ def ivf_topk(
             "cosine",
         )
         .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOPK)
         .select("query_id", "neighbor_id", "rank", "cosine")
     )
 

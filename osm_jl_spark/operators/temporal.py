@@ -24,6 +24,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+# interval_join's time bucket: near the typical interval length (the
+# registered intervals span 1-36 h), so each explodes into ~2 rows
+INTERVAL_BUCKET_SEC = 43_200
+
 
 def asof_join(
     left: DataFrame,
@@ -31,7 +35,6 @@ def asof_join(
     on: str,
     left_ts: str,
     right_ts: str,
-    value_cols: list[str] | None = None,
     direction: str = "backward",
     tolerance: Column | None = None,
 ) -> DataFrame:
@@ -41,10 +44,9 @@ def asof_join(
     row's ``left_ts``, within the same ``on`` key. Left rows with no
     qualifying right row keep NULL payloads (a LEFT as-of join).
 
-    Output: every ``left`` column, then one column per ``value_cols``
-    entry (default: all non-key, non-ts right columns — names must not
-    collide with left's), then ``asof_ts`` = the matched right row's
-    timestamp (NULL when unmatched).
+    Output: every ``left`` column, then every non-key, non-ts right
+    column (names must not collide with left's), then ``asof_ts`` = the
+    matched right row's timestamp (NULL when unmatched).
 
     Semantics pinned by tests/test_temporal.py:
 
@@ -66,8 +68,7 @@ def asof_join(
     """
     if direction not in ("backward", "forward"):
         raise ValueError(direction)
-    if value_cols is None:
-        value_cols = [c for c in right.columns if c not in (on, right_ts)]
+    value_cols = [c for c in right.columns if c not in (on, right_ts)]
     clash = set(value_cols) & set(left.columns)
     if clash or "asof_ts" in left.columns:
         raise ValueError(
@@ -150,7 +151,6 @@ def interval_join(
     ts: str,
     start: str,
     end: str,
-    bucket_sec: int = 86_400,
 ) -> DataFrame:
     """Containment join: every (fact, interval) pair with
     ``start <= fact.ts < end`` (half-open; all three columns are epoch
@@ -166,9 +166,8 @@ def interval_join(
     post-dedup is needed. Candidate pairs are bounded by interval
     density per bucket, not |intervals|.
 
-    ``bucket_sec`` trades cover size against candidate density —
-    choose it near the typical interval length (each interval then
-    explodes into ~2 rows). The intervals are a broadcast dimension
+    ``INTERVAL_BUCKET_SEC`` trades cover size against candidate
+    density. The intervals are a broadcast dimension
     (campaign windows, outage ranges, policy epochs): the fact side
     NEVER shuffles.
     """
@@ -176,13 +175,13 @@ def interval_join(
         "_bkt",
         F.explode(
             F.sequence(
-                F.floor(F.col(start) / bucket_sec),
+                F.floor(F.col(start) / INTERVAL_BUCKET_SEC),
                 # last bucket containing a point of [start, end)
-                F.floor((F.col(end) - 1) / bucket_sec),
+                F.floor((F.col(end) - 1) / INTERVAL_BUCKET_SEC),
             )
         ),
     ))
-    f = facts.withColumn("_bkt", F.floor(F.col(ts) / bucket_sec))
+    f = facts.withColumn("_bkt", F.floor(F.col(ts) / INTERVAL_BUCKET_SEC))
     return (
         f.join(cover, "_bkt")
         .where((F.col(ts) >= F.col(start)) & (F.col(ts) < F.col(end)))

@@ -19,10 +19,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from osm_jl_spark.functions.cells import with_cell
+from osm_jl_spark.functions.cells import PRECISION, with_cell
 
 SALT_BUCKETS = 16  # salts per cell/tile in the two-stage aggregations
-RASTER_PRECISION = 2  # cell precision of tile_ids and vector_to_raster
 
 
 def _salted_count(
@@ -40,8 +39,8 @@ def _salted_count(
     return partial.groupBy(*keys).agg(F.sum("pn").alias("n_points"))
 
 
-def tile_counts(points: DataFrame, precision: int = 2) -> DataFrame:
-    """(cx, cy, n_points) of (lon, lat) points at one precision — A1
+def tile_counts(points: DataFrame) -> DataFrame:
+    """(cx, cy, n_points) of (lon, lat) points at ``PRECISION`` — A1
     (src/index.jl:26-50).
 
     Two-stage salted aggregation: stage 1 groups on (cx, cy, salt)
@@ -49,17 +48,17 @@ def tile_counts(points: DataFrame, precision: int = 2) -> DataFrame:
     ``SALT_BUCKETS``, stage 2 merges partials per cell. With AQE on,
     the second (tiny) shuffle coalesces automatically.
     """
-    return _salted_count(with_cell(points, precision), ["cx", "cy"],
+    return _salted_count(with_cell(points, PRECISION), ["cx", "cy"],
                          F.hash(F.col("lon"), F.col("lat")))
 
 
 def tile_ids(points: DataFrame) -> DataFrame:
     """(cx, cy, ids ARRAY<...> sorted) of (id, lon, lat) points at
-    ``RASTER_PRECISION`` — the reference's cell->id-list payload, with
+    ``PRECISION`` — the reference's cell->id-list payload, with
     deterministic ordering (sort_array, because collect_list order is
     scheduling-dependent, like the reference's threaded build was —
     SURVEY.md §7.3)."""
-    pts = with_cell(points, RASTER_PRECISION)
+    pts = with_cell(points, PRECISION)
     return pts.groupBy("cx", "cy").agg(
         F.sort_array(F.collect_list(F.col("id"))).alias("ids"),
         F.count(F.lit(1)).alias("n_points"),
@@ -171,7 +170,7 @@ def vector_to_raster(
     polygons: dict[int, list[tuple[float, float]]],
     spark,
 ) -> DataFrame:
-    """Vector->raster: polygon -> its cell cover at ``RASTER_PRECISION``
+    """Vector->raster: polygon -> its cell cover at ``PRECISION``
     as tile rows (polygon_id, cx, cy, coverage) with coverage in
     {'full','boundary'}.
 
@@ -180,10 +179,10 @@ def vector_to_raster(
     ``sequence()`` on executors (with a tiny repartition of the x-rows
     between the two explodes, so the y-explosion of a continent
     polygon parallelizes instead of landing on one task) — never into
-    driver memory. Their cells are all labeled ``boundary`` (the same
-    degraded-but-correct classification the old driver-side fallback
-    used; full/boundary refinement of millions of cells belongs to a
-    follow-up PIP over cell centers, not the cover pass).
+    driver memory. Their cells are all labeled ``boundary``, a
+    degraded-but-correct classification: full/boundary refinement of
+    millions of cells belongs to a PIP over cell centers, not the cover
+    pass.
     """
     from osm_jl_spark.functions.geo import (
         COVER_BUDGET,
@@ -196,11 +195,11 @@ def vector_to_raster(
     for pid, ring in sorted(polygons.items()):
         if not ring:  # no vertices, no cells
             continue
-        xlo, xhi, ylo, yhi = cell_bbox_range(ring, RASTER_PRECISION)
+        xlo, xhi, ylo, yhi = cell_bbox_range(ring, PRECISION)
         if (xhi - xlo + 1) * (yhi - ylo + 1) > COVER_BUDGET:
             big.append((pid, xlo, xhi, ylo, yhi))
             continue
-        full, boundary = cell_cover(ring, RASTER_PRECISION)
+        full, boundary = cell_cover(ring, PRECISION)
         rows += [(pid, cx, cy, "full") for cx, cy in sorted(full)]
         rows += [(pid, cx, cy, "boundary") for cx, cy in sorted(boundary)]
     parts = []

@@ -29,6 +29,9 @@ PHONE_RE = r"\+?[0-9][0-9()\[\] .-]{5,}[0-9]"
 # IPv4 (the dotted-quad shape; range checking is overkill for a scrub)
 IPV4_RE = r"[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}"
 
+FETCH_DELAY_SEC = 15  # fetch_schedule's per-host crawl delay
+FETCH_START_EPOCH = 1_700_000_000  # fetch_schedule's first fetch time
+
 
 def url_host(url: Column | str) -> Column:
     """Lowercased host of a URL ('' when no scheme://host prefix).
@@ -230,18 +233,14 @@ def approx_domain_stats(docs: DataFrame) -> DataFrame:
     )
 
 
-def fetch_schedule(
-    frontier: DataFrame,
-    delay_sec: int = 1,
-    start_epoch: int = 0,
-) -> DataFrame:
+def fetch_schedule(frontier: DataFrame) -> DataFrame:
     """Per-host politeness scheduling — the crawl-frontier primitive
     between link extraction and fetching: over a (url, host, priority)
-    frontier, each host's urls serialize
-    ``delay_sec`` apart (crawl-delay), best-priority first. Returns
-    (url, host, slot, fetch_at) with ``slot`` the 0-based per-host
-    fetch order and ``fetch_at = start_epoch + slot * delay_sec`` —
-    exact integer arithmetic end to end.
+    frontier, each host's urls serialize ``FETCH_DELAY_SEC`` apart
+    (crawl-delay), best-priority first. Returns (url, host, slot,
+    fetch_at) with ``slot`` the 0-based per-host fetch order and
+    ``fetch_at = FETCH_START_EPOCH + slot * FETCH_DELAY_SEC`` — exact
+    integer arithmetic end to end.
 
     Semantics: the frontier may propose one url many times (every
     page linking it); urls dedup to their BEST (lowest) priority
@@ -252,11 +251,11 @@ def fetch_schedule(
     Scale shape: one min-combine shuffle on (host, url), then one
     per-host window. The window puts each host's frontier in one
     task — bounded by that host's OWN frontier size, which politeness
-    itself caps in practice (a host fetched every delay_sec seconds
-    only ever has horizon/delay_sec urls worth scheduling; re-shard
-    the frontier by fetch horizon before scheduling if a pathological
-    host accumulates more). Same per-group-window bound as
-    events_sessionize.
+    itself caps in practice (a host fetched every FETCH_DELAY_SEC
+    seconds only ever has horizon/FETCH_DELAY_SEC urls worth
+    scheduling; re-shard the frontier by fetch horizon before
+    scheduling if a pathological host accumulates more). Same
+    per-group-window bound as events_sessionize.
     """
     best = (
         frontier.groupBy("host", "url")
@@ -270,8 +269,8 @@ def fetch_schedule(
         best.withColumn("slot", slot)
         .select(
             "url", "host", "slot",
-            (F.lit(int(start_epoch)).cast("long")
-             + F.col("slot").cast("long") * F.lit(int(delay_sec)))
+            (F.lit(FETCH_START_EPOCH).cast("long")
+             + F.col("slot").cast("long") * F.lit(FETCH_DELAY_SEC))
             .alias("fetch_at"),
         )
     )

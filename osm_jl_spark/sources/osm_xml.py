@@ -233,6 +233,8 @@ def write_fixture_file(path: str) -> str:
 # XML forbids raw '<' inside attribute values, so text content cannot
 # fake a match (comments/CDATA are not emitted by OSM dumps).
 _ELEMENT_START_RE = re.compile(rb"<(node|way|relation)[ \t\r\n/>]")
+# parse_osm_file's per-range overscan: the largest element it parses
+MAX_ELEMENT_BYTES = 16 << 20
 
 
 def _parse_range(
@@ -269,7 +271,7 @@ def _parse_range(
         if not (is_tail or hit_eof):
             raise ValueError(
                 f"OSM element starting in [{start},{end}) exceeds "
-                f"max_element_bytes={max_element_bytes}; raise the limit"
+                f"MAX_ELEMENT_BYTES={max_element_bytes}; raise the limit"
             )
         tail = window.find(b"</osm>", first)
         cut = tail if tail != -1 else len(window)
@@ -283,14 +285,14 @@ def parse_osm_file(
     spark: SparkSession,
     path: str,
     split_bytes: int = 64 << 20,
-    max_element_bytes: int = 16 << 20,
 ) -> DataFrame:
     """Splittable ingest of ONE large OSM XML file — the reference's
     primary entry point ``parsefile`` (src/OSM.jl:59-92), which streams
     a planet/extract file through a single-threaded SAX parser. Here
     the file is cut into ``split_bytes`` ranges parsed in parallel,
     one task per range (Spark's own XML datasource reads a single file
-    in one task, so a planet file would serialize).
+    in one task, so a planet file would serialize); an element larger
+    than ``MAX_ELEMENT_BYTES`` fails the task.
 
     Output is the unified elements table (kind/id/lon/lat/visible/
     node_refs/members/tags) in document order within each range;
@@ -320,7 +322,7 @@ def parse_osm_file(
                 rows.extend(
                     _parse_range(
                         path, int(r.start), int(r.end), bool(r.is_tail),
-                        max_element_bytes,
+                        MAX_ELEMENT_BYTES,
                     )
                 )
             yield pd.DataFrame(

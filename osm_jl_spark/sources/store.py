@@ -33,11 +33,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from osm_jl_spark.functions.cells import bbox_cell_range, with_cell
+from osm_jl_spark.functions.cells import (
+    PRECISION, bbox_cell_range, with_cell,
+)
 
 PAGES_COLS = ["url", "warc_ts", "html", "text", "lang"]
 
-# lon-cells per directory stripe at precision 2: 100 stripes of 1 degree
+# lon-cells per directory stripe at PRECISION (2): 100 stripes of 1 degree
 # each span the globe in ~360 dirs; at 10^12 docs each stripe still
 # holds thousands of files, so pruning saves real scan work without
 # creating a small-file problem.
@@ -124,21 +126,17 @@ def read_pages(
     return df.select(*PAGES_COLS)
 
 
-def write_points_clustered(
-    points: DataFrame,
-    path: str,
-    precision: int = 2,
-) -> None:
+def write_points_clustered(points: DataFrame, path: str) -> None:
     """Persist a (lon, lat) points table in the cell-clustered layout.
 
     Directory partitioning on the lon-cell stripe of ``STRIPE``
-    cells + (cx, cy) sorting
-    within files. ``repartition`` by the stripe key co-locates each
-    directory's rows into one task (no small-file explosion);
+    cells at ``PRECISION`` + (cx, cy) sorting within files.
+    ``repartition`` by the stripe key co-locates each directory's rows
+    into one task (no small-file explosion);
     ``sortWithinPartitions`` orders row groups so parquet min/max
     statistics skip non-matching groups inside a stripe.
     """
-    pts = points if "cx" in points.columns else with_cell(points, precision)
+    pts = points if "cx" in points.columns else with_cell(points, PRECISION)
     # floor division (NOT trunc): keeps stripes contiguous across the
     # negative axis so a BETWEEN on the stripe id is a correct superset
     # of any cx range
@@ -158,13 +156,12 @@ def read_points_bbox(
     path: str,
     ul: tuple[float, float],
     lr: tuple[float, float],
-    precision: int = 2,
 ) -> DataFrame:
     """Bbox query against the clustered store: stripe predicate prunes
     directories (PartitionFilters), cell predicates reach the parquet
     reader (PushedFilters -> row-group skipping). No shuffle, no UDF.
     """
-    xlo, xhi, ylo, yhi = bbox_cell_range(ul, lr, precision)
+    xlo, xhi, ylo, yhi = bbox_cell_range(ul, lr, PRECISION)
     slo, shi = xlo // STRIPE, xhi // STRIPE
     df = _read_parquet(spark, path)
     return df.filter(

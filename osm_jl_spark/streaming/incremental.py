@@ -40,21 +40,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from osm_jl_spark.functions.cells import cell_coord
+from osm_jl_spark.functions.cells import PRECISION, cell_coord
 from osm_jl_spark.functions.timeutil import epoch_sec
+from osm_jl_spark.operators.web import FETCH_DELAY_SEC, FETCH_START_EPOCH
 
-TILE_PRECISION = 2  # cell precision of streaming_tile_counts
 TILE_WINDOW = "1 minute"
 TILE_WATERMARK = "2 minutes"
 SESSION_GAP_SEC = 21600  # the batch events_sessionize gap (6 h)
-FETCH_DELAY_SEC = 1  # streaming_fetch_schedule: fetch_schedule's defaults
-FETCH_START_EPOCH = 0
 
 
 def streaming_tile_counts(stream: DataFrame) -> DataFrame:
     """Event stream (lon, lat, ts) -> per-(window, cell) counts with
     late-data handling: ``TILE_WINDOW`` windows closed by a
-    ``TILE_WATERMARK`` watermark, cells at ``TILE_PRECISION``.
+    ``TILE_WATERMARK`` watermark, cells at ``PRECISION``.
 
     Usage: df = spark.readStream...; q = streaming_tile_counts(df)
            .writeStream.outputMode("append")... (append works because
@@ -62,8 +60,8 @@ def streaming_tile_counts(stream: DataFrame) -> DataFrame:
     """
     return (
         stream.withWatermark("ts", TILE_WATERMARK)
-        .withColumn("cx", cell_coord("lon", TILE_PRECISION))
-        .withColumn("cy", cell_coord("lat", TILE_PRECISION))
+        .withColumn("cx", cell_coord("lon", PRECISION))
+        .withColumn("cy", cell_coord("lat", PRECISION))
         .groupBy(F.window(F.col("ts"), TILE_WINDOW).alias("w"), "cx", "cy")
         .agg(F.count(F.lit(1)).alias("n_points"))
         .select(
@@ -332,10 +330,9 @@ def streaming_bloom_filter(
     bloom_hits, contaminated), identical to the batch operator on the
     same rows (pinned in tests/test_streaming_bloom.py).
 
-    The bitmap arrives as the ``m_bits/64``-long word list of a
-    :func:`~osm_jl_spark.operators.dedup.bloom_bitmap` built with the
-    default ``k`` (:func:`~osm_jl_spark.operators.dedup.bloom_words`);
-    ``m_bits`` is read off its length, and embeds as
+    The bitmap arrives as the ``BLOOM_M_BITS/64``-long word list of a
+    :func:`~osm_jl_spark.operators.dedup.bloom_bitmap`
+    (:func:`~osm_jl_spark.operators.dedup.bloom_words`), and embeds as
     a PLAN CONSTANT array literal — the same unrolled-constant style
     as the polygon cell covers — so the whole operator is ONE
     stateless narrow projection: shingles, k probe positions, and the
@@ -345,19 +342,19 @@ def streaming_bloom_filter(
     per-doc count re-aggregates after an explode; a stream scoring
     docs as they arrive wants append mode with no state store at all,
     which the array-fold form delivers (a streaming groupBy on doc_id
-    would pin one state row per document forever). 32 KiB of literal
-    at the 2^18 default; zero-shingle docs drop, matching the batch
+    would pin one state row per document forever). 2 KiB of literal
+    at m = 2^14; zero-shingle docs drop, matching the batch
     operator's explode semantics.
     """
-    m_bits = 64 * len(bitmap_words)
-    if m_bits == 0 or m_bits & (m_bits - 1):
-        raise ValueError(
-            "bitmap_words must have m_bits/64 entries for a power-of-two "
-            f"m_bits, got {len(bitmap_words)} (use dedup.bloom_words)")
     from osm_jl_spark.functions.text import shingles_col
     from osm_jl_spark.operators.dedup import (
-        BLOOM_K, SHINGLE_N, _bloom_positions,
+        BLOOM_M_BITS, SHINGLE_N, _bloom_positions,
     )
+
+    if len(bitmap_words) != BLOOM_M_BITS // 64:
+        raise ValueError(
+            f"bitmap_words must have BLOOM_M_BITS/64 = {BLOOM_M_BITS // 64}"
+            f" entries, got {len(bitmap_words)} (use dedup.bloom_words)")
 
     arr = F.lit([int(w) for w in bitmap_words])
 
@@ -367,7 +364,7 @@ def streaming_bloom_filter(
                 F.shiftright(p, 6).alias("w"),
                 F.pmod(p, F.lit(64)).cast("int").alias("b"),
             )
-            for p in _bloom_positions(s, m_bits, BLOOM_K)
+            for p in _bloom_positions(s)
         ])
         return F.forall(
             probes,
@@ -391,14 +388,13 @@ def streaming_bloom_filter(
 
 
 def streaming_fetch_schedule(frontier: DataFrame) -> DataFrame:
-    """Streaming form of ``operators/web.fetch_schedule`` at its
-    default ``delay_sec``/``start_epoch`` — the shape a live crawler
-    actually runs: (url, host, priority) frontier urls stream in, each
-    host's next fetch slots assign incrementally, ``FETCH_DELAY_SEC``
-    apart.
+    """Streaming form of ``operators/web.fetch_schedule`` — the shape
+    a live crawler actually runs: (url, host, priority) frontier urls
+    stream in, each host's next fetch slots assign incrementally,
+    ``FETCH_DELAY_SEC`` apart from ``FETCH_START_EPOCH``.
 
-    State per host = ONE (next_slot, seen-url hash set? NO —) just the
-    next_slot counter: state tracks hosts, not urls. The batch
+    State per host = ONE next_slot counter, no seen-url set: state
+    tracks hosts, not urls. The batch
     operator's cross-source dedup-min is therefore scoped to WITHIN a
     micro-batch here (each batch sorts its new urls by (priority,
     url), dedups to min priority, then appends to the host's running

@@ -20,9 +20,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 
 from osm_jl_spark import datagen as G
+from osm_jl_spark.functions.cells import PRECISION  # noqa: F401 (re-export)
 from osm_jl_spark.session import sf_from_dir
-
-PRECISION = 2
 
 Builder = Callable[[SparkSession, str], DataFrame]
 

@@ -72,7 +72,7 @@ def dedup_exact_keep_q(spark, sf_dir):
 # line_dedup: expected cleaned text constructed INDEPENDENTLY by
 # arithmetic — at sf0.01 every boilerplate line (per-site header /
 # footer: df ~ 500/17 ~ 29; cookie banner: df = 250) clears
-# min_df=3 and every doc-id-bearing line has df=1, so the clean
+# LINE_MIN_DF=3 and every doc-id-bearing line has df=1, so the clean
 # text is exactly article + blank + body, in order.
 @query("line_dedup", """
 SELECT doc_id,
@@ -87,7 +87,7 @@ SELECT doc_id,
 FROM documents""")
 def line_dedup_q(spark, sf_dir):
     # CCNet/C4-style line-level dedup (operators/dedup.py
-    # line_dedup): strip lines occurring in >= min_df distinct
+    # line_dedup): strip lines occurring in >= LINE_MIN_DF distinct
     # docs. The corpus is built deterministically from documents:
     # every doc gets a per-site header + footer (site = doc_id %
     # 17, so each boilerplate line spans ~n/17 docs), a global
@@ -118,7 +118,7 @@ def line_dedup_q(spark, sf_dir):
         F.concat(F.lit("copyright site "), site),
     )
     corpus = docs.select("doc_id", txt.alias("text"))
-    out = D.line_dedup(corpus, min_df=3)
+    out = D.line_dedup(corpus)
     return out.select(
         "doc_id",
         F.md5("clean_text").alias("clean_md5"),
@@ -385,7 +385,8 @@ def neardup_keep_best_q(spark, sf_dir):
     )
 
 
-# The registered queries use hash_fn='md5_60': shingle hash = top 15
+# The registered queries hash shingles with md5_60 (minhash's
+# hash_fn='md5_60', simhash's only hash): shingle hash = top 15
 # md5 hex digits, reproduced here as CAST('0x'||substr(md5(s),1,15)
 # AS BIGINT) — verified bit-identical to Spark's
 # conv(substr(md5(s),1,15),16,10).
@@ -472,7 +473,7 @@ FROM sims x JOIN sims y ON x.doc_id < y.doc_id
 WHERE bit_count(xor(x.simhash, y.simhash)) <= 3""")
 def simhash_pairs_q(spark, sf_dir):
     corpus = _neardup_corpus(_pq(spark, sf_dir, "documents"))
-    return D.simhash_near_dups(corpus, hash_fn="md5_60")
+    return D.simhash_near_dups(corpus)
 
 
 # asymmetric containment over the same shingle machinery: eval
@@ -532,7 +533,7 @@ def contamination_q(spark, sf_dir):
 # (pos IN eval positions) in place of the bitmap — the bits set
 # in the filter are exactly the eval position set, so the two
 # formulations are value-equal while sharing no structure
-@query("bloom_contamination", """WITH toks AS (
+@query("bloom_contamination", f"""WITH toks AS (
   SELECT doc_id,
          list_filter(string_split(text, ' '), t -> t <> '') AS tk
   FROM documents
@@ -547,8 +548,8 @@ probes AS (
   SELECT doc_id, s,
          (CAST('0x' || substr(md5(s), 1, 15) AS BIGINT)
           + r.range * (CAST('0x' || substr(md5(s), 16, 12) AS BIGINT)
-                       * 2 + 1)) % 16384 AS pos
-  FROM tsh, range(3) r
+                       * 2 + 1)) % {D.BLOOM_M_BITS} AS pos
+  FROM tsh, range({D.BLOOM_K}) r
 ),
 ev_pos AS (
   SELECT DISTINCT pos FROM probes WHERE doc_id % 7 = 0
@@ -570,8 +571,9 @@ FROM hit GROUP BY doc_id""")
 def bloom_contamination_q(spark, sf_dir):
     # approximate decontamination against a FIXED-SIZE Bloom
     # filter of the eval set (operators/dedup.py:
-    # bloom_contamination): eval = every 7th document, m = 2^14
-    # bits, k = 3 double-hashed md5 probes. Per train doc:
+    # bloom_contamination): eval = every 7th document, m =
+    # BLOOM_M_BITS (2^14) bits, k = BLOOM_K (3) double-hashed md5
+    # probes. Per train doc:
     # (n_shingles, bloom_hits, contaminated) with contaminated =
     # integer containment >= 1/2. The 2^14 bitmap is deliberately
     # small at this corpus (~55% loaded) so FALSE POSITIVES are
@@ -582,9 +584,9 @@ def bloom_contamination_q(spark, sf_dir):
     # independent, the anti-copy oracle style.
     docs = _pq(spark, sf_dir, "documents")
     ev = docs.filter(F.col("doc_id") % 7 == 0).select("text")
-    return D.bloom_contamination(
-        docs, ev, m_bits=1 << 14, k=3
-    ).select("doc_id", "n_shingles", "bloom_hits", "contaminated")
+    return D.bloom_contamination(docs, ev).select(
+        "doc_id", "n_shingles", "bloom_hits", "contaminated"
+    )
 
 
 # SemDeDup replay: every distance and cosine is the SAME
@@ -664,7 +666,7 @@ def semdedup_q(spark, sf_dir):
     )
 
 
-_KNN_SQL = """WITH
+_KNN_SQL = f"""WITH
 e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
 q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 10),
 s AS (
@@ -680,7 +682,7 @@ r AS (
          ) AS knn_rank
   FROM s
 )
-SELECT query_id, neighbor_id, knn_rank FROM r WHERE knn_rank <= 5"""
+SELECT query_id, neighbor_id, knn_rank FROM r WHERE knn_rank <= {S.TOPK}"""
 
 
 @query("embedding_knn", _KNN_SQL)
@@ -692,7 +694,7 @@ def embedding_knn_q(spark, sf_dir):
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("qvec"),
     )
-    return S.cosine_topk(emb, q, k=5, rank_round=4).select(
+    return S.cosine_topk(emb, q, rank_round=4).select(
         "query_id", "neighbor_id", F.col("rank").alias("knn_rank")
     )
 
@@ -741,7 +743,7 @@ def ivf_knn_q(spark, sf_dir):
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("qvec"),
     )
-    return S.ivf_topk(assigned, cents, q, k=5, nprobe=3).select(
+    return S.ivf_topk(assigned, cents, q, nprobe=3).select(
         "query_id", "neighbor_id", F.col("rank").alias("knn_rank")
     )
 
@@ -762,7 +764,7 @@ def ivf_knn_exhaustive_q(spark, sf_dir):
         F.col("embedding").alias("qvec"),
     )
     return S.ivf_topk(
-        assigned, cents, q, k=5, nprobe=8, rank_round=4
+        assigned, cents, q, nprobe=8, rank_round=4
     ).select(
         "query_id", "neighbor_id", F.col("rank").alias("knn_rank")
     )

@@ -10,10 +10,10 @@ from pyspark.sql import functions as F
 
 from osm_jl_spark import datagen as G
 from osm_jl_spark.operators import elements as E
+from osm_jl_spark.operators import graph as GR
 from osm_jl_spark.operators import joins as J
 from registry.common import (
     NODES,
-    PRECISION,
     RELS,
     WAYS,
     _PIP_HAVING,
@@ -178,7 +178,7 @@ SELECT DISTINCT wr.id FROM ways_refs wr
 JOIN inside i ON wr.ref = i.id""")
 def ways_in_frogner_q(spark, sf_dir):
     return J.ways_in_polygon(
-        _ways(spark, sf_dir), _nodes(spark, sf_dir), G.FROGNER, PRECISION
+        _ways(spark, sf_dir), _nodes(spark, sf_dir), G.FROGNER
     ).select("id")
 
 
@@ -494,9 +494,10 @@ def bfs_hops_q(spark, sf_dir):
     return out.select(F.col("node").alias("node_id"), "dist")
 
 
-# weighted variant: min total weight over walks of <= 6 edges,
-# hop-bounded so the recursion terminates on cyclic road graphs;
-# the Spark side runs exactly 6 Bellman-Ford rounds (graph.py)
+# weighted variant: min total weight over walks of <= SSSP_MAX_HOPS
+# edges, hop-bounded so the recursion terminates on cyclic road
+# graphs; the Spark side runs exactly that many Bellman-Ford rounds
+# (graph.py)
 @query("shortest_paths", f"""WITH RECURSIVE {WAYS},
 wlen AS (SELECT id, max(pos) AS np FROM ways_refs GROUP BY id),
 open_ids AS (
@@ -522,7 +523,7 @@ sp AS (
   SELECT node, CAST(0 AS BIGINT) AS d, 0 AS h FROM srcs
   UNION
   SELECT e.dst, s.d + e.w, s.h + 1 FROM sp s
-  JOIN wedges e ON e.src = s.node WHERE s.h < 6
+  JOIN wedges e ON e.src = s.node WHERE s.h < {GR.SSSP_MAX_HOPS}
 )
 SELECT CAST(node AS BIGINT) AS node_id, CAST(MIN(d) AS BIGINT) AS dist
 FROM sp GROUP BY node""")
@@ -545,7 +546,7 @@ def shortest_paths_q(spark, sf_dir):
     sources = roads.filter(F.col("id") % 29 == 0).select(
         F.element_at("node_refs", 1).cast("long").alias("node")
     )
-    out = shortest_paths(wedges, sources, max_hops=6)
+    out = shortest_paths(wedges, sources)
     return out.select(F.col("node").alias("node_id"), "dist")
 
 

@@ -118,7 +118,7 @@ SELECT CAST(trunc(lon * 100) AS BIGINT) AS cx,
        count(*) AS n_points
 FROM pages_pts GROUP BY 1, 2""")
 def tile_counts_q(spark, sf_dir):
-    return TL.tile_counts(_points(spark, sf_dir), PRECISION)
+    return TL.tile_counts(_points(spark, sf_dir))
 
 
 @query("tile_rollup", f"""WITH {PAGES}
@@ -206,12 +206,10 @@ def bbox_store_q(spark, sf_dir):
     path = os.path.join(tempfile.gettempdir(), f"osm_store_nodes_{n}")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         write_points_clustered(
-            _nodes(spark, sf_dir).select("id", "lon", "lat"),
-            path,
-            PRECISION,
+            _nodes(spark, sf_dir).select("id", "lon", "lat"), path
         )
     return read_points_bbox(
-        spark, path, G.VITORIA_UL, G.VITORIA_LR, PRECISION
+        spark, path, G.VITORIA_UL, G.VITORIA_LR
     ).select("id", "lon", "lat")
 
 
@@ -534,8 +532,8 @@ def bbox_overlap_join_q(spark, sf_dir):
     # envelope_join): two deterministic rectangle sets derived
     # from the node table's EXACT micro-degree integers (centers =
     # every 31st / 43rd node, half-widths 10..199 from pure id
-    # arithmetic — extents < cell_w 500, so strict mode runs the
-    # pure grid path: 2x2-max cell covers, one equi-join on the
+    # arithmetic — extents < cell_w 500, so no rectangle trips the
+    # oversize raise: 2x2-max cell covers, one equi-join on the
     # cell key, reporting-cell dedup, zero nested loops). Output
     # (a_id, b_id, ix_area) with the overlap area exact BIGINT.
     # The oracle is the naive cross-product overlap filter over
@@ -556,8 +554,7 @@ def bbox_overlap_join_q(spark, sf_dir):
         )
 
     return J.envelope_join(
-        rects(31, 37, 61), rects(43, 53, 29),
-        cell_w=500, oversize="strict",
+        rects(31, 37, 61), rects(43, 53, 29), cell_w=500
     )
 
 

@@ -16,6 +16,7 @@ from osm_jl_spark.functions.text import (
     uniq_token_ratio_col,
 )
 from osm_jl_spark.operators import dedup as D
+from osm_jl_spark.operators import lm as LM
 from osm_jl_spark.oracle import media_feature_sum
 from registry.common import NORM, _pq, query
 
@@ -522,14 +523,14 @@ def pipeline_hygiene_q(spark, sf_dir):
 
 # full string-level replay of the CCNet-style LM filter: tokenize
 # with the same \\s+ rule, recount the trigram/context/vocab
-# statistics on the even-doc_id training half (HAVING >= 2 = the
-# min_count prune), rescore every doc with the identical integer
+# statistics on the even-doc_id training half (the HAVING is the
+# LM_MIN_COUNT prune), rescore every doc with the identical integer
 # surprisal (bitlength(den // num) - 1 — DuckDB bin() and Spark
 # bin() agree on minimal binary strings), and re-derive the
 # per-lang band thresholds with the same exact histogram-quantile
 # definition as length_quantiles. No hashing or floats anywhere,
 # so the match is hash-exact by construction.
-@query("lm_perplexity_filter", """WITH toks AS (
+@query("lm_perplexity_filter", f"""WITH toks AS (
   SELECT doc_id, lang,
          list_filter(string_split_regex(text, '\\s+'), x -> x <> '') AS ts
   FROM documents
@@ -545,7 +546,7 @@ tr AS (
 train_tr AS (SELECT * FROM tr WHERE doc_id % 2 = 0),
 c3 AS (
   SELECT lang, g3, count(*) AS c3 FROM train_tr
-  GROUP BY lang, g3 HAVING count(*) >= 2
+  GROUP BY lang, g3 HAVING count(*) >= {LM.LM_MIN_COUNT}
 ),
 c2 AS (SELECT lang, g2, count(*) AS c2 FROM train_tr GROUP BY lang, g2),
 v AS (
@@ -600,7 +601,7 @@ FROM sc JOIN thr ON sc.lang = thr.lang""")
 def lm_perplexity_q(spark, sf_dir):
     # CCNet-style n-gram LM perplexity filtering (operators/lm.py)
     # in hash-exact integer arithmetic: train an add-1-smoothed
-    # trigram LM on the even-doc_id half (min_count=2 prunes
+    # trigram LM on the even-doc_id half (LM_MIN_COUNT=2 prunes
     # singleton trigrams, so the oracle covers BOTH the seen and
     # the pruned/unseen smoothing paths on held-out docs), score
     # every doc's quantized surprisal (floor-log2 bits — computed
@@ -611,7 +612,7 @@ def lm_perplexity_q(spark, sf_dir):
     from osm_jl_spark.operators.lm import perplexity_filter
 
     docs = _pq(spark, sf_dir, "documents")
-    out = perplexity_filter(docs, min_count=2)
+    out = perplexity_filter(docs)
     return out.select(
         F.col("id").alias("doc_id"), "lang", "n_tri", "bits",
         "bpt_milli", "band", "keep",

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from osm_jl_spark import datagen as G
 from osm_jl_spark.operators import dedup as D
+from osm_jl_spark.operators import web as W
 from registry.common import (
     CRAWLS,
     PAGES,
@@ -450,7 +451,6 @@ def crawl_asof_q(spark, sf_dir):
     caps = crawls.where(F.col("fetch_h") % 3 != 0)
     out = asof_join(
         caps, pol, on="url", left_ts="warc_ts", right_ts="pol_ts",
-        value_cols=["policy_val"],
     )
     return out.select(
         "url",
@@ -477,14 +477,15 @@ ranked AS (
   FROM best
 )
 SELECT url, host, slot,
-       CAST(1700000000 AS BIGINT) + CAST(slot AS BIGINT) * 15
-         AS fetch_at
+       CAST({W.FETCH_START_EPOCH} AS BIGINT)
+         + CAST(slot AS BIGINT) * {W.FETCH_DELAY_SEC} AS fetch_at
 FROM ranked""")
 def fetch_schedule_q(spark, sf_dir):
     # crawl-frontier politeness scheduling (operators/web.py:
     # fetch_schedule): the extracted link targets become the
     # frontier (priority = first anchor position), each host's
-    # urls serialize 15 s apart from epoch 1700000000. Exact
+    # urls serialize FETCH_DELAY_SEC (15 s) apart from epoch
+    # FETCH_START_EPOCH (1700000000). Exact
     # integer schedule; the oracle replays the dedup-min, the
     # (priority, url) per-host ranking, and the slot arithmetic
     # over the SAME arithmetic pages_links CTE as page_links.
@@ -497,9 +498,7 @@ def fetch_schedule_q(spark, sf_dir):
     )
     from osm_jl_spark.operators.web import fetch_schedule
 
-    return fetch_schedule(
-        frontier, delay_sec=15, start_epoch=1700000000
-    )
+    return fetch_schedule(frontier)
 
 
 @query("snapshot_latest", f"""WITH {CRAWLS}
@@ -567,7 +566,5 @@ def campaign_windows_q(spark, sf_dir):
             * (1 + ((F.col("id") * 2654435761) % 4294967296) % 36)
         ).alias("end_s"),
     )
-    out = interval_join(
-        ev, iv, "ts_s", "start_s", "end_s", bucket_sec=43_200
-    )
+    out = interval_join(ev, iv, "ts_s", "start_s", "end_s")
     return out.select("event_id", "interval_id")

@@ -74,12 +74,13 @@ def _vectors(spark):
     return spark.createDataFrame(rows, "vec_id BIGINT, embedding ARRAY<DOUBLE>")
 
 
-def test_cosine_topk_bruteforce(spark):
+def test_cosine_topk_bruteforce(spark, monkeypatch):
     emb = _vectors(spark)
     q = emb.filter(F.col("vec_id") == 0).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
     )
-    rows = S.cosine_topk(emb, q, k=3).collect()
+    monkeypatch.setattr(S, "TOPK", 3)
+    rows = S.cosine_topk(emb, q).collect()
     order = [r["neighbor_id"] for r in sorted(rows, key=lambda r: r["rank"])]
     assert order == [0, 1, 5]
 
@@ -94,13 +95,14 @@ def test_embedding_near_dups(spark, monkeypatch):
     assert pairs <= {(0, 1), (2, 3)}  # only near-parallel pairs survive
 
 
-def test_ivf_self_is_rank1(spark):
+def test_ivf_self_is_rank1(spark, monkeypatch):
     emb = _vectors(spark)
     assigned, cents = S.build_ivf(emb, n_centroids=2)
     q = emb.select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
     )
-    rows = S.ivf_topk(assigned, cents, q, k=1, nprobe=2).collect()
+    monkeypatch.setattr(S, "TOPK", 1)
+    rows = S.ivf_topk(assigned, cents, q, nprobe=2).collect()
     for r in rows:
         assert r["neighbor_id"] == r["query_id"]
 
@@ -207,17 +209,18 @@ def test_snapshot_latest_single_exchange(spark):
     assert "partial_max_by" in d.plan, d.plan
 
 
-def test_simhash_bucket_cap_bounds_hot_buckets(spark):
-    """bucket_cap bounds a hot block bucket's pair blowup while pairs
-    among the kept (lowest-id) docs stay exact."""
+def test_simhash_bucket_cap_bounds_hot_buckets(spark, monkeypatch):
+    """SIMHASH_BUCKET_CAP bounds a hot block bucket's pair blowup while
+    pairs among the kept (lowest-id) docs stay exact."""
     rows = [(i, "alpha beta gamma delta " * 6) for i in range(12)]
     rows += [(100 + i, f"unrelated text {i} " + "x y z " * 10)
              for i in range(3)]
     docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    full = D.simhash_near_dups(docs)
-    capped = D.simhash_near_dups(docs, bucket_cap=5)
-    full_pairs = {(r["id_a"], r["id_b"]) for r in full.collect()}
-    capped_pairs = {(r["id_a"], r["id_b"]) for r in capped.collect()}
+    full_pairs = {(r["id_a"], r["id_b"])
+                  for r in D.simhash_near_dups(docs).collect()}
+    monkeypatch.setattr(D, "SIMHASH_BUCKET_CAP", 5)
+    capped_pairs = {(r["id_a"], r["id_b"])
+                    for r in D.simhash_near_dups(docs).collect()}
     # identical docs 0..11 all pair up uncapped: 66 pairs
     assert {(a, b) for a, b in full_pairs if a < 12 and b < 12} == {
         (a, b) for a in range(12) for b in range(12) if a < b
@@ -230,7 +233,7 @@ def test_simhash_bucket_cap_bounds_hot_buckets(spark):
 
 
 def test_line_dedup_strips_cross_doc_lines_in_order(spark):
-    """CCNet/C4-style boilerplate stripping: a line in >= min_df
+    """CCNet/C4-style boilerplate stripping: a line in >= LINE_MIN_DF
     distinct docs is removed everywhere; unique lines survive in their
     original order; blank lines (below min_len) never participate."""
     rows = [
@@ -240,10 +243,7 @@ def test_line_dedup_strips_cross_doc_lines_in_order(spark):
         (4, "standalone document with no boilerplate at all"),
     ]
     docs = spark.createDataFrame(rows, "doc_id BIGINT, text STRING")
-    out = {
-        r["doc_id"]: r
-        for r in D.line_dedup(docs, min_df=3).collect()
-    }
+    out = {r["doc_id"]: r for r in D.line_dedup(docs).collect()}
     assert out[1]["clean_text"] == "unique one\n\nbody of doc one"
     assert out[1]["n_lines"] == 5 and out[1]["n_kept"] == 3
     assert out[2]["clean_text"] == "unique two\n\nbody of doc two"
@@ -252,7 +252,7 @@ def test_line_dedup_strips_cross_doc_lines_in_order(spark):
     assert out[4]["n_lines"] == 1 and out[4]["n_kept"] == 1
 
 
-def test_line_dedup_within_doc_repeats_have_df_1(spark):
+def test_line_dedup_within_doc_repeats_have_df_1(spark, monkeypatch):
     """Document frequency counts DOCUMENTS: a line repeated 50x inside
     one doc is kept (df=1), and all 50 copies survive."""
     spam = "\n".join(["repeated line"] * 50)
@@ -260,12 +260,13 @@ def test_line_dedup_within_doc_repeats_have_df_1(spark):
         [(1, spam), (2, "something else entirely")],
         "doc_id BIGINT, text STRING",
     )
-    out = {r["doc_id"]: r for r in D.line_dedup(docs, min_df=2).collect()}
+    monkeypatch.setattr(D, "LINE_MIN_DF", 2)
+    out = {r["doc_id"]: r for r in D.line_dedup(docs).collect()}
     assert out[1]["clean_text"] == spam
     assert out[1]["n_kept"] == 50
 
 
-def test_line_dedup_all_removed_doc_keeps_empty_row(spark):
+def test_line_dedup_all_removed_doc_keeps_empty_row(spark, monkeypatch):
     """A doc made ENTIRELY of boilerplate still emits a row (empty
     clean text) — dropping it would silently shrink the corpus row
     count, breaking downstream joins keyed on doc_id."""
@@ -273,13 +274,14 @@ def test_line_dedup_all_removed_doc_keeps_empty_row(spark):
         [(1, "SAME"), (2, "SAME"), (3, "SAME\nplus extra")],
         "doc_id BIGINT, text STRING",
     )
-    out = {r["doc_id"]: r for r in D.line_dedup(docs, min_df=2).collect()}
+    monkeypatch.setattr(D, "LINE_MIN_DF", 2)
+    out = {r["doc_id"]: r for r in D.line_dedup(docs).collect()}
     assert set(out) == {1, 2, 3}
     assert out[1]["clean_text"] == "" and out[1]["n_kept"] == 0
     assert out[3]["clean_text"] == "plus extra"
 
 
-def test_line_dedup_blank_lines_exempt_and_null_text(spark):
+def test_line_dedup_blank_lines_exempt_and_null_text(spark, monkeypatch):
     """Blank lines appear in EVERY doc yet are never removed
     (min_len exempts them — they are structure, not boilerplate);
     NULL text behaves as empty instead of dropping the row."""
@@ -287,7 +289,8 @@ def test_line_dedup_blank_lines_exempt_and_null_text(spark):
         [(1, "a\n\nx y z"), (2, "b\n\nq r s"), (3, None), (4, "c\n\nt u")],
         "doc_id BIGINT, text STRING",
     )
-    out = {r["doc_id"]: r for r in D.line_dedup(docs, min_df=2).collect()}
+    monkeypatch.setattr(D, "LINE_MIN_DF", 2)
+    out = {r["doc_id"]: r for r in D.line_dedup(docs).collect()}
     assert out[1]["clean_text"] == "a\n\nx y z"
     assert out[3]["clean_text"] == "" and out[3]["n_lines"] == 1
 
@@ -395,7 +398,7 @@ def _sse(spark, emb, centroids):
     )
 
 
-def test_build_ivf_lloyd_refinement(spark):
+def test_build_ivf_lloyd_refinement(spark, monkeypatch):
     # a larger deterministic cloud so refinement has something to move
     # +1 keeps every coordinate strictly positive: a zero vector would
     # hit ANSI DIVIDE_BY_ZERO in the unguarded brute-force cosine
@@ -418,13 +421,13 @@ def test_build_ivf_lloyd_refinement(spark):
     q = emb.filter(F.col("vec_id") % 97 == 0).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
     )
+    monkeypatch.setattr(S, "TOPK", 3)
     brute = {
         (r["query_id"], r["rank"]): r["neighbor_id"]
-        for r in S.cosine_topk(emb, q, k=3, rank_round=9).collect()
+        for r in S.cosine_topk(emb, q, rank_round=9).collect()
     }
     ivf = {
         (r["query_id"], r["rank"]): r["neighbor_id"]
-        for r in S.ivf_topk(a2, c2, q, k=3, nprobe=8,
-                            rank_round=9).collect()
+        for r in S.ivf_topk(a2, c2, q, nprobe=8, rank_round=9).collect()
     }
     assert ivf == brute

@@ -1,7 +1,6 @@
 """envelope_join (operators/joins.py): grid-partitioned rectangle
-overlap join — naive-equivalence over mixed compact/oversized inputs,
-exact-once reporting-cell dedup, strict-mode contract, and the
-zero-nested-loop plan pin for the compact path."""
+overlap join — naive-equivalence, exact-once reporting-cell dedup, the
+raise on an oversized rectangle, and the zero-nested-loop plan pin."""
 
 from __future__ import annotations
 
@@ -40,23 +39,10 @@ def _naive(a_rows, b_rows):
     return out
 
 
-def test_matches_naive_with_oversized_sidecar(spark):
-    """Mixed workload: compact rectangles on the grid path, oversized
-    ones through the broadcast sidecar — together they must equal the
-    naive cross-product filter exactly, each pair exactly once."""
-    a = _rects(spark, 60, seed=7, n_oversized=3)
-    b = _rects(spark, 45, seed=11, n_oversized=2)
-    got = envelope_join(a, b, cell_w=1000).collect()
-    assert len(got) == len({(r.a_id, r.b_id) for r in got})  # exact-once
-    assert {(r.a_id, r.b_id, r.ix_area) for r in got} == _naive(
-        a.collect(), b.collect()
-    )
-
-
 def test_strict_all_compact_matches_naive(spark):
     a = _rects(spark, 80, seed=3)
     b = _rects(spark, 80, seed=4)
-    got = envelope_join(a, b, cell_w=1000, oversize="strict").collect()
+    got = envelope_join(a, b, cell_w=1000).collect()
     assert len(got) == len({(r.a_id, r.b_id) for r in got})
     assert {(r.a_id, r.b_id, r.ix_area) for r in got} == _naive(
         a.collect(), b.collect()
@@ -79,16 +65,16 @@ def test_strict_mode_raises_on_oversized(spark):
     a = _rects(spark, 10, seed=5, n_oversized=1)
     b = _rects(spark, 10, seed=6)
     with pytest.raises(Exception, match="envelope_join"):
-        envelope_join(a, b, cell_w=1000, oversize="strict").count()
+        envelope_join(a, b, cell_w=1000).count()
 
 
 def test_strict_plan_has_no_nested_loop_and_no_distinct(spark):
-    """Scale pin for the compact path: one equi-join on the cell key,
-    reporting-cell dedup instead of a distinct (no extra exchange for
-    dedup), no nested-loop branch anywhere in strict mode."""
+    """Scale pin: one equi-join on the cell key, reporting-cell dedup
+    instead of a distinct (no extra exchange for dedup), no nested-loop
+    branch anywhere."""
     a = _rects(spark, 30, seed=8)
     b = _rects(spark, 30, seed=9)
-    d = digest(envelope_join(a, b, cell_w=1000, oversize="strict"))
+    d = digest(envelope_join(a, b, cell_w=1000))
     assert "BroadcastNestedLoopJoin" not in d.plan, d.plan
     assert "CartesianProduct" not in d.plan, d.plan
     assert count_nodes(d.plan, "HashAggregate") == 0, d.plan  # no distinct

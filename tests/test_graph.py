@@ -142,7 +142,7 @@ def test_connected_components_vs_python_union_find(spark):
     assert got == want
 
 
-def test_shortest_paths_vs_python_dijkstra(spark):
+def test_shortest_paths_vs_python_dijkstra(spark, monkeypatch):
     # weighted diamond + chain; checked against a pure-Python
     # Dijkstra oracle (weights integer, graph symmetric)
     import heapq
@@ -167,14 +167,15 @@ def test_shortest_paths_vs_python_dijkstra(spark):
 
     e = spark.createDataFrame(sym, "src LONG, dst LONG, w LONG")
     s = spark.createDataFrame([(1,), (6,)], "node LONG")
+    monkeypatch.setattr(graph, "SSSP_MAX_HOPS", 10)
     got = {r["node"]: r["dist"]
-           for r in shortest_paths(e, s, max_hops=10).collect()}
+           for r in shortest_paths(e, s).collect()}
     assert got == want
 
 
-def test_shortest_paths_hop_bound(spark):
+def test_shortest_paths_hop_bound(spark, monkeypatch):
     # a 2-hop cheap detour vs a 1-hop expensive edge: with
-    # max_hops=1 only the direct edge is reachable; with 2 the
+    # SSSP_MAX_HOPS=1 only the direct edge is reachable; with 2 the
     # detour wins — pins the "min over walks of <= H edges" contract
     from osm_jl_spark.operators.graph import shortest_paths
 
@@ -182,9 +183,11 @@ def test_shortest_paths_hop_bound(spark):
         [(1, 2, 10), (1, 3, 1), (3, 2, 1)], "src LONG, dst LONG, w LONG"
     )
     s = spark.createDataFrame([(1,)], "node LONG")
+    monkeypatch.setattr(graph, "SSSP_MAX_HOPS", 1)
     one = {r["node"]: r["dist"]
-           for r in shortest_paths(e, s, max_hops=1).collect()}
+           for r in shortest_paths(e, s).collect()}
+    monkeypatch.setattr(graph, "SSSP_MAX_HOPS", 2)
     two = {r["node"]: r["dist"]
-           for r in shortest_paths(e, s, max_hops=2).collect()}
+           for r in shortest_paths(e, s).collect()}
     assert one == {1: 0, 2: 10, 3: 1}
     assert two == {1: 0, 2: 2, 3: 1}

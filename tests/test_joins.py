@@ -72,7 +72,7 @@ def test_nodes_for_ways_semi(spark):
 def test_ways_in_polygon(spark):
     ways = load_ways(spark, W, M)
     nodes = load_nodes(spark, M)
-    got = {r["id"] for r in J.ways_in_polygon(ways, nodes, FROGNER, 2).collect()}
+    got = {r["id"] for r in J.ways_in_polygon(ways, nodes, FROGNER).collect()}
     nmap = _node_map(spark)
     inside = {
         nid for nid, (lon, lat) in nmap.items()

@@ -6,6 +6,9 @@ from __future__ import annotations
 
 import math
 
+import pytest
+
+from osm_jl_spark.operators import lm as LM
 from osm_jl_spark.operators.lm import (
     perplexity_filter,
     score_docs,
@@ -13,6 +16,12 @@ from osm_jl_spark.operators.lm import (
     trigram_stream,
 )
 from osm_jl_spark.plans.digest import count_nodes, digest
+
+
+@pytest.fixture(autouse=True)
+def _no_pruning(monkeypatch):
+    """The hand-computed counts below keep every trigram seen once."""
+    monkeypatch.setattr(LM, "LM_MIN_COUNT", 1)
 
 
 def _docs(spark, rows):
@@ -69,16 +78,17 @@ def test_unseen_trigrams_pay_more_bits_than_seen(spark):
     assert per_unseen == 2000
 
 
-def test_min_count_pruning_takes_unseen_path(spark):
-    """A trigram seen once in training is pruned at min_count=2 and
+def test_min_count_pruning_takes_unseen_path(spark, monkeypatch):
+    """A trigram seen once in training is pruned at LM_MIN_COUNT=2 and
     must score exactly like an unseen trigram (same context)."""
     train = _docs(
         spark,
         [(0, "en", "a b c"), (2, "en", "a b d a b d")],
     )
     probe = _docs(spark, [(1, "en", "a b c")])
-    lm1 = train_trigram_lm(train, min_count=1)
-    lm2 = train_trigram_lm(train, min_count=2)
+    lm1 = train_trigram_lm(train)
+    monkeypatch.setattr(LM, "LM_MIN_COUNT", 2)
+    lm2 = train_trigram_lm(train)
     s1 = score_docs(probe, lm1).collect()[0]["bits"]
     s2 = score_docs(probe, lm2).collect()[0]["bits"]
     # pruned: "a b c" now scores as c3=0 with the same c2 — >= bits

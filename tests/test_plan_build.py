@@ -25,6 +25,8 @@ FLAGSHIP_MAX = 142
 NODES_IN_POLYGONS_MAX = 52
 WITH_CELL_MAX = 11
 TRIANGLE_CENSUS_MAX = 305
+PAGERANK_ROUND_MAX = 167
+KNN_EXPAND_LEVEL_MAX = 214
 
 
 @contextlib.contextmanager
@@ -105,6 +107,37 @@ def test_triangle_census_build_round_trips(spark):
     )
     n = build_round_trips(lambda: triangle_census(edges))
     assert 0 < n <= TRIANGLE_CENSUS_MAX, n
+
+
+def test_pagerank_round_build_round_trips(spark, monkeypatch):
+    """One pagerank_scaled round (PAGERANK_ITERS patched to 1): the
+    degree join, one contribution join and sum, and the round's lazy
+    localCheckpoint, which runs no job."""
+    from osm_jl_spark.operators import links
+
+    monkeypatch.setattr(links, "PAGERANK_ITERS", 1)
+    edges = spark.createDataFrame(
+        [(i, (i * 3 + 1) % 7) for i in range(7)], "src LONG, dst LONG"
+    )
+    nodes = spark.createDataFrame([(i,) for i in range(7)], "node LONG")
+    n = build_round_trips(lambda: links.pagerank_scaled(edges, nodes))
+    assert 0 < n <= PAGERANK_ROUND_MAX, n
+
+
+def test_knn_expand_level_build_round_trips(spark):
+    """One kNN level at the registered k and first precision (5, 3).
+    The build runs one job, the level's localCheckpoint; its round
+    trips are counted too."""
+    from osm_jl_spark import datagen as G
+    from osm_jl_spark.operators import knn
+
+    pts = G.load_nodes(spark, 200).select("id", "lon", "lat").cache()
+    queries = pts.filter("id <= 8").selectExpr(
+        "id AS query_id", "lon + 0.001 AS qlon", "lat + 0.001 AS qlat"
+    )
+    n = build_round_trips(lambda: knn._expand_level(pts, queries, 5, 3, []))
+    pts.unpersist()
+    assert 0 < n <= KNN_EXPAND_LEVEL_MAX, n
 
 
 def test_call_site_capture_off_sql_errors_keep_fragment(spark):

@@ -27,7 +27,7 @@ def test_salted_tile_counts_exact_under_skew(spark):
     pts = _skewed_points(spark)
     got = {
         (r["cx"], r["cy"]): r["n_points"]
-        for r in tile_counts(pts, 2).collect()
+        for r in tile_counts(pts).collect()
     }
     naive = {
         (r["cx"], r["cy"]): r["n"]
@@ -41,7 +41,7 @@ def test_salted_tile_counts_exact_under_skew(spark):
 
 
 def test_salted_plan_is_two_stage(spark):
-    d = digest(tile_counts(_skewed_points(spark), 2))
+    d = digest(tile_counts(_skewed_points(spark)))
     # stage 1 shuffles on (cx, cy, _salt), stage 2 merges per (cx, cy):
     # two exchanges, salt key visible in the first
     assert d.exchanges == 2, d.plan

@@ -68,15 +68,16 @@ def test_parse_osm_file_split_invariance(spark, tmp_path, split_bytes,
     assert _canon_elements(split) == _canon_elements(whole)
 
 
-def test_parse_osm_file_oversize_element_errors(spark, tmp_path):
+def test_parse_osm_file_oversize_element_errors(spark, tmp_path, monkeypatch):
+    from osm_jl_spark.sources import osm_xml
+
     p = tmp_path / "big.osm"
     refs = "".join(f'<nd ref="{i}"/>' for i in range(3000))
     p.write_text(f'<osm><way id="1">{refs}</way><node id="2" lon="1" '
                  f'lat="2"/></osm>')
-    with pytest.raises(Exception, match="max_element_bytes"):
-        parse_osm_file(
-            spark, str(p), split_bytes=1024, max_element_bytes=2048
-        ).collect()
+    monkeypatch.setattr(osm_xml, "MAX_ELEMENT_BYTES", 2048)
+    with pytest.raises(Exception, match="MAX_ELEMENT_BYTES"):
+        parse_osm_file(spark, str(p), split_bytes=1024).collect()
 
 
 def test_geojson_feature(spark):

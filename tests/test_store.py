@@ -22,7 +22,7 @@ from osm_jl_spark.sources.store import (
 def clustered(spark, tmp_path_factory):
     path = str(tmp_path_factory.mktemp("store") / "points")
     nodes = G.load_nodes(spark, 4000).select("id", "lon", "lat")
-    write_points_clustered(nodes, path, precision=2)
+    write_points_clustered(nodes, path)
     return path
 
 
@@ -81,7 +81,7 @@ def test_clustered_bbox_matches_unclustered(spark, clustered):
     got = {
         r["id"]
         for r in read_points_bbox(
-            spark, clustered, G.VITORIA_UL, G.VITORIA_LR, 2
+            spark, clustered, G.VITORIA_UL, G.VITORIA_LR
         ).collect()
     }
     nodes = with_cell(G.load_nodes(spark, 4000).select("id", "lon", "lat"), 2)
@@ -97,7 +97,7 @@ def test_clustered_bbox_prunes_partitions(spark, clustered):
     """The bbox plan must show directory-level pruning on the stripe
     column AND pushed cell filters — and stay shuffle/Python-free."""
     d = digest(
-        read_points_bbox(spark, clustered, G.VITORIA_UL, G.VITORIA_LR, 2)
+        read_points_bbox(spark, clustered, G.VITORIA_UL, G.VITORIA_LR)
     )
     assert any("cx_stripe" in p for p in d.partition_filters), d.plan
     assert any("cx" in p and "cy" in p for p in d.pushed_filters), d.plan

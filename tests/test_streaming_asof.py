@@ -67,7 +67,6 @@ def test_streaming_asof_matches_batch(spark, tmp_path):
     b_caps, b_pols = _split(crawls)
     want_df = asof_join(
         b_caps, b_pols, on="url", left_ts="warc_ts", right_ts="warc_ts",
-        value_cols=["policy_val"],
     )
     want = {
         (r["url"], r["cap_epoch"], r["cap_id"], r["policy_epoch"],

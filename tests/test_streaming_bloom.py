@@ -9,7 +9,6 @@ import pytest
 from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.001"
-M, K = 1 << 14, 3
 
 
 def _bitmap_words(spark):
@@ -17,7 +16,7 @@ def _bitmap_words(spark):
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     ev = docs.filter(F.col("doc_id") % 7 == 0).select("text")
-    return bloom_words(bloom_bitmap(ev, m_bits=M, k=K), M)
+    return bloom_words(bloom_bitmap(ev))
 
 
 def test_streaming_bloom_matches_batch(spark, tmp_path):
@@ -64,9 +63,7 @@ def test_streaming_bloom_matches_batch(spark, tmp_path):
     }
     want = {
         r["doc_id"]: (r["n_shingles"], r["bloom_hits"], r["contaminated"])
-        for r in bloom_contamination(
-            docs, ev, m_bits=M, k=K
-        ).collect()
+        for r in bloom_contamination(docs, ev).collect()
     }
     assert got == want
     assert len(got) > 50
@@ -76,5 +73,5 @@ def test_word_list_length_validated(spark):
     from osm_jl_spark.streaming.incremental import streaming_bloom_filter
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    with pytest.raises(ValueError, match="m_bits/64"):
+    with pytest.raises(ValueError, match="BLOOM_M_BITS/64"):
         streaming_bloom_filter(docs, [0] * 10)

@@ -165,14 +165,16 @@ def _facts(spark, n=3000):
     )
 
 
-def test_interval_join_equals_naive_range_join(spark):
+def test_interval_join_equals_naive_range_join(spark, monkeypatch):
+    from osm_jl_spark.operators import temporal as T
     from osm_jl_spark.operators.temporal import interval_join
 
+    monkeypatch.setattr(T, "INTERVAL_BUCKET_SEC", 500)
     facts, iv = _facts(spark), _iv(spark)
     got = {
         (r["event_id"], r["interval_id"])
         for r in interval_join(
-            facts, iv, "ts_s", "start_s", "end_s", bucket_sec=500
+            facts, iv, "ts_s", "start_s", "end_s"
         ).collect()
     }
     naive = {
@@ -183,15 +185,15 @@ def test_interval_join_equals_naive_range_join(spark):
     }
     assert got == naive and len(got) > 100
     # no duplicate pairs: each match shares exactly one bucket
-    rows = interval_join(
-        facts, iv, "ts_s", "start_s", "end_s", bucket_sec=500
-    ).count()
+    rows = interval_join(facts, iv, "ts_s", "start_s", "end_s").count()
     assert rows == len(got)
 
 
-def test_interval_join_half_open_boundaries(spark):
+def test_interval_join_half_open_boundaries(spark, monkeypatch):
+    from osm_jl_spark.operators import temporal as T
     from osm_jl_spark.operators.temporal import interval_join
 
+    monkeypatch.setattr(T, "INTERVAL_BUCKET_SEC", 64)
     facts = spark.createDataFrame(
         [(1, 100), (2, 199), (3, 200), (4, 99)],
         "event_id LONG, ts_s LONG",
@@ -202,22 +204,24 @@ def test_interval_join_half_open_boundaries(spark):
     got = {
         r["event_id"]
         for r in interval_join(
-            facts, iv, "ts_s", "start_s", "end_s", bucket_sec=64
+            facts, iv, "ts_s", "start_s", "end_s"
         ).collect()
     }
     assert got == {1, 2}  # start inclusive, end exclusive
 
 
-def test_interval_join_bucket_size_invariant(spark):
+def test_interval_join_bucket_size_invariant(spark, monkeypatch):
+    from osm_jl_spark.operators import temporal as T
     from osm_jl_spark.operators.temporal import interval_join
 
     facts, iv = _facts(spark, 800), _iv(spark)
     ref = None
     for b in (64, 500, 7919, 100_000):
+        monkeypatch.setattr(T, "INTERVAL_BUCKET_SEC", b)
         got = sorted(
             (r["event_id"], r["interval_id"])
             for r in interval_join(
-                facts, iv, "ts_s", "start_s", "end_s", bucket_sec=b
+                facts, iv, "ts_s", "start_s", "end_s"
             ).collect()
         )
         if ref is None:

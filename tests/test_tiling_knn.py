@@ -21,7 +21,7 @@ def test_tile_counts_matches_bruteforce(spark):
     pts = load_pages_points(spark, 300)
     got = {
         (r["cx"], r["cy"]): r["n_points"]
-        for r in tile_counts(pts, 2).collect()
+        for r in tile_counts(pts).collect()
     }
     want = Counter(
         cell_of(r["lon"], r["lat"], 2) for r in pts.collect()

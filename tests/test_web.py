@@ -193,12 +193,13 @@ def test_blocklist_schema_checked(spark):
         blocklist_filter(docs, bare)
 
 
-def test_fetch_schedule_politeness(spark):
+def test_fetch_schedule_politeness(spark, monkeypatch):
     """Per-host serialization: slots 0..n-1 with no gaps, fetch_at
     spaced exactly delay apart, duplicate frontier entries collapse
     to their best priority, and the order is (priority, url)."""
     from pyspark.sql import Row
 
+    from osm_jl_spark.operators import web as W
     from osm_jl_spark.operators.web import fetch_schedule
 
     frontier = spark.createDataFrame([
@@ -208,9 +209,9 @@ def test_fetch_schedule_politeness(spark):
         Row(url="a.com/3", host="a.com", priority=1),
         Row(url="b.org/x", host="b.org", priority=9),
     ])
-    out = {r.url: r for r in
-           fetch_schedule(frontier, delay_sec=10, start_epoch=100)
-           .collect()}
+    monkeypatch.setattr(W, "FETCH_DELAY_SEC", 10)
+    monkeypatch.setattr(W, "FETCH_START_EPOCH", 100)
+    out = {r.url: r for r in fetch_schedule(frontier).collect()}
     assert len(out) == 4
     # a.com order: priority 1 first, then the pri-2 tie by url
     assert out["a.com/3"].slot == 0 and out["a.com/3"].fetch_at == 100

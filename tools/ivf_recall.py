@@ -26,7 +26,6 @@ from pyspark.sql import functions as F  # noqa: E402
 from osm_jl_spark.operators import similarity as S  # noqa: E402
 from osm_jl_spark.session import get_spark  # noqa: E402
 
-K = 5
 N_CENT = 16
 N_QUERIES = 100
 
@@ -48,7 +47,7 @@ def main() -> None:
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("qvec"),
     )
-    truth = topk_sets(S.cosine_topk(emb, q, k=K).collect())
+    truth = topk_sets(S.cosine_topk(emb, q).collect())
     for refine in (0, 2):
         assigned, cents = S.build_ivf(emb, n_centroids=N_CENT,
                                       refine=refine)
@@ -58,7 +57,7 @@ def main() -> None:
         )
         for nprobe in (1, 2, 4):
             got = topk_sets(
-                S.ivf_topk(assigned, cents, q, k=K, nprobe=nprobe).collect()
+                S.ivf_topk(assigned, cents, q, nprobe=nprobe).collect()
             )
             recall = sum(
                 len(got.get(qid, set()) & t) / len(t)
@@ -66,7 +65,7 @@ def main() -> None:
             ) / len(truth)
             print(
                 f"IVF refine={refine} nprobe={nprobe}/{N_CENT} "
-                f"recall@{K}={recall:.3f} "
+                f"recall@{S.TOPK}={recall:.3f} "
                 f"max_bucket_x_mean={imbalance:.2f}",
                 flush=True,
             )

@@ -101,7 +101,6 @@ def asof(spark, n: int, store: str):
     caps = crawls.where(F.col("fetch_h") % 3 != 0)
     return lambda: asof_join(
         caps, pol, on="url", left_ts="warc_ts", right_ts="pol_ts",
-        value_cols=["policy_val"],
     )
 
 
@@ -121,7 +120,7 @@ def _rects(nodes, kx: int, ky: int):
 def envelope(spark, n: int, store: str):
     nodes = _nodes(spark, n, store)
     a, b = _rects(_dim(nodes), 37, 61), _rects(nodes, 53, 29)
-    return lambda: envelope_join(a, b, cell_w=500, oversize="strict")
+    return lambda: envelope_join(a, b, cell_w=500)
 
 
 def radius(spark, n: int, store: str):
@@ -150,12 +149,12 @@ def pagerank(spark, n: int, store: str):
 
 
 def lm(spark, n: int, store: str):
-    """min_count=2 keeps the broadcast LM dimension pruned."""
+    """LM_MIN_COUNT=2 keeps the broadcast LM dimension pruned."""
     docs = _pages(spark, n, store).select(
         F.regexp_extract("url", r"/p/(\d+)$", 1).cast("long").alias("doc_id"),
         "lang", "text",
     )
-    return lambda: perplexity_filter(docs, min_count=2).where(
+    return lambda: perplexity_filter(docs).where(
         F.col("keep") == 1)
 
 

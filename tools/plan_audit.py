@@ -244,7 +244,7 @@ AUDITED = [
      "left-semi equi-join; per-vertex counts map-side combine"),
     ("fetch_schedule", "crawl-frontier politeness scheduling: one "
      "min-combine shuffle on (host, url) dedups the frontier, one "
-     "per-host window serializes fetches delay_sec apart (2 "
+     "per-host window serializes fetches FETCH_DELAY_SEC apart (2 "
      "exchanges) — each "
      "host's window task is bounded by its own frontier, which "
      "politeness itself caps (horizon/delay urls); exact integer "
